@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Round-14 optimization tooling: dump ``explain("formatted")`` for registry
-queries (all, or a named subset) into a directory, and optionally time each
-with the noop sink (guide §1.4) so a single query can be isolated without
-running the whole bench roster.
+"""Per-query probe: dump ``explain("formatted")`` for registry queries (all,
+or a named subset) into a directory, and optionally time each — plan
+construction plus a noop-sink execution, as bench.py does — so a single query
+can be isolated without running the whole bench roster.
 
 Usage:
-    python scripts/opt_plans.py --out plans/r14/scratch [--time N] [names...]
+    python scripts/opt_plans.py --out "$(mktemp -d)" [--time N] [names...]
 
 Plans are captured at $SPARK_GRAFT_SF_DIR (default sf0.1 — the perf surface)
 on local[$SPARK_GRAFT_CPUS], the bench's exact session shape.
@@ -76,7 +76,6 @@ def main() -> None:
             with open(os.path.join(args.out, f"{name}.txt"), "w") as f:
                 f.write(plan)
             continue
-        # strip plan-instance ids (#123) so before/after diffs are readable
         with open(os.path.join(args.out, f"{name}.txt"), "w") as f:
             f.write(plan)
         if args.time:
@@ -84,8 +83,8 @@ def main() -> None:
             for i in range(args.time):
                 release_caches()
                 spark.sparkContext.setJobDescription(f"time:{name}:{i}")
-                df_i = spec.run(spark, SF_DIR)
                 t0 = time.perf_counter()
+                df_i = spec.run(spark, SF_DIR)
                 df_i.write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
             timings[name] = runs

@@ -33,8 +33,8 @@ Dial settings at 10× (each documented at its definition):
          passes no dial — it measures the shipped rule.
 
 Usage: ``python scripts/scale_rehearsal.py [1x|10x|joins|text|mm|streaming|
-100x|100xlsh|st11deep|fuzzy|ivf500k|sqlsf1|sim1m|sim2m|docs1m|r12dd4pipe|
-sim4auto1m|r13|sigab]`` — one size per
+100x|100xlsh|st11deep|fuzzy|ivf500k|sqlsf1|sim1m|sim2m|sim4m|sim8m|docs1m|
+sim4auto1m]`` — one size per
 invocation (each fits a CI timeout; corpora cached under
 /tmp/spark_graft_rehearsal). ``joins`` runs the TPC-H-ish join/agg family at
 1× and 10× in one invocation (10× fact tables derived from sf0.1 by
@@ -1292,326 +1292,6 @@ def run_sqlsf1_mode(spark) -> None:
     }))
 
 
-def run_r12_dd4_pipe_mode(spark) -> None:
-    """Round-12 receipts: dd4's candidate-strategy crossover (auto gate at
-    100k docs — 50k runs the exhaustive shared-shingle path, 500k the
-    MinHash-banded path, both through the REGISTERED query) and the first
-    composite-level 500k receipts for pipe12/pipe13 with the per-stage
-    split (edges / connected components / full composite) the r11 verdict
-    asked for (items #4 and #6)."""
-    from pyspark.sql import functions as F
-
-    from trafficanalysisbigdata_spark.operators import components
-    from trafficanalysisbigdata_spark.operators import dedup as dd
-    from trafficanalysisbigdata_spark.plans.queries_dedup import DD2_MAX_BUCKET
-
-    def timed(fn, passes=2):
-        fn().write.format("noop").mode("overwrite").save()  # warm codegen
-        ts = []
-        for _ in range(passes):
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 2))
-        return min(ts)
-
-    out: dict[str, dict] = {}
-    for tag, n in (("10x", 50_000), ("100x", 500_000)):
-        dp = f"{BASE}/docs_dist_{tag}"
-        if not os.path.exists(f"{dp}/_SUCCESS"):
-            gen_documents_dist(spark, n, dp)
-        docs = spark.read.parquet(dp)
-        res: dict[str, float] = {}
-        res["dd4_registered_auto"] = timed(
-            _registered_over_view(
-                spark, "dd4_ngram_jaccard", {"documents": docs_with_lang(docs)}
-            )
-        )
-        print(f"  {tag} dd4_registered_auto: {res['dd4_registered_auto']}s",
-              file=sys.stderr, flush=True)
-        if tag == "10x":
-            # equality receipt one decade past the fixtures: both candidate
-            # strategies must agree on (n_neardup, sum_jaccard) at 50k
-            def agg_row(big):
-                return (
-                    dd.ngram_jaccard_scores(docs, big_corpus=big)
-                    .filter(F.col("jaccard") >= 0.25)
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.round(F.sum("jaccard"), 4).alias("s"),
-                    )
-                    .collect()[0]
-                )
-            a, b = agg_row(False), agg_row(True)
-            res["dd4_n_neardup_small"] = int(a.n)
-            res["dd4_n_neardup_big"] = int(b.n)
-            res["dd4_paths_equal"] = bool(
-                a.n == b.n and abs((a.s or 0.0) - (b.s or 0.0)) < 1e-6
-            )
-            # the forced-big timing at 50k, for the crossover curve
-            res["dd4_forced_big"] = timed(
-                lambda: dd.ngram_jaccard_scores(docs, big_corpus=True)
-                .filter(F.col("jaccard") >= 0.25)
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            print(f"  10x dd4 equality: {res['dd4_paths_equal']} "
-                  f"(n={res['dd4_n_neardup_small']}/{res['dd4_n_neardup_big']}), "
-                  f"forced_big {res['dd4_forced_big']}s",
-                  file=sys.stderr, flush=True)
-        if tag == "100x":
-            # pipe12/pipe13 composite receipts with the per-stage split:
-            # stage 1 (shared): dd2 capped-LSH verified edges; stage 2
-            # (pipe12): iterative CC over those edges; then each full
-            # registered composite.
-            dl = docs_with_lang(docs)
-            edges = (
-                dd.minhash_lsh_scores(dl, max_bucket=DD2_MAX_BUCKET)
-                .filter(F.col("jaccard") >= 0.5)
-                .select("doc1", "doc2")
-            )
-            res["stage_dd2_edges"] = timed(lambda: edges)
-            t0 = time.perf_counter()
-            n_comp = (
-                components.connected_components(edges)
-                .select(F.countDistinct("component"))
-                .collect()[0][0]
-            )
-            res["stage_cc_over_edges"] = round(time.perf_counter() - t0, 2)
-            res["n_components"] = int(n_comp)
-            res["pipe12_composite"] = timed(
-                _registered_over_view(
-                    spark, "pipe12_cluster_canonicalize", {"documents": dl}
-                )
-            )
-            res["pipe13_composite"] = timed(
-                _registered_over_view(
-                    spark,
-                    "pipe13_neardup_decontaminated_split",
-                    {"documents": dl},
-                )
-            )
-            print(f"  100x stages: edges {res['stage_dd2_edges']}s, "
-                  f"cc {res['stage_cc_over_edges']}s ({n_comp} comps), "
-                  f"pipe12 {res['pipe12_composite']}s, "
-                  f"pipe13 {res['pipe13_composite']}s",
-                  file=sys.stderr, flush=True)
-        out[tag] = res
-    print(json.dumps({"mode": "r12dd4pipe", "timings": out}))
-
-
-def run_r13_mode(spark) -> None:
-    """Round-13 receipts (verdict items #2/#5/#6):
-
-    * pipe14 at 500k train-side docs — the one r12 dial without a decade
-      receipt. Stage split: the train postings explode (the claimed
-      linear-cost term, same scan dd7 receipts to 1M) vs the (e, t)
-      candidate aggregate (the only pair-shaped state, fan-out bounded by
-      the eval-side df cap). The registered query's own 10% split is the
-      eval ceiling per the contract.
-    * dd4 at 2M — one decade PAST the now-load-bearing 100k crossover's
-      first receipted decade (1M, r12: 268.8 s). Splits: signatures /
-      banded candidates / full auto path; plus the verify-broadcast dial
-      A/B at 2M, where the default 1024 MB budget boundary sits (the
-      sizing estimate is printed so BENCH_LOCAL records which side the
-      auto decision lands on).
-
-    2M passes are SINGLE-pass timings (one execution each, no warm pass —
-    a min-of-2 protocol would cost ~90 min of redundant 10-minute runs for
-    a decade-curve point where ±10% noise changes nothing).
-
-    ``R13_OPS`` (comma list of pipe14|dd4stages|dd4auto|dd4bc|dd4nobc)
-    selects sections; every measurement prints the moment it lands. Run
-    the 2M sections as SEPARATE invocations: one JVM session holding the
-    stage splits + the auto pass + both A/B arms accumulates ~70 GB of
-    retained shuffle files (ContextCleaner only releases them on GC) and
-    exhausted this host's free disk mid-A/B on the first attempt — the
-    same reason a long-lived cluster app checkpoints between heavy stages.
-    """
-    from pyspark.sql import functions as F
-
-    from trafficanalysisbigdata_spark.operators import dedup as dd
-    from trafficanalysisbigdata_spark.plans.queries_pipeline import _hash_frac
-
-    def timed(fn, passes=2):
-        fn().write.format("noop").mode("overwrite").save()  # warm codegen
-        ts = []
-        for _ in range(passes):
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 2))
-        return min(ts)
-
-    def once(fn):
-        t0 = time.perf_counter()
-        fn().write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 2)
-
-    ops = set(
-        os.environ.get(
-            "R13_OPS", "pipe14,dd4stages,dd4auto,dd4bc,dd4nobc"
-        ).split(",")
-    )
-    out: dict[str, dict] = {}
-
-    def land(section: str, key: str, val) -> None:
-        out.setdefault(section, {})[key] = val
-        print(f"  {section}.{key} = {val}", file=sys.stderr, flush=True)
-
-    if "pipe14" in ops:
-        # --- pipe14 at 500k (min-of-2, the r12dd4pipe protocol) -----------
-        dp = f"{BASE}/docs_dist_100x"
-        if not os.path.exists(f"{dp}/_SUCCESS"):
-            gen_documents_dist(spark, 500_000, dp)
-        dl = docs_with_lang(spark.read.parquet(dp))
-        # stage thunks built from the SAME operators/derivations as the query
-        split = dl.select(
-            "doc_id", "source", (_hash_frac(F.col("doc_id")) < 0.9).alias("is_train")
-        )
-        sh = dd.doc_shingle_sets(dl).join(split.select("doc_id", "is_train"), "doc_id")
-        tr = sh.filter(F.col("is_train")).select(F.col("doc_id").alias("t"), "token")
-        ev = sh.filter(~F.col("is_train")).select("doc_id", "token")
-        n_ev = ev.select("doc_id").distinct().agg(F.count(F.lit(1)).alias("n_docs"))
-        evc = dd.df_capped(ev, n_ev, 0.05, 256).withColumnRenamed("doc_id", "e")
-        common = (
-            tr.join(evc, "token")
-            .groupBy("e", "t")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        land("pipe14_500k", "stage_train_postings", timed(lambda: tr))
-        land("pipe14_500k", "stage_et_aggregate", timed(lambda: common))
-        land(
-            "pipe14_500k",
-            "pipe14_composite",
-            timed(
-                _registered_over_view(
-                    spark, "pipe14_containment_leak_scan", {"documents": dl}
-                )
-            ),
-        )
-
-    if ops & {"dd4stages", "dd4auto", "dd4bc", "dd4nobc"}:
-        dp2 = f"{BASE}/docs_dist_2m"
-        if not os.path.exists(f"{dp2}/_SUCCESS"):
-            gen_documents_dist(spark, 2_000_000, dp2)
-        docs2 = spark.read.parquet(dp2)
-    if "dd4stages" in ops:
-        sig = dd.minhash_signatures(dd.doc_shingle_sets(docs2), num_perm=16)
-        land("dd4_2m", "stage_signatures", once(lambda: sig))
-        cand = dd.lsh_candidate_pairs(
-            sig, num_perm=16, rows_per_band=1, max_bucket=256
-        )
-        land("dd4_2m", "stage_candidates", once(lambda: cand))
-        land("dd4_2m", "n_candidates", cand.count())
-        # where the auto verify-broadcast decision lands at 2M vs the
-        # 1024 MB default budget (8*sum|S_d| + 48*n bytes, one AQE-reused
-        # copy)
-        from trafficanalysisbigdata_spark.functions.text import token_bigrams
-
-        tot = docs2.agg(
-            F.sum(F.size(F.array_distinct(token_bigrams(F.col("text"))))).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        est_mb = round((tot.s * 8 + tot.n * 48) / 1024 / 1024, 1)
-        land("dd4_2m", "verify_broadcast_est_mb", est_mb)
-        land("dd4_2m", "auto_would_broadcast", bool(est_mb <= 1024))
-    if "dd4auto" in ops:
-        land(
-            "dd4_2m",
-            "dd4_registered_auto",
-            once(
-                _registered_over_view(
-                    spark, "dd4_ngram_jaccard", {"documents": docs_with_lang(docs2)}
-                )
-            ),
-        )
-    for opname, flag in (("dd4bc", True), ("dd4nobc", False)):
-        if opname in ops:
-            land(
-                "dd4_2m",
-                f"dd4_forced_verifybc_{flag}",
-                once(
-                    lambda flag=flag: dd.ngram_jaccard_scores(
-                        docs2, big_corpus=True, verify_broadcast=flag
-                    ).filter(F.col("jaccard") >= 0.25)
-                ),
-            )
-    print(json.dumps({"mode": "r13", "timings": out}))
-
-
-def run_sigab_mode(spark) -> None:
-    """Round-13 verdict item #5: A/B the dd4 signature stage — the shipped
-    grouped pass (explode + groupBy, 16 partial-aggregated md5 mins, whole-
-    stage codegen) vs a row-local formulation (array_min over F.transform,
-    zero shuffle). Bit-identity is asserted at 500k. MEASURED RESULT
-    (BENCH_LOCAL r13): the row-local form is 0.6×/0.66× at 500k/1M — the
-    higher-order-function lambdas are CodegenFallback, so the md5 loop runs
-    interpreted, and that interpretation tax exceeds the grouped path's
-    entire (narrow, map-side-combined) exchange. Same mechanism the
-    lsh_candidate_pairs docstring documents for the band-dedup filter. The
-    grouped pass stays; an xxhash64 integer family would be faster still
-    but is not cross-engine (no DuckDB twin) and would break the md5
-    oracle/path-equality contract."""
-    from pyspark.sql import functions as F
-
-    from trafficanalysisbigdata_spark.functions.text import token_bigrams
-    from trafficanalysisbigdata_spark.operators.dedup import (
-        doc_shingle_sets,
-        minhash_signatures,
-    )
-
-    NUM = 16
-
-    def _mk(pref):
-        return lambda s: F.md5(F.concat(F.lit(pref), s))
-
-    def rowlocal(docs):
-        shing = docs.select(
-            "doc_id", F.array_distinct(token_bigrams(F.col("text"))).alias("__el")
-        ).filter(F.size("__el") > 0)
-        return shing.select(
-            "doc_id",
-            *[
-                F.array_min(F.transform("__el", _mk(f"{i}|"))).alias(f"mh_{i}")
-                for i in range(NUM)
-            ],
-        )
-
-    def grouped(docs):
-        return minhash_signatures(doc_shingle_sets(docs), num_perm=NUM)
-
-    def timed(fn, passes=2):
-        fn().write.format("noop").mode("overwrite").save()
-        ts = []
-        for _ in range(passes):
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 2))
-        return min(ts)
-
-    out = {}
-    for tag, n, path in (
-        ("500k", 500_000, f"{BASE}/docs_dist_100x"),
-        ("1m", 1_000_000, f"{BASE}/docs_dist_1m"),
-    ):
-        if not os.path.exists(f"{path}/_SUCCESS"):
-            gen_documents_dist(spark, n, path)
-        docs = spark.read.parquet(path)
-        res = {
-            "sig_grouped": timed(lambda: grouped(docs)),
-            "sig_rowlocal": timed(lambda: rowlocal(docs)),
-        }
-        res["ratio_rowlocal_vs_grouped"] = round(
-            res["sig_grouped"] / res["sig_rowlocal"], 2
-        )
-        if tag == "500k":
-            a, b = grouped(docs), rowlocal(docs)
-            res["bit_identical"] = bool(
-                a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-            )
-        print(f"  {tag}: {res}", file=sys.stderr, flush=True)
-        out[tag] = res
-    print(json.dumps({"mode": "sigab", "num_perm": NUM, "timings": out}))
-
-
 def run_sim4_auto_1m_mode(spark) -> None:
     """Round-12 receipt (verdict item #1): the PUBLIC lsh_neardup_pairs
     entrypoint at 1M vectors with default budget — must auto-route through
@@ -1659,187 +1339,6 @@ def run_sim4_auto_1m_mode(spark) -> None:
     res["twin_recall"] = round(found.count() / max(1, n_exp), 3)
     res["pairs_out"] = final.count()
     print(json.dumps({"mode": "sim4auto1m", **res}))
-
-
-def run_r14_heaps_mode(spark) -> None:
-    """Round-14 receipt (verdict item #4): tx17's decimation dial measured
-    one decade past the single-window wall's first load-bearing point.
-
-    Stage-split protocol (the pipe14/r13 precedent): both paths share
-    tx17's tokenize -> first-seen front end (receipted scan-dominated and
-    linear at 500k/1M in r13), so this isolates the stage the dial CHANGES
-    — the per-source running sums + OLS fit over a per_doc frame (source,
-    doc_id, n_tokens, new_tokens) with ONE source: the adversarial shape,
-    where the dial-off window path funnels every row through a single
-    task and the dial-on path (grouped two-phase prefix-sums + log-bucket
-    decimation, tx17b's registered stage code via _heaps_fit_from) spreads
-    the same rows over (source, range-bucket) partitions and fits on
-    ~20·log10(N) points.
-
-    ``R14_N`` sets the row count (default 10M; run 100M as a separate
-    invocation — the r13 one-JVM-per-heavy-section lesson). Timings are
-    min-of-2 after a warm pass at 10M, single-pass at 100M.
-    """
-    from pyspark.sql import functions as F
-
-    from trafficanalysisbigdata_spark.plans.queries_text import (
-        _TX17B_PPD,
-        _heaps_fit_from,
-    )
-
-    n = int(os.environ.get("R14_N", "10000000"))
-    tag = f"{n // 1_000_000}m"
-    path = f"{BASE}/heaps_perdoc_{tag}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        (
-            spark.range(n)
-            .select(
-                F.lit("big").alias("source"),
-                F.col("id").alias("doc_id"),
-                (F.col("id") % 97 + 5).cast("long").alias("n_tokens"),
-                (
-                    F.when(F.col("id") == 0, F.lit(3))
-                    .otherwise(((F.col("id") % 13) == 0).cast("long") * 2)
-                ).alias("new_tokens"),
-            )
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        print(f"  generated {n} per_doc rows at {path}", file=sys.stderr)
-
-    def run(ppd: int):
-        per_doc = spark.read.parquet(path)
-        return _heaps_fit_from(per_doc, points_per_decade=ppd)
-
-    passes = 2 if n <= 20_000_000 else 1
-    out: dict = {"n_rows": n}
-    for label, ppd in (("window_path", 0), ("decimated_path", _TX17B_PPD)):
-        rows = run(ppd).collect()  # tiny result; collect IS the fit output
-        ts = []
-        for _ in range(passes):
-            t0 = time.perf_counter()
-            rows = run(ppd).collect()
-            ts.append(round(time.perf_counter() - t0, 2))
-        out[label] = min(ts)
-        out[f"{label}_beta"] = rows[0]["heaps_beta"] if rows else None
-        out[f"{label}_points"] = rows[0]["n_docs"] if rows else None
-        print(
-            f"  {label}: {out[label]} s, beta={out[f'{label}_beta']}, "
-            f"fit_points={out[f'{label}_points']}",
-            file=sys.stderr,
-            flush=True,
-        )
-    print("r14heaps: " + json.dumps(out))
-
-
-
-def run_r14b_mode(spark) -> None:
-    """Round-14 receipts for the two new ops (neither has a tunable dial;
-    both make structural scale claims the fixtures can't stress):
-
-    * dd11 (CDC chunk dedup) at 500k and 1M docs — the claim is ONE
-      token-row exchange plus 16-byte fp partial aggs, i.e. the same
-      linear posture as the receipted dd7/tx9 postings scans; the 2x
-      step makes curvature visible.
-    * sim10 (MMR diversified top-k) at 1M vectors — the claim is that
-      corpus cost is exactly TWO scans (brute-force shortlist + broadcast
-      vector fetch) and everything past them is shortlist-sized; measured
-      at the decade the other ANN receipts use.
-
-    min-of-2 after a warm pass (the r12dd4pipe protocol)."""
-    from pyspark.sql import functions as F
-
-    from trafficanalysisbigdata_spark.operators import dedup as dd
-    from trafficanalysisbigdata_spark.operators import similarity as sim
-
-    def timed(fn, passes=2):
-        fn().write.format("noop").mode("overwrite").save()  # warm codegen
-        ts = []
-        for _ in range(passes):
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 2))
-        return ts
-
-    ops = set(os.environ.get("R14B_OPS", "dd11,sim10").split(","))
-    if "dd11" in ops:
-        for tag, dp in (("500k", f"{BASE}/docs_dist_100x"),
-                        ("1m", f"{BASE}/docs_dist_1m")):
-            if not os.path.exists(f"{dp}/_SUCCESS"):
-                gen_documents_dist(spark, 500_000 if tag == "500k" else 1_000_000, dp)
-            docs = spark.read.parquet(dp)
-            ts = timed(lambda: dd.cdc_chunk_dedup_stats(docs))
-            print(f"  dd11 {tag}: {ts} -> {min(ts)}s", file=sys.stderr, flush=True)
-            print(json.dumps({"op": "dd11_cdc_chunk_dedup", "tag": tag, "wall_s": min(ts)}))
-    if "dd11b" in ops:
-        from trafficanalysisbigdata_spark.operators.dedup import (
-            cdc_chunks_guarded, chunk_dedup_ledger,
-        )
-
-        for tag, dp in (("500k", f"{BASE}/docs_dist_100x"),
-                        ("1m", f"{BASE}/docs_dist_1m")):
-            docs = spark.read.parquet(dp)
-            ts = timed(lambda: chunk_dedup_ledger(
-                cdc_chunks_guarded(docs, 16, 8, 32)))
-            print(f"  dd11b {tag}: {ts} -> {min(ts)}s", file=sys.stderr, flush=True)
-            print(json.dumps({"op": "dd11b_cdc_guarded", "tag": tag, "wall_s": min(ts)}))
-    if "sim10" in ops:
-        ep = f"{BASE}/emb_dist_1m"
-        if not os.path.exists(f"{ep}/_SUCCESS"):
-            gen_embeddings_dist(spark, 1_000_000, ep)
-        emb = spark.read.parquet(ep)
-        probes = emb.filter(F.col("vec_id") < 3)
-        ts = timed(lambda: sim.mmr_topk(emb, probes, k=8, shortlist=20))
-        print(f"  sim10 1m: {ts} -> {min(ts)}s", file=sys.stderr, flush=True)
-        print(json.dumps({"op": "sim10_mmr_topk", "tag": "1m", "wall_s": min(ts)}))
-
-
-
-def run_r14c_mode(spark) -> None:
-    """pipe16's 500k-train receipt (r13 verdict item #2's last clause):
-    the semantic-decontamination gate shape — a benchmark-sized eval set
-    (256 probes, the pipe14 eval-cap analog) against a large TRAIN corpus
-    via the int8-shortlist -> exact-rerank serving path plus the ledger
-    aggregate — at 500k and 1M train vectors, so the claimed posture (ONE
-    int8 train scan with probes broadcast, zero train shuffle, rerank at
-    shortlist selectivity) has a measured 2x step. Warm + min-of-2 at
-    500k; single pass at 1M (decade-curve protocol)."""
-    from pyspark.sql import functions as F
-
-    from trafficanalysisbigdata_spark.operators import similarity as sim
-
-    ep = f"{BASE}/emb_dist_1m"
-    if not os.path.exists(f"{ep}/_SUCCESS"):
-        gen_embeddings_dist(spark, 1_000_000, ep)
-    emb = spark.read.parquet(ep)
-    evalp = emb.filter(F.col("vec_id") < 256)
-
-    def gate(n_train):
-        train = emb.filter(
-            (F.col("vec_id") >= 256) & (F.col("vec_id") < 256 + n_train)
-        )
-        return (
-            sim.two_stage_rerank_topk(train, evalp, k=1, shortlist_factor=8)
-            .agg(
-                F.count(F.lit(1)).alias("n_eval_scored"),
-                F.sum((F.col("cos") >= 0.4).cast("bigint")).alias("n_leaked"),
-                F.round(
-                    F.sum(F.col("cos").cast("decimal(18,6)")).cast("double"), 6
-                ).alias("sum_max_cos"),
-            )
-        )
-
-    for tag, n_train, passes in (("500k", 500_000, 2), ("1m", 999_000, 1)):
-        fn = lambda: gate(n_train)  # noqa: B023
-        if passes > 1:
-            fn().write.format("noop").mode("overwrite").save()  # warm
-        ts = []
-        for _ in range(passes):
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 2))
-        print(f"  pipe16gate {tag}: {ts} -> {min(ts)}s", file=sys.stderr, flush=True)
-        print(json.dumps({"op": "pipe16_gate_256eval", "tag": tag, "wall_s": min(ts)}))
 
 
 def main() -> None:
@@ -1896,40 +1395,14 @@ def main() -> None:
     if wanted == ["sqlsf1"]:
         run_sqlsf1_mode(spark)
         return
-    if wanted == ["r12dd4pipe"]:
-        # 256 partitions: dd4's 50k small-path join and the 500k dd2-edge
-        # stage both outgrow 64 (the sim1m lesson)
-        spark.conf.set("spark.sql.shuffle.partitions", "256")
-        run_r12_dd4_pipe_mode(spark)
-        return
     if wanted == ["sim4auto1m"]:
         spark.conf.set("spark.sql.shuffle.partitions", "256")
         run_sim4_auto_1m_mode(spark)
-        return
-    if wanted == ["r13"]:
-        spark.conf.set("spark.sql.shuffle.partitions", "256")
-        run_r13_mode(spark)
-        return
-    if wanted == ["sigab"]:
-        spark.conf.set("spark.sql.shuffle.partitions", "256")
-        run_sigab_mode(spark)
         return
     if wanted == ["docs1m"]:
         # the doc-postings family one decade past its 500k receipts
         spark.conf.set("spark.sql.shuffle.partitions", "256")
         run_100x_mode(spark, sizes={"1m": 1_000_000})
-        return
-    if wanted == ["r14c"]:
-        spark.conf.set("spark.sql.shuffle.partitions", "256")
-        run_r14c_mode(spark)
-        return
-    if wanted == ["r14b"]:
-        spark.conf.set("spark.sql.shuffle.partitions", "256")
-        run_r14b_mode(spark)
-        return
-    if wanted == ["r14heaps"]:
-        spark.conf.set("spark.sql.shuffle.partitions", "256")
-        run_r14_heaps_mode(spark)
         return
     if wanted == ["sim4m"]:
         # one full decade past the 1M receipt (r13 verdict item #7): keeps

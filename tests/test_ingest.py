@@ -241,10 +241,9 @@ def test_paginated_datasource_matches_json_read(spark, tmp_path):
     assert n1 == n2 > 0
 
 
-def test_paginated_datasource_pushes_equality_filter(spark, tmp_path):
-    """EqualTo filters reach the page reader (server-side filtering, S3);
-    other predicates stay with Spark — and the combined result is exactly
-    the unpushed scan's filtered rows."""
+def test_paginated_datasource_filtered_scan_matches_rows(spark, tmp_path):
+    """An equality predicate and a non-equality predicate over the paginated
+    scan return exactly the matching rows."""
     from trafficanalysisbigdata_spark.session import prep
     from trafficanalysisbigdata_spark.sources.paginated import (
         PaginatedJsonDataSource,
@@ -266,24 +265,30 @@ def test_paginated_datasource_pushes_equality_filter(spark, tmp_path):
     )
     assert sorted(r.requestid for r in got) == ["1", "7"]
 
-    # reader-level contract: EqualTo is consumed (applied during read),
-    # everything else handed back to Spark (the Python scan node doesn't
-    # print PushedFilters, so assert on the reader directly)
-    from pyspark.sql.datasource import EqualTo, IsNotNull
 
-    from trafficanalysisbigdata_spark.sources.paginated import (
-        PaginatedJsonReader,
-        RAW_SCHEMA,
-    )
+def test_paginated_filter_does_not_leak_into_later_scans(spark, tmp_path):
+    """A filtered count on a from_paginated frame must not narrow later
+    filter-free scans of the same frame (Spark 4.1 reuses the last reader
+    it pushed filters into, so a reader-side filter leaked into them)."""
+    from pyspark.sql import functions as F
 
-    reader = PaginatedJsonReader(RAW_SCHEMA, {"path": str(pages)})
-    eq, notnull = EqualTo(("boro",), "Queens"), IsNotNull(("vol",))
-    remaining = list(reader.pushFilters([eq, notnull]))
-    assert remaining == [notnull]  # partial pushdown: only EqualTo consumed
-    [part] = reader.partitions()
-    rows = list(reader.read(part))
-    boro_idx = RAW_SCHEMA.fieldNames().index("boro")
-    assert rows and all(r[boro_idx] == "Queens" for r in rows)
+    from trafficanalysisbigdata_spark.api import TrafficAnalytics
+
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    for i in range(0, len(ROWS), 3):
+        with open(pages / f"page-{i // 3:05d}.json", "w") as f:
+            for r in ROWS[i : i + 3]:
+                f.write(json.dumps(r) + "\n")
+
+    ta = TrafficAnalytics.from_paginated(spark, str(pages))
+    assert ta.df.filter(F.col("borough") == "Queens").count() == 3
+    assert ta.df.count() == 5
+    dash = ta.dashboard()
+    assert dash["q2_top5"].count() > 0
+    assert sorted(r.event_type for r in dash["q4_type_totals"].collect()) == [
+        "Brooklyn", "Manhattan", "Queens",
+    ]
 
 
 def test_retrying_fetcher_backoff_then_success():

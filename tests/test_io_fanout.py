@@ -24,11 +24,11 @@ _MPB = "spark.sql.files.maxPartitionBytes"
 
 @pytest.fixture()
 def _tiny_split(spark):
-    """Shrink the session's scan-split conf so every frame estimates 'big
-    enough' — the gate must read the CONF (r14 advice), not a constant."""
+    """A setter that shrinks the session's scan-split conf so every frame
+    estimates 'big enough' — the gate must read the CONF (r14 advice), not a
+    constant. The original value is restored afterwards."""
     orig = spark.conf.get(_MPB)
-    spark.conf.set(_MPB, "1")
-    yield
+    yield lambda value: spark.conf.set(_MPB, value)
     spark.conf.set(_MPB, orig)
 
 
@@ -40,11 +40,14 @@ def test_small_scan_fans_out_to_parallelism(spark, sf_dir):
 
 
 def test_gate_off_past_size_bound(spark, sf_dir, _tiny_split):
-    # with maxPartitionBytes=1 every frame sits past one "split": the gate
-    # must come back untouched, proving the bound tracks the session conf
+    # with maxPartitionBytes=1 byte (or 1k, unit-suffixed) every frame sits
+    # past one "split": the gate must come back untouched, proving the bound
+    # tracks the session conf as Spark parses it
     base = load_table(spark, sf_dir, "embeddings")
-    df = fan_out_small_scan(base, "vec_id")
-    assert df is base  # untouched — no repartition node added
+    for split in ("1", "1k"):
+        _tiny_split(split)
+        df = fan_out_small_scan(base, "vec_id")
+        assert df is base, split  # untouched — no repartition node added
 
 
 def test_gate_off_when_partitions_cover_cores(spark, sf_dir):

@@ -24,6 +24,10 @@ ALL_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
+# a join keyed on doc_id, as the simpleString plan prints it
+# (``BroadcastHashJoin [doc_id#0L], [doc_id#37L], ...``)
+_DOC_ID_JOIN = re.compile(r"Join \[doc_id#\d+L?\]")
+
 
 @pytest.fixture(scope="module", autouse=True)
 def _views(spark, sf_dir):
@@ -495,7 +499,21 @@ def test_pipe14_no_cartesian_and_pair_state_is_aggregated(spark, sf_dir):
     # subtree (6 of them), probing every posting row for a bit the scan can
     # compute itself. The only doc-keyed join left is the final source
     # attach, keyed on the renamed `e`.
-    assert not re.search(r"keys \[1\]: \[doc_id#\d+L?\]", plan), plan
+    assert not _DOC_ID_JOIN.search(plan), plan
+
+
+def test_pipe14_doc_id_join_guard_matches_old_shape(spark, sf_dir):
+    """Negative twin of pipe14's continuation guard: the old shape — shingle
+    postings joined to a doc_id-keyed split frame — must trip the regex."""
+    from pyspark.sql import functions as F
+
+    from trafficanalysisbigdata_spark.operators.dedup import doc_shingle_sets
+    from trafficanalysisbigdata_spark.plans.queries_pipeline import _hash_frac
+
+    docs = spark.table("documents").select("doc_id", "source", "text")
+    split = docs.select("doc_id", (_hash_frac(F.col("doc_id")) < 0.9).alias("is_train"))
+    old = doc_shingle_sets(docs).join(split, "doc_id")
+    assert _DOC_ID_JOIN.search(old._jdf.queryExecution().executedPlan().toString())
 
 
 def test_dd10_scrub_is_anti_join_not_pair_shaped(spark, sf_dir):

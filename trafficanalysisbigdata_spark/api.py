@@ -130,6 +130,17 @@ class TrafficAnalytics:
 
     # -- dashboard + ML ----------------------------------------------------
 
+    def _events(self) -> DataFrame:
+        """The frame projected onto the events schema (FIXTURES.md §2) that
+        the dashboard and ML paths share."""
+        return self.df.select(
+            F.col("request_id").alias("event_id"),
+            F.col("segment_id").alias("user_id"),
+            F.col("borough").alias("event_type"),
+            F.col("volume").cast("double").alias("value"),
+            F.col("datetime").alias("ts"),
+        )
+
     def dashboard(self) -> dict[str, DataFrame]:
         """Dash.py's per-tick query set over the current frame (A6/A7/ST2).
 
@@ -139,24 +150,10 @@ class TrafficAnalytics:
         """
         from .streaming.snapshot import dashboard_queries
 
-        snap = self.df.select(
-            F.col("request_id").alias("event_id"),
-            F.col("segment_id").alias("user_id"),
-            F.col("borough").alias("event_type"),
-            F.col("volume").cast("double").alias("value"),
-            F.col("datetime").alias("ts"),
-        )
-        return dashboard_queries(snap)
+        return dashboard_queries(self._events())
 
     def volume_model(self) -> dict:
         """M1: the reference's RF volume regression, metrics dict."""
         from .ml.models import rf_regression
 
-        events = self.df.select(
-            F.col("request_id").alias("event_id"),
-            F.col("segment_id").alias("user_id"),
-            F.col("borough").alias("event_type"),
-            F.col("volume").cast("double").alias("value"),
-            F.col("datetime").alias("ts"),
-        )
-        return rf_regression(events)
+        return rf_regression(self._events())

@@ -51,13 +51,6 @@ def _unpersist_rdds(sc, ids: set[int]) -> None:
         pass
 
 
-def symmetrized_edges(pairs: DataFrame, src: str = "doc1", dst: str = "doc2") -> DataFrame:
-    """Undirected edge list (v, w): each input pair in both directions."""
-    a = pairs.select(F.col(src).alias("v"), F.col(dst).alias("w"))
-    b = pairs.select(F.col(dst).alias("v"), F.col(src).alias("w"))
-    return a.unionByName(b).distinct()
-
-
 def connected_components(
     pairs: DataFrame, src: str = "doc1", dst: str = "doc2", max_iter: int = 25
 ) -> DataFrame:
@@ -80,12 +73,12 @@ def connected_components(
     edge sets; equivalence vs union-find is property-tested in
     tests/test_properties.py).
 
-    The edge list skips ``symmetrized_edges``' dedup: every consumer of
-    ``edges`` here is a MIN aggregate, which is duplicate-insensitive, so
-    the ``distinct()`` was a full exchange + aggregate of the edge list at
-    setup buying nothing (and the usual pair producers emit strictly
-    ordered (doc1 < doc2) pairs, which symmetrize duplicate-free anyway) —
-    A/B'd ~10% off the CC stage at sf0.1, labels identical.
+    The edge list needs no ``distinct()``: every consumer of ``edges`` here
+    is a MIN aggregate, which is duplicate-insensitive, so a dedup would be a
+    full exchange + aggregate of the edge list at setup buying nothing (and
+    the usual pair producers emit strictly ordered (doc1 < doc2) pairs, which
+    symmetrize duplicate-free anyway) — A/B'd ~10% off the CC stage at
+    sf0.1, labels identical.
 
     The per-round checkpoint is LAZY (r14 pass): the convergence aggregate
     is the action that materializes it, so a round runs ONE job. Each round

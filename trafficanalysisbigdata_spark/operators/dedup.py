@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import md5_fingerprint, token_bigrams, tokens
+from ..functions.text import token_bigrams, tokens
 
 
 def exact_dedup_summary(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -202,11 +202,6 @@ def jaccard_scores(
             ).alias("jaccard"),
         )
     )
-
-
-def jaccard_verify(pairs: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
-    """Candidate pairs whose exact set Jaccard clears ``threshold``."""
-    return jaccard_scores(pairs, sets).filter(F.col("jaccard") >= threshold)
 
 
 def df_capped(

@@ -17,11 +17,6 @@ def drop_null_rows(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.na.drop(subset=cols)
 
 
-def drop_mostly_null_rows(df: DataFrame, thresh: int) -> DataFrame:
-    """P5 (ref proto/TrafficAnalysis_Hist.py:84): keep rows with ≥thresh non-nulls."""
-    return df.na.drop(thresh=thresh)
-
-
 def equality_filter(df: DataFrame, col: str, value) -> DataFrame:
     """P6 (ref Dash.py:177): simple pushdown-able equality predicate."""
     return df.filter(F.col(col) == F.lit(value))

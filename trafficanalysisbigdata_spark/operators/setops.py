@@ -16,11 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bag union by column NAME (order-robust, like pandas concat)."""
-    return a.unionByName(b)
-
-
 def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     """SQL UNION: bag concat then one distinct shuffle."""
     return a.unionByName(b).distinct()

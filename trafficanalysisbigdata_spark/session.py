@@ -23,9 +23,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # let custom Python DataSources (sources/paginated.py) receive
-    # pushFilters — off by default in Spark 4.1
-    "spark.sql.python.filterPushdown.enabled": "true",
     # events.parquet carries TIMESTAMP(NANOS) which Spark's parquet reader
     # rejects; read as raw long nanos and convert in io.load_table.
     "spark.sql.legacy.parquet.nanosAsLong": "true",

@@ -6,9 +6,8 @@ The reference fetches its corpus page by page from a rate-limited HTTP API
 driver process. The Spark-native shape is a DataSourceV2: each PAGE becomes
 an InputPartition, so page fetches run as parallel tasks on executors, the
 driver never holds the corpus, and Catalyst treats the result like any other
-relation (projection/filter sit above the scan; a real API source would
-implement ``pushFilters`` to turn predicates into server-side query params —
-the reference's S3 operator).
+relation (projection/filter sit above the scan and Spark evaluates every
+predicate itself).
 
 No network in this environment, so pagination is simulated over a directory
 of page files (``page-*.json``, one JSON object per line) — the partition
@@ -39,8 +38,6 @@ from dataclasses import dataclass
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    EqualTo,
-    Filter,
     InputPartition,
     SimpleDataSourceStreamReader,
 )
@@ -186,19 +183,8 @@ class PaginatedJsonReader(DataSourceReader):
         self.columns = schema.fieldNames()
         self.dir = options["path"]
         self.options = dict(options)
-        self.pushed: dict[str, str] = {}
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """S3 — server-side filtering: accept top-level equality filters
-        (what the reference's API encodes as query params, QuickFetch-style
-        ``?borough=Queens``) and apply them during the page read, so filtered
-        rows never enter Spark. Everything else is returned for Spark to
-        evaluate above the scan — partial pushdown is the contract."""
-        for f in filters:
-            if isinstance(f, EqualTo) and len(f.attribute) == 1:
-                self.pushed[f.attribute[0]] = str(f.value)
-            else:
-                yield f
+        # No filter pushdown: Spark 4.1 reuses a filter-pushed reader for later
+        # filter-free scans of the same relation, leaking the filter into them.
 
     def partitions(self) -> list[PagePartition]:
         """One partition per page — the parallel unit is the page fetch."""
@@ -210,15 +196,9 @@ class PaginatedJsonReader(DataSourceReader):
     def read(self, partition: PagePartition) -> Iterator[tuple]:
         """Runs on an executor: fetch one page via the configured transport,
         emit all-strings rows with permissive NULLs for absent keys (the
-        Socrata JSON contract). Pushed equality filters apply here, before
-        rows enter Spark."""
+        Socrata JSON contract)."""
         fetcher = _resolve_fetcher(self.options)
         for rec in fetcher(partition.path):
-            if any(
-                rec.get(k) is None or str(rec[k]) != v
-                for k, v in self.pushed.items()
-            ):
-                continue
             yield tuple(
                 None if rec.get(c) is None else str(rec[c]) for c in self.columns
             )

@@ -130,12 +130,6 @@ def hour_label_number(label_col: Column) -> Column:
     return F.regexp_extract(label_col, r"(\d{1,2})_", 1).cast("int")
 
 
-def hour_label_split(label_col: Column) -> Column:
-    """F14 (ref proto:149, ``x.split('_')[1]``): same number as a string
-    (labels start with '_', so element 1 is the leading digit group)."""
-    return F.split(label_col, "_").getItem(1)
-
-
 def hour_label_of_day(label_col: Column) -> Column:
     """Engine upgrade of F13: true 0–23 hour of the bucket START, derived
     from the label's position in the canonical column order."""
