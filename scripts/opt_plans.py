@@ -2,7 +2,8 @@
 """Per-query probe: dump ``explain("formatted")`` for registry queries (all,
 or a named subset) into a directory, and optionally time each — plan
 construction plus a noop-sink execution, as bench.py does — so a single query
-can be isolated without running the whole bench roster.
+can be isolated without running the whole bench roster. Ends with a "plan
+smells" summary read from each plan's operator tree (tests/plan_tree.py).
 
 Usage:
     python scripts/opt_plans.py --out "$(mktemp -d)" [--time N] [names...]
@@ -15,7 +16,6 @@ from __future__ import annotations
 
 import argparse
 import os
-import re
 import sys
 import time
 
@@ -23,6 +23,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+SMELLS = ("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin", "BatchEvalPython")
+
+
+def plan_smells(df) -> str | None:
+    """Shapes worth a look in ``df``'s physical plan: pair-shaped or sort-merge
+    joins, row-at-a-time Python UDFs, more than four shuffles."""
+    from tests.plan_tree import exchanges, nodes, plan_of
+
+    plan = plan_of(df)
+    flags = sorted({n.op for n in nodes(plan, *SMELLS)})
+    n_ex = len(exchanges(plan))
+    if flags or n_ex > 4:
+        return f"exchanges={n_ex} {' '.join(flags)}"
+    return None
 
 
 def main() -> None:
@@ -58,6 +72,7 @@ def main() -> None:
         release_caches()
 
     timings: dict[str, list[float]] = {}
+    smells: list[str] = []
     for name in names:
         spec = specs.get(name)
         if spec is None:
@@ -78,6 +93,9 @@ def main() -> None:
             continue
         with open(os.path.join(args.out, f"{name}.txt"), "w") as f:
             f.write(plan)
+        smell = plan_smells(df)
+        if smell:
+            smells.append(f"{name}: {smell}")
         if args.time:
             runs = []
             for i in range(args.time):
@@ -98,24 +116,6 @@ def main() -> None:
         for n in sorted(med, key=med.get, reverse=True):
             print(f"MED {med[n]:8.3f}  {n}")
 
-    # quick smell summary over the captured plans
-    smells: list[str] = []
-    for name in names:
-        path = os.path.join(args.out, f"{name}.txt")
-        if not os.path.exists(path):
-            continue
-        text = open(path).read()
-        n_ex = len(re.findall(r"\bExchange\b", text))
-        flags = []
-        if "CartesianProduct" in text:
-            flags.append("CARTESIAN")
-        if "BatchEvalPython" in text:
-            flags.append("BatchEvalPython")
-        for m in re.finditer(r"(SortMergeJoin|BroadcastNestedLoopJoin)", text):
-            flags.append(m.group(1))
-            break
-        if flags or n_ex > 4:
-            smells.append(f"{name}: exchanges={n_ex} {' '.join(sorted(set(flags)))}")
     if smells:
         print("--- plan smells ---")
         for s in smells:

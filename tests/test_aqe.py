@@ -9,6 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.plan_tree import nodes, plan_of
+
 # Skew thresholds lowered so a test-sized hot key trips the same machinery a
 # TB-scale hot key trips in production (shuffle bytes are compressed, so the
 # default 256MB thresholds need real data volume); broadcast disabled to
@@ -73,9 +75,9 @@ def test_aqe_skew_join_split_activates(skew_spark):
     # hot rows add w=0 each; cold key k has 50 rows of w=2k
     assert row.s == sum(2 * k * 50 for k in range(1, 1001))
 
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "skew=true" in plan, plan
-    assert "skewed" in plan.lower()
+    plan = plan_of(j, final=True)
+    assert any("skew=true" in n.text for n in nodes(plan, "SortMergeJoin")), plan
+    assert any("skewed" in n.text for n in nodes(plan, "AQEShuffleRead")), plan
 
 
 def test_aqe_coalesces_small_partitions(skew_spark):
@@ -91,5 +93,5 @@ def test_aqe_coalesces_small_partitions(skew_spark):
     )
     rows = df.collect()
     assert len(rows) == 7
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "AQEShuffleRead coalesced" in plan, plan
+    plan = plan_of(df, final=True)
+    assert any("coalesced" in n.text for n in nodes(plan, "AQEShuffleRead")), plan

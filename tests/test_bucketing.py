@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.plan_tree import exchanges, nodes, plan_of
 from trafficanalysisbigdata_spark.io import load_table, write_partitioned
 
 
@@ -33,10 +34,6 @@ def bucketed_tables(spark, sf_dir, tmp_path_factory):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def _physical_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     # disable broadcast: at test SF everything broadcasts, which bypasses the
     # bucketed path entirely ("Bucketed: false (disabled by query planner)")
@@ -45,12 +42,11 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     try:
         ot, ct = bucketed_tables
         joined = spark.table(ot).join(spark.table(ct), "o_custkey")
-        joined.collect()  # force planning of the final (AQE) physical plan
-        join_plan = _physical_plan(joined)
-        assert "Bucketed: true" in join_plan, join_plan
-        assert "ShuffleExchange" not in join_plan.replace(
-            "Exchange hashpartitioning", "ShuffleExchange"
-        ), join_plan
+        joined.collect()  # the final (AQE) physical plan exists after an action
+        plan = plan_of(joined, final=True)
+        scans = nodes(plan, "FileSourceScan")
+        assert scans and all("Bucketed: true" in s.text for s in scans), plan
+        assert not exchanges(plan), plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

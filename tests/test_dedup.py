@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.plan_tree import joins, nodes, plan_of
 from trafficanalysisbigdata_spark.io import register_views
 from trafficanalysisbigdata_spark.operators.dedup import (
     NGRAM_JACCARD_CROSSOVER_DOCS,
@@ -93,20 +94,11 @@ def test_ngram_jaccard_big_path_has_no_token_self_join(spark, sf_dir):
     register_views(spark, sf_dir, "documents")
     docs = spark.table("documents").select("doc_id", "n_chars", "text")
 
-    def join_lines(big):
-        plan = (
-            ngram_jaccard_scores(docs, big_corpus=big)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        return [ln for ln in plan.splitlines() if "Join" in ln]
-
-    big = join_lines(True)
-    assert not any("token#" in ln for ln in big), big
-    assert any("band#" in ln and "bucket#" in ln for ln in big), big
-    small = join_lines(False)
-    assert any("token#" in ln for ln in small), small
+    big = plan_of(ngram_jaccard_scores(docs, big_corpus=True))
+    assert not joins(big, keyed_on="token"), big
+    assert [j for j in joins(big) if {"band", "bucket"} <= set(j.keys)], big
+    small = plan_of(ngram_jaccard_scores(docs, big_corpus=False))
+    assert joins(small, keyed_on="token"), small
 
 def test_forced_big_verify_default_warns_exactly_once(spark, sf_dir):
     """big_corpus=True with verify_broadcast unset defaults to the measured
@@ -144,11 +136,8 @@ def test_jaccard_verify_broadcast_materializes_once(spark, sf_dir):
     docs = spark.table("documents").select("doc_id", "n_chars", "text")
     res = ngram_jaccard_scores(docs, big_corpus=True, verify_broadcast=True)
     res.collect()
-    ep = res._jdf.queryExecution().executedPlan().toString()
-    reused_toks = [
-        ln for ln in ep.splitlines() if "ReusedExchange" in ln and "toks2" in ln
-    ]
-    assert reused_toks, ep
+    plan = plan_of(res, final=True)
+    assert [n for n in nodes(plan, "ReusedExchange") if "toks2" in n.text], plan
 
 def test_dup_span_scrub_planted_edges(spark):
     """dd10's removal rule against a pure-Python reference on planted

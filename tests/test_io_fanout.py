@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import pytest
 
+from tests.plan_tree import exchanges, plan_of
 from trafficanalysisbigdata_spark.io import fan_out_small_scan, load_table
 
 _MPB = "spark.sql.files.maxPartitionBytes"
@@ -75,9 +76,9 @@ def test_fanout_is_keyed_not_roundrobin(spark, sf_dir):
     # keyed hash partitioning — round-robin's sortBeforeRepartition was the
     # measured light-query tax; the plan must show hashpartitioning(doc_id)
     df = fan_out_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(doc_id" in plan, plan
-    assert "roundrobinpartitioning" not in plan, plan
+    plan = plan_of(df)
+    assert exchanges(plan, keyed_on="doc_id"), plan
+    assert "RoundRobinPartitioning" not in {e.mode for e in exchanges(plan)}, plan
 
 
 def test_fanout_changes_no_rows(spark, sf_dir):

@@ -158,3 +158,15 @@ def test_window_rotation_regreens_every_oracle_query(monkeypatch):
         f"some oracle query not re-greened within {bound} rounds: "
         f"{[n for n in oracle_names if green.get(n, 0) <= base + bound]}"
     )
+
+
+def test_load_all_raises_on_missing_query_module(monkeypatch):
+    """A renamed or deleted query module must fail loudly: skipping it would
+    silently drop its queries from the registry, the driver window and this
+    oracle sweep."""
+    from trafficanalysisbigdata_spark.plans import registry
+
+    modules = registry._QUERY_MODULES + ("queries_renamed",)
+    monkeypatch.setattr(registry, "_QUERY_MODULES", modules)
+    with pytest.raises(ModuleNotFoundError, match="queries_renamed"):
+        registry.load_all()

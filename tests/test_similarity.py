@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.plan_tree import Node, nodes, plan_of
 from trafficanalysisbigdata_spark.io import register_views
 from trafficanalysisbigdata_spark.operators.similarity import (
     brute_force_topk,
@@ -20,6 +21,13 @@ from trafficanalysisbigdata_spark.operators.similarity import (
     threshold_pairs,
 )
 from trafficanalysisbigdata_spark.session import prep
+
+
+def _dynamically_pruned(plan: Node) -> bool:
+    """A partition filter on some scan came from a broadcast join at runtime."""
+    return any(
+        "dynamicpruning" in f for s in nodes(plan, "FileSourceScan") for f in s.partition_filters
+    )
 
 
 def test_lsh_recall_vs_bruteforce(spark, sf_dir):
@@ -141,8 +149,7 @@ def test_ivf_index_persist_and_query(spark, tmp_path):
     # the index read must only scan probed cl= partitions: with 10 probes x
     # n_probe=2 over 8 clusters, pruning keeps <= 8; the plan shows a
     # dynamic partition filter rather than a full scan
-    plan = indexed._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan
+    assert _dynamically_pruned(plan_of(indexed))
 
 
 def test_embedding_lsh_bucket_cap_bounds_candidates(spark):
@@ -228,8 +235,7 @@ def test_hash_ivf_index_pruning_and_recall(spark, tmp_path):
     recall = len(exact & got) / len(exact)
     assert recall >= 0.7, f"hash-IVF recall too low: {recall}"
 
-    plan = indexed._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan
+    assert _dynamically_pruned(plan_of(indexed))
 
 
 def test_adaptive_n_planes_rule():
@@ -590,22 +596,12 @@ def test_sim4_scoring_joins_broadcast_when_size_known(spark):
             lambda i: (F.pmod(F.col("id") * i, F.lit(97)) / 97.0).cast("float"),
         ).alias("embedding"),
     )
-    plan = (
-        lsh_neardup_pairs(emb, 0.8, n_tables=4, dim=16, n_rows=2000)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SortMergeJoin" not in plan, plan
+    plan = plan_of(lsh_neardup_pairs(emb, 0.8, n_tables=4, dim=16, n_rows=2000))
+    assert not nodes(plan, "SortMergeJoin"), plan
     # past the budget the hint must NOT engage (a terabyte broadcast would
     # kill every executor); the plan is Catalyst's choice there
-    plan_big = (
-        lsh_neardup_pairs(emb, 0.8, n_tables=4, dim=16, n_rows=50_000_000)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan_big  # shape is size-dependent; building it must not throw
+    # shape is size-dependent; building it must not throw
+    assert nodes(plan_of(lsh_neardup_pairs(emb, 0.8, n_tables=4, dim=16, n_rows=50_000_000)))
 
 
 def test_hash_ivf_two_level_build(spark, tmp_path):
@@ -904,16 +900,14 @@ def test_pipe16_top1_agrees_with_bruteforce(spark, sf_dir):
     from trafficanalysisbigdata_spark.operators.similarity import (
         two_stage_rerank_topk,
     )
-    from trafficanalysisbigdata_spark.plans.queries_pipeline import (
-        _P16_SHORTLIST,
-        _hash_frac,
-    )
+    from trafficanalysisbigdata_spark.functions.hashing import hash_frac
+    from trafficanalysisbigdata_spark.plans.queries_pipeline import _P16_SHORTLIST
 
     prep(spark)
     register_views(spark, sf_dir, "embeddings")
     emb = spark.table("embeddings")
     split = emb.select(
-        "vec_id", "embedding", (_hash_frac(F.col("vec_id")) < 0.9).alias("t")
+        "vec_id", "embedding", (hash_frac(F.col("vec_id")) < 0.9).alias("t")
     )
     train = split.filter("t").select("vec_id", "embedding")
     ev = split.filter(~F.col("t")).select("vec_id", "embedding")

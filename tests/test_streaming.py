@@ -16,6 +16,7 @@ import decimal
 
 from pyspark.sql import functions as F
 
+from tests.plan_tree import nodes, plan_of
 from trafficanalysisbigdata_spark.io import load_table
 from trafficanalysisbigdata_spark.session import prep
 from trafficanalysisbigdata_spark.streaming.snapshot import (
@@ -332,7 +333,7 @@ def test_dashboard_map_layer_is_bounded(spark):
     rows2 = dashboard_queries(big, max_map_points=100)["q6_points"].collect()
     assert len(rows1) == 100
     assert [r.event_id for r in rows1] == [r.event_id for r in rows2]
-    assert "TakeOrderedAndProject" in q6._jdf.queryExecution().executedPlan().toString()
+    assert nodes(plan_of(q6), "TakeOrderedAndProject")
 
 
 def test_snapshot_collect_guard_rejects_unaggregated(spark):

@@ -15,20 +15,11 @@ oracle runs the identical program.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash_frac
 from ..functions.text import token_count
-
-_HEX_MOD = float(16**8)
-
-
-def _hash_frac(col: Column) -> Column:
-    """md5-first-8-hex-digits of the id, scaled to [0, 1) — deterministic,
-    engine-portable shard randomization (same as pipe4's sampler)."""
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    ) / F.lit(_HEX_MOD)
 
 
 def pack_sequences(
@@ -45,7 +36,7 @@ def pack_sequences(
     (``floor(start_off / seq_len)``), ``end_seq`` the one it ends in;
     ``straddles`` marks documents cut by a sequence boundary.
     """
-    shard = F.floor(_hash_frac(F.col(id_col)) * n_shards).cast("int")
+    shard = F.floor(hash_frac(F.col(id_col)) * n_shards).cast("int")
     w = Window.partitionBy("shard").orderBy(id_col)
     out = docs.select(
         F.col(id_col), shard.alias("shard"), token_count(F.col(text_col)).alias("n_tokens")

@@ -7,7 +7,7 @@ are a weighted-without-replacement sample with inclusion probability ∝ w.
 No sequential draws, no rejection, so it parallelizes and (with the
 engine's md5-derived deterministic uniform instead of ``rand()``) is
 stable under retries, re-runs, AND engines — the property every sampler in
-this engine keeps (see ``plans/queries_pipeline._hash_frac``).
+this engine keeps (see ``functions/hashing.hash_frac``).
 
 Float discipline: u is an exact dyadic rational (first 8 md5 hex digits,
 +1 so u > 0, over 16^8), ``ln`` is rounded to 8 decimals before the single
@@ -21,19 +21,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-_HEX_MOD = float(16**8)
+from ..functions.hashing import hash_frac
 
 
 def aes_key(id_col: Column, weight_col: Column) -> Column:
     """The A-ES exponential key ``-ln(u)/w`` with the deterministic
     uniform u = (md5-fraction of id + one domain ulp) ∈ (0, 1]."""
-    u = (
-        F.conv(F.substring(F.md5(id_col.cast("string")), 1, 8), 16, 10).cast(
-            "bigint"
-        )
-        + F.lit(1)
-    ) / F.lit(_HEX_MOD)
-    return F.round(-F.log(u), 8) / weight_col
+    return F.round(-F.log(hash_frac(id_col, open_zero=True)), 8) / weight_col
 
 
 def aes_weighted_topk(

@@ -440,13 +440,13 @@ def dd8_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd4/dd7/tx9 — interleaved min-of-4 on the real query, one JVM:
     off 2.508 vs on 1.909 s, results identical (the fan-out gate is a
     no-op on real multi-split layouts)."""
-    from .queries_pipeline import _hash_frac
+    from ..functions.hashing import hash_frac
     from ..functions.text import token_ngrams
     from ..io import fan_out_small_scan
 
     docs = fan_out_small_scan(
         spark.table("documents").select("doc_id", "text", "lang"), "doc_id"
-    ).withColumn("in_corpus", _hash_frac(F.col("doc_id")) < 0.75)
+    ).withColumn("in_corpus", hash_frac(F.col("doc_id")) < 0.75)
     corpus = docs.filter(F.col("in_corpus"))
     corpus_fp = corpus.select(F.md5("text").alias("fp")).distinct()
     inc = (

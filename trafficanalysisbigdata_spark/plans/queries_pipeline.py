@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import HEX_MOD, hash_frac
 from ..functions.text import lang_guess, lexical_diversity, token_count
 from ..operators.dedup import doc_token_sets, simhash16
 from .registry import register
@@ -287,21 +288,6 @@ def pipe3_multisignal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-language sampling rates: downsample the dominant language, keep the
 # rest — the mix-rebalancing step pipe2's share table feeds.
 _SAMPLE_RATES = {"en": 0.35, "de": 0.9, "es": 0.9, "fr": 0.9, "zh": 0.9}
-_HEX_MOD = float(16**8)  # md5 first-8-hex-digits domain
-
-
-def _hash_frac(col: Column) -> Column:
-    """Deterministic per-row uniform in [0,1): first 8 hex digits of
-    md5(string(col)) / 16^8 — the reproducible substitute for rand(seed)
-    (stable under retries, re-runs, AND engines; ``sample()``/``sampleBy()``
-    are partition-order-dependent and not oracle-checkable). Same derivation
-    as the LSH hyperplanes (operators/similarity.plane_component)."""
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("bigint")
-        / F.lit(_HEX_MOD)
-    )
-
-
 _RATES_SQL = "\n             ".join(
     f"WHEN '{k}' THEN {v}" for k, v in _SAMPLE_RATES.items()
 )
@@ -313,7 +299,7 @@ _RATES_SQL = "\n             ".join(
     WITH frac AS (
       SELECT lang,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-               / {_HEX_MOD} AS u,
+               / {HEX_MOD} AS u,
              len(string_split(text, ' ')) AS n_tokens
       FROM documents
     ), sampled AS (
@@ -343,7 +329,7 @@ def pipe4_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = docs.select(
         "lang",
         token_count(F.col("text")).alias("n_tokens"),
-        (_hash_frac(F.col("doc_id")) < rate).alias("keep"),
+        (hash_frac(F.col("doc_id")) < rate).alias("keep"),
     )
     return (
         flagged.groupBy("lang")
@@ -364,7 +350,7 @@ def pipe4_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH base AS (
       SELECT doc_id, source,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-               / {_HEX_MOD} < 0.75 AS is_train,
+               / {HEX_MOD} < 0.75 AS is_train,
              string_split(text, ' ') AS t
       FROM documents
     ), sh AS (
@@ -419,7 +405,7 @@ def pipe5_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = docs.select(
         "doc_id",
         "source",
-        (_hash_frac(F.col("doc_id")) < 0.75).alias("is_train"),
+        (hash_frac(F.col("doc_id")) < 0.75).alias("is_train"),
         F.explode_outer(F.array_distinct(token_ngrams(F.col("text"), 5))).alias("shingle"),
     )
     flagged = pairs.withColumn(
@@ -443,7 +429,7 @@ def pipe5_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SHARD_SQL = (
     f"CAST(FLOOR(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-    f" / {_HEX_MOD} * 16) AS INT)"
+    f" / {HEX_MOD} * 16) AS INT)"
 )
 
 @register(
@@ -509,7 +495,7 @@ def pipe6_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (
       SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-               / {_HEX_MOD} AS u
+               / {HEX_MOD} AS u
       FROM documents
     ), pl AS (
       SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS t FROM d GROUP BY lang
@@ -575,7 +561,7 @@ def pipe7_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = (
         docs.join(F.broadcast(rates.select("lang", "rate")), "lang")
-        .filter(_hash_frac(F.col("doc_id")) < F.col("rate"))
+        .filter(hash_frac(F.col("doc_id")) < F.col("rate"))
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs_kept"),
@@ -600,7 +586,7 @@ def pipe7_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sh AS (
       SELECT CAST(floor((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                         / {_HEX_MOD}) * 8) AS INT) AS shard,
+                         / {HEX_MOD}) * 8) AS INT) AS shard,
              len(string_split(text, ' ')) AS n_tokens,
              n_chars
       FROM documents
@@ -634,7 +620,7 @@ def pipe8_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus size, and the manifest is the proof."""
     docs = spark.table("documents")
     sh = docs.select(
-        F.floor(_hash_frac(F.col("doc_id")) * 8).cast("int").alias("shard"),
+        F.floor(hash_frac(F.col("doc_id")) * 8).cast("int").alias("shard"),
         token_count(F.col("text")).alias("n_tokens"),
         "n_chars",
     )
@@ -1002,7 +988,7 @@ def pipe12_cluster_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), split AS (
       SELECT doc_id, source,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-               / {_HEX_MOD} < 0.9 AS is_train
+               / {HEX_MOD} < 0.9 AS is_train
       FROM documents
     ), bad AS (
       SELECT DISTINCT s.v AS doc_id FROM sym s
@@ -1049,7 +1035,7 @@ def pipe13_neardup_decontaminated_split(
     split = docs.select(
         "doc_id",
         "source",
-        (_hash_frac(F.col("doc_id")) < 0.9).alias("is_train"),
+        (hash_frac(F.col("doc_id")) < 0.9).alias("is_train"),
     )
     pairs = (
         minhash_lsh_scores(docs, max_bucket=DD2_MAX_BUCKET)
@@ -1092,7 +1078,7 @@ def pipe13_neardup_decontaminated_split(
     WITH split AS (
       SELECT doc_id, source,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-               / {_HEX_MOD} < 0.9 AS is_train
+               / {HEX_MOD} < 0.9 AS is_train
       FROM documents
     ), sh AS (
       SELECT DISTINCT doc_id,
@@ -1162,7 +1148,7 @@ def pipe14_containment_leak_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     on that evidence.
 
     r15 continuation pass: (1) is_train rides the postings as the derivable
-    _hash_frac(doc_id) expression instead of a join against ``split`` — the
+    hash_frac(doc_id) expression instead of a join against ``split`` — the
     static plan had one BroadcastHashJoin + split-side scan inside EVERY
     replicated shingle subtree (6 of them) probing every posting row for a
     bit the scan can compute itself (interleaved min-of-5: 4.63 → 4.25 s);
@@ -1181,10 +1167,10 @@ def pipe14_containment_leak_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = docs.select(
         "doc_id",
         "source",
-        (_hash_frac(F.col("doc_id")) < 0.9).alias("is_train"),
+        (hash_frac(F.col("doc_id")) < 0.9).alias("is_train"),
     )
     sh = doc_shingle_sets(docs).withColumn(
-        "is_train", _hash_frac(F.col("doc_id")) < 0.9
+        "is_train", hash_frac(F.col("doc_id")) < 0.9
     )
     ev = sh.filter(~F.col("is_train")).select("doc_id", "token")
     n_ev = ev.select("doc_id").distinct().agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1282,7 +1268,7 @@ _P16_BAR = 0.4  # leak bar on exact cosine — see docstring for calibration
     WITH split AS (
       SELECT vec_id,
              ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
-               / {_HEX_MOD} < 0.9 AS is_train
+               / {HEX_MOD} < 0.9 AS is_train
       FROM embeddings
     ), qe AS (
       SELECT vec_id,
@@ -1384,7 +1370,7 @@ def pipe16_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame
     split = emb.select(
         "vec_id",
         "embedding",
-        (_hash_frac(F.col("vec_id")) < 0.9).alias("is_train"),
+        (hash_frac(F.col("vec_id")) < 0.9).alias("is_train"),
     )
     train = split.filter(F.col("is_train")).select("vec_id", "embedding")
     evalp = split.filter(~F.col("is_train")).select("vec_id", "embedding")
@@ -1423,7 +1409,7 @@ _P17_K = 5  # weighted picks per source
       SELECT doc_id, source,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
              ROUND(-ln((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                        + 1) / {_HEX_MOD}), 8)
+                        + 1) / {HEX_MOD}), 8)
                / CAST(len(string_split(text, ' ')) AS BIGINT) AS k0
       FROM documents
     ), r AS (
@@ -1501,7 +1487,7 @@ def pipe17_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), keyed AS (
       SELECT doc_id, source, q_weight,
              ROUND(-ln((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                        + 1) / {_HEX_MOD}), 8) / q_weight AS k0
+                        + 1) / {HEX_MOD}), 8) / q_weight AS k0
       FROM d
     ), r AS (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY source

@@ -369,8 +369,8 @@ def correction_delta(ev: DataFrame, last_day: str) -> DataFrame:
 
     Filters on a PLAIN ts range, not the derived day string: literal bounds
     on the raw column reach the parquet scan as PushedFilters (row-group
-    skipping), where ``cast(ts as date) = lit`` would be evaluated post-scan
-    (pinned in tests/test_plans.py)."""
+    skipping), where ``date_format(ts, 'yyyy-MM-dd') = lit`` would be
+    evaluated post-scan (pinned in tests/test_plans.py)."""
     return ev.filter(
         (F.col("ts") >= F.lit(last_day).cast("timestamp"))
         & (F.col("ts") < F.date_add(F.lit(last_day).cast("date"), 1).cast("timestamp"))

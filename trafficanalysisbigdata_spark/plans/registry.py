@@ -163,12 +163,7 @@ def register_sql(
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (idempotent) and return the registry."""
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(f"{__package__}.{mod}")
-        except ModuleNotFoundError as e:
-            # allow partially-built registries while the engine grows
-            if mod not in str(e):
-                raise
+        importlib.import_module(f"{__package__}.{mod}")
     return REGISTRY
 
 

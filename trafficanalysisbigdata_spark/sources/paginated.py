@@ -173,6 +173,22 @@ def _resolve_fetcher(options: dict) -> PageFetcher:
     return base
 
 
+def _list_pages(directory: str) -> list[str]:
+    """The page files of a paginated directory, in page order."""
+    return sorted(
+        f for f in os.listdir(directory) if f.startswith("page-") and f.endswith(".json")
+    )
+
+
+def _page_rows(fetcher: PageFetcher, address: str, columns: list[str]) -> list[tuple]:
+    """One page as all-strings rows, permissive NULLs for absent keys (the
+    Socrata JSON contract)."""
+    return [
+        tuple(None if rec.get(c) is None else str(rec[c]) for c in columns)
+        for rec in fetcher(address)
+    ]
+
+
 @dataclass
 class PagePartition(InputPartition):
     path: str
@@ -188,20 +204,11 @@ class PaginatedJsonReader(DataSourceReader):
 
     def partitions(self) -> list[PagePartition]:
         """One partition per page — the parallel unit is the page fetch."""
-        pages = sorted(
-            f for f in os.listdir(self.dir) if f.startswith("page-") and f.endswith(".json")
-        )
-        return [PagePartition(os.path.join(self.dir, f)) for f in pages]
+        return [PagePartition(os.path.join(self.dir, f)) for f in _list_pages(self.dir)]
 
     def read(self, partition: PagePartition) -> Iterator[tuple]:
-        """Runs on an executor: fetch one page via the configured transport,
-        emit all-strings rows with permissive NULLs for absent keys (the
-        Socrata JSON contract)."""
-        fetcher = _resolve_fetcher(self.options)
-        for rec in fetcher(partition.path):
-            yield tuple(
-                None if rec.get(c) is None else str(rec[c]) for c in self.columns
-            )
+        """Runs on an executor: fetch one page via the configured transport."""
+        return iter(_page_rows(_resolve_fetcher(self.options), partition.path, self.columns))
 
 
 class PaginatedJsonStreamReader(SimpleDataSourceStreamReader):
@@ -227,29 +234,24 @@ class PaginatedJsonStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"page": 0}
 
-    def _pages(self) -> list[str]:
-        return sorted(
-            f for f in os.listdir(self.dir) if f.startswith("page-") and f.endswith(".json")
-        )
-
     def _rows(self, names: list[str]) -> list[tuple]:
         # a LIST, not a generator: the streaming runner pickles the
         # prefetched batch to replay it into the micro-batch plan
         fetcher = _resolve_fetcher(self.options)
         return [
-            tuple(None if rec.get(c) is None else str(rec[c]) for c in self.columns)
+            row
             for name in names
-            for rec in fetcher(os.path.join(self.dir, name))
+            for row in _page_rows(fetcher, os.path.join(self.dir, name), self.columns)
         ]
 
     def read(self, start: dict) -> tuple[list[tuple], dict]:
-        pages = self._pages()
+        pages = _list_pages(self.dir)
         n0 = int(start["page"])
         batch = pages[n0:]
         return self._rows(batch), {"page": n0 + len(batch)}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> list[tuple]:
-        return self._rows(self._pages()[int(start["page"]) : int(end["page"])])
+        return self._rows(_list_pages(self.dir)[int(start["page"]) : int(end["page"])])
 
 
 class PaginatedJsonDataSource(DataSource):
