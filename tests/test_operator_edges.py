@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.plan_tree import nodes, plan_of
@@ -492,6 +493,27 @@ def test_sink_queries_run_concurrently(spark, sf_dir):
     for n in names:
         assert results[(0, n)] == results[(1, n)], f"{n} diverged across threads"
         assert results[(0, n)], f"{n} returned no rows"
+
+
+def _sink_queries() -> list[str]:
+    from trafficanalysisbigdata_spark.plans.registry import load_all
+
+    return sorted(n for n, spec in load_all().items() if "sink" in spec.tags)
+
+
+@pytest.mark.parametrize("name", _sink_queries())
+def test_sink_query_results_survive_a_rerun(spark, sf_dir, name):
+    """A sink query's result reads files the query wrote. Running the query
+    again in the same session must not touch them: the FIRST result, collected
+    after the second run, still equals the second (s7–s10 once wrote to a
+    fixed per-process path, so the rerun deleted the first result's files)."""
+    from trafficanalysisbigdata_spark.plans.registry import load_all
+
+    spec = load_all()[name]
+    first = spec.run(spark, sf_dir)
+    second = sorted(map(tuple, spec.run(spark, sf_dir).collect()))
+    assert second, f"{name} returned no rows"
+    assert sorted(map(tuple, first.collect())) == second
 
 
 def test_rolling_median_short_frames(spark):

@@ -817,15 +817,13 @@ def test_stage_false_is_count_free_and_never_stages(spark, tmp_path, monkeypatch
 
 def test_stage_true_forces_staged_under_conf_dir(spark, sf_dir, tmp_path):
     """stage=True forces the staged plan even under the frontier, and with
-    no explicit work_dir the groups land under the STAGING_DIR_CONF session
-    conf (the cluster-portable default, r13 verdict item #3) — set-identical
-    to the single-pass result."""
+    no explicit work_dir the groups land under the SCRATCH_DIR_CONF session
+    conf (io.scratch_dir, the cluster-portable default) — set-identical to
+    the single-pass result."""
     import os
 
-    from trafficanalysisbigdata_spark.operators.similarity import (
-        STAGING_DIR_CONF,
-        lsh_neardup_pairs,
-    )
+    from trafficanalysisbigdata_spark.io import SCRATCH_DIR_CONF
+    from trafficanalysisbigdata_spark.operators.similarity import lsh_neardup_pairs
 
     prep(spark)
     register_views(spark, sf_dir, "embeddings")
@@ -838,13 +836,14 @@ def test_stage_true_forces_staged_under_conf_dir(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert single
-    spark.conf.set(STAGING_DIR_CONF, str(tmp_path / "confdir"))
+    spark.conf.set(SCRATCH_DIR_CONF, str(tmp_path / "confdir"))
     try:
         forced = lsh_neardup_pairs(
             emb, 0.3, n_tables=7, n_planes=4, n_rows=n, group_size=3, stage=True
         )
         leaves = os.listdir(tmp_path / "confdir")
         assert len(leaves) == 1  # one uuid leaf per staging
+        assert leaves[0].startswith("lsh-")
         assert sorted(os.listdir(tmp_path / "confdir" / leaves[0])) == [
             "tables_0000",
             "tables_0003",
@@ -852,22 +851,23 @@ def test_stage_true_forces_staged_under_conf_dir(spark, sf_dir, tmp_path):
         ]
         assert {(r.id1, r.id2, r.cos) for r in forced.collect()} == single
     finally:
-        spark.conf.unset(STAGING_DIR_CONF)
+        spark.conf.unset(SCRATCH_DIR_CONF)
 
 
 def test_default_staging_dir_is_warehouse_relative(spark):
-    """Without the conf key, auto-staging resolves under
-    <spark.sql.warehouse.dir>/_lsh_staging/<uuid> — shared storage on a
-    real cluster, never a driver-local mkdtemp (r13 verdict item #3)."""
-    from trafficanalysisbigdata_spark.operators.similarity import (
-        STAGING_DIR_CONF,
-        _default_staging_dir,
-    )
+    """Without the conf key, scratch (LSH staging included) resolves under
+    <spark.sql.warehouse.dir>/_scratch/<tag>-<uuid> — shared storage on a
+    real cluster, never a driver-local temp dir. A file: warehouse comes
+    back as a plain local path for the Python-filesystem callers."""
+    from urllib.parse import urlparse
 
-    assert spark.conf.get(STAGING_DIR_CONF, None) is None
+    from trafficanalysisbigdata_spark.io import SCRATCH_DIR_CONF, scratch_dir
+
+    assert spark.conf.get(SCRATCH_DIR_CONF, None) is None
     wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-    d1, d2 = _default_staging_dir(spark), _default_staging_dir(spark)
-    assert d1.startswith(wh + "/_lsh_staging/")
+    assert wh.startswith("file:")
+    d1, d2 = scratch_dir(spark, "lsh"), scratch_dir(spark, "lsh")
+    assert d1.startswith(urlparse(wh).path + "/_scratch/lsh-")
     assert d1 != d2  # concurrent stagings must not collide
 
 

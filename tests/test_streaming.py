@@ -14,14 +14,17 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.plan_tree import nodes, plan_of
 from trafficanalysisbigdata_spark.io import load_table
 from trafficanalysisbigdata_spark.session import prep
 from trafficanalysisbigdata_spark.streaming.snapshot import (
+    DRAIN_TIMEOUT_S,
     SnapshotRefreshJob,
     dashboard_queries,
+    drain,
 )
 from trafficanalysisbigdata_spark.streaming.windows import watermarked_tumbling_hourly
 
@@ -32,6 +35,26 @@ EVENTS_DDL = (
 
 def _canon(rows):
     return sorted(tuple(r) for r in rows)
+
+
+def test_drain_stops_a_stalled_stream_and_raises():
+    """Every AvailableNow wait is bounded: a stream still running after
+    DRAIN_TIMEOUT_S is stopped, then reported as a TimeoutError."""
+
+    class Stalled:
+        waited, stopped = None, False
+
+        def awaitTermination(self, timeout):
+            self.waited = timeout
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = Stalled()
+    with pytest.raises(TimeoutError):
+        drain(q)
+    assert q.waited == DRAIN_TIMEOUT_S and q.stopped
 
 
 def test_snapshot_refresh_matches_batch(spark, sf_dir, tmp_path):

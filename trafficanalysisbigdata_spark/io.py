@@ -1,14 +1,44 @@
-"""Table loaders / sinks over the driver's parquet fixtures.
+"""Table loaders / sinks over the driver's parquet fixtures, and the one
+owner of the files the engine writes itself.
 
 Scans are plain ``spark.read.parquet`` so Catalyst keeps predicate pushdown,
 column pruning, and (when the layout is partitioned) partition pruning. At
 cluster scale the same loaders work against a partitioned/bucketed lakehouse
 layout — see ``write_partitioned``.
+
+Scratch rule (``scratch_dir``): a query that writes its own data (sink
+round-trips, layout rewrites, stream sources and checkpoints, LSH staging)
+writes under ``spark.trafficanalysisbigdata.scratchDir`` if the session sets
+it, else under ``<spark.sql.warehouse.dir>/_scratch``, in a fresh uuid leaf
+per run.
+
+* Cluster-reachable: every executor writes there and the returned DataFrame
+  reads back from there, and the warehouse is the one location a cluster
+  session already guarantees is shared. A driver-local temp dir works only
+  in local mode.
+* A uuid leaf per run: two runs of one query, in one driver or many, never
+  share a path, so a rerun cannot overwrite files an earlier result still
+  reads.
+* Callers own cleanup: the files back the returned DataFrame, so nothing
+  here deletes them.
+
+A warehouse on ``file:`` resolves to a plain local path, so the callers that
+use the Python filesystem on their leaf (st10's ordered source install,
+st11's versioned state) work unchanged in local mode.
+
+Fit-once artifacts (``ensure_artifact``) are different: fitted models and
+indexes that a DuckDB oracle reads by literal path. They live at static
+driver-local paths under ``ARTIFACT_ROOT`` and are rebuilt only when their
+source stamp changes or a write was torn.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
+import uuid
+from collections.abc import Callable, Iterable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,8 +65,64 @@ BROADCAST_SAFE = {"region", "nation"}
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+SCRATCH_DIR_CONF = "spark.trafficanalysisbigdata.scratchDir"
+
+# Root of the fit-once artifacts: oracle SQL interpolates paths under it as
+# literals, so it is fixed at import time and stays on the driver's local
+# filesystem, where DuckDB reads it.
+ARTIFACT_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_artifacts")
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def scratch_dir(spark: SparkSession, tag: str) -> str:
+    """A fresh ``<root>/<tag>-<uuid>`` path for one run's own files (see the
+    module docstring for the rule). Not created: Spark writers create it."""
+    root = spark.conf.get(SCRATCH_DIR_CONF, None) or (
+        spark.conf.get("spark.sql.warehouse.dir").rstrip("/") + "/_scratch"
+    )
+    if root.startswith("file:"):
+        root = unquote(urlparse(root).path)
+    return f"{root.rstrip('/')}/{tag}-{uuid.uuid4().hex}"
+
+
+def source_stamp(sf_dir: str, table: str) -> str:
+    """Cheap content fingerprint of a fixture table: path, mtime and size, so
+    a regenerated table at the same path does not serve a stale artifact."""
+    try:
+        st = os.stat(table_path(sf_dir, table))
+    except OSError:
+        return f"{sf_dir}|nostat"
+    return f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
+
+
+def ensure_artifact(
+    path: str,
+    stamp: str,
+    build: Callable[[str], None],
+    parts: Iterable[str] = ("",),
+) -> str:
+    """Fit-once cache: ``build(path)`` runs only when the artifact at ``path``
+    is not complete for ``stamp``. Complete means ``_STAMP`` holds ``stamp``
+    and every part (a subdirectory of ``path``; ``""`` is ``path`` itself) has
+    a ``_SUCCESS`` marker. The old stamp is removed before a build and the new
+    one written after it, so a torn build is never served under any stamp."""
+    stamp_path = os.path.join(path, "_STAMP")
+    try:
+        with open(stamp_path) as f:
+            fresh = f.read() == stamp
+    except OSError:
+        fresh = False
+    if fresh and all(os.path.exists(os.path.join(path, p, "_SUCCESS")) for p in parts):
+        return path
+    if os.path.exists(stamp_path):
+        os.remove(stamp_path)
+    build(path)
+    with open(stamp_path, "w") as f:
+        f.write(stamp)
+    return path
 
 
 def fan_out_small_scan(df: DataFrame, key_col: str) -> DataFrame:

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.vectors import as_double, cosine, cosine_prenorm, dot, norm
+from ..io import scratch_dir
 
 
 def plane_component(table: int, plane: int, dim_i: int) -> float:
@@ -438,16 +439,9 @@ def lsh_neardup_pairs(
     of auto-routing.
 
     ``work_dir`` resolution when staging (routed or forced): the explicit
-    argument wins; else the session conf key
-    ``spark.trafficanalysisbigdata.lsh.stagingDir`` (set it to shared
-    storage on a real cluster — every executor AND the final read-back
-    must reach it); else ``<spark.sql.warehouse.dir>/_lsh_staging/<uuid>``
-    — warehouse-relative because the warehouse is the one location a
-    cluster session already guarantees is shared, unlike a driver-local
-    mkdtemp whose path means nothing to remote executors. Staged group
-    files are the BACKING STORE of the returned DataFrame (it reads them
-    back), so they are not auto-deleted; the caller owns cleanup after the
-    result is consumed.
+    argument wins; else ``io.scratch_dir`` (the scratch rule in the ``io``
+    module docstring: where, why, and that the caller owns cleanup — the
+    staged group files back the returned DataFrame).
     The round-11 1M×64-d rehearsal measured exactly this boundary:
     single-pass DNF'd three separate dials (4.3B-candidate distinct spill;
     sort-merge scoring once 560 MB of prenormed rows blew the 512 MB
@@ -495,7 +489,7 @@ def lsh_neardup_pairs(
         )
     if stage:
         if work_dir is None:
-            work_dir = _default_staging_dir(corpus.sparkSession)
+            work_dir = scratch_dir(corpus.sparkSession, "lsh")
         return lsh_neardup_pairs_staged(
             corpus,
             threshold,
@@ -589,26 +583,6 @@ def _lsh_pairs_single_pass(
         )
         .filter(F.col("cos") >= threshold)
     )
-
-
-STAGING_DIR_CONF = "spark.trafficanalysisbigdata.lsh.stagingDir"
-
-
-def _default_staging_dir(spark) -> str:
-    """Resolve where auto-routed staging materializes its table groups:
-    the ``STAGING_DIR_CONF`` session conf if set, else a ``_lsh_staging``
-    subtree of the SQL warehouse — the one path a cluster session already
-    guarantees every executor and the read-back can reach (a driver-local
-    mkdtemp, the pre-r13 default, resolves against the default Hadoop FS
-    and happens to work only in local mode). A uuid leaf keeps concurrent
-    stagings apart; files persist until the caller cleans them (they back
-    the returned DataFrame)."""
-    import uuid
-
-    base = spark.conf.get(STAGING_DIR_CONF, None) or (
-        spark.conf.get("spark.sql.warehouse.dir").rstrip("/") + "/_lsh_staging"
-    )
-    return f"{base.rstrip('/')}/{uuid.uuid4().hex}"
 
 
 def lsh_neardup_pairs_staged(

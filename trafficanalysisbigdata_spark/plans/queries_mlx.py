@@ -42,57 +42,39 @@ partial/final agg over it.
 from __future__ import annotations
 
 import os
-import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import sum_exact
 from ..functions.text import EN_STOP
+from ..io import ARTIFACT_ROOT, ensure_artifact, source_stamp
 from ..ml import models
 from .registry import register
 
 _EN = ", ".join(f"'{w}'" for w in EN_STOP)
 
-# Static artifact root: the oracle SQL must name the path as a literal, so
-# it is interpolated once at import time (same process, same tempdir) rather
-# than stamped per-call like sim8's keyed cache dirs.
-_MLX_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_mlx")
-_CONF_DIR = os.path.join(_MLX_ROOT, "volume_confusion")
-_RESID_DIR = os.path.join(_MLX_ROOT, "rf_residuals")
-_IMP_DIR = os.path.join(_MLX_ROOT, "rf_importances")
-_GBT_DIR = os.path.join(_MLX_ROOT, "gbt_residuals")
+# Static artifact paths: the oracle SQL names them as literals. The stamp
+# keeps each correct across SFs sharing the path — the Spark side always
+# (re)builds for ITS sf_dir before the oracle runs.
+_CONF_DIR = os.path.join(ARTIFACT_ROOT, "mlx", "volume_confusion")
+_RESID_DIR = os.path.join(ARTIFACT_ROOT, "mlx", "rf_residuals")
+_IMP_DIR = os.path.join(ARTIFACT_ROOT, "mlx", "rf_importances")
+_GBT_DIR = os.path.join(ARTIFACT_ROOT, "mlx", "gbt_residuals")
 
 
-def _source_stamp(sf_dir: str, table: str) -> str:
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(src)
-        return f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    except OSError:
-        return f"{sf_dir}|nostat"
+def _fit_once(
+    spark: SparkSession, sf_dir: str, path: str, rows: Callable[[], DataFrame]
+) -> DataFrame:
+    """Read the single-file artifact ``rows()`` persists at ``path``, fitting
+    it only when the events stamp changed or the last write was torn."""
 
+    def build(out: str) -> None:
+        rows().coalesce(1).write.mode("overwrite").parquet(out)
 
-def _ensure_artifact(out_dir: str, stamp: str, build) -> None:
-    """Fit-once cache: rebuild the prediction artifact only when the source
-    stamp changed or the last write is torn (no _SUCCESS / no stamp). The
-    artifact path is STATIC so the registered oracle can read it; the stamp
-    file makes the cache correct across SFs sharing that path — the Spark
-    side always (re)builds for ITS sf_dir before the oracle runs."""
-    stamp_path = os.path.join(out_dir, "_STAMP")
-    if os.path.exists(os.path.join(out_dir, "_SUCCESS")) and os.path.exists(
-        stamp_path
-    ):
-        try:
-            with open(stamp_path) as f:
-                if f.read() == stamp:
-                    return
-        except OSError:
-            pass
-    df = build()
-    df.coalesce(1).write.mode("overwrite").parquet(out_dir)
-    with open(stamp_path, "w") as f:
-        f.write(stamp)
+    ensure_artifact(path, source_stamp(sf_dir, "events"), build)
+    return spark.read.parquet(path)
 
 
 # --- mlx1: M3 volume-class label derivation ---------------------------------
@@ -283,14 +265,14 @@ def mlx5_confusion_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot bit-for-bit while the fit itself stays range-gated
     (tests/test_ml.py). Classes are small-integer doubles, so equality
     predicates are exact on both engines."""
-    _ensure_artifact(
+    pred = _fit_once(
+        spark,
+        sf_dir,
         _CONF_DIR,
-        _source_stamp(sf_dir, "events"),
         lambda: models.volume_class_model(spark.table("events"))["pred"].select(
             "label", "prediction"
         ),
     )
-    pred = spark.read.parquet(_CONF_DIR)
     return (
         pred.groupBy("label")
         .agg(
@@ -331,15 +313,15 @@ def mlx6_regression_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     to double at the end. This pins the metric ARITHMETIC the rows-only
     ml1 entry reports; tests/test_ml.py separately asserts the persisted
     MSE agrees with RegressionEvaluator's."""
-    _ensure_artifact(
+    pred = _fit_once(
+        spark,
+        sf_dir,
         _RESID_DIR,
-        _source_stamp(sf_dir, "events"),
         lambda: models.rf_regression(spark.table("events"))["pred"].select(
             F.col("value").cast("decimal(18,6)").alias("value_dec"),
             F.col("prediction").cast("decimal(18,6)").alias("pred_dec"),
         ),
     )
-    pred = spark.read.parquet(_RESID_DIR)
     # same exactness hardening as mlx8: square at (16,6)² → (33,12) exact on
     # both engines (the (18,6)² form risks DuckDB int64 overflow at larger
     # SFs and Spark precision-loss truncation at scale 11)
@@ -387,14 +369,14 @@ def mlx7_importance_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the unpartitioned windows are driver-trivial at any corpus size."""
     from pyspark.sql.window import Window
 
-    _ensure_artifact(
+    base = _fit_once(
+        spark,
+        sf_dir,
         _IMP_DIR,
-        _source_stamp(sf_dir, "events"),
         lambda: models.rf_feature_importance(spark.table("events")).select(
             "feature", F.col("importance").cast("decimal(20,18)").alias("imp_dec")
         ),
     )
-    base = spark.read.parquet(_IMP_DIR)
     order = Window.orderBy(F.desc("imp_dec"), F.asc("feature"))
     everything = Window.partitionBy()
     total = F.sum("imp_dec").over(everything).cast("double")
@@ -437,15 +419,15 @@ def mlx8_gbt_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines compute n/MSE/MAE from that same artifact. This leaves only the
     raw GBT fit itself range-gated (tests/test_ml.py); every metric ml6
     reports is now value-checked arithmetic."""
-    _ensure_artifact(
+    pred = _fit_once(
+        spark,
+        sf_dir,
         _GBT_DIR,
-        _source_stamp(sf_dir, "events"),
         lambda: models.gbt_regression(spark.table("events"))["pred"].select(
             F.col("total").cast("decimal(18,6)").alias("total_dec"),
             F.col("prediction").cast("decimal(18,6)").alias("pred_dec"),
         ),
     )
-    pred = spark.read.parquet(_GBT_DIR)
     # square at DECIMAL(16,6)×DECIMAL(16,6) → (33,12), EXACT on both engines:
     # the naive (18,6) square overflows DuckDB's int64 decimal kernel at
     # sf0.01's daily-total residual magnitudes (caught by the r12 verify

@@ -441,10 +441,7 @@ def ops2_partition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-column bytes are read beyond the pruned (d, file_path) projection.
     At lake scale this is the query you run BEFORE s11 compaction or s14
     partition rewrites, the same way ops1 runs before a skewed join."""
-    import os
-    import tempfile
-
-    from ..io import load_table
+    from ..io import load_table, scratch_dir
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -459,8 +456,7 @@ def ops2_partition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # identical — n_rows/n_files count rows and files, not bytes)
         .select("event_id", "d", "shard")
     )
-    work = tempfile.mkdtemp(prefix=f"ops2_{os.getpid()}_")
-    base = os.path.join(work, "events")
+    base = scratch_dir(spark, "ops2")
     # one task per (d, shard) combo => exactly one file per combo
     ev.repartition("d", "shard").write.partitionBy("d", "shard").mode(
         "overwrite"

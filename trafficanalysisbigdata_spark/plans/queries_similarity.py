@@ -9,14 +9,16 @@ give an approximate index.
 
 from __future__ import annotations
 
+import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import ARTIFACT_ROOT, ensure_artifact, source_stamp
 from ..operators.similarity import (
     brute_force_topk,
+    build_ivf_index,
     centroid_semantic_dedup,
     ivf_topk,
     lsh_neardup_pairs,
@@ -200,6 +202,23 @@ def sim5_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, probes, k=5, n_clusters=16, n_probe=6)
 
 
+# A persisted IVF index is complete once both of its parquet parts commit.
+_INDEX_PARTS = ("assignments", "centroids")
+
+
+def _ensure_index(path: str, sf_dir: str, build) -> str:
+    """``path``, holding the persisted IVF index over ``sf_dir``'s embeddings
+    that ``build(path)`` writes, built once per source stamp."""
+    return ensure_artifact(path, source_stamp(sf_dir, "embeddings"), build, _INDEX_PARTS)
+
+
+def _keyed_index_dir(kind: str, sf_dir: str) -> str:
+    """An index path keyed on the source stamp, so the indexes of different
+    fixtures coexist (sim6/sim8: no oracle reads these paths)."""
+    key = hashlib.md5(source_stamp(sf_dir, "embeddings").encode()).hexdigest()[:12]
+    return os.path.join(ARTIFACT_ROOT, f"{kind}_{key}")
+
+
 @register(
     "sim6_ivf_indexed_topk",
     oracle=None,  # shares sim5's non-SQL k-means fit; parity with the
@@ -212,36 +231,16 @@ def sim6_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``build_ivf_index`` (assignments parquet partitioned by cluster id +
     centroids), and the query reads the index — no fit stage, and the scan
     touches only probed ``cl=`` partitions. Index builds lazily per sf_dir
-    (keyed by path hash) the first time the query runs; reruns are pure
+    (keyed by source stamp) the first time the query runs; reruns are pure
     queries, which is the production IVF lifecycle."""
-    import hashlib
-    import os
-    import tempfile
-
-    from ..operators.similarity import build_ivf_index, ivf_topk_indexed
+    from ..operators.similarity import ivf_topk_indexed
 
     emb = spark.table("embeddings")
-    # Key the cache on the SOURCE DATA, not just its path: a regenerated
-    # fixture at the same path must not serve a stale index. mtime+size of
-    # the parquet file is a cheap content fingerprint.
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = "nostat"
-    key = hashlib.md5(f"{sf_dir}|{stamp}".encode()).hexdigest()[:12]
-    index_dir = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_{key}")
-    # Gate on the LAST-written artifact: build_ivf_index writes assignments
-    # then centroids, so a crash between the two leaves assignments/_SUCCESS
-    # present but no centroids — gating on centroids/_SUCCESS (and keeping
-    # the assignments check for belt-and-braces) means a torn build is
-    # simply rebuilt instead of poisoning every later run.
-    complete = os.path.exists(
-        os.path.join(index_dir, "centroids", "_SUCCESS")
-    ) and os.path.exists(os.path.join(index_dir, "assignments", "_SUCCESS"))
-    if not complete:
-        build_ivf_index(emb, index_dir, n_clusters=16)
+    index_dir = _ensure_index(
+        _keyed_index_dir("ivf", sf_dir),
+        sf_dir,
+        lambda d: build_ivf_index(emb, d, n_clusters=16),
+    )
     probes = emb.filter(F.col("vec_id") < 10)
     return ivf_topk_indexed(spark, index_dir, probes, k=5, n_probe=6)
 
@@ -483,29 +482,15 @@ def sim8_hash_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the k-means quantizer (tighter cells, no SQL twin — rows-only check);
     sim8 trades cell tightness for end-to-end auditability, so the
     index-build, the cell membership, the shortlist AND the final ranking
-    are all pinned bit-for-bit by the DuckDB oracle. Cache keyed on source
-    mtime+size; gated on the last-written artifact (centroids/_SUCCESS) so
-    a torn build rebuilds instead of poisoning later runs."""
-    import hashlib
-    import os
-    import tempfile
-
+    are all pinned bit-for-bit by the DuckDB oracle. Cached like sim6."""
     from ..operators.similarity import build_hash_ivf_index, hash_ivf_topk_indexed
 
     emb = spark.table("embeddings")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = "nostat"
-    key = hashlib.md5(f"hashivf|{sf_dir}|{stamp}".encode()).hexdigest()[:12]
-    index_dir = os.path.join(tempfile.gettempdir(), f"spark_graft_hivf_{key}")
-    complete = os.path.exists(
-        os.path.join(index_dir, "centroids", "_SUCCESS")
-    ) and os.path.exists(os.path.join(index_dir, "assignments", "_SUCCESS"))
-    if not complete:
-        build_hash_ivf_index(emb, index_dir, n_clusters=16)
+    index_dir = _ensure_index(
+        _keyed_index_dir("hivf", sf_dir),
+        sf_dir,
+        lambda d: build_hash_ivf_index(emb, d, n_clusters=16),
+    )
     probes = emb.filter(F.col("vec_id") < 10)
     return hash_ivf_topk_indexed(spark, index_dir, probes, k=5, n_probe=4)
 
@@ -674,36 +659,14 @@ def sim10_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # STATIC path (stamp-cached on the source parquet), then register the
 # consuming stages whose oracles read the SAME artifact. Only the raw fit
 # remains range-gated (tests/test_similarity.py recall bars).
-_KIVF_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_kivf")
+_KIVF_DIR = os.path.join(ARTIFACT_ROOT, "kivf")
 
 
 def _ensure_kivf_index(spark: SparkSession, sf_dir: str) -> None:
-    """Stamp-cached build of the PRODUCTION k-means index
-    (``build_ivf_index``: seed-pinned fit + partitioned-by-cl assignments +
-    centroids) at the static oracle-readable path. Gated on the
-    last-written artifact (centroids/_SUCCESS) plus a source stamp so a
-    torn build or a regenerated fixture rebuilds instead of serving stale
-    cells — the sim6/mlx5 gating rules combined."""
-    import os
-
-    from ..operators.similarity import build_ivf_index
-    from .queries_mlx import _source_stamp
-
-    stamp = "kivf|" + _source_stamp(sf_dir, "embeddings")
-    stamp_path = os.path.join(_KIVF_DIR, "_STAMP")
-    complete = os.path.exists(
-        os.path.join(_KIVF_DIR, "centroids", "_SUCCESS")
-    ) and os.path.exists(os.path.join(_KIVF_DIR, "assignments", "_SUCCESS"))
-    if complete and os.path.exists(stamp_path):
-        try:
-            with open(stamp_path) as f:
-                if f.read() == stamp:
-                    return
-        except OSError:
-            pass
-    build_ivf_index(spark.table("embeddings"), _KIVF_DIR, n_clusters=16)
-    with open(stamp_path, "w") as f:
-        f.write(stamp)
+    """The PRODUCTION k-means index (``build_ivf_index``: seed-pinned fit +
+    partitioned-by-cl assignments + centroids) at the static path."""
+    emb = spark.table("embeddings")
+    _ensure_index(_KIVF_DIR, sf_dir, lambda d: build_ivf_index(emb, d, n_clusters=16))
 
 
 @register(

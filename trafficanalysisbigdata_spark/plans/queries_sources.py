@@ -5,12 +5,12 @@ round 1 left driver-invisible.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table, write_partitioned
+from ..functions.numeric import sum_exact
+from ..io import load_table, scratch_dir, write_partitioned
 from .registry import register
 
 
@@ -81,14 +81,28 @@ def s5_pandas_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "s7_partitioned_sink_roundtrip",
-    oracle="""
+_TYPE_TOTALS_ORACLE = """
     SELECT event_type,
            COUNT(*) AS n,
            CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
     FROM events GROUP BY event_type ORDER BY event_type
-    """,
+"""
+
+
+def _type_totals(back: DataFrame) -> DataFrame:
+    """Per-event_type row count and exact value total of a read-back sink:
+    ``_TYPE_TOTALS_ORACLE`` over the original table, so a round-trip that
+    drops, duplicates or alters a row breaks the match."""
+    return (
+        back.groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"), sum_exact("value", "total"))
+        .orderBy("event_type")
+    )
+
+
+@register(
+    "s7_partitioned_sink_roundtrip",
+    oracle=_TYPE_TOTALS_ORACLE,
     tags=("sink", "S7"),
     tables=("events",),
 )
@@ -98,32 +112,14 @@ def s7_partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     side), read it back, aggregate. The oracle aggregates the original
     table, so the round-trip must preserve every row and value exactly."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    out = os.path.join(
-        tempfile.gettempdir(), f"s7_sink_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}"
-    )
+    out = scratch_dir(spark, "s7")
     write_partitioned(ev, out, partition_by=["event_type"])
-    back = spark.read.parquet(out)
-    return (
-        back.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total"),
-        )
-        .orderBy("event_type")
-    )
-
-
-_CSV_ORACLE = """
-    SELECT event_type,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-    FROM events GROUP BY event_type ORDER BY event_type
-"""
+    return _type_totals(spark.read.parquet(out))
 
 
 @register(
     "s8_csv_roundtrip",
-    oracle=_CSV_ORACLE,
+    oracle=_TYPE_TOTALS_ORACLE,
     tags=("scan", "sink", "csv"),
     tables=("events",),
 )
@@ -134,26 +130,17 @@ def s8_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     float round-trips bit-exactly; the oracle aggregates the original
     parquet, so text serialization must lose nothing."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    out = os.path.join(
-        tempfile.gettempdir(), f"s8_csv_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}"
-    )
-    ev.write.mode("overwrite").option("header", True).csv(out)
+    out = scratch_dir(spark, "s8")
+    ev.write.option("header", True).csv(out)
     back = spark.read.schema("event_id bigint, event_type string, value double").option(
         "header", True
     ).csv(out)
-    return (
-        back.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total"),
-        )
-        .orderBy("event_type")
-    )
+    return _type_totals(back)
 
 
 @register(
     "s9_orc_roundtrip",
-    oracle=_CSV_ORACLE,
+    oracle=_TYPE_TOTALS_ORACLE,
     tags=("scan", "sink", "orc"),
     tables=("events",),
 )
@@ -162,19 +149,9 @@ def s9_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized reader for): write, read back, aggregate — same oracle as s8,
     so both containers must preserve rows and values exactly."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    out = os.path.join(
-        tempfile.gettempdir(), f"s9_orc_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}"
-    )
-    ev.write.mode("overwrite").orc(out)
-    back = spark.read.orc(out)
-    return (
-        back.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total"),
-        )
-        .orderBy("event_type")
-    )
+    out = scratch_dir(spark, "s9")
+    ev.write.orc(out)
+    return _type_totals(spark.read.orc(out))
 
 
 @register(
@@ -199,17 +176,15 @@ def s10_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     every file footer at planning time — production pins the unified schema
     in a metastore instead; the read semantics are identical."""
     ev = load_table(spark, sf_dir, "events")
-    out = os.path.join(
-        tempfile.gettempdir(), f"s10_evo_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}"
-    )
+    out = scratch_dir(spark, "s10")
     gen1 = ev.filter(F.col("event_id") % 2 == 0).select(
         "event_id", "event_type", "value"
     )
     gen2 = ev.filter(F.col("event_id") % 2 == 1).select(
         "event_id", "event_type", "value", "user_id"
     )
-    gen1.write.mode("overwrite").parquet(os.path.join(out, "gen=1"))
-    gen2.write.mode("overwrite").parquet(os.path.join(out, "gen=2"))
+    gen1.write.parquet(os.path.join(out, "gen=1"))
+    gen2.write.parquet(os.path.join(out, "gen=2"))
     back = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(out, "gen=1"), os.path.join(out, "gen=2")
     )
@@ -228,7 +203,7 @@ def s10_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s11_small_file_compaction",
-    oracle=_CSV_ORACLE,
+    oracle=_TYPE_TOTALS_ORACLE,
     tags=("sink", "compaction", "ops"),
     tables=("events",),
 )
@@ -241,19 +216,11 @@ def s11_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — compaction must be a pure layout change, zero row/value drift;
     tests/test_operator_edges.py asserts the file counts actually collapse."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    base = tempfile.mkdtemp(prefix=f"s11_{os.getpid()}_")
+    base = scratch_dir(spark, "s11")
     frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
-    ev.repartition(64).write.mode("overwrite").parquet(frag)
-    spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compact)
-    back = spark.read.parquet(compact)
-    return (
-        back.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total"),
-        )
-        .orderBy("event_type")
-    )
+    ev.repartition(64).write.parquet(frag)
+    spark.read.parquet(frag).repartition(4).write.parquet(compact)
+    return _type_totals(spark.read.parquet(compact))
 
 
 @register(
@@ -276,11 +243,9 @@ def s12_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact tables). The oracle joins the ORIGINAL tables, so bucketed writes
     must lose nothing; the zero-Exchange plan proof is in
     tests/test_bucketing.py (here, at driver SF, AQE rightly broadcasts)."""
-    from ..io import write_partitioned
-
-    base = tempfile.mkdtemp(prefix=f"s12_{os.getpid()}_")
-    run_tag = os.path.basename(base)
-    ot, ct = f"s12_orders_{run_tag}", f"s12_cust_{run_tag}"
+    base = scratch_dir(spark, "s12")
+    run_tag = os.path.basename(base).replace("-", "_")
+    ot, ct = f"{run_tag}_orders", f"{run_tag}_cust"
     orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
@@ -339,11 +304,8 @@ def s13_sorted_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import write_sorted
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
-    # Per-RUN path (mkdtemp): a pid-keyed path protects against other
-    # processes but two concurrent runs in ONE driver (threads serving
-    # queries) still collided on the overwrite — found by the concurrency
-    # test in tests/test_operator_edges.py.
-    path = os.path.join(tempfile.mkdtemp(prefix=f"s13_{os.getpid()}_"), "sorted")
+    # per-run path: the scratch rule in the io module docstring
+    path = scratch_dir(spark, "s13")
     write_sorted(ev, path, "ts", n_files=8)
     back = spark.read.parquet(path)
     lo = ev.agg(F.min("ts").alias("t0"))
@@ -424,8 +386,7 @@ def s14_partition_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts", "value")
         .withColumn("d", F.to_date("ts").cast("string"))
     )
-    work = tempfile.mkdtemp(prefix=f"s14_{os.getpid()}_")
-    base = os.path.join(work, "events")
+    base = scratch_dir(spark, "s14")
     ev.write.partitionBy("d").mode("overwrite").parquet(base)
 
     last_day = ev.agg(F.max("d")).first()[0]  # scalar bound, 1-row collect
@@ -489,7 +450,7 @@ def s15_zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import write_zorder
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    path = os.path.join(tempfile.mkdtemp(prefix=f"s15_{os.getpid()}_"), "zorder")
+    path = scratch_dir(spark, "s15")
     write_zorder(ev, path, "user_id", "value", n_files=8)
     back = spark.read.parquet(path)
 
@@ -559,7 +520,7 @@ def s16_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts", "value")
         .withColumn("d", F.to_date("ts").cast("string"))
     )
-    work = tempfile.mkdtemp(prefix=f"s16_{os.getpid()}_")
+    work = scratch_dir(spark, "s16")
     fact = os.path.join(work, "fact")
     agg = os.path.join(work, "agg_daily")
     ev.write.partitionBy("d").mode("overwrite").parquet(fact)

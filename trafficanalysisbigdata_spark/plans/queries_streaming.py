@@ -5,9 +5,13 @@ covered by tests/test_streaming.py."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import load_table, scratch_dir
+from ..streaming.snapshot import drain, stage_snapshots
 from ..streaming.windows import session_10m, sliding_2h_1h, tumbling_hourly
 from .registry import register
 
@@ -192,6 +196,15 @@ def st6_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _odd_even(events: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Split by event_id parity into two source files, so a stream reading
+    one file per trigger must carry state across two micro-batches."""
+    return (
+        events.filter(F.col("event_id") % 2 == 0),
+        events.filter(F.col("event_id") % 2 == 1),
+    )
+
+
 @register(
     "st7_stateful_running_totals",
     oracle="""
@@ -227,18 +240,9 @@ def st7_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     final-row reduction here is test scaffolding — production would write
     update-mode rows to a keyed sink (ref Dash.py:119-131 keeps ONE global
     in-memory frame in one process instead)."""
-    import os
-    import tempfile
-    import uuid
-
-    from ..io import load_table
-    from ..session import prep
     from ..streaming.stateful import stateful_running_totals
 
-    prep(spark)
-    run_id = uuid.uuid4().hex[:10]
-    work = tempfile.mkdtemp(prefix=f"st7_{os.getpid()}_{run_id}_")
-    src = os.path.join(work, "src")
+    work = scratch_dir(spark, "st7")
 
     events = (
         load_table(spark, sf_dir, "events")
@@ -246,19 +250,14 @@ def st7_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") < 20)
     )
     # two files => two AvailableNow micro-batches with maxFilesPerTrigger=1
-    events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    events.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
+    src = stage_snapshots(_odd_even(events), work)
 
     stream = (
         spark.readStream.schema("event_id bigint, user_id bigint, value double")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sink = f"st7_totals_{run_id}"
+    sink = os.path.basename(work).replace("-", "_")  # memory-sink view name
     q = (
         stateful_running_totals(stream)
         .writeStream.format("memory")
@@ -268,9 +267,7 @@ def st7_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("structured stream did not drain within 300 s")
+    drain(q)
 
     emitted = spark.table(sink)
     return (
@@ -378,30 +375,16 @@ def st9_watermark_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     far-apart duplicates for bounded state (the batch dd1 pass catches the
     long tail). Ref contract: TrafficAnalysis.py dedups once per download;
     a 100 TB ingest dedups as data lands."""
-    import os
-    import tempfile
-    import uuid
-
-    from ..io import load_table
-    from ..session import prep
     from ..streaming.dedup import streaming_dedup
 
-    prep(spark)
-    run_id = uuid.uuid4().hex[:10]
-    work = tempfile.mkdtemp(prefix=f"st9_{os.getpid()}_{run_id}_")
-    src = os.path.join(work, "src")
+    work = scratch_dir(spark, "st9")
 
     events = (
         load_table(spark, sf_dir, "events")
         .select("event_id", "ts", "user_id", "event_type")
         .filter(F.col("user_id") < 50)
     )
-    events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    events.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
+    src = stage_snapshots(_odd_even(events), work)
 
     stream = (
         spark.readStream.schema(
@@ -410,7 +393,7 @@ def st9_watermark_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sink = f"st9_dedup_{run_id}"
+    sink = os.path.basename(work).replace("-", "_")  # memory-sink view name
     q = (
         streaming_dedup(stream, ["user_id", "event_type"], delay="365 days")
         .writeStream.format("memory")
@@ -420,9 +403,7 @@ def st9_watermark_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("structured stream did not drain within 300 s")
+    drain(q)
 
     return (
         spark.table(sink)
@@ -484,17 +465,7 @@ def st10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store and evicts at the watermark — bounded by concurrently-open
     sessions, not stream length; this is ST3's batch contract (st3)
     upgraded to runtime streaming evidence."""
-    import os
-    import tempfile
-    import uuid
-
-    from ..io import load_table
-    from ..session import prep
-
-    prep(spark)
-    run_id = uuid.uuid4().hex[:10]
-    work = tempfile.mkdtemp(prefix=f"st10_{os.getpid()}_{run_id}_")
-    src = os.path.join(work, "src")
+    work = scratch_dir(spark, "st10")
 
     events = (
         load_table(spark, sf_dir, "events")
@@ -502,28 +473,11 @@ def st10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") < 15)
     )
     split = F.lit("2024-01-16").cast("timestamp")
-    # Deterministic replay order: FileStreamSource orders new files by
-    # modification time, and two coalesce(1) part files written back-to-back
-    # can share an mtime at filesystem-timestamp granularity — a flipped
-    # order would advance the 0-second watermark past every batch-1 event
-    # and drop them as late. Write each half to its own staging dir, then
-    # install into src under lexically ordered names with explicitly spaced
-    # mtimes so maxFilesPerTrigger=1 provably replays in event-time order.
-    import shutil
-    import time
-
-    os.makedirs(src)
-    halves = (events.filter(F.col("ts") < split), events.filter(F.col("ts") >= split))
-    now = time.time()
-    for i, half in enumerate(halves):
-        stage = os.path.join(work, f"stage{i}")
-        half.coalesce(1).write.parquet(stage)
-        part = next(
-            n for n in sorted(os.listdir(stage)) if n.endswith(".parquet")
-        )
-        dst = os.path.join(src, f"batch-{i:03d}.parquet")
-        shutil.copyfile(os.path.join(stage, part), dst)
-        os.utime(dst, (now + 60 * i, now + 60 * i))
+    # Deterministic replay order matters here: a flipped order would advance
+    # the 0-second watermark past every batch-1 event and drop them as late.
+    src = stage_snapshots(
+        (events.filter(F.col("ts") < split), events.filter(F.col("ts") >= split)), work
+    )
 
     stream = (
         spark.readStream.schema("ts timestamp, user_id bigint, value double")
@@ -538,7 +492,7 @@ def st10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
         )
     )
-    sink = f"st10_sessions_{run_id}"
+    sink = os.path.basename(work).replace("-", "_")  # memory-sink view name
     q = (
         agg.writeStream.format("memory")
         .queryName(sink)
@@ -547,9 +501,7 @@ def st10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("structured stream did not drain within 300 s")
+    drain(q)
 
     return (
         spark.table(sink)
@@ -605,17 +557,9 @@ def st11_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     table layouts), never rescans the stream's history. The versioned-dir
     publish is what Delta/Iceberg MERGE does under snapshot isolation —
     expressed here in plain parquet."""
-    import os
-    import tempfile
-    import uuid
+    from ..streaming.upsert import keyed_upsert_batch, latest_state
 
-    from ..io import load_table
-    from ..session import prep
-
-    prep(spark)
-    run_id = uuid.uuid4().hex[:10]
-    work = tempfile.mkdtemp(prefix=f"st11_{os.getpid()}_{run_id}_")
-    src = os.path.join(work, "src")
+    work = scratch_dir(spark, "st11")
     state_root = os.path.join(work, "state")
     os.makedirs(state_root)
 
@@ -624,14 +568,7 @@ def st11_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "value")
         .filter(F.col("user_id") < 25)
     )
-    events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    events.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    from ..streaming.upsert import keyed_upsert_batch, latest_state
+    src = stage_snapshots(_odd_even(events), work)
 
     upsert = keyed_upsert_batch(state_root)
 
@@ -646,9 +583,7 @@ def st11_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("structured stream did not drain within 300 s")
+    drain(q)
 
     return (
         latest_state(spark, state_root)

@@ -47,7 +47,7 @@ def track_cache(df: DataFrame) -> DataFrame:
     prior result late re-triggers computation — a frame persisted to freeze
     nondeterminism (a sample, un-seeded model scores) would silently return
     different rows after release. Freeze-persist use cases need a written
-    artifact (see queries_mlx._ensure_artifact), not a tracked cache."""
+    artifact (see io.ensure_artifact), not a tracked cache."""
     _TRACKED_CACHES.append(df)
     return df
 
