@@ -66,6 +66,30 @@ def test_connected_components_equals_union_find(spark, edges):
     assert got == want
 
 
+def test_connected_components_frees_only_its_own_checkpoints(spark, monkeypatch):
+    """CC frees the checkpoint blocks of its own rounds and nothing else: a
+    frame another query checkpoints in the same session while CC runs (here,
+    inside CC's first checkpoint call) must still be readable afterwards."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from trafficanalysisbigdata_spark.operators.components import (
+        connected_components,
+    )
+
+    original = DataFrame.localCheckpoint
+    bystander = []
+
+    def checkpoint_with_bystander(self, *args, **kwargs):
+        if not bystander:
+            bystander.append(original(spark.range(100), eager=True))
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", checkpoint_with_bystander)
+    df = spark.createDataFrame([(i, i + 1) for i in range(20)], "doc1 long, doc2 long")
+    assert {r.component for r in connected_components(df).collect()} == {0}
+    assert len(bystander[0].collect()) == 100
+
+
 @given(
     token_counts=st.lists(st.integers(0, 40), min_size=1, max_size=30),
     seq_len=st.integers(4, 64),

@@ -25,30 +25,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _persistent_rdd_ids(sc) -> set[int]:
-    """Ids of currently-persisted RDDs (localCheckpoint stores its blocks as
-    a persisted RDD; this is how we find — and later free — them)."""
-    try:
-        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    except Exception:  # noqa: BLE001 — introspection only; degrade to no-op
-        return set()
-
-
-def _unpersist_rdds(sc, ids: set[int]) -> None:
-    """Free the cached blocks behind previously-checkpointed rounds. Without
-    this, every round of every dedup-closure run leaks one label set for the
-    session lifetime (a real memory leak in a long-lived driver). Best-effort:
-    failure just means the old behavior (blocks freed at session end)."""
-    if not ids:
-        return
-    try:
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            rdd = jmap.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
+def _free_checkpoint(df: DataFrame) -> None:
+    """Free the cached blocks behind ``df``'s local checkpoint. Without this,
+    every round of every dedup-closure run leaks one label set for the
+    session lifetime (a real memory leak in a long-lived driver). The handle
+    is ``df``'s own checkpointed RDD (its plan is a ``LogicalRDD``), so
+    blocks another query checkpointed in the same session are never
+    touched."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def connected_components(
@@ -84,8 +68,6 @@ def connected_components(
     is the action that materializes it, so a round runs ONE job. Each round
     also unpersists the previous round's checkpointed blocks, so peak cached
     state is one label set + the edge list, not O(rounds)."""
-    sc = pairs.sparkSession.sparkContext
-    pre = _persistent_rdd_ids(sc)
     edges = (
         pairs.select(F.col(src).alias("v"), F.col(dst).alias("w"))
         .unionByName(pairs.select(F.col(dst).alias("v"), F.col(src).alias("w")))
@@ -98,11 +80,8 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     prev_sum = labels.agg(F.sum("l").alias("s")).first()["s"]
-    setup_ids = _persistent_rdd_ids(sc) - pre
-    round_ids: set[int] = set()
     try:
         for _ in range(max_iter):
-            before = _persistent_rdd_ids(sc)
             nbr = (
                 edges.join(labels.select(F.col("v").alias("w"), F.col("l").alias("lw")), "w")
                 .select("v", "lw")
@@ -122,21 +101,14 @@ def connected_components(
                 .localCheckpoint(eager=False)
             )
             new_sum = jumped.agg(F.sum("l").alias("s")).first()["s"]
-            # read the new ids after the materializing action — a safe
-            # ordering (the persist is registered at localCheckpoint call
-            # time, but reading here guarantees this round's blocks are
-            # counted before the next round's cleanup runs)
-            new_ids = _persistent_rdd_ids(sc) - before
-            # the previous round's labels are no longer reachable — free them
-            # (never the ids backing `jumped`, which the caller may consume)
-            _unpersist_rdds(sc, round_ids - new_ids)
-            round_ids = new_ids
+            # the action above materialized `jumped`, whose lineage stops at
+            # its own checkpoint: the previous round's labels are unreachable
+            _free_checkpoint(labels)
             labels = jumped
             if new_sum == prev_sum:
                 return labels.select("v", F.col("l").alias("component"))
             prev_sum = new_sum
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
     finally:
-        # edges + round-0 labels back only intermediate rounds, never the
-        # returned DataFrame (its lineage stops at its own checkpoint)
-        _unpersist_rdds(sc, setup_ids - round_ids)
+        # the edge list backs only the rounds, never the returned DataFrame
+        _free_checkpoint(edges)

@@ -29,6 +29,19 @@ Parameter guidance: defaults (L=16, P=4) target loose neighbors
 cos ≥ 0.8 neighbors should raise P to 8–16 and drop L — candidate volume
 scales ~n²·L/2^P per table-bucket family, so more planes = fewer, purer
 candidates.
+
+Every ANN path here (brute force, LSH, k-means and hash IVF, quantized and
+two-stage) differs only in how it generates candidate pairs; the scoring
+around them is one shared kernel:
+
+* row projection — ``_normed`` / ``_precast_normed``: (id, vec, norm) once
+  per row, below any pair join, so pair scoring folds one dot per pair;
+* rounded cosine — ``_cos6`` (vectors cast per pair, ``cosine_prenorm``) /
+  ``_cos6_precast`` (vectors cast once per row);
+* argmax — ``_argmax_cosine``: nearest candidate per row, over a broadcast
+  cross join or, given a key, a broadcast equi-join;
+* per-probe top-k — ``windows.top_n_per_group`` on (cos desc, id asc), fed
+  by ``_scored_top_k`` (and ``_probe_cells``, the IVF probe tail).
 """
 
 from __future__ import annotations
@@ -38,12 +51,76 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.vectors import as_double, cosine, cosine_prenorm, dot, norm
 from ..io import scratch_dir
+from .windows import top_n_per_group
+
+# column names of the two sides every top-k path scores: (id, vec, norm)
+_PROBE = ("query_id", "query_vec", "qn")
+_NEIGHBOR = ("neighbor_id", "vec", "cn")
+
+
+def _normed(
+    df: DataFrame, id_col: str, vec_col: str, names: tuple[str, str, str], *extra: Column
+) -> DataFrame:
+    """(id, vec, norm) named ``names``, plus ``extra``: the norm of the
+    double-cast vector folds once per row, below any pair join, and the raw
+    vector rides along for ``_cos6`` to cast per pair."""
+    i, v, n = names
+    return df.select(
+        F.col(id_col).alias(i),
+        F.col(vec_col).alias(v),
+        norm(as_double(F.col(vec_col))).alias(n),
+        *extra,
+    )
+
+
+def _precast_normed(
+    df: DataFrame, id_col: str, vec_col: str, names: tuple[str, str, str]
+) -> DataFrame:
+    """``_normed`` with the vector itself cast to double once per row, for
+    scores that fold over pre-cast vectors (``_cos6_precast``)."""
+    i, v, n = names
+    return df.select(
+        F.col(id_col).alias(i),
+        as_double(F.col(vec_col)).alias(v),
+        norm(as_double(F.col(vec_col))).alias(n),
+    )
+
+
+def _cos6(a: str, b: str, na: str, nb: str) -> Column:
+    """Pair cosine rounded to 6 over raw vectors ``a``/``b`` and per-row
+    norms (``cosine_prenorm``: the double casts run per pair)."""
+    return F.round(cosine_prenorm(F.col(a), F.col(b), F.col(na), F.col(nb)), 6)
+
+
+def _cos6_precast(a: str, b: str, na: str, nb: str) -> Column:
+    """Pair cosine rounded to 6 over vectors already cast to double."""
+    return F.round(dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6)
+
+
+def _scored_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos) for the ``k`` best neighbors per probe:
+    ``pairs`` carries both sides' ``_PROBE`` and ``_NEIGHBOR`` columns.
+    Ranking is on the ROUNDED cosine with an id tie-break, so the result set
+    is stable under float reassociation across engines/partitionings."""
+    scored = pairs.select(
+        "query_id", "neighbor_id", _cos6("query_vec", "vec", "qn", "cn").alias("cos")
+    )
+    return top_n_per_group(scored, ["query_id"], "cos", ["neighbor_id"], k)
+
+
+def _probe_cells(shortlist: DataFrame, assigned: DataFrame, k: int) -> DataFrame:
+    """The IVF probe tail: each probe's shortlisted cells (``cl``) fetch
+    their assigned vectors by equi-join, then score and keep the top ``k``."""
+    return _scored_top_k(
+        shortlist.join(assigned, "cl").filter(F.col("neighbor_id") != F.col("query_id")),
+        k,
+    )
 
 
 def plane_component(table: int, plane: int, dim_i: int) -> float:
@@ -145,38 +222,12 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each probe (self-matches excluded).
-
-    Ranking happens on the ROUNDED cosine with an id tie-break, so the result
-    set is stable under float reassociation across engines/partitionings.
-    """
-    p = probes.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm(as_double(F.col(vec_col))).alias("qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        norm(as_double(F.col(vec_col))).alias("cn"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(p))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_prenorm(F.col("query_vec"), F.col("vec"), F.col("qn"), F.col("cn")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
+    """Exact top-k cosine neighbors for each probe (self-matches excluded):
+    the candidates are every corpus row, against broadcast probes."""
+    p = _normed(probes, id_col, vec_col, _PROBE)
+    c = _normed(corpus, id_col, vec_col, _NEIGHBOR)
+    return _scored_top_k(
+        c.crossJoin(F.broadcast(p)).filter(F.col("neighbor_id") != F.col("query_id")), k
     )
 
 
@@ -218,39 +269,11 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    scored = (
-        cand.join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("vec"),
-                norm(as_double(F.col(vec_col))).alias("cn"),
-            ),
-            "neighbor_id",
-        )
-        .join(
-            F.broadcast(
-                probes.select(
-                    F.col(id_col).alias("query_id"),
-                    F.col(vec_col).alias("query_vec"),
-                    norm(as_double(F.col(vec_col))).alias("qn"),
-                )
-            ),
-            "query_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_prenorm(F.col("query_vec"), F.col("vec"), F.col("qn"), F.col("cn")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
+    return _scored_top_k(
+        cand.join(_normed(corpus, id_col, vec_col, _NEIGHBOR), "neighbor_id").join(
+            F.broadcast(_normed(probes, id_col, vec_col, _PROBE)), "query_id"
+        ),
+        k,
     )
 
 
@@ -561,11 +584,7 @@ def _lsh_pairs_single_pass(
     )
     # norms ride the vector attach (one fold per ROW); pair scoring is then
     # a single dot fold per candidate — see functions.vectors.cosine_prenorm
-    v = corpus.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        norm(as_double(F.col(vec_col))).alias("n"),
-    )
+    v = _normed(corpus, id_col, vec_col, ("vid", "v", "n"))
     # ~(8·dim + 48) bytes per prenormed row; 512 MB default broadcast budget
     # (callers with verified executor headroom may raise it — the staged 1M
     # rehearsal runs 768 MB so scoring stays map-side one decade further)
@@ -574,13 +593,7 @@ def _lsh_pairs_single_pass(
     return (
         cand.join(v.withColumnsRenamed({"vid": "id1", "v": "v1", "n": "n1"}), "id1")
         .join(v.withColumnsRenamed({"vid": "id2", "v": "v2", "n": "n2"}), "id2")
-        .select(
-            "id1",
-            "id2",
-            F.round(
-                cosine_prenorm(F.col("v1"), F.col("v2"), F.col("n1"), F.col("n2")), 6
-            ).alias("cos"),
-        )
+        .select("id1", "id2", _cos6("v1", "v2", "n1", "n2").alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
 
@@ -715,11 +728,8 @@ def _ivf_fit(
     model = KMeans(
         k=n_clusters, seed=seed, featuresCol="__v", predictionCol="__cluster"
     ).fit(corpus_v)
-    assigned = model.transform(corpus_v).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        norm(as_double(F.col(vec_col))).alias("cn"),
-        F.col("__cluster").alias("cl"),
+    assigned = _normed(
+        model.transform(corpus_v), id_col, vec_col, _NEIGHBOR, F.col("__cluster").alias("cl")
     )
     centers = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
@@ -785,11 +795,7 @@ def _ivf_query(
     between Spark codegen variants) can otherwise flip near-tied cell
     picks, and the rounding is what makes the query stage over a persisted
     index value-oracle-checkable (sim6x) rather than rows-only."""
-    p = probes.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm(as_double(F.col(vec_col))).alias("qn"),
-    )
+    p = _normed(probes, id_col, vec_col, _PROBE)
     sq_dist = F.aggregate(
         F.zip_with(
             F.transform("query_vec", lambda x: x.cast("double")),
@@ -807,24 +813,7 @@ def _ivf_query(
         .filter(F.col("rn") <= n_probe)
         .select("query_id", "query_vec", "qn", "cl")
     )
-    scored = (
-        shortlist.join(assigned, "cl")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_prenorm(F.col("query_vec"), F.col("vec"), F.col("qn"), F.col("cn")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _probe_cells(shortlist, assigned, k)
 
 
 def threshold_pairs(
@@ -834,36 +823,28 @@ def threshold_pairs(
     only; ``lsh_neardup_pairs`` is the registered scale path."""
     # prenorm/precast (r14): casts and norm folds once per row, one dot fold
     # per pair — bit-identical to cosine() (functions/vectors.py contract)
-    a = corpus.select(
-        F.col(id_col).alias("id1"),
-        as_double(F.col(vec_col)).alias("v1"),
-        norm(as_double(F.col(vec_col))).alias("n1"),
-    )
-    b = corpus.select(
-        F.col(id_col).alias("id2"),
-        as_double(F.col(vec_col)).alias("v2"),
-        norm(as_double(F.col(vec_col))).alias("n2"),
-    )
+    a = _precast_normed(corpus, id_col, vec_col, ("id1", "v1", "n1"))
+    b = _precast_normed(corpus, id_col, vec_col, ("id2", "v2", "n2"))
     return (
         a.join(b, F.col("id1") < F.col("id2"))
-        .select(
-            "id1",
-            "id2",
-            F.round(
-                dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), 6
-            ).alias("cos"),
-        )
+        .select("id1", "id2", _cos6_precast("v1", "v2", "n1", "n2").alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
 
 
-def _argmax_cosine(rows: DataFrame, cands: DataFrame, key_col: str, pick_col: str) -> DataFrame:
+def _argmax_cosine(
+    rows: DataFrame, cands: DataFrame, key_col: str, pick_col: str, on: str | None = None
+) -> DataFrame:
     """Broadcast nearest-candidate assignment: for each ``rows`` row
     (key, vec), pick the ``cands`` row (pick, center) maximizing
     round(cosine, 6), ties to the smallest pick id — reduced by a
     map-side-combinable ``max(struct(cos, -pick, vec))`` so the vector
     rides the struct without being compared. ``cands`` must be
     broadcast-small. Returns (key, pick, vec).
+
+    Without ``on`` every candidate competes for every row (a broadcast cross
+    join); with it, only the candidates sharing the row's ``on`` value (a
+    broadcast equi-join — ``two_level_assign``'s in-cell level).
 
     r14 perf: the per-pair score is prenorm-style — each side's double cast
     and norm fold run ONCE per input row (below the join on the stream side,
@@ -873,26 +854,23 @@ def _argmax_cosine(rows: DataFrame, cands: DataFrame, key_col: str, pick_col: st
     rounded-6 value is bit-identical (the ``cosine_prenorm`` contract,
     functions/vectors.py). Measured on dd5's flat 2000×64 assignment at
     sf0.1: the n·k stage drops ~3× in interpreted-fold work."""
+    keys = [on] if on else []
     r = rows.select(
         key_col,
+        *keys,
         "vec",
         as_double(F.col("vec")).alias("__vd"),
         norm(as_double(F.col("vec"))).alias("__nr"),
     )
     c = cands.select(
+        *keys,
         pick_col,
         as_double(F.col("center")).alias("__cd"),
         norm(as_double(F.col("center"))).alias("__nc"),
     )
+    pairs = r.join(F.broadcast(c), on) if on else r.crossJoin(F.broadcast(c))
     return (
-        r.crossJoin(F.broadcast(c))
-        .withColumn(
-            "__cos",
-            F.round(
-                dot(F.col("__vd"), F.col("__cd")) / (F.col("__nr") * F.col("__nc")),
-                6,
-            ),
-        )
+        pairs.withColumn("__cos", _cos6_precast("__vd", "__cd", "__nr", "__nc"))
         .groupBy(key_col)
         .agg(
             F.max(
@@ -964,47 +942,39 @@ def two_level_assign(
         "vid",
         "sid",
     )
-    # level-2 scoring: same prenorm/precast discipline as _argmax_cosine —
-    # per-row casts and norms computed once below the join, one dot fold per
-    # (vector × in-cell centroid); bit-identical to cosine() by the
-    # cosine_prenorm contract
-    v2 = v2s.select(
+    # level 2: each vector against only the centroids of its super-cell
+    return _argmax_cosine(v2s, c2s, "vid", "cid", on="sid")
+
+
+def _nearest_centroid(
+    corpus: DataFrame,
+    cent: DataFrame,
+    k: int,
+    assignment: str,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(vid, cid, vec): each corpus vector's nearest centroid among the ``k``
+    rows of ``cent`` (cid, center). ``assignment``: ``"flat"`` is the exact
+    n·k broadcast argmax; ``"two_level"`` routes through
+    ``two_level_assign`` (~2·n·√k work, approximate near super-cell
+    boundaries); ``"auto"`` switches to two-level at k >= 200 — under the
+    k ≈ n/500 sizing rule that is n ≈ 10⁵, the crossover the round-8
+    rehearsal measured (flat at 500k×1000 did not complete in 16.5 min; see
+    BENCH_LOCAL.md round-8/round-9 tables). The threshold is on k, not n, so
+    no count() job is spent deciding."""
+    if assignment not in ("auto", "flat", "two_level"):
+        raise ValueError(f"assignment must be auto|flat|two_level, got {assignment!r}")
+    if assignment == "auto":
+        assignment = "two_level" if k >= 200 else "flat"
+    if assignment == "two_level":
+        n_super = max(2, math.isqrt(max(k - 1, 0)) + 1)  # ceil(sqrt k)
+        return two_level_assign(corpus, cent, n_super, id_col, vec_col)
+    return _argmax_cosine(
+        corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
+        cent,
         "vid",
-        "sid",
-        "vec",
-        as_double(F.col("vec")).alias("__vd"),
-        norm(as_double(F.col("vec"))).alias("__nr"),
-    )
-    c2 = c2s.select(
-        "sid",
         "cid",
-        as_double(F.col("center")).alias("__cd"),
-        norm(as_double(F.col("center"))).alias("__nc"),
-    )
-    return (
-        v2.join(F.broadcast(c2), "sid")
-        .withColumn(
-            "__cos",
-            F.round(
-                dot(F.col("__vd"), F.col("__cd")) / (F.col("__nr") * F.col("__nc")),
-                6,
-            ),
-        )
-        .groupBy("vid")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("__cos"),
-                    (-F.col("cid")).alias("__neg"),
-                    F.col("vec").alias("__vec"),
-                )
-            ).alias("__m")
-        )
-        .select(
-            "vid",
-            (-F.col("__m.__neg")).alias("cid"),
-            F.col("__m.__vec").alias("vec"),
-        )
     )
 
 
@@ -1051,17 +1021,9 @@ def centroid_semantic_dedup(
       fixtures use k=8 so the DuckDB oracle stays cheap; the knob is the
       scale dial.
 
-    ``assignment`` picks the quantizer-assignment strategy: ``"flat"`` is
-    the exact n·k broadcast argmax; ``"two_level"`` routes through
-    ``two_level_assign`` (~2·n·√k work, approximate near super-cell
-    boundaries); ``"auto"`` (default) switches to two-level at
-    k >= 200 — under the k ≈ n/500 sizing rule that is n ≈ 10⁵, the
-    crossover the round-8 rehearsal measured (flat at 500k×1000 did not
-    complete in 16.5 min; see BENCH_LOCAL.md round-8/round-9 tables). The
-    threshold is on k, not n, so no count() job is spent deciding.
+    ``assignment`` picks the quantizer-assignment strategy (``"flat"``,
+    ``"two_level"`` or ``"auto"``, the default): see ``_nearest_centroid``.
     """
-    if assignment not in ("auto", "flat", "two_level"):
-        raise ValueError(f"unknown assignment strategy: {assignment!r}")
     cent = (
         corpus.select(
             F.col(id_col).alias("cid"),
@@ -1072,18 +1034,7 @@ def centroid_semantic_dedup(
         .limit(n_centroids)
         .drop("__h")
     )
-    if assignment == "auto":
-        assignment = "two_level" if n_centroids >= 200 else "flat"
-    if assignment == "two_level":
-        n_super = max(2, math.isqrt(max(n_centroids - 1, 0)) + 1)  # ceil(sqrt k)
-        assigned = two_level_assign(corpus, cent, n_super, id_col, vec_col)
-    else:
-        assigned = _argmax_cosine(
-            corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
-            cent,
-            "vid",
-            "cid",
-        )
+    assigned = _nearest_centroid(corpus, cent, n_centroids, assignment, id_col, vec_col)
     cells = assigned.select(
         "vid", "cid", "vec", norm(as_double(F.col("vec"))).alias("nrm")
     ).repartition("cid")
@@ -1097,12 +1048,7 @@ def centroid_semantic_dedup(
     pairs = (
         a.join(b, "cid")
         .filter(F.col("id1") < F.col("id2"))
-        .filter(
-            F.round(
-                cosine_prenorm(F.col("v1"), F.col("v2"), F.col("n1"), F.col("n2")), 6
-            )
-            >= threshold
-        )
+        .filter(_cos6("v1", "v2", "n1", "n2") >= threshold)
         .select("cid", "id2")
     )
     # a doc is a dupe iff it appears as the LARGER id of any near-dup pair
@@ -1230,12 +1176,7 @@ def quantized_topk(
             ).alias("qcos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return top_n_per_group(scored, ["query_id"], "qcos", ["neighbor_id"], k)
 
 
 def two_stage_rerank_topk(
@@ -1265,35 +1206,16 @@ def two_stage_rerank_topk(
     short = quantized_topk(
         corpus, probes, k * shortlist_factor, id_col, vec_col
     ).select("query_id", "neighbor_id", "qcos")
-    p = probes.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        norm(as_double(F.col(vec_col))).alias("qn2"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nv"),
-        norm(as_double(F.col(vec_col))).alias("nn2"),
-    )
+    p = _normed(probes, id_col, vec_col, ("query_id", "qv", "qn2"))
+    c = _normed(corpus, id_col, vec_col, ("neighbor_id", "nv", "nn2"))
     scored = (
         c.join(F.broadcast(short), "neighbor_id")
         .join(F.broadcast(p), "query_id")
         .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_prenorm(F.col("qv"), F.col("nv"), F.col("qn2"), F.col("nn2")),
-                6,
-            ).alias("cos"),
-            "qcos",
+            "query_id", "neighbor_id", _cos6("qv", "nv", "qn2", "nn2").alias("cos"), "qcos"
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return top_n_per_group(scored, ["query_id"], "cos", ["neighbor_id"], k)
 
 
 def mmr_topk(
@@ -1345,11 +1267,7 @@ def mmr_topk(
         F.round(F.col("cos") * F.lit(1e6)).cast("bigint").alias("rel_i"),
     )
     cv = (
-        corpus.select(
-            F.col(id_col).alias("cand_id"),
-            as_double(F.col(vec_col)).alias("dvec"),
-            norm(as_double(F.col(vec_col))).alias("cn2"),
-        )
+        _precast_normed(corpus, id_col, vec_col, ("cand_id", "dvec", "cn2"))
         .join(F.broadcast(cand), "cand_id")
         .groupBy("query_id")
         .agg(
@@ -1464,79 +1382,33 @@ def build_hash_ivf_index(
     production systems run exactly this trade as 'random-projection vs
     learned coarse quantizer'.
 
-    ``assignment``: ``"flat"`` is the broadcast cross join (corpus × k tiny
-    centroids) reduced by a map-side-combinable max(struct(cos, -cl, vec))
-    — dd5's argmax shape, rounded-6 cosine so the cell decision is
+    ``assignment``: ``"flat"`` is ``_argmax_cosine``'s broadcast cross join
+    (corpus × k tiny centroids), rounded-6 cosine so the cell decision is
     engine-exact; ``"two_level"`` routes through ``two_level_assign``
     (~2·n·√k work) — the build-time twin of dd5's round-9 fix, because at
     production k ≈ n/500 the flat build hits the SAME measured n·k wall
     the round-8 rehearsal recorded (500k×1000 DNF at 16.5 min);
     ``"auto"`` (default) switches to two-level at k ≥ 200, matching
-    ``centroid_semantic_dedup``. The oracle-registered sim8 query builds at
-    k = 16 and therefore always takes the flat, bit-exactly-mirrored path;
-    two-level cells differ only near super-cell boundaries (the standard
-    coarse-quantizer trade) and the probe path is identical either way."""
-    if assignment not in ("auto", "flat", "two_level"):
-        raise ValueError(f"assignment must be auto|flat|two_level, got {assignment!r}")
-    if assignment == "auto":
-        assignment = "two_level" if n_clusters >= 200 else "flat"
+    ``centroid_semantic_dedup`` (both route through ``_nearest_centroid``).
+    The oracle-registered sim8 query builds at k = 16 and therefore always
+    takes the flat, bit-exactly-mirrored path; two-level cells differ only
+    near super-cell boundaries (the standard coarse-quantizer trade) and the
+    probe path is identical either way."""
     centers = hash_sampled_centroids(corpus, n_clusters, id_col, vec_col)
-    if assignment == "two_level":
-        n_super = max(2, math.isqrt(max(n_clusters - 1, 0)) + 1)  # ceil(sqrt k)
-        assigned = two_level_assign(
+    assigned = _normed(
+        _nearest_centroid(
             corpus,
             centers.select(F.col("cl").alias("cid"), "center"),
-            n_super,
+            n_clusters,
+            assignment,
             id_col,
             vec_col,
-        ).select(
-            F.col("vid").alias("neighbor_id"),
-            "vec",
-            norm(as_double(F.col("vec"))).alias("cn"),
-            F.col("cid").cast("int").alias("cl"),
-        )
-    else:
-        assigned = (
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("vec"),
-                as_double(F.col(vec_col)).alias("__vd"),
-                norm(as_double(F.col(vec_col))).alias("__nr"),
-            )
-            .crossJoin(
-                F.broadcast(
-                    centers.select(
-                        "cl",
-                        F.col("center").alias("__cd"),  # already double (as_double at pick)
-                        norm(F.col("center")).alias("__nc"),
-                    )
-                )
-            )
-            .withColumn(
-                "__cos",
-                F.round(
-                    dot(F.col("__vd"), F.col("__cd"))
-                    / (F.col("__nr") * F.col("__nc")),
-                    6,
-                ),
-            )
-            .groupBy("neighbor_id")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("__cos"),
-                        (-F.col("cl")).alias("__negcl"),
-                        F.col("vec").alias("__vec"),
-                    )
-                ).alias("m")
-            )
-            .select(
-                "neighbor_id",
-                F.col("m.__vec").alias("vec"),
-                norm(as_double(F.col("m.__vec"))).alias("cn"),
-                (-F.col("m.__negcl")).cast("int").alias("cl"),
-            )
-        )
+        ),
+        "vid",
+        "vec",
+        _NEIGHBOR,
+        F.col("cid").cast("int").alias("cl"),
+    )
     assigned.write.mode("overwrite").partitionBy("cl").parquet(f"{index_dir}/assignments")
     centers.write.mode("overwrite").parquet(f"{index_dir}/centroids")
 
@@ -1558,34 +1430,12 @@ def hash_ivf_topk_indexed(
     on the ``cl=`` layout)."""
     assigned = spark.read.parquet(f"{index_dir}/assignments")
     centers = spark.read.parquet(f"{index_dir}/centroids")
-    p = probes.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm(as_double(F.col(vec_col))).alias("qn"),
-    )
-    wshort = Window.partitionBy("query_id").orderBy(F.desc("c"), F.asc("cl"))
-    shortlist = (
-        p.crossJoin(F.broadcast(centers))
+    near = (
+        _normed(probes, id_col, vec_col, _PROBE)
+        .crossJoin(F.broadcast(centers))
         .withColumn("c", F.round(cosine(F.col("query_vec"), F.col("center")), 6))
-        .withColumn("rn", F.row_number().over(wshort))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "query_vec", "qn", "cl")
     )
-    scored = (
-        shortlist.join(assigned, "cl")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_prenorm(F.col("query_vec"), F.col("vec"), F.col("qn"), F.col("cn")),
-                6,
-            ).alias("cos"),
-        )
+    shortlist = top_n_per_group(near, ["query_id"], "c", ["cl"], n_probe).select(
+        "query_id", "query_vec", "qn", "cl"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _probe_cells(shortlist, assigned, k)

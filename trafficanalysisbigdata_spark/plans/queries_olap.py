@@ -441,10 +441,10 @@ def ops2_partition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-column bytes are read beyond the pruned (d, file_path) projection.
     At lake scale this is the query you run BEFORE s11 compaction or s14
     partition rewrites, the same way ops1 runs before a skewed join."""
-    from ..io import load_table, scratch_dir
+    from ..io import scratch_dir
 
     ev = (
-        load_table(spark, sf_dir, "events")
+        spark.table("events")
         .select("event_id", "ts")
         .withColumn("d", F.to_date("ts").cast("string"))
         .withColumn("shard", (F.col("event_id") % 4).cast("int"))

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import sum_exact
-from ..io import load_table, scratch_dir, write_partitioned
+from ..io import scratch_dir, write_partitioned
 from .registry import register
 
 
@@ -111,7 +111,7 @@ def s7_partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     lakehouse fact-table shape — partition pruning comes free on the read
     side), read it back, aggregate. The oracle aggregates the original
     table, so the round-trip must preserve every row and value exactly."""
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    ev = spark.table("events").select("event_id", "event_type", "value")
     out = scratch_dir(spark, "s7")
     write_partitioned(ev, out, partition_by=["event_type"])
     return _type_totals(spark.read.parquet(out))
@@ -129,7 +129,7 @@ def s8_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     never at 100 TB), aggregate. `value` travels as its full repr so the
     float round-trips bit-exactly; the oracle aggregates the original
     parquet, so text serialization must lose nothing."""
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    ev = spark.table("events").select("event_id", "event_type", "value")
     out = scratch_dir(spark, "s8")
     ev.write.option("header", True).csv(out)
     back = spark.read.schema("event_id bigint, event_type string, value double").option(
@@ -148,7 +148,7 @@ def s9_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC interchange (the other columnar lake format Spark ships a
     vectorized reader for): write, read back, aggregate — same oracle as s8,
     so both containers must preserve rows and values exactly."""
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    ev = spark.table("events").select("event_id", "event_type", "value")
     out = scratch_dir(spark, "s9")
     ev.write.orc(out)
     return _type_totals(spark.read.orc(out))
@@ -175,7 +175,7 @@ def s10_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     every row, value, and the NULL pattern. At scale, mergeSchema reads
     every file footer at planning time — production pins the unified schema
     in a metastore instead; the read semantics are identical."""
-    ev = load_table(spark, sf_dir, "events")
+    ev = spark.table("events")
     out = scratch_dir(spark, "s10")
     gen1 = ev.filter(F.col("event_id") % 2 == 0).select(
         "event_id", "event_type", "value"
@@ -215,7 +215,7 @@ def s11_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     routine 100 TB maintenance pass. The oracle aggregates the original
     table — compaction must be a pure layout change, zero row/value drift;
     tests/test_operator_edges.py asserts the file counts actually collapse."""
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    ev = spark.table("events").select("event_id", "event_type", "value")
     base = scratch_dir(spark, "s11")
     frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
     ev.repartition(64).write.parquet(frag)
@@ -246,8 +246,8 @@ def s12_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir(spark, "s12")
     run_tag = os.path.basename(base).replace("-", "_")
     ot, ct = f"{run_tag}_orders", f"{run_tag}_cust"
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cust = load_table(spark, sf_dir, "customer").select(
+    orders = spark.table("orders").select("o_custkey", "o_totalprice")
+    cust = spark.table("customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
     write_partitioned(
@@ -303,7 +303,7 @@ def s13_sorted_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     reorganization with zero row/value drift."""
     from ..io import write_sorted
 
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
+    ev = spark.table("events").select("event_id", "ts", "value")
     # per-run path: the scratch rule in the io module docstring
     path = scratch_dir(spark, "s13")
     write_sorted(ev, path, "ts", n_files=8)
@@ -382,7 +382,7 @@ def s14_partition_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~60 dynamic-partition files' commit protocol, not payload bytes. ops2
     kept its trim because its single write moves 3× the rows per file."""
     ev = (
-        load_table(spark, sf_dir, "events")
+        spark.table("events")
         .select("event_id", "ts", "value")
         .withColumn("d", F.to_date("ts").cast("string"))
     )
@@ -449,7 +449,7 @@ def s15_zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure reorganization, zero row/value drift."""
     from ..io import write_zorder
 
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    ev = spark.table("events").select("event_id", "user_id", "value")
     path = scratch_dir(spark, "s15")
     write_zorder(ev, path, "user_id", "value", n_files=8)
     back = spark.read.parquet(path)
@@ -516,7 +516,7 @@ def s16_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     files are asserted byte-identical in tests/test_operator_edges.py-style
     in tests/test_plans.py's companion."""
     ev = (
-        load_table(spark, sf_dir, "events")
+        spark.table("events")
         .select("event_id", "ts", "value")
         .withColumn("d", F.to_date("ts").cast("string"))
     )

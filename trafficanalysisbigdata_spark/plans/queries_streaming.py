@@ -10,7 +10,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table, scratch_dir
+from ..io import scratch_dir
 from ..streaming.snapshot import drain, stage_snapshots
 from ..streaming.windows import session_10m, sliding_2h_1h, tumbling_hourly
 from .registry import register
@@ -245,7 +245,7 @@ def st7_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = scratch_dir(spark, "st7")
 
     events = (
-        load_table(spark, sf_dir, "events")
+        spark.table("events")
         .select("event_id", "user_id", "value")
         .filter(F.col("user_id") < 20)
     )
@@ -380,7 +380,7 @@ def st9_watermark_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = scratch_dir(spark, "st9")
 
     events = (
-        load_table(spark, sf_dir, "events")
+        spark.table("events")
         .select("event_id", "ts", "user_id", "event_type")
         .filter(F.col("user_id") < 50)
     )
@@ -468,7 +468,7 @@ def st10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = scratch_dir(spark, "st10")
 
     events = (
-        load_table(spark, sf_dir, "events")
+        spark.table("events")
         .select("ts", "user_id", "value")
         .filter(F.col("user_id") < 15)
     )
@@ -564,7 +564,7 @@ def st11_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(state_root)
 
     events = (
-        load_table(spark, sf_dir, "events")
+        spark.table("events")
         .select("event_id", "user_id", "value")
         .filter(F.col("user_id") < 25)
     )
