@@ -104,3 +104,13 @@ def test_corpus_pipeline_facade_matches_registry(spark, sf_dir):
     assert len(topk) == 3 * 3
     rer = cp.ann_topk_reranked(probes, k=3).collect()
     assert len(rer) == 3 * 3 and all(r.cos is not None for r in rer)
+
+
+def test_malformed_cpu_count_env_is_rejected(monkeypatch):
+    from trafficanalysisbigdata_spark.session import default_parallelism
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4x")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        default_parallelism()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3

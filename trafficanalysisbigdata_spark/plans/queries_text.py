@@ -1106,25 +1106,20 @@ def tx17_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: token instances never reach a shuffle (the first-seen
     agg combines map-side); the window's input is ONE narrow row per
     DOCUMENT, partitioned by source (plan-guarded — an unpartitioned
-    window would funnel the corpus through one task). For a source whose
-    doc COUNT alone overwhelms one partition, set
-    ``spark.trafficanalysisbigdata.heaps.pointsPerDecade`` (> 0): the
-    running sums switch to the grouped two-phase prefix-sum
+    window would funnel the corpus through one task). A source whose doc
+    COUNT alone overwhelms one partition needs the decimated path instead:
+    tx17b runs the running sums as a grouped two-phase prefix-sum
     (operators/prefixsum.py — the olap9/pipe11 shape, windows partitioned
-    by (source, range-bucket)) and the fit runs on log-decimated boundary
-    points (first rank in each 10^(1/ppd) bucket — the fit needs ~10^2-3
-    curve points, not 10^9). tx17b registers the dial-on form with its own
-    exact oracle; the dial-off default keeps this query's plan unchanged."""
-    ppd = int(
-        spark.conf.get("spark.trafficanalysisbigdata.heaps.pointsPerDecade", "0")
-    )
-    return _heaps_fit(spark, points_per_decade=ppd)
+    by (source, range-bucket)) and fits on log-decimated boundary points
+    (first rank in each 10^(1/ppd) bucket — the fit needs ~10^2-3 curve
+    points, not 10^9), with its own exact oracle."""
+    return _heaps_fit(spark, 0)
 
 
 def _heaps_fit(spark: SparkSession, points_per_decade: int) -> DataFrame:
-    """Shared Heaps'-law fit pipeline: tx17 (dial-off window cumsum, or
-    conf-engaged decimation) and tx17b (decimation forced on). See tx17's
-    docstring for semantics and float discipline."""
+    """Shared Heaps'-law fit pipeline: tx17 (``points_per_decade=0``, one
+    window cumsum) and tx17b (decimation on). See tx17's docstring for
+    semantics and float discipline."""
     from pyspark.sql.window import Window
 
     from ..functions.text import token_count, tokens as _tokens
@@ -1157,9 +1152,7 @@ def _heaps_fit_from(
     per_doc: DataFrame, points_per_decade: int, cuts_from: DataFrame | None = None
 ) -> DataFrame:
     """Running sums + OLS over an already-built per_doc frame (source,
-    doc_id, n_tokens, new_tokens) — split out so the scale rehearsal can
-    drive the exact stage the decimation dial changes, on a synthetic
-    per_doc shape, without re-tokenizing a corpus.
+    doc_id, n_tokens, new_tokens).
 
     r15 optimization pass: per_doc now has ONE consumer. The per-source
     grand totals (n_tokens / n_vocab) used to be their own aggregate over
@@ -1336,7 +1329,8 @@ def tx17b_heaps_vocab_decimated(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection, sums, slope — is value-oracle-checked; at fixture scale
     (~25 docs/source) ranks 11+ decimate, exercising both filter branches.
     Registered separately from tx17 so the driver checks BOTH paths every
-    rotation; the conf dial (tx17 docstring) routes production corpora."""
+    rotation; a caller with a source too large for one window task picks
+    this query over tx17."""
     return _heaps_fit(spark, points_per_decade=_TX17B_PPD)
 
 

@@ -35,7 +35,9 @@ def default_parallelism() -> int:
         try:
             return max(1, int(cpus))
         except ValueError:
-            pass
+            raise ValueError(
+                f"SPARK_GRAFT_CPUS must be an integer core count, got {cpus!r}"
+            ) from None
     return os.cpu_count() or 8
 
 
