@@ -374,10 +374,14 @@ def _dd5(emb, n: int):
 
 
 def _dd6(docs):
-    """dd6 over synthetic 16-chains: measures the iterative CC machinery
-    itself (pointer jumping, single-job convergence, checkpointing) —
-    component COUNT scales with n while round count stays O(log 16), so
-    wall time should track edge volume."""
+    """dd6 over synthetic 16-chains, through the shipped size gate: the
+    symmetrized edge list (~1.9 rows a doc) is checkpointed and its stored
+    bytes (~80 bytes a row) weighed against the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (10 MB by default). 50k docs
+    (~7.9 MB) land on the one-task union-find arm; 500k and 1M docs exceed
+    the bound and measure the iterative machinery itself (pointer jumping,
+    checkpointing) — component COUNT scales with n while round count stays
+    O(log 16), so the loop's wall should track edge volume."""
     return components.connected_components(
         docs.select(F.col("doc_id").alias("doc1"))
         .filter(F.col("doc_id") % 16 != 15)

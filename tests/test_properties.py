@@ -42,9 +42,10 @@ class _UnionFind:
     )
 )
 @settings(**_SETTINGS)
-def test_connected_components_equals_union_find(spark, edges):
-    """For ANY graph, the distributed label propagation must produce exactly
-    the partition a sequential union-find produces (component = min id)."""
+def test_connected_components_equals_union_find(spark, cc_arm, edges):
+    """For ANY graph, both arms — the distributed label propagation and the
+    one-task numpy union-find — must produce exactly the partition a
+    sequential union-find produces (component = min id)."""
     from trafficanalysisbigdata_spark.operators.components import (
         connected_components,
     )
@@ -66,10 +67,11 @@ def test_connected_components_equals_union_find(spark, edges):
     assert got == want
 
 
-def test_connected_components_frees_only_its_own_checkpoints(spark, monkeypatch):
-    """CC frees the checkpoint blocks of its own rounds and nothing else: a
-    frame another query checkpoints in the same session while CC runs (here,
-    inside CC's first checkpoint call) must still be readable afterwards."""
+def test_connected_components_frees_only_its_own_checkpoints(spark, cc_arm, monkeypatch):
+    """CC frees the checkpoint blocks of its own edge list and rounds and
+    nothing else: a frame another query checkpoints in the same session
+    while CC runs (here, inside CC's first checkpoint call) must still be
+    readable afterwards, on either arm."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from trafficanalysisbigdata_spark.operators.components import (

@@ -920,8 +920,8 @@ def pipe11_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipe12_cluster_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster canonicalization: dd2's verified near-dup pairs
-    (capped LSH -> Jaccard >= 0.5) become clusters via dd6's iterative
-    connected components; within each cluster ONE canonical document
+    (capped LSH -> Jaccard >= 0.5) become clusters via dd6's connected
+    components; within each cluster ONE canonical document
     survives — the longest (n_chars DESC, ties to the smallest doc_id), the
     "keep the best copy" rule an actual dedup pass applies, rather than
     dd6's min-id placeholder. Singletons (docs in no near-dup pair) are
@@ -929,14 +929,18 @@ def pipe12_cluster_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     total/kept/dropped docs and the chars the pass deletes — the dedup
     yield report per upstream source.
 
-    Spark side: min-label propagation with pointer jumping
-    (``operators/components.connected_components``, O(log diameter) rounds)
-    over ``minhash_lsh_scores`` edges; the canonical pick is a row_number
-    window PARTITIONED BY component (cluster-bounded, never global); the
-    oracle is the recursive-CTE closure + the same window. Scale: edges are
+    Spark side: ``operators/components.connected_components`` over
+    ``minhash_lsh_scores`` edges — one grouped numpy union-find task when
+    the checkpointed edge list is at or under the session's broadcast bound
+    (``spark.sql.autoBroadcastJoinThreshold``; every fixture scale), else
+    min-label propagation with pointer jumping in O(log diameter) rounds;
+    the canonical pick is a row_number window PARTITIONED BY component
+    (cluster-bounded, never global); the oracle is the recursive-CTE
+    closure + the same window. Scale: edges are
     capped-LSH candidates (never all-pairs), component state is one label
-    row per vertex with per-round lineage truncation, and the final agg is
-    partial/final on source."""
+    row per vertex (on the loop arm, with per-round lineage truncation; the
+    one-task arm only takes an edge list Spark would broadcast), and the
+    final agg is partial/final on source."""
     from ..operators.components import connected_components
     from ..operators.dedup import minhash_lsh_scores
     from .queries_dedup import DD2_MAX_BUCKET
