@@ -45,6 +45,7 @@ line; the numbers land in BENCH_LOCAL.md.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
@@ -62,7 +63,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from trafficanalysisbigdata_spark.io import DEFAULT_SF_DIR
+from trafficanalysisbigdata_spark.io import DEFAULT_SF_DIR, SCRATCH_DIR_CONF
 from trafficanalysisbigdata_spark.operators import components
 from trafficanalysisbigdata_spark.operators import dedup as dd
 from trafficanalysisbigdata_spark.operators import multimodal as mm
@@ -99,6 +100,31 @@ def _run_dir(name: str) -> str:
     """A fresh path under this run's one ``BASE`` leaf (checkpoints, state
     roots, staged work dirs); ``main`` deletes the leaf at exit."""
     return os.path.join(BASE, f"run_{RUN_ID}", f"{name}_{uuid.uuid4().hex[:8]}")
+
+
+@contextlib.contextmanager
+def _scratch_root(spark, run_dir: str):
+    """The engine's scratch root pointed at ``run_dir`` for the block, so
+    the table groups the near-dup router stages past its frontier land
+    there for ``_lsh_groups`` to count."""
+    spark.conf.set(SCRATCH_DIR_CONF, run_dir)
+    try:
+        yield
+    finally:
+        spark.conf.unset(SCRATCH_DIR_CONF)
+
+
+def _lsh_groups(run_dir: str) -> int:
+    """How many staged table groups the near-dup router wrote under
+    ``run_dir`` (one ``lsh-<uuid>`` leaf per staged call, one
+    ``tables_<offset>`` directory per group; 0 when it did not stage)."""
+    if not os.path.isdir(run_dir):
+        return 0
+    return sum(
+        len(os.listdir(os.path.join(run_dir, leaf)))
+        for leaf in os.listdir(run_dir)
+        if leaf.startswith("lsh-")
+    )
 
 
 def _time(fn: Callable[[], DataFrame | None], label: str, once: bool = False) -> float:
@@ -570,13 +596,15 @@ def run_lsh(spark, sizes: dict, ops: tuple) -> dict:
     for tag, n in sizes.items():
         emb = _read(spark, "emb", n)  # 1 vector per doc at this mode's scale
         probes = emb.filter(F.col("vec_id") < 50)
-        # sim4 at the 1m point costs ~25 min per execution, so it runs the
-        # STAGED operator at the shipped dial, ONE materializing pass, and
-        # the receipts read the parquet back. Single-pass DNF'd three ways:
+        # sim4 at the 1m point costs ~36 min per execution (the round-12
+        # router receipt: 2,155 s), so it runs ONE materializing pass of the
+        # router at its defaults (past the frontier it stages), and the
+        # receipts read the parquet back. Single-pass DNF'd three ways:
         # P=12's 4.3B-candidate distinct exceeds disk; at P=14/16 the
         # scoring joins sort-merged (1M prenormed rows are 560 MB > the 512
         # MB broadcast budget). Staging bounds the transient distinct to
-        # gs/L of total and the 768 MB budget keeps scoring map-side.
+        # gs/L of total and per-group scoring at twice the budget stays
+        # map-side.
         staged = _run_dir("sim4_pairs") if tag == "1m" else None
         dial = {"dim": DIM, "n_rows": n}
 
@@ -589,10 +617,8 @@ def run_lsh(spark, sizes: dict, ops: tuple) -> dict:
         def sim4():
             if not staged:
                 return sim4_pairs().agg(F.count(F.lit(1)).alias("pairs"))
-            sim.lsh_neardup_pairs_staged(
-                emb, 0.8, work_dir=staged, n_tables=None, max_bucket=1024,
-                group_size=4, broadcast_budget_mb=768, **dial,
-            ).write.mode("overwrite").parquet(f"{staged}_final")
+            with _scratch_root(spark, staged):
+                sim4_pairs().write.mode("overwrite").parquet(f"{staged}_final")
 
         family = {
             "dd2_minhash_lsh": lambda: _dd2(_read(spark, "docs", n)),
@@ -616,6 +642,8 @@ def run_lsh(spark, sizes: dict, ops: tuple) -> dict:
         if res.get("sim4_lsh_neardup", -1) >= 0:
             pairs = spark.read.parquet(f"{staged}_final") if staged else sim4_pairs()
             res["sim4_twin_recall"], res["sim4_pairs_out"] = _twin_recall(spark, n, pairs)
+            if staged:
+                res["sim4_staged_groups"] = _lsh_groups(staged)
         results[tag] = res
     out = {"results": results}
     if {"10x", "100x"} <= results.keys():
@@ -920,24 +948,26 @@ def run_sqlsf1(spark, sizes: dict, ops: tuple) -> dict:
 
 
 def run_sim4_auto(spark, sizes: dict, ops: tuple) -> dict:
-    """The PUBLIC lsh_neardup_pairs entrypoint at 1M vectors with default
-    budget — must auto-route through the staged path (work_dir table
-    groups), complete, and match the explicit-staged run's truth numbers
-    (twin recall 1.000, ~169M pairs). One un-warmed pass, like sim4's
-    staged pair list in ``run_lsh``."""
+    """The PUBLIC lsh_neardup_pairs entrypoint at 1M vectors with its
+    defaults — must auto-route through the staged arm (table groups under
+    the scratch root, pointed at this run's directory), complete, and match
+    the explicit-staged run's truth numbers (twin recall 1.000, ~169M
+    pairs). One un-warmed pass, like sim4's staged pair list in
+    ``run_lsh``."""
     results = {}
     for tag, n in sizes.items():
         emb = _read(spark, "emb", n)
         wd = _run_dir("sim4_auto")
-        wall = _time(
-            lambda: sim.lsh_neardup_pairs(
-                emb, 0.8, n_tables=None, dim=DIM, max_bucket=1024, n_rows=n, work_dir=wd
-            ).write.mode("overwrite").parquet(f"{wd}_final"),
-            f"sim4 auto {tag}",
-            once=True,
-        )
-        groups = sorted(os.listdir(wd)) if os.path.exists(wd) else []
-        res = {"auto_staged": bool(groups), "n_groups": len(groups), "wall_s": wall}
+
+        def auto() -> None:
+            with _scratch_root(spark, wd):
+                sim.lsh_neardup_pairs(
+                    emb, 0.8, n_tables=None, dim=DIM, max_bucket=1024, n_rows=n
+                ).write.mode("overwrite").parquet(f"{wd}_final")
+
+        wall = _time(auto, f"sim4 auto {tag}", once=True)
+        groups = _lsh_groups(wd)
+        res = {"auto_staged": groups > 0, "n_groups": groups, "wall_s": wall}
         if wall >= 0:
             pairs = spark.read.parquet(f"{wd}_final")
             res["twin_recall"], res["pairs_out"] = _twin_recall(spark, n, pairs)

@@ -4,15 +4,19 @@ The dd4 oracle (tests/test_oracle_parity.py, driver) exercises the
 small-corpus shared-shingle plan; these tests pin the BIG-corpus MinHash
 candidate strategy set-identical to it on the fixtures, so the 100k-doc
 auto-switch cannot change results at the boundary, and pin the gate wiring
-itself (big_corpus=None counts; an explicit flag does not).
+itself. The count gate alone picks the arm, so a test forces one by patching
+the crossover constant the gate reads (``ngram_arm``), never through a
+parameter.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.plan_tree import joins, nodes, plan_of
 from trafficanalysisbigdata_spark.io import register_views
+from trafficanalysisbigdata_spark.operators import dedup
 from trafficanalysisbigdata_spark.operators.dedup import (
     NGRAM_JACCARD_CROSSOVER_DOCS,
     ngram_jaccard_scores,
@@ -20,42 +24,58 @@ from trafficanalysisbigdata_spark.operators.dedup import (
 from trafficanalysisbigdata_spark.session import prep
 
 
-def _pairs(docs, **kw):
+@pytest.fixture
+def ngram_arm(monkeypatch):
+    """``ngram_arm("big")`` / ``ngram_arm("small")`` moves the crossover
+    below / above any fixture corpus for the rest of the test."""
+
+    def force(arm: str) -> None:
+        monkeypatch.setattr(
+            dedup, "NGRAM_JACCARD_CROSSOVER_DOCS", {"big": -1, "small": 10**12}[arm]
+        )
+
+    return force
+
+
+@pytest.fixture
+def docs(spark, sf_dir):
+    prep(spark)
+    register_views(spark, sf_dir, "documents")
+    return spark.table("documents").select("doc_id", "n_chars", "text")
+
+
+def _pairs(docs):
     return {
         (r.doc1, r.doc2, round(r.jaccard, 6))
-        for r in ngram_jaccard_scores(docs, **kw)
+        for r in ngram_jaccard_scores(docs)
         .filter(F.col("jaccard") >= 0.25)
         .collect()
     }
 
 
-def test_ngram_jaccard_paths_identical_on_fixture(spark, sf_dir):
+def test_ngram_jaccard_paths_identical_on_fixture(docs, ngram_arm):
     """Both candidate strategies — exhaustive shared-shingle and banded
     MinHash over the same shingle sets — must produce the SAME verified
     pair set on the fixture corpus. MinHash banding is md5-deterministic,
     so this is a stable pin, not a flaky sample: L=16 single-row bands give
     a qualifying pair at the 0.25 bar a 0.99 banding probability, and on
     this corpus every qualifying pair lands (measured before pinning)."""
-    prep(spark)
-    register_views(spark, sf_dir, "documents")
-    docs = spark.table("documents").select("doc_id", "n_chars", "text")
-    small = _pairs(docs, big_corpus=False)
-    big = _pairs(docs, big_corpus=True)
+    ngram_arm("small")
+    small = _pairs(docs)
+    ngram_arm("big")
+    big = _pairs(docs)
     assert small  # fixture must produce pairs or the pin is vacuous
     assert big == small
 
 
-def test_ngram_jaccard_autogate_is_one_stats_action(spark, sf_dir, monkeypatch):
-    """big_corpus=None on a SMALL corpus must spend exactly ONE cheap
-    count() — the verify-broadcast sizing agg (which tokenizes the corpus)
-    belongs to the big path only (measured +60% on the sf0.1 roster number
-    when it rode the gate). An explicit flag must build the plan with zero
-    actions. NOTE: patch the CONCRETE class (type(docs), pyspark.sql.classic
-    in Spark 4) — the abstract-class patch never intercepts."""
+def test_ngram_jaccard_autogate_is_one_stats_action(docs, ngram_arm, monkeypatch):
+    """On a SMALL corpus the gate must spend exactly ONE cheap count() —
+    the verify-broadcast sizing agg (which tokenizes the corpus) belongs to
+    the big path only (measured +60% on the sf0.1 roster number when it
+    rode the gate); the big path adds exactly that one sizing collect.
+    NOTE: patch the CONCRETE class (type(docs), pyspark.sql.classic in
+    Spark 4) — the abstract-class patch never intercepts."""
     assert NGRAM_JACCARD_CROSSOVER_DOCS == 100_000
-    prep(spark)
-    register_views(spark, sf_dir, "documents")
-    docs = spark.table("documents").select("doc_id", "n_chars", "text")
     cls = type(docs)
 
     calls = {"collect": 0, "count": 0}
@@ -73,71 +93,41 @@ def test_ngram_jaccard_autogate_is_one_stats_action(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(cls, "count", counting_count)
     ngram_jaccard_scores(docs)  # small corpus: one count, no sizing agg
     assert calls == {"collect": 0, "count": 1}
-
-    def boom(self):
-        raise AssertionError("action despite explicit big_corpus")
-
-    monkeypatch.setattr(cls, "collect", boom)
-    monkeypatch.setattr(cls, "count", boom)
-    for flag in (False, True):
-        out = ngram_jaccard_scores(docs, big_corpus=flag)
-        assert out.columns == ["doc1", "doc2", "jaccard"]
+    ngram_arm("big")
+    ngram_jaccard_scores(docs)
+    assert calls == {"collect": 1, "count": 2}
 
 
-def test_ngram_jaccard_big_path_has_no_token_self_join(spark, sf_dir):
+def test_ngram_jaccard_big_path_has_no_token_self_join(docs, ngram_arm):
     """Plan guard for the crossover's scale claim: the big-corpus path's
     candidate join must key on the MinHash (band, bucket) — corpus-linear
     per band under the bucket cap — and must NOT contain the shared-token
     postings self-join (the Σ min(df,cap)² shape measured 14.1× for 10× at
     500k). The small path keeps exactly that token-keyed join."""
-    prep(spark)
-    register_views(spark, sf_dir, "documents")
-    docs = spark.table("documents").select("doc_id", "n_chars", "text")
-
-    big = plan_of(ngram_jaccard_scores(docs, big_corpus=True))
+    ngram_arm("big")
+    big = plan_of(ngram_jaccard_scores(docs))
     assert not joins(big, keyed_on="token"), big
     assert [j for j in joins(big) if {"band", "bucket"} <= set(j.keys)], big
-    small = plan_of(ngram_jaccard_scores(docs, big_corpus=False))
+    ngram_arm("small")
+    small = plan_of(ngram_jaccard_scores(docs))
     assert joins(small, keyed_on="token"), small
 
-def test_forced_big_verify_default_warns_exactly_once(spark, sf_dir):
-    """big_corpus=True with verify_broadcast unset defaults to the measured
-    1.51×-slower unhinted verify join (no hidden sizing action on forced-big
-    paths) — it must SAY so (r13 verdict item #4): a warning exactly there,
-    and nowhere else (explicit flags, the small path, and the auto path —
-    which sizes and decides itself — all stay silent)."""
-    import warnings
 
-    import pytest
-
-    prep(spark)
-    register_views(spark, sf_dir, "documents")
-    docs = spark.table("documents").select("doc_id", "n_chars", "text")
-    with pytest.warns(UserWarning, match="verify_broadcast"):
-        ngram_jaccard_scores(docs, big_corpus=True)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        ngram_jaccard_scores(docs, big_corpus=True, verify_broadcast=False)
-        ngram_jaccard_scores(docs, big_corpus=True, verify_broadcast=True)
-        ngram_jaccard_scores(docs, big_corpus=False)
-        ngram_jaccard_scores(docs)  # auto gate: sizes itself, never warns
-
-
-def test_jaccard_verify_broadcast_materializes_once(spark, sf_dir):
+def test_jaccard_verify_arrays_materialize_once(docs, ngram_arm):
     """The verify-broadcast byte budget sizes ONE copy of the hashed shingle
     arrays, and one copy is what ships: the two attach joins' broadcast
     subtrees canonicalize identically (the toks1/toks2 renames are
     alias-only), so AQE materializes the frame once and the second join gets
-    a ReusedExchange (r12 advice item — without this pin the budget would
-    silently under-account by 2× and the jaccard_scores docstring's memory
-    contract would be wrong)."""
-    prep(spark)
-    register_views(spark, sf_dir, "documents")
-    docs = spark.table("documents").select("doc_id", "n_chars", "text")
-    res = ngram_jaccard_scores(docs, big_corpus=True, verify_broadcast=True)
+    a ReusedExchange (without this pin the budget would silently
+    under-account by 2× and the jaccard_scores docstring's memory contract
+    would be wrong). The fixture's arrays fit the budget, so the big arm
+    broadcasts them."""
+    ngram_arm("big")
+    res = ngram_jaccard_scores(docs)
     res.collect()
     plan = plan_of(res, final=True)
     assert [n for n in nodes(plan, "ReusedExchange") if "toks2" in n.text], plan
+
 
 def test_dup_span_scrub_planted_edges(spark):
     """dd10's removal rule against a pure-Python reference on planted

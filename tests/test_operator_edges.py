@@ -520,6 +520,64 @@ def test_sink_query_results_survive_a_rerun(spark, sf_dir, name):
     assert sorted(map(tuple, first.collect())) == second
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["st7_stateful_running_totals", "st9_watermark_dedup_stream", "st10_session_window_stream"],
+)
+def test_stream_query_leaves_no_sink_view(spark, sf_dir, name):
+    """st7/st9/st10 drain a real stream into a memory sink whose rows are a
+    uuid-named temp view. The query drops the view once its result frame is
+    bound — otherwise a long-lived session keeps every run's sink rows in
+    memory — and the result still collects afterwards."""
+    from trafficanalysisbigdata_spark.plans.registry import load_all
+
+    spec = load_all()[name]
+    before = {t.name for t in spark.catalog.listTables()}
+    out = spec.run(spark, sf_dir)
+    left = {t.name for t in spark.catalog.listTables()} - before - set(spec.tables)
+    assert not left, f"{name} left views behind: {left}"
+    assert out.collect()
+
+
+class _TrackedStub:
+    """A tracked frame whose SparkContext is live or stopped (``_jsc`` None)
+    and whose ``unpersist`` records the call or raises ``error``."""
+
+    def __init__(self, stopped: bool, error: Exception | None = None):
+        from types import SimpleNamespace
+
+        jsc = None if stopped else object()
+        self.sparkSession = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=jsc))
+        self.error, self.released = error, False
+
+    def unpersist(self):
+        if self.error is not None:
+            raise self.error
+        self.released = True
+
+
+def test_release_caches_skips_only_stopped_contexts(monkeypatch):
+    """A frame whose SparkContext is stopped holds nothing to release: it is
+    skipped (its unpersist is never called) and the live one is released."""
+    from trafficanalysisbigdata_spark.plans import registry
+
+    monkeypatch.setattr(registry, "_TRACKED_CACHES", [])
+    live = registry.track_cache(_TrackedStub(stopped=False))
+    registry.track_cache(_TrackedStub(stopped=True, error=RuntimeError("context stopped")))
+    assert registry.release_caches() == 2
+    assert live.released and not registry._TRACKED_CACHES
+
+
+def test_release_caches_propagates_unpersist_errors(monkeypatch):
+    """Any other unpersist failure is a fault, not a silent fallback."""
+    from trafficanalysisbigdata_spark.plans import registry
+
+    monkeypatch.setattr(registry, "_TRACKED_CACHES", [])
+    registry.track_cache(_TrackedStub(stopped=False, error=RuntimeError("unpersist failed")))
+    with pytest.raises(RuntimeError, match="unpersist failed"):
+        registry.release_caches()
+
+
 def test_rolling_median_short_frames(spark):
     """w10's composition must yield the discrete median on frames shorter
     than the window width (warm-up rows) — element_at(ceil(n/2)) on n=1..3."""
@@ -598,13 +656,13 @@ def test_olap9_empty_catalog(spark, tmp_path):
 
 
 def test_two_phase_prefix_sum_matches_naive_window(spark):
-    """two_phase_prefix_sum == a naive single-partition window cumsum on a
-    frame with duplicate keys (tie groups spanning bucket cut candidates),
-    both directions."""
+    """two_phase_prefix_sums over one ungrouped column (olap9's and pipe11's
+    use) == a naive single-partition window cumsum on a frame with duplicate
+    keys (tie groups spanning bucket cut candidates), both directions."""
     from pyspark.sql.window import Window
 
     from trafficanalysisbigdata_spark.operators.prefixsum import (
-        two_phase_prefix_sum,
+        two_phase_prefix_sums,
     )
 
     rows = [(i, float(k), v) for i, (k, v) in enumerate(
@@ -624,15 +682,14 @@ def test_two_phase_prefix_sum_matches_naive_window(spark):
                 ),
             ).collect()
         }
-        got = two_phase_prefix_sum(
+        got = two_phase_prefix_sums(
             df.repartition(4),
             key="key",
-            value="v",
-            out="cum",
+            values={"cum": "v"},
             descending=desc,
             tiebreak=("id",),
             n_buckets=3,
-            total_out="tot",
+            totals={"tot": "v"},
         ).collect()
         assert {r["id"]: r["cum"] for r in got} == naive
         assert all(r["tot"] == 175 for r in got)
@@ -640,17 +697,19 @@ def test_two_phase_prefix_sum_matches_naive_window(spark):
 
 def test_two_phase_prefix_sum_empty_frame(spark):
     """Zero rows: the bounds action yields NULL cuts and the operator must
-    return an empty (not raising) frame with the new columns."""
+    return an empty (not raising) frame with the new columns, both
+    directions."""
     from trafficanalysisbigdata_spark.operators.prefixsum import (
-        two_phase_prefix_sum,
+        two_phase_prefix_sums,
     )
 
     df = spark.createDataFrame([], "id long, key double, v long")
-    out = two_phase_prefix_sum(
-        df, key="key", value="v", out="cum", total_out="tot"
-    )
-    assert out.count() == 0
-    assert {"cum", "tot"} <= set(out.columns)
+    for desc in (False, True):
+        out = two_phase_prefix_sums(
+            df, key="key", values={"cum": "v"}, descending=desc, totals={"tot": "v"}
+        )
+        assert out.count() == 0
+        assert {"cum", "tot"} <= set(out.columns)
 
 
 def test_connected_components_no_edges(spark, cc_arm):
@@ -724,25 +783,65 @@ def test_stored_bytes_of_a_checkpoint_without_blocks_is_zero(spark):
     assert _stored_bytes(rows) >= 1000 * 16  # two longs a row, at least
 
 
+def _bare_signature(fn) -> str:
+    """``fn``'s signature without annotations, as a string."""
+    import inspect
+
+    sig = inspect.signature(fn)
+    return str(
+        sig.replace(
+            parameters=[p.replace(annotation=p.empty) for p in sig.parameters.values()],
+            return_annotation=sig.empty,
+        )
+    )
+
+
 def test_connected_components_signature_is_pinned():
     """perfbench patches ``connected_components`` by identity and the scale
     rehearsal calls it positionally: the gate adds no parameter."""
-    import inspect
-
     from trafficanalysisbigdata_spark.operators.components import connected_components
 
-    sig = inspect.signature(connected_components)
-    bare = sig.replace(
-        parameters=[p.replace(annotation=p.empty) for p in sig.parameters.values()],
-        return_annotation=sig.empty,
-    )
-    assert str(bare) == "(pairs, src='doc1', dst='doc2', max_iter=25)"
+    assert _bare_signature(connected_components) == "(pairs, src='doc1', dst='doc2', max_iter=25)"
+
+
+# operator -> (module under operators/, its pinned signature)
+PINNED_SIGNATURES = {
+    "lsh_neardup_pairs": (
+        "similarity",
+        "(corpus, threshold, n_tables=16, n_planes=None, dim=64, id_col='vec_id', "
+        "vec_col='embedding', max_bucket=None, n_rows=None, collapse=False)",
+    ),
+    "ngram_jaccard_scores": (
+        "dedup",
+        "(docs, max_df_frac=0.05, max_df_abs=256, max_delta_chars=20, "
+        "text_col='text', num_perm=16, max_bucket=256)",
+    ),
+    "two_phase_prefix_sums": (
+        "prefixsum",
+        "(df, key, values, descending=False, group=(), tiebreak=(), n_buckets=8, "
+        "totals=None, cuts_from=None)",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PINNED_SIGNATURES))
+def test_gated_operator_signature_is_pinned(name):
+    """Each near-dup scale gate is the only thing that picks its arm (tests
+    move the module constant it reads), and one prefix-sum operator serves
+    every direction: no parameter that forces an arm or clones an operator
+    grows back unnoticed."""
+    import importlib
+
+    module, expected = PINNED_SIGNATURES[name]
+    mod = importlib.import_module(f"trafficanalysisbigdata_spark.operators.{module}")
+    assert _bare_signature(getattr(mod, name)) == expected
 
 
 def test_two_phase_prefix_sums_grouped_matches_naive(spark):
     """two_phase_prefix_sums (grouped, multi-column) == per-group naive
-    window cumsums, on a frame with duplicate keys spanning bucket-cut
-    candidates and groups of unequal size; empty frame returns empty."""
+    window cumsums in both directions, on a frame with duplicate keys
+    spanning bucket-cut candidates and groups of unequal size; empty frame
+    returns empty."""
     from pyspark.sql.window import Window
 
     from trafficanalysisbigdata_spark.operators.prefixsum import (
@@ -760,26 +859,28 @@ def test_two_phase_prefix_sums_grouped_matches_naive(spark):
         )
     ]
     df = spark.createDataFrame(rows, "id long, g string, key double, v long, w long")
-    naive_w = (
-        Window.partitionBy("g")
-        .orderBy(F.asc("key"), F.asc("id"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    naive = {
-        r["id"]: (r["cv"], r["cw"])
-        for r in df.withColumn("cv", F.sum("v").over(naive_w))
-        .withColumn("cw", F.sum("w").over(naive_w))
-        .collect()
-    }
-    got = two_phase_prefix_sums(
-        df.repartition(4),
-        key="key",
-        values={"cv": "v", "cw": "w"},
-        group=("g",),
-        tiebreak=("id",),
-        n_buckets=3,
-    ).collect()
-    assert {r["id"]: (r["cv"], r["cw"]) for r in got} == naive
+    for desc in (False, True):
+        naive_w = (
+            Window.partitionBy("g")
+            .orderBy(F.desc("key") if desc else F.asc("key"), F.asc("id"))
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        naive = {
+            r["id"]: (r["cv"], r["cw"])
+            for r in df.withColumn("cv", F.sum("v").over(naive_w))
+            .withColumn("cw", F.sum("w").over(naive_w))
+            .collect()
+        }
+        got = two_phase_prefix_sums(
+            df.repartition(4),
+            key="key",
+            values={"cv": "v", "cw": "w"},
+            descending=desc,
+            group=("g",),
+            tiebreak=("id",),
+            n_buckets=3,
+        ).collect()
+        assert {r["id"]: (r["cv"], r["cw"]) for r in got} == naive
 
     empty = spark.createDataFrame([], "id long, g string, key double, v long")
     out = two_phase_prefix_sums(

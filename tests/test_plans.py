@@ -17,6 +17,9 @@ then); runtime claims read the final plan after an action on the Dataset.
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -622,8 +625,40 @@ def test_dd11b_pandas_guard_single_doc_exchange_no_joins(plan):
                for p in nodes(plan, "Project") for e in p.exprs)
 
 
+_DEFS = {
+    f.name: f
+    for f in ast.parse(pathlib.Path(__file__).read_text()).body
+    if isinstance(f, ast.FunctionDef)
+}
+_ASSERTING = {
+    name for name, f in _DEFS.items() if any(isinstance(n, ast.Assert) for n in ast.walk(f))
+}
+
+
+def _leading_check(body: list[ast.stmt]) -> ast.stmt:
+    """The statement of a guard body that a twin must trip: its first
+    ``assert``, or an earlier statement that delegates to an asserting
+    helper of this module (``_one``)."""
+    for stmt in body:
+        if isinstance(stmt, ast.Assert) or any(
+            isinstance(n, ast.Call) and getattr(n.func, "id", None) in _ASSERTING
+            for n in ast.walk(stmt)
+        ):
+            return stmt
+    raise AssertionError("guard has no check")
+
+
 @pytest.mark.parametrize("name", sorted(TWINS))
 def test_twin_is_rejected(spark, sf_dir, name):
+    """The twin fails the guard, and on the guard's LEADING check: a twin
+    that only trips a later assertion would leave the first one untested."""
     check, twin = TWINS[name]
-    with pytest.raises(AssertionError):
+    with pytest.raises(AssertionError) as exc:
         check(_plan(twin, spark, sf_dir))
+    tb, lines = exc.tb, []
+    while tb is not None:
+        if tb.tb_frame.f_code is check.__code__:
+            lines.append(tb.tb_lineno)
+        tb = tb.tb_next
+    lead = _leading_check(_DEFS[name].body)
+    assert [lead.lineno <= ln <= lead.end_lineno for ln in lines] == [True], (lines, lead.lineno)

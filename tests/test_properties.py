@@ -291,11 +291,12 @@ def test_upsert_algebra_batch_split_invariant(spark, rows, n_batches):
 def test_two_phase_prefix_sum_equals_python_cumsum(
     spark, rows, n_buckets, descending
 ):
-    """two_phase_prefix_sum == a plain Python running total over the same
-    (key, id) ordering, for any key distribution (heavy ties included, so
-    tie groups straddle percentile cut candidates) and any bucket count."""
+    """two_phase_prefix_sums over one ungrouped column == a plain Python
+    running total over the same (key, id) ordering, in either direction,
+    for any key distribution (heavy ties included, so tie groups straddle
+    percentile cut candidates) and any bucket count."""
     from trafficanalysisbigdata_spark.operators.prefixsum import (
-        two_phase_prefix_sum,
+        two_phase_prefix_sums,
     )
 
     df = spark.createDataFrame(
@@ -309,15 +310,14 @@ def test_two_phase_prefix_sum_equals_python_cumsum(
     for i, (_, v) in ordered:
         running += v
         expect[i] = running
-    got = two_phase_prefix_sum(
+    got = two_phase_prefix_sums(
         df.repartition(3),
         key="key",
-        value="v",
-        out="cum",
+        values={"cum": "v"},
         descending=descending,
         tiebreak=("id",),
         n_buckets=n_buckets,
-        total_out="tot",
+        totals={"tot": "v"},
     ).collect()
     assert {r["id"]: r["cum"] for r in got} == expect
     assert all(r["tot"] == running for r in got)

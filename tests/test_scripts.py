@@ -60,6 +60,8 @@ REHEARSAL_MODES = {
 }
 TOY_ROWS = 500
 TOY_OPS = {"sqlsf1": ("sql1_",)}  # one query of the family
+# modes whose 1M point stages past the near-dup frontier -> their group count
+STAGED_RECEIPTS = {"sim1m": "sim4_staged_groups", "sim4auto1m": "n_groups"}
 
 
 def _numbers(node, path=""):
@@ -87,6 +89,8 @@ def test_rehearsal_mode_runs_at_toy_size(name, spark, sf_dir, rehearsal_base, mo
     monkeypatch.setattr(rehearsal, "SF01_DIR", sf_dir)
     timed = rehearsal._time
     monkeypatch.setattr(rehearsal, "_time", lambda fn, label, once=False: timed(fn, label, True))
+    if name in STAGED_RECEIPTS:  # stage the toy corpus too: the frontier moves below it
+        monkeypatch.setattr(rehearsal.sim, "NEARDUP_BUDGET_MB", 0)
     mode = rehearsal.MODES[name]
     sizes = {tag: min(n, TOY_ROWS) for tag, n in mode.sizes.items()}
     rehearsal.rehearse(spark.newSession(), name, sizes, TOY_OPS.get(name, ()))
@@ -98,6 +102,8 @@ def test_rehearsal_mode_runs_at_toy_size(name, spark, sf_dir, rehearsal_base, mo
         got = dict(_numbers(res))
         assert got, f"{tag}: no op ran"
         assert all(v >= 0 for v in got.values()), f"{tag}: failed receipts {got}"
+        if name in STAGED_RECEIPTS:
+            assert res[STAGED_RECEIPTS[name]] > 0, f"{tag}: no staged groups counted"
 
 
 def _collapse_breaks(tree: ast.AST) -> dict[str, list[int]]:

@@ -7,6 +7,7 @@ bar an exact-match oracle can't express: recall against brute force.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.plan_tree import Node, nodes, plan_of
@@ -650,208 +651,151 @@ def test_hash_ivf_two_level_build(spark, tmp_path):
         build_hash_ivf_index(df, str(tmp_path / "x"), assignment="bogus")
 
 
-def test_staged_pairs_equal_single_pass(spark, sf_dir, tmp_path):
-    """lsh_neardup_pairs_staged is SET-identical to the single-pass operator
-    for every group size (including one that doesn't divide L): table_offset
-    makes group g hash exactly the planes the single pass uses for tables
-    [g*gs, (g+1)*gs), and verification is deterministic."""
-    from trafficanalysisbigdata_spark.operators.similarity import (
-        lsh_neardup_pairs_staged,
-    )
+@pytest.fixture
+def staging_root(spark, tmp_path, monkeypatch):
+    """The near-dup router's frontier at 0 MB, so every corpus is past it
+    (the router alone picks its arm; a test moves the bound it reads), with
+    the session's scratch root at a fresh directory the test can list."""
+    from trafficanalysisbigdata_spark.io import SCRATCH_DIR_CONF
+    from trafficanalysisbigdata_spark.operators import similarity as sim
 
     prep(spark)
+    monkeypatch.setattr(sim, "NEARDUP_BUDGET_MB", 0)
+    root = tmp_path / "scratch"
+    spark.conf.set(SCRATCH_DIR_CONF, str(root))
+    try:
+        yield root
+    finally:
+        spark.conf.unset(SCRATCH_DIR_CONF)
+
+
+def _staged_groups(root) -> list[list[str]]:
+    """The table-group directories of each staged call under ``root``."""
+    import os
+
+    if not root.exists():
+        return []
+    return [sorted(os.listdir(root / leaf)) for leaf in sorted(os.listdir(root))]
+
+
+def _fixture_pairs(spark, sf_dir):
+    """(embeddings, its size, the single-pass pair set at L=7, P=4):
+    ``collapse=True`` never stages, wherever the frontier sits."""
     register_views(spark, sf_dir, "embeddings")
     emb = spark.table("embeddings")
     n = emb.count()
     single = {
         (r.id1, r.id2, r.cos)
         for r in lsh_neardup_pairs(
-            emb, 0.3, n_tables=7, n_planes=4, n_rows=n
+            emb, 0.3, n_tables=7, n_planes=4, n_rows=n, collapse=True
         ).collect()
     }
     assert single  # fixture must produce pairs or the test is vacuous
-    for gs in (3, 7):
+    return emb, n, single
+
+
+def test_staged_pairs_equal_single_pass(spark, sf_dir, staging_root, monkeypatch):
+    """The staged arm is SET-identical to the single-pass plan for every
+    group size (including one that doesn't divide L): the table offset
+    makes group g hash exactly the planes the single pass uses for tables
+    [g*gs, (g+1)*gs), and verification is deterministic."""
+    from trafficanalysisbigdata_spark.operators import similarity as sim
+
+    emb, n, single = _fixture_pairs(spark, sf_dir)
+    for gs in (3, 6):
+        monkeypatch.setattr(sim, "NEARDUP_GROUP_SIZE", gs)
         staged = {
             (r.id1, r.id2, r.cos)
-            for r in lsh_neardup_pairs_staged(
-                emb,
-                0.3,
-                work_dir=str(tmp_path / f"gs{gs}"),
-                n_tables=7,
-                n_planes=4,
-                n_rows=n,
-                group_size=gs,
-            ).collect()
+            for r in lsh_neardup_pairs(emb, 0.3, n_tables=7, n_planes=4, n_rows=n).collect()
         }
         assert staged == single
+    assert sorted(len(g) for g in _staged_groups(staging_root)) == [2, 3]
 
 
-def test_neardup_auto_routes_staged_past_frontier(spark, sf_dir, tmp_path):
-    """Round-11 verdict item #1: the REGISTERED entrypoint must take the
-    staged path past the broadcast-budget frontier (where the 1M rehearsal
-    measured single-pass to DNF), and the auto-routed result must be
-    SET-identical to the single-pass plan. The frontier is forced here by
-    zeroing the budget, so the same fixture exercises both branches."""
-    import os
+def test_neardup_auto_routes_staged_past_frontier(spark, sf_dir, staging_root, monkeypatch):
+    """The REGISTERED entrypoint must take the staged arm past the
+    broadcast-budget frontier (where the 1M rehearsal measured single-pass
+    to DNF), and the routed result must be SET-identical to the single-pass
+    plan. The frontier is moved here by patching the bound the router
+    reads, so the same fixture exercises both branches; a call under it
+    writes nothing."""
+    from trafficanalysisbigdata_spark.operators import similarity as sim
 
-    prep(spark)
-    register_views(spark, sf_dir, "embeddings")
-    emb = spark.table("embeddings")
-    n = emb.count()
-    single = {
-        (r.id1, r.id2, r.cos)
-        for r in lsh_neardup_pairs(
-            emb, 0.3, n_tables=7, n_planes=4, n_rows=n
-        ).collect()
-    }
-    assert single
-    wd = tmp_path / "auto"
-    routed = lsh_neardup_pairs(
-        emb,
-        0.3,
-        n_tables=7,
-        n_planes=4,
-        n_rows=n,
-        broadcast_budget_mb=0,
-        work_dir=str(wd),
-        group_size=3,
-    )
-    # staged path engaged: per-group artifacts exist before collect
-    assert sorted(os.listdir(wd)) == ["tables_0000", "tables_0003", "tables_0006"]
-    assert {(r.id1, r.id2, r.cos) for r in routed.collect()} == single
-    # under the frontier the router must NOT stage (work_dir untouched)
-    wd2 = tmp_path / "noauto"
-    under = lsh_neardup_pairs(
-        emb, 0.3, n_tables=7, n_planes=4, n_rows=n, work_dir=str(wd2)
-    )
-    assert not wd2.exists()
+    emb, n, single = _fixture_pairs(spark, sf_dir)
+    monkeypatch.setattr(sim, "NEARDUP_BUDGET_MB", 512)  # the shipped frontier
+    under = lsh_neardup_pairs(emb, 0.3, n_tables=7, n_planes=4, n_rows=n)
     assert under.columns == ["id1", "id2", "cos"]
+    assert not staging_root.exists()
+    monkeypatch.setattr(sim, "NEARDUP_BUDGET_MB", 0)
+    monkeypatch.setattr(sim, "NEARDUP_GROUP_SIZE", 3)
+    routed = lsh_neardup_pairs(emb, 0.3, n_tables=7, n_planes=4, n_rows=n)
+    # staged arm engaged: per-group artifacts exist before collect
+    assert _staged_groups(staging_root) == [["tables_0000", "tables_0003", "tables_0006"]]
+    assert {(r.id1, r.id2, r.cos) for r in routed.collect()} == single
 
 
-def test_staged_pairs_validates_group_size(spark, sf_dir, tmp_path):
-    """group_size < 1 must fail loudly at entry (ADVICE r11): 0 previously
-    surfaced as a range() ValueError deep in the loop and a negative value
-    silently skipped every table group before a confusing parquet error."""
-    import pytest
-
-    from trafficanalysisbigdata_spark.operators.similarity import (
-        lsh_neardup_pairs_staged,
-    )
-
-    prep(spark)
-    register_views(spark, sf_dir, "embeddings")
-    emb = spark.table("embeddings")
-    for bad in (0, -2):
-        with pytest.raises(ValueError, match="group_size"):
-            lsh_neardup_pairs_staged(
-                emb,
-                0.3,
-                work_dir=str(tmp_path / "v"),
-                n_tables=4,
-                n_planes=4,
-                n_rows=100,
-                group_size=bad,
-            )
-
-
-def test_staged_groups_score_at_double_budget(spark, sf_dir, tmp_path, monkeypatch):
-    """The staged path must hand each group pass 2x the routing budget (the
+def test_staged_groups_score_at_double_budget(spark, sf_dir, staging_root, monkeypatch):
+    """The staged arm must hand each group pass 2x the routing budget (the
     candidate-state headroom staging frees hosts the scoring broadcast —
     the receipted 1M posture). Captured via the group-pass entrypoint."""
     from trafficanalysisbigdata_spark.operators import similarity as sim
 
-    prep(spark)
     register_views(spark, sf_dir, "embeddings")
     emb = spark.table("embeddings")
     seen = []
     orig = sim._lsh_pairs_single_pass
 
     def capture(*args):
-        seen.append(args[-1])  # broadcast_budget_mb positional tail
+        seen.append(args[-1])  # the scoring budget, positional tail
         return orig(*args)
 
     monkeypatch.setattr(sim, "_lsh_pairs_single_pass", capture)
-    sim.lsh_neardup_pairs_staged(
-        emb,
-        0.3,
-        work_dir=str(tmp_path / "b"),
-        n_tables=4,
-        n_planes=4,
-        n_rows=100,
-        group_size=2,
-        broadcast_budget_mb=300,
-    )
+    monkeypatch.setattr(sim, "NEARDUP_BUDGET_MB", 300)
+    monkeypatch.setattr(sim, "NEARDUP_GROUP_SIZE", 2)
+    # 1M rows at 64-d is ~560 MB of prenormed vectors: past 300, under 600
+    sim.lsh_neardup_pairs(emb, 0.3, n_tables=4, n_planes=4, n_rows=1_000_000)
     assert seen == [600, 600]
+    assert _staged_groups(staging_root) == [["tables_0000", "tables_0002"]]
 
-def test_stage_false_is_count_free_and_never_stages(spark, tmp_path, monkeypatch):
-    """stage=False (the collapse-consumer posture, r12 advice item): with
-    pinned dials the router must resolve with ZERO driver actions — count()
-    is poisoned — and must build the single-pass LAZY plan even past the
-    frontier (budget 0), leaving no staging artifacts behind. pipe3 relies
-    on exactly this contract."""
-    from trafficanalysisbigdata_spark.operators.similarity import lsh_neardup_pairs
 
+def test_stage_false_is_count_free_and_never_stages(spark, staging_root, monkeypatch):
+    """``collapse=True`` (the collapse-consumer posture): with pinned dials
+    the router must resolve with ZERO Spark actions — count() is poisoned
+    — and must build the single-pass LAZY plan even past the frontier
+    (budget 0), leaving no staging artifacts behind. pipe3 relies on
+    exactly this contract."""
     df = spark.createDataFrame(
         [(i, [float(i), 1.0, 0.5, 2.0]) for i in range(64)],
         "vec_id long, embedding array<float>",
     )
 
     def _boom(self):
-        raise AssertionError("count() job triggered despite stage=False")
+        raise AssertionError("count() job triggered despite collapse=True")
 
     monkeypatch.setattr(type(df), "count", _boom)
-    wd = tmp_path / "nostage"
-    p = lsh_neardup_pairs(
-        df,
-        0.9,
-        n_tables=4,
-        n_planes=4,
-        dim=4,
-        broadcast_budget_mb=0,
-        work_dir=str(wd),
-        stage=False,
-    )
-    assert not wd.exists()
+    p = lsh_neardup_pairs(df, 0.9, n_tables=4, n_planes=4, dim=4, collapse=True)
+    assert not staging_root.exists()
     assert p.columns == ["id1", "id2", "cos"]
 
 
-def test_stage_true_forces_staged_under_conf_dir(spark, sf_dir, tmp_path):
-    """stage=True forces the staged plan even under the frontier, and with
-    no explicit work_dir the groups land under the SCRATCH_DIR_CONF session
-    conf (io.scratch_dir, the cluster-portable default) — set-identical to
-    the single-pass result."""
+def test_stage_true_forces_staged_under_conf_dir(spark, sf_dir, staging_root, monkeypatch):
+    """Past the frontier the staged groups land under the SCRATCH_DIR_CONF
+    session conf (io.scratch_dir, the cluster-portable location): one
+    ``lsh-<uuid>`` leaf per staged call, one directory per table group."""
     import os
 
-    from trafficanalysisbigdata_spark.io import SCRATCH_DIR_CONF
-    from trafficanalysisbigdata_spark.operators.similarity import lsh_neardup_pairs
+    from trafficanalysisbigdata_spark.operators import similarity as sim
 
-    prep(spark)
     register_views(spark, sf_dir, "embeddings")
     emb = spark.table("embeddings")
-    n = emb.count()
-    single = {
-        (r.id1, r.id2, r.cos)
-        for r in lsh_neardup_pairs(
-            emb, 0.3, n_tables=7, n_planes=4, n_rows=n
-        ).collect()
-    }
-    assert single
-    spark.conf.set(SCRATCH_DIR_CONF, str(tmp_path / "confdir"))
-    try:
-        forced = lsh_neardup_pairs(
-            emb, 0.3, n_tables=7, n_planes=4, n_rows=n, group_size=3, stage=True
-        )
-        leaves = os.listdir(tmp_path / "confdir")
-        assert len(leaves) == 1  # one uuid leaf per staging
-        assert leaves[0].startswith("lsh-")
-        assert sorted(os.listdir(tmp_path / "confdir" / leaves[0])) == [
-            "tables_0000",
-            "tables_0003",
-            "tables_0006",
-        ]
-        assert {(r.id1, r.id2, r.cos) for r in forced.collect()} == single
-    finally:
-        spark.conf.unset(SCRATCH_DIR_CONF)
+    monkeypatch.setattr(sim, "NEARDUP_GROUP_SIZE", 3)
+    for _ in range(2):
+        lsh_neardup_pairs(emb, 0.3, n_tables=7, n_planes=4, n_rows=100)
+    leaves = os.listdir(staging_root)
+    assert len(leaves) == 2 and all(leaf.startswith("lsh-") for leaf in leaves)
+    assert _staged_groups(staging_root) == [
+        ["tables_0000", "tables_0003", "tables_0006"]
+    ] * 2
 
 
 def test_default_staging_dir_is_warehouse_relative(spark):
@@ -869,25 +813,6 @@ def test_default_staging_dir_is_warehouse_relative(spark):
     d1, d2 = scratch_dir(spark, "lsh"), scratch_dir(spark, "lsh")
     assert d1.startswith(urlparse(wh).path + "/_scratch/lsh-")
     assert d1 != d2  # concurrent stagings must not collide
-
-
-def test_stage_true_rejects_manual_table_offset(spark):
-    """table_offset marks a manual staging caller (the staged operator's own
-    group passes route through single-pass); combining it with stage=True
-    would double-stage — fail loudly."""
-    import pytest
-
-    from trafficanalysisbigdata_spark.operators.similarity import lsh_neardup_pairs
-
-    df = spark.createDataFrame(
-        [(i, [float(i), 1.0, 0.5, 2.0]) for i in range(8)],
-        "vec_id long, embedding array<float>",
-    )
-    with pytest.raises(ValueError, match="table_offset"):
-        lsh_neardup_pairs(
-            df, 0.9, n_tables=4, n_planes=4, dim=4, n_rows=8,
-            table_offset=2, stage=True,
-        )
 
 
 def test_pipe16_top1_agrees_with_bruteforce(spark, sf_dir):

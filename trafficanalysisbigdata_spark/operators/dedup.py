@@ -179,7 +179,7 @@ def jaccard_scores(
     the rename Projects below them canonicalize identically, so AQE's
     runtime exchange reuse materializes the array frame ONCE and the
     second join gets a ReusedExchange (pinned in
-    tests/test_dedup.py::test_jaccard_verify_broadcast_materializes_once).
+    tests/test_dedup.py::test_jaccard_verify_arrays_materialize_once).
     A caller's byte budget therefore sizes ONE copy per executor, which is
     what actually ships. AQE (on by default since Spark 3.2, and in every
     session this engine builds) is required for that accounting; with AQE
@@ -280,6 +280,9 @@ def minhash_lsh_scores(
 
 
 NGRAM_JACCARD_CROSSOVER_DOCS = 100_000
+# the big arm's verify-broadcast budget for the hashed shingle arrays
+# (8·Σ|S_d| + 48·n bytes; see ngram_jaccard_scores)
+NGRAM_VERIFY_BUDGET_MB = 1024
 
 
 def ngram_jaccard_scores(
@@ -288,22 +291,20 @@ def ngram_jaccard_scores(
     max_df_abs: int = 256,
     max_delta_chars: int = 20,
     text_col: str = "text",
-    big_corpus: bool | None = None,
     num_perm: int = 16,
     max_bucket: int = 256,
-    verify_broadcast: bool | None = None,
-    verify_broadcast_budget_mb: int = 1024,
 ) -> DataFrame:
     """The full n-gram-Jaccard near-dup pipeline as ONE reusable operator.
     Returns (doc1, doc2, jaccard). Shared by the dd4 query and the scale
     rehearsal (the source of the 45×-at-10× fraction-only-cap measurement).
 
     Two candidate strategies share the SAME verification (exact Jaccard over
-    the full bigram-shingle sets), auto-switched at
-    ``NGRAM_JACCARD_CROSSOVER_DOCS`` when ``big_corpus`` is None: the gate
-    is one cheap count(); only the big path then pays a second sizing agg
-    for the verify broadcast (small corpora must not tokenize twice — the
-    tx9/dd5 adaptivity discipline, applied to the round-11 finding that the
+    the full bigram-shingle sets), switched at
+    ``NGRAM_JACCARD_CROSSOVER_DOCS`` by the count gate alone (no caller
+    picks the arm): the gate is one cheap count(); only the big path then
+    pays a second sizing agg for the verify broadcast (small corpora must
+    not tokenize twice — the tx9/dd5 adaptivity discipline, applied to the
+    round-11 finding that the
     shared-shingle join is honestly superlinear: 500k receipt 14.1× wall
     for 10× docs — Σ min(df, cap)² widens with the zipf mid-band even under
     the df cap):
@@ -337,13 +338,13 @@ def ngram_jaccard_scores(
     1M receipt the candidate volume is ~2.8×10⁸ (linear — 144M at 500k)
     but the unhinted verify join sort-merges pair rows widened by a shingle
     array, and that sort's spill was the measured 500k→1M wall step
-    (95 → 406 s, ~4× for 2×). On the auto big path, one sizing agg measures
+    (95 → 406 s, ~4× for 2×). On the big path, one sizing agg measures
     the exact hashed-array bytes (8·Σ|S_d| + 48·n) and verification
-    broadcasts the array side when it fits ``verify_broadcast_budget_mb`` —
+    broadcasts the array side when it fits ``NGRAM_VERIFY_BUDGET_MB`` —
     both attach joins go map-side, zero widened shuffles (ONE materialized
     copy: the second join's broadcast is an AQE ReusedExchange, pinned in
-    tests). Callers forcing ``big_corpus=True`` (no hidden actions) pass
-    ``verify_broadcast`` explicitly; default off with a one-time warning.
+    tests; the 1M A/B measured the unhinted verify at 1.51× the broadcast
+    plan, 406 s against 269 s).
 
     Past the budget the unhinted sort-merge verify stands. That is the
     right CLUSTER default — the widened sort spill distributes across
@@ -351,26 +352,22 @@ def ngram_jaccard_scores(
     memory — but on a single host it is a disk wall: the 2M receipt
     (BENCH_LOCAL r13) measured the broadcast plan at 448.8 s while the
     unhinted plan DNF'd a 70 GB-free host on sort spill (516M candidate
-    pairs × ~50-element shingle arrays). Single-host callers past the
-    ~2.2M-doc boundary of the default budget should raise
-    ``verify_broadcast_budget_mb`` to match their executor headroom."""
-    from ..functions.text import token_bigrams
+    pairs × ~50-element shingle arrays). Single-host deployments past the
+    ~2.2M-doc boundary of the budget should raise
+    ``NGRAM_VERIFY_BUDGET_MB`` to match their executor headroom."""
     from ..io import fan_out_small_scan
 
-    n_docs_known = None
-    if big_corpus is None:
-        # gate on the cheap count FIRST — the shingle-size sum tokenizes the
-        # whole corpus, so small corpora must not pay it (measured: +60% on
-        # dd4's sf0.1 roster number when the sizing rode the gate agg); only
-        # the big path, whose total cost amortizes it, runs the sizing agg.
-        n_docs_known = docs.count()
-        big_corpus = n_docs_known > NGRAM_JACCARD_CROSSOVER_DOCS
+    # gate on the cheap count FIRST — the shingle-size sum tokenizes the
+    # whole corpus, so small corpora must not pay it (measured: +60% on
+    # dd4's sf0.1 roster number when the sizing rode the gate agg); only
+    # the big path, whose total cost amortizes it, runs the sizing agg.
+    n_docs = docs.count()
     # fan out AFTER the gate count so the count scans raw parquet metadata
     # without paying the fan-out exchange; the tokenize/explode stages below
     # are what the fan-out exists for (no-op on real multi-split layouts;
     # measured win in OPTIMIZATION_r14.md)
     docs = fan_out_small_scan(docs, "doc_id")
-    if big_corpus:
+    if n_docs > NGRAM_JACCARD_CROSSOVER_DOCS:
         sig = minhash_signatures(doc_shingle_sets(docs, text_col), num_perm=num_perm)
         cand = lsh_candidate_pairs(
             sig, num_perm=num_perm, rows_per_band=1, max_bucket=max_bucket
@@ -386,39 +383,15 @@ def ngram_jaccard_scores(
             .filter(F.abs(F.col("nc1") - F.col("nc2")) <= max_delta_chars)
             .select("doc1", "doc2")
         )
-        if verify_broadcast is None:
-            if n_docs_known is None:
-                # forced-big caller: no hidden action — but the default is
-                # the measured slow side (1M A/B: unhinted verify sort-merges
-                # array-widened pair rows, 406 s vs 269 s broadcast = 1.51×),
-                # so say so once instead of silently repaying that wall.
-                import warnings
-
-                warnings.warn(
-                    "ngram_jaccard_scores(big_corpus=True) without "
-                    "verify_broadcast: defaulting to the unhinted verify join "
-                    "(no hidden sizing action on forced-big paths), which the "
-                    "1M A/B measured at 1.51x the broadcast plan. Pass "
-                    "verify_broadcast=True if the hashed shingle arrays "
-                    "(8*sum|S_d| + 48*n bytes) fit your executor budget, or "
-                    "False to silence this.",
-                    stacklevel=2,
-                )
-                verify_broadcast = False
-            else:
-                total_shingles = docs.agg(
-                    F.sum(
-                        F.size(F.array_distinct(token_bigrams(F.col(text_col))))
-                    )
-                ).collect()[0][0]
-                verify_broadcast = (
-                    (total_shingles or 0) * 8 + n_docs_known * 48
-                    <= verify_broadcast_budget_mb * 1024 * 1024
-                )
+        total_shingles = docs.agg(
+            F.sum(F.size(F.array_distinct(token_bigrams(F.col(text_col)))))
+        ).collect()[0][0]
+        fits = (
+            (total_shingles or 0) * 8 + n_docs * 48
+            <= NGRAM_VERIFY_BUDGET_MB * 1024 * 1024
+        )
         return jaccard_scores(
-            pairs,
-            doc_shingle_arrays(docs, text_col),
-            broadcast_sets=bool(verify_broadcast),
+            pairs, doc_shingle_arrays(docs, text_col), broadcast_sets=fits
         )
     docs_total = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     sh = df_capped(

@@ -1,8 +1,10 @@
 """Distributed ordered prefix-sum: the two-phase cumsum olap9 introduced
 (value-range buckets from literal cuts -> per-bucket windows in parallel ->
-num-buckets offset ledger broadcast back), packaged as a reusable operator so
-every "running total over a globally ordered corpus" query (olap9 Pareto,
-pipe11 token-budget selection) shares one audited implementation instead of
+num-buckets offset ledger broadcast back), packaged as ONE operator,
+``two_phase_prefix_sums`` (any number of running sums, optional groups,
+either direction), so every "running total over a globally ordered corpus"
+query (olap9 Pareto, pipe11 token-budget selection, a17's weighted median,
+tx17/tx17b Heaps curves) shares one audited implementation instead of
 re-deriving the pattern.
 
 Why not one global window: `Window.orderBy(key)` with no partition spec sorts
@@ -33,110 +35,37 @@ _LOCAL = "__psum_local"
 _OFFSET = "__psum_offset"
 
 
-def two_phase_prefix_sum(
-    df: DataFrame,
-    key: str,
-    value: str,
-    out: str,
-    descending: bool = False,
-    tiebreak: tuple[str, ...] = (),
-    n_buckets: int = 8,
-    total_out: str | None = None,
-) -> DataFrame:
-    """Append ``out`` = running sum of ``value`` over ``df`` ordered by
-    (``key`` asc|desc, ``tiebreak...`` asc) — inclusive of the current row —
-    without any unpartitioned window.
-
-    ``total_out`` optionally appends the grand total of ``value`` to every
-    row (free: it rides the same ledger broadcast).
-
-    Phase 0 runs ONE 1-row driver action (percentile_approx over ``key``)
-    to derive literal range cuts — the explicit form of RangePartitioner's
-    bounds sampling. Callers embedding this in a multi-branch plan get
-    branch-consistent buckets by construction because the cuts are literals.
-    """
-    fracs = [i / n_buckets for i in range(1, n_buckets)]
-    # `or []` guards the empty-frame edge: percentile_approx over zero rows
-    # is NULL, and one bucket over an empty frame is still correct.
-    cuts = (
-        df.select(
-            F.percentile_approx(F.col(key).cast("double"), fracs, 10000).alias("c")
-        ).first()["c"]
-        or []
-    )
-    kd = F.col(key).cast("double")
-    # Number of cuts on the "later" side of this key given the direction:
-    # bucket 0 holds the rows that sort FIRST, equal keys share a bucket.
-    if descending:
-        bucket = reduce(
-            lambda acc, c: acc + F.when(kd < F.lit(c), 1).otherwise(0),
-            cuts,
-            F.lit(0),
-        )
-    else:
-        bucket = reduce(
-            lambda acc, c: acc + F.when(kd > F.lit(c), 1).otherwise(0),
-            cuts,
-            F.lit(0),
-        )
-    ranged = df.withColumn(_PID, bucket)
-    order = [F.desc(key) if descending else F.asc(key)] + [
-        F.asc(t) for t in tiebreak
-    ]
-    w_local = (
-        Window.partitionBy(_PID)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = ranged.withColumn(_LOCAL, F.sum(value).over(w_local))
-    ptot = local.groupBy(_PID).agg(F.sum(value).alias("__p_sum"))
-    w_off = (
-        Window.partitionBy(F.lit(0))
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ledger_cols = [
-        F.col(_PID),
-        F.coalesce(F.sum("__p_sum").over(w_off), F.lit(0)).alias(_OFFSET),
-    ]
-    if total_out is not None:
-        w_tot = Window.partitionBy(F.lit(0))
-        ledger_cols.append(F.sum("__p_sum").over(w_tot).alias(total_out))
-    ledger = ptot.select(*ledger_cols)
-    return (
-        local.join(F.broadcast(ledger), _PID)
-        .withColumn(out, F.col(_LOCAL) + F.col(_OFFSET))
-        .drop(_PID, _LOCAL, _OFFSET)
-    )
-
-
 def two_phase_prefix_sums(
     df: DataFrame,
     key: str,
     values: dict[str, str],
+    descending: bool = False,
     group: tuple[str, ...] = (),
     tiebreak: tuple[str, ...] = (),
     n_buckets: int = 8,
     totals: dict[str, str] | None = None,
     cuts_from: DataFrame | None = None,
 ) -> DataFrame:
-    """Grouped, multi-column generalization of ``two_phase_prefix_sum``:
-    append ``out`` = running sum of ``value`` for every (out, value) in
-    ``values``, over ``df`` ordered by (``key`` asc, ``tiebreak...`` asc)
-    WITHIN each ``group`` — all running sums ride ONE partitioned window
-    (the tx17 discipline), with no unpartitioned window anywhere.
+    """Append ``out`` = running sum of ``value`` for every (out, value) in
+    ``values`` — inclusive of the current row — over ``df`` ordered by
+    (``key`` asc, or desc with ``descending``, ``tiebreak...`` asc) WITHIN
+    each ``group`` (the whole frame when ``group`` is empty). All running
+    sums ride ONE partitioned window (the tx17 discipline), with no
+    unpartitioned window anywhere.
 
-    Derivation from the audited single-column form: the range cuts stay
-    GLOBAL literals over ``key`` (one 1-row percentile_approx action — a
-    per-group quantile would need a per-group action or a skew-prone
-    two-level agg, and the cuts need only spread work, not balance it
-    per-group); the local window partitions by (group..., bucket); the
-    offset ledger is one row per (group..., bucket) — n_groups x n_buckets
-    rows, broadcast back — and its cumulative-offset window partitions by
-    the group columns, so the only per-group serial state is the ledger's
-    n_buckets rows, never the group's data. Equal keys always share a
-    bucket, so correctness is independent of cut placement (the parent
-    operator's determinism argument applies unchanged).
+    Phase 0 runs ONE 1-row Spark action (percentile_approx over ``key``)
+    to derive literal range cuts — the explicit form of RangePartitioner's
+    bounds sampling. Callers embedding this in a multi-branch plan get
+    branch-consistent buckets by construction because the cuts are
+    literals. The cuts are GLOBAL over ``key`` (a per-group quantile would
+    need a per-group action or a skew-prone two-level agg, and the cuts
+    need only spread work, not balance it per-group); the local window
+    partitions by (group..., bucket); the offset ledger is one row per
+    (group..., bucket) — n_groups x n_buckets rows, broadcast back — and
+    its cumulative-offset window partitions by the group columns, so the
+    only per-group serial state is the ledger's n_buckets rows, never the
+    group's data. Equal keys always share a bucket, so correctness is
+    independent of cut placement (the module's determinism argument).
 
     ``totals`` optionally appends per-GROUP grand totals of the named value
     columns to every row. They are free: the offset ledger already holds
@@ -154,10 +83,13 @@ def two_phase_prefix_sums(
     whole subtree (for tx17b: the tokenize/explode/first-seen pipeline)
     where a pruned base-table scan of the key column costs one column read.
 
-    Consumers: tx17's decimated Heaps-fit path (running token/vocab/rank
-    sums per source for corpora whose per-source doc count outgrows one
-    window task)."""
+    Consumers: olap9 and pipe11 (one descending running sum plus its grand
+    total), a17 (per-flag weighted median), and tx17's decimated Heaps-fit
+    path (running token/vocab/rank sums per source for corpora whose
+    per-source doc count outgrows one window task)."""
     fracs = [i / n_buckets for i in range(1, n_buckets)]
+    # `or []` guards the empty-frame edge: percentile_approx over zero rows
+    # is NULL, and one bucket over an empty frame is still correct.
     cuts = (
         (cuts_from if cuts_from is not None else df)
         .select(
@@ -166,13 +98,15 @@ def two_phase_prefix_sums(
         or []
     )
     kd = F.col(key).cast("double")
+    # Number of cuts on the "later" side of this key given the direction:
+    # bucket 0 holds the rows that sort FIRST, equal keys share a bucket.
     bucket = reduce(
-        lambda acc, c: acc + F.when(kd > F.lit(c), 1).otherwise(0),
+        lambda acc, c: acc + F.when(kd < c if descending else kd > c, 1).otherwise(0),
         cuts,
         F.lit(0),
     )
     ranged = df.withColumn(_PID, bucket)
-    order = [F.asc(key)] + [F.asc(t) for t in tiebreak]
+    order = [F.desc(key) if descending else F.asc(key)] + [F.asc(t) for t in tiebreak]
     w_local = (
         Window.partitionBy(*group, _PID)
         .orderBy(*order)

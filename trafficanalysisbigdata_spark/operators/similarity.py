@@ -139,8 +139,8 @@ def plane_matrix(
     n_tables: int, n_planes: int, dim: int, table_offset: int = 0
 ) -> np.ndarray:
     """(n_tables * n_planes, dim) hyperplane matrix; row t*P+p = plane p of
-    table ``table_offset + t``. The offset lets a staged caller
-    (``lsh_neardup_pairs_staged``) generate DISJOINT table groups — table
+    table ``table_offset + t``. The offset lets the staged arm
+    (``_lsh_pairs_staged``) generate DISJOINT table groups — table
     identity is the md5 seed, so group [8, 16) hashes exactly the planes a
     single L=16 run would have used for its tables 8..15."""
     return np.array(
@@ -406,6 +406,15 @@ def adaptive_n_tables(
     return max(floor, min(cap, need))
 
 
+# The single-pass frontier: past this many MB of prenormed vectors
+# (~n·(8·dim + 48) bytes) the router stages, and under it the single-pass
+# plan broadcasts them for scoring. Staged groups score at twice it.
+NEARDUP_BUDGET_MB = 512
+# Tables per staged group: peak transient candidates are ~this/L of a
+# single pass's (the 1M receipts in BENCH_LOCAL.md ran 4).
+NEARDUP_GROUP_SIZE = 4
+
+
 def lsh_neardup_pairs(
     corpus: DataFrame,
     threshold: float,
@@ -416,11 +425,7 @@ def lsh_neardup_pairs(
     vec_col: str = "embedding",
     max_bucket: int | None = None,
     n_rows: int | None = None,
-    table_offset: int = 0,
-    broadcast_budget_mb: int = 512,
-    work_dir: str | None = None,
-    group_size: int = 4,
-    stage: bool | None = None,
+    collapse: bool = False,
 ) -> DataFrame:
     """Embedding near-dup pairs at scale: banded LSH candidates (pairs
     colliding in any table), then exact cosine ≥ threshold. Never all-pairs —
@@ -440,41 +445,36 @@ def lsh_neardup_pairs(
     pinned-layout callers unchanged.
 
     AUTO-ROUTING AT THE FRONTIER (the dd5 k>=200 / tx9 200k-doc crossover
-    discipline, round-11 verdict item #1): with ``stage=None`` this
-    entrypoint RESOLVES the corpus size (``n_rows`` if given, else one
-    count() — zero-column parquet counts are footer-cheap, and the scalar
-    here decides between a working plan and a measured DNF) and, past the
+    discipline): the router is the only thing that picks the plan. It
+    resolves the corpus size (``n_rows`` if given, else one count() —
+    zero-column parquet counts are footer-cheap, and the scalar here
+    decides between a working plan and a measured DNF) and, past the
     single-pass frontier — prenormed vector frame ``n·(8·dim + 48)`` bytes
-    exceeding ``broadcast_budget_mb`` — builds the STAGED plan
-    (``lsh_neardup_pairs_staged``: table groups materialized to
-    ``work_dir``) instead of the single-pass plan.
+    exceeding ``NEARDUP_BUDGET_MB`` — builds the STAGED plan
+    (``_lsh_pairs_staged``: groups of ``NEARDUP_GROUP_SIZE`` tables
+    materialized under ``io.scratch_dir(spark, "lsh")``, the scratch rule
+    in the ``io`` module docstring; the group files back the returned
+    DataFrame) instead of the single-pass plan.
 
-    ``stage`` pins the route when the caller knows better than the
-    frontier heuristic. ``stage=False`` is the COLLAPSE-CONSUMER posture
-    (pipe3/dd6-style pipelines that fold the pairs straight into connected
-    components, where per-pair state never materializes): always the
-    single-pass lazy plan, and — when ``n_planes``/``n_tables`` are also
-    pinned — ZERO driver actions, restoring the round-8 no-count contract
-    for non-parquet inputs (the corpus size is then only used for the
+    ``collapse=True`` is the COLLAPSE-CONSUMER posture (pipe3/dd6-style
+    pipelines that fold the pairs straight into a flagged-id set or
+    connected components, where per-pair state never materializes): always
+    the single-pass lazy plan, and — when ``n_planes``/``n_tables`` are
+    also pinned — ZERO Spark actions, the no-count contract for
+    non-parquet inputs (the corpus size is then only used for the
     scoring-broadcast hint, which is skipped when unknown; pass ``n_rows``
-    to keep the hint). ``stage=True`` forces the staged plan regardless of
-    the frontier. With ``stage=None`` the count() is the documented price
-    of auto-routing.
+    to keep the hint).
 
-    ``work_dir`` resolution when staging (routed or forced): the explicit
-    argument wins; else ``io.scratch_dir`` (the scratch rule in the ``io``
-    module docstring: where, why, and that the caller owns cleanup — the
-    staged group files back the returned DataFrame).
     The round-11 1M×64-d rehearsal measured exactly this boundary:
     single-pass DNF'd three separate dials (4.3B-candidate distinct spill;
     sort-merge scoring once 560 MB of prenormed rows blew the 512 MB
     broadcast budget) while the staged run returned 169.4M pairs, twin
-    recall 1.000. Under the frontier the single-pass plan is strictly
+    recall 1.000; the round-12 router run at these defaults took 2,155 s
+    for the same pairs. Under the frontier the single-pass plan is strictly
     better (no materialization, cross-group dedup before scoring). The two
-    paths are set-identical by construction (pinned in
-    tests/test_similarity.py); staged-path calls are EAGER (group writes
-    execute during the call). A nonzero ``table_offset`` marks a manual
-    staging caller and always takes the single-pass plan.
+    plans are set-identical by construction (pinned in
+    tests/test_similarity.py); a staged call is EAGER (group writes
+    execute during the call).
 
     Scale accounting (10x rehearsal, 2k -> 20k clustered vectors at the
     0.8 bar): wall grows ~12x but the TRUE OUTPUT grows 103x (10.7k ->
@@ -489,57 +489,24 @@ def lsh_neardup_pairs(
     pipelines, pipe3/dd6 consume these pairs into connected components,
     where a capped pair list collapses dense regions identically."""
     # the count() is only owed when a decision needs the size: adaptive
-    # dials, auto-routing, or the staged path's own sizing. stage=False +
-    # pinned dials (the collapse-consumer posture) resolves with ZERO
+    # dials or the frontier. collapse + pinned dials resolves with ZERO
     # driver actions.
     need_n = n_rows is None and (
-        n_planes is None or n_tables is None or stage is not False
+        n_planes is None or n_tables is None or not collapse
     )
     n_known = n_rows if n_rows is not None else (corpus.count() if need_n else None)
     if n_planes is None:
         n_planes = adaptive_n_planes(n_known, cap=NEARDUP_P_CAP)
     if n_tables is None:
         n_tables = adaptive_n_tables(n_planes, threshold)
-    if stage is None:
-        stage = (
-            n_known * (dim * 8 + 48) > broadcast_budget_mb * 1024 * 1024
-            and table_offset == 0
-            and n_tables > group_size
-        )
-    elif stage and table_offset != 0:
-        raise ValueError(
-            "table_offset marks a manual staging caller; stage=True conflicts"
-        )
-    if stage:
-        if work_dir is None:
-            work_dir = scratch_dir(corpus.sparkSession, "lsh")
-        return lsh_neardup_pairs_staged(
-            corpus,
-            threshold,
-            work_dir,
-            n_tables=n_tables,
-            n_planes=n_planes,
-            dim=dim,
-            id_col=id_col,
-            vec_col=vec_col,
-            max_bucket=max_bucket,
-            n_rows=n_known,
-            group_size=group_size,
-            broadcast_budget_mb=broadcast_budget_mb,
-        )
-    return _lsh_pairs_single_pass(
-        corpus,
-        threshold,
-        n_tables,
-        n_planes,
-        dim,
-        id_col,
-        vec_col,
-        max_bucket,
-        n_known,
-        table_offset,
-        broadcast_budget_mb,
-    )
+    args = (corpus, threshold, n_tables, n_planes, dim, id_col, vec_col, max_bucket, n_known)
+    if (
+        not collapse
+        and n_known * (dim * 8 + 48) > NEARDUP_BUDGET_MB * 1024 * 1024
+        and n_tables > NEARDUP_GROUP_SIZE
+    ):
+        return _lsh_pairs_staged(*args)
+    return _lsh_pairs_single_pass(*args, 0, NEARDUP_BUDGET_MB)
 
 
 def _lsh_pairs_single_pass(
@@ -553,11 +520,12 @@ def _lsh_pairs_single_pass(
     max_bucket: int | None,
     n_known: int | None,
     table_offset: int,
-    broadcast_budget_mb: int,
+    budget_mb: int,
 ) -> DataFrame:
     """The single-pass near-dup plan (dials already resolved) — shared by
-    the router's under-frontier branch and the staged operator's per-group
-    passes (which must NOT re-route, however large the corpus).
+    the router's under-frontier branch and the staged arm's per-group
+    passes (tables ``table_offset`` on, scored at ``budget_mb``), which
+    must NOT re-route, however large the corpus.
 
     Scoring-join strategy: when the corpus size is KNOWN and the prenormed
     vector frame fits a generous broadcast budget (512 MB — e.g. ~900k rows
@@ -585,10 +553,8 @@ def _lsh_pairs_single_pass(
     # norms ride the vector attach (one fold per ROW); pair scoring is then
     # a single dot fold per candidate — see functions.vectors.cosine_prenorm
     v = _normed(corpus, id_col, vec_col, ("vid", "v", "n"))
-    # ~(8·dim + 48) bytes per prenormed row; 512 MB default broadcast budget
-    # (callers with verified executor headroom may raise it — the staged 1M
-    # rehearsal runs 768 MB so scoring stays map-side one decade further)
-    if n_known is not None and n_known * (dim * 8 + 48) <= broadcast_budget_mb * 1024 * 1024:
+    # ~(8·dim + 48) bytes per prenormed row
+    if n_known is not None and n_known * (dim * 8 + 48) <= budget_mb * 1024 * 1024:
         v = F.broadcast(v)
     return (
         cand.join(v.withColumnsRenamed({"vid": "id1", "v": "v1", "n": "n1"}), "id1")
@@ -598,64 +564,50 @@ def _lsh_pairs_single_pass(
     )
 
 
-def lsh_neardup_pairs_staged(
+def _lsh_pairs_staged(
     corpus: DataFrame,
     threshold: float,
-    work_dir: str,
-    n_tables: int | None = None,
-    n_planes: int | None = None,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket: int | None = None,
-    n_rows: int | None = None,
-    group_size: int = 4,
-    broadcast_budget_mb: int = 512,
+    n_tables: int,
+    n_planes: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    max_bucket: int | None,
+    n_known: int,
 ) -> DataFrame:
-    """``lsh_neardup_pairs`` with BOUNDED transient shuffle: the L tables are
-    processed in groups of ``group_size``, each group's verified pairs
-    materialized to ``work_dir`` before the next group starts, and the final
+    """The router's past-frontier arm (dials and corpus size already
+    resolved): the L tables are processed in groups of
+    ``NEARDUP_GROUP_SIZE``, each group's verified pairs materialized under
+    one ``io.scratch_dir`` leaf before the next group starts, and the final
     result is the distinct union read back. Set-identical to the single-pass
-    operator (a pair qualifies iff it collides in >= 1 table and scores past
-    the threshold; verification is deterministic, and ``table_offset`` makes
+    plan (a pair qualifies iff it collides in >= 1 table and scores past
+    the threshold; verification is deterministic, and the table offset makes
     group g hash exactly the planes single-pass tables [g·gs, (g+1)·gs)
     would) — only the peak in-flight candidate volume changes: L/gs stages of
     ~(total/L)·gs candidate rows each, instead of one stage holding all of
     them at once.
 
-    This is the materialized-pair-list contract past ``lsh_neardup_pairs``'s
-    documented single-pass frontier (~10⁶ vectors): at 1M×64-d the shipped
-    dial (P=12, L=35) yields ~4.3B transient candidates whose distinct+score
-    sort spill (~140+ GB with lineage overhead) exceeded an 80 GB-free host
-    twice in the round-11 rehearsal (P=14 and P=16 re-dials both DNF — skewed
+    This is the materialized-pair-list contract past the single-pass
+    frontier (~10⁶ vectors): at 1M×64-d the shipped dial (P=12, L=35)
+    yields ~4.3B transient candidates whose distinct+score sort spill
+    (~140+ GB with lineage overhead) exceeded an 80 GB-free host twice in
+    the round-11 rehearsal (P=14 and P=16 re-dials both DNF — skewed
     cluster buckets keep Σbucket² high as P deepens). Staging bounds the
-    spill at ~group_size/L of that, which is also the cluster posture: when
+    spill at ~gs/L of that, which is also the cluster posture: when
     aggregate shuffle space is the scarce resource, checkpointing stage
     boundaries beats one giant exchange. The extra cost is re-verifying
     pairs that collide in multiple groups (the single-pass distinct dedups
-    them pre-score); group_size trades that against peak disk. Per-group
-    SCORING broadcasts the prenormed frame up to 2× ``broadcast_budget_mb``
-    (see the inline note): the candidate-state memory staging frees hosts
-    the larger broadcast, keeping scoring map-side one binary decade past
-    the routing frontier — the receipted 1M posture.
+    them pre-score); the group size trades that against peak disk.
 
     Only the pair LIST needs this; collapse consumers (dd5/sim8/components)
-    stay on the single-pass operator whose output never materializes
-    per-pair state.
+    stay on the single-pass plan whose output never materializes per-pair
+    state.
     """
-    if group_size < 1:
-        raise ValueError(f"group_size must be >= 1, got {group_size}")
-    n_known = n_rows if n_rows is not None else corpus.count()
-    if n_planes is None:
-        n_planes = adaptive_n_planes(n_known, cap=NEARDUP_P_CAP)
-    if n_tables is None:
-        n_tables = adaptive_n_tables(n_planes, threshold)
-    if n_tables < 1:
-        raise ValueError(f"n_tables must be >= 1, got {n_tables}")
     spark = corpus.sparkSession
+    work_dir = scratch_dir(spark, "lsh")
     paths = []
-    for off in range(0, n_tables, group_size):
-        g = min(group_size, n_tables - off)
+    for off in range(0, n_tables, NEARDUP_GROUP_SIZE):
+        g = min(NEARDUP_GROUP_SIZE, n_tables - off)
         # Scoring budget is 2× the routing budget: single-pass must hold the
         # vector broadcast AND the full-L candidate state simultaneously,
         # while a staged group holds only gs/L of the candidate state — the
@@ -678,7 +630,7 @@ def lsh_neardup_pairs_staged(
             max_bucket,
             n_known,
             off,
-            broadcast_budget_mb * 2,
+            NEARDUP_BUDGET_MB * 2,
         ).select("id1", "id2", "cos")
         p = f"{work_dir}/tables_{off:04d}"
         part.write.mode("overwrite").parquet(p)

@@ -242,10 +242,11 @@ def dd4_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped (500k receipt: 14.1× for 10× — Σ min(df, 256)² widens with the
     zipf mid-band), so ``ngram_jaccard_scores`` auto-switches candidates to
     MinHash banding over the SAME bigram shingle sets at 100k docs
-    (count-gated like tx9; same exact-Jaccard verification; both paths
-    pinned identical on the fixtures in tests/test_dedup.py). Driver
-    corpora stay far under the gate, so oracle parity always exercises the
-    exhaustive small-corpus plan the SQL above mirrors."""
+    (count-gated like tx9, and only the gate picks the arm; same
+    exact-Jaccard verification, broadcast when the arrays fit its budget;
+    both paths pinned identical on the fixtures in tests/test_dedup.py).
+    Fixture corpora stay far under the gate, so oracle parity always
+    exercises the exhaustive small-corpus plan the SQL above mirrors."""
     docs = spark.table("documents").select("doc_id", "n_chars", "text")
     verified = ngram_jaccard_scores(docs, max_df_frac=0.05, max_df_abs=256).filter(
         F.col("jaccard") >= 0.25

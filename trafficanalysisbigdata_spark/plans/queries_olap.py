@@ -675,9 +675,10 @@ def olap9_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned window anywhere: split the catalog into revenue-range
     buckets, per-bucket ordered cumsums in parallel (window partitioned by
     bucket), then add each bucket's prefix offset from a bucket-totals
-    ledger that is only num-buckets rows. A billion-part catalog costs one
-    hash exchange on the bucket plus a broadcast of ~hundreds of ledger
-    rows. Plan-guarded: every Window in this plan carries a partition spec
+    ledger that is only num-buckets rows (``two_phase_prefix_sums``, one
+    descending running sum with its grand total on the same ledger). A
+    billion-part catalog costs one hash exchange on the bucket plus a
+    broadcast of ~hundreds of ledger rows. Plan-guarded: every Window in this plan carries a partition spec
     (tests/test_plans.py).
 
     Determinism: the bucket is DERIVED FROM THE DATA, never from physical
@@ -694,7 +695,7 @@ def olap9_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction. The bounds need not even be balanced for correctness —
     only for parallelism — because all rows with equal revenue land in one
     bucket and the per-bucket window breaks ties by part key."""
-    from ..operators.prefixsum import two_phase_prefix_sum
+    from ..operators.prefixsum import two_phase_prefix_sums
 
     n_buckets = 8
     g = (
@@ -717,19 +718,18 @@ def olap9_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = track_cache(g.persist(StorageLevel.MEMORY_AND_DISK))
     # Phases 0-2 (literal range cuts -> per-bucket cumsums -> broadcast
-    # offset ledger) live in operators/prefixsum.two_phase_prefix_sum since
-    # round 11 — pipe11 shares the identical machinery and both carry the
-    # same plan guards. Decimal sums stay decimal through the operator
-    # (only the CUTS are double), so the A/B boundary stays exact.
-    ranked = two_phase_prefix_sum(
+    # offset ledger) live in operators/prefixsum.two_phase_prefix_sums —
+    # pipe11 shares the identical machinery and both carry the same plan
+    # guards. Decimal sums stay decimal through the operator (only the CUTS
+    # are double), so the A/B boundary stays exact.
+    ranked = two_phase_prefix_sums(
         g,
         key="rev_dec",
-        value="rev_dec",
-        out="cum_dec",
+        values={"cum_dec": "rev_dec"},
         descending=True,
         tiebreak=("l_partkey",),
         n_buckets=n_buckets,
-        total_out="tot_dec",
+        totals={"tot_dec": "rev_dec"},
     ).select("rev_dec", "cum_dec", "tot_dec")
     dec80 = F.lit("0.80").cast("decimal(3,2)")
     dec95 = F.lit("0.95").cast("decimal(3,2)")

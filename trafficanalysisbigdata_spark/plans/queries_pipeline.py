@@ -235,7 +235,9 @@ def pipe3_multisignal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     catch verbatim/boilerplate copies, the embedding signal catches
     paraphrases. Per signal the shape is the already-audited scale path
     (groupBy text / groupBy fingerprint / banded LSH join); the union is a
-    distinct over flagged ids — no new joins, no pair explosion."""
+    distinct over flagged ids — no new joins, no pair explosion. The LSH
+    signal is a collapse consumer (``lsh_neardup_pairs(collapse=True)``):
+    single-pass at any size, built with zero Spark actions."""
     from ..operators.similarity import lsh_neardup_pairs
 
     docs = spark.table("documents")
@@ -254,14 +256,13 @@ def pipe3_multisignal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") != F.col("kp"))
         .select("doc_id")
     )
-    # stage=False: collapse-consumer posture — the pairs fold straight into
-    # a distinct flagged-id set, so per-pair state never materializes and
-    # the router must neither count() (dials are pinned; r12 advice: keep
-    # the no-action contract for non-parquet inputs) nor eagerly stage past
-    # the frontier.
+    # collapse=True: the pairs fold straight into a distinct flagged-id set,
+    # so per-pair state never materializes and the router must neither
+    # count() (dials are pinned: the no-action contract for non-parquet
+    # inputs) nor eagerly stage past the frontier.
     edup = (
         lsh_neardup_pairs(
-            emb, threshold=0.3, n_tables=_L, n_planes=_P, dim=_DIM, stage=False
+            emb, threshold=0.3, n_tables=_L, n_planes=_P, dim=_DIM, collapse=True
         )
         .select(F.col("id2").alias("doc_id"))
         .distinct()
@@ -819,8 +820,9 @@ def pipe11_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the "which sources survive a quality-ranked budget cut" report every
     pretraining data build runs before committing a mix.
 
-    The cumulative token sum ordered by (score DESC, doc_id) is the olap9
-    two-phase distributed prefix-sum, NOT a global single-reducer window:
+    The cumulative token sum ordered by (score DESC, doc_id) and its grand
+    total are olap9's two-phase distributed prefix-sum
+    (``two_phase_prefix_sums``), NOT a global single-reducer window:
     score-range buckets from value-derived literal cuts (one 1-row driver
     action over the skinny projection, the explicit RangePartitioner bounds
     — same determinism argument as olap9: buckets assigned by VALUE, never
@@ -837,7 +839,7 @@ def pipe11_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     a partition spec (tests/test_plans.py)."""
     from pyspark import StorageLevel
 
-    from ..operators.prefixsum import two_phase_prefix_sum
+    from ..operators.prefixsum import two_phase_prefix_sums
     from .registry import track_cache
 
     docs = spark.table("documents")
@@ -853,14 +855,13 @@ def pipe11_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted across the operator's bounds action and the main DAG;
     # ownership handed to the harness (olap9's lifetime contract)
     d = track_cache(d.persist(StorageLevel.MEMORY_AND_DISK))
-    cum = two_phase_prefix_sum(
+    cum = two_phase_prefix_sums(
         d,
         key="score",
-        value="nt",
-        out="cum",
+        values={"cum": "nt"},
         descending=True,
         tiebreak=("doc_id",),
-        total_out="total",
+        totals={"total": "nt"},
     )
     kept = cum.select(
         "source",

@@ -177,10 +177,11 @@ def sim4_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Past the single-pass frontier (prenormed vectors over the 512 MB
     broadcast budget, ~958k rows at 64-d — where the round-11 1M rehearsal
-    measured single-pass to DNF three ways) the operator AUTO-ROUTES
-    through ``lsh_neardup_pairs_staged``: bounded per-group materialization,
-    set-identical output (pinned in tests). Fixture corpora stay far under
-    the frontier, so driver parity always exercises the single-pass plan."""
+    measured single-pass to DNF three ways) the operator's router alone
+    picks its staged arm: bounded per-group materialization, set-identical
+    output (pinned in tests). Fixture corpora stay far under the frontier,
+    so oracle parity always exercises the single-pass plan; the one count()
+    that resolves the corpus size is the price of that decision."""
     return lsh_neardup_pairs(
         spark.table("embeddings"), threshold=0.3, n_tables=_L, n_planes=_P, dim=_DIM
     )

@@ -205,6 +205,15 @@ def _odd_even(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
 
 
+def _sink_rows(spark: SparkSession, sink: str) -> DataFrame:
+    """The rows of the drained memory sink ``sink``, with its temp view
+    dropped: the returned frame holds the sink itself, so a long-lived
+    session keeps a run's rows only as long as something holds its result."""
+    rows = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return rows
+
+
 @register(
     "st7_stateful_running_totals",
     oracle="""
@@ -269,9 +278,9 @@ def st7_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drain(q)
 
-    emitted = spark.table(sink)
     return (
-        emitted.groupBy("user_id")
+        _sink_rows(spark, sink)
+        .groupBy("user_id")
         .agg(F.max_by(F.struct("n", "total"), "n").alias("fin"))
         .select(
             "user_id",
@@ -406,7 +415,7 @@ def st9_watermark_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain(q)
 
     return (
-        spark.table(sink)
+        _sink_rows(spark, sink)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_keys"))
         .orderBy("event_type")
@@ -504,7 +513,7 @@ def st10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain(q)
 
     return (
-        spark.table(sink)
+        _sink_rows(spark, sink)
         .select(
             "user_id",
             F.col("w.start").cast("string").alias("session_start"),

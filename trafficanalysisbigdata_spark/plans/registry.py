@@ -53,13 +53,14 @@ def track_cache(df: DataFrame) -> DataFrame:
 
 
 def release_caches() -> int:
-    """Unpersist every tracked cache; returns how many were released."""
+    """Unpersist every tracked cache; returns how many were released. A
+    frame whose SparkContext is stopped holds nothing left to release and
+    is skipped; any other unpersist error propagates."""
     n = len(_TRACKED_CACHES)
     while _TRACKED_CACHES:
-        try:
-            _TRACKED_CACHES.pop().unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
+        df = _TRACKED_CACHES.pop()
+        if df.sparkSession.sparkContext._jsc is not None:
+            df.unpersist()
     return n
 
 # Modules that register queries on import (kept lazy so importing the package
