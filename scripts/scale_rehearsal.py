@@ -581,8 +581,7 @@ def run_lsh(spark, sizes: dict, ops: tuple) -> dict:
     * dd2  — absolute ``max_bucket=256`` (constant worst-bucket work);
     * dd5  — k ≈ n/500 (pair volume ≈ n · cell_size, assignment n·k);
     * sim3 — in-code ``adaptive_n_planes`` and ``n_tables=None`` (the
-      shipped (P, L) auto-dial); ``n_rows`` is passed because the rehearsal
-      KNOWS the corpus size, so the derivation spends no count() scan;
+      shipped (P, L) auto-dial, derived from one count() of the corpus);
     * sim4 — the auto-dial **plus** ``max_bucket=1024``: past the P cap the
       per-bucket population grows with n again, so the absolute bucket cap
       is the engaged dial for the PAIR-LIST consumer — the measured trade
@@ -606,13 +605,14 @@ def run_lsh(spark, sizes: dict, ops: tuple) -> dict:
         # gs/L of total and per-group scoring at twice the budget stays
         # map-side.
         staged = _run_dir("sim4_pairs") if tag == "1m" else None
-        dial = {"dim": DIM, "n_rows": n}
 
         def sim3(n_tables=None):
-            return sim.lsh_topk(emb, probes, k=5, n_tables=n_tables, n_planes=None, **dial)
+            return sim.lsh_topk(emb, probes, k=5, n_tables=n_tables, n_planes=None, dim=DIM)
 
         def sim4_pairs():
-            return sim.lsh_neardup_pairs(emb, 0.8, n_tables=None, max_bucket=1024, **dial)
+            return sim.lsh_neardup_pairs(
+                emb, 0.8, n_tables=None, dim=DIM, max_bucket=1024, n_rows=n
+            )
 
         def sim4():
             if not staged:

@@ -114,3 +114,59 @@ def test_malformed_cpu_count_env_is_rejected(monkeypatch):
         default_parallelism()
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_parallelism() == 3
+
+
+class _RefusingConf:
+    """A session conf that refuses to set ``refused`` keys with ``error``."""
+
+    def __init__(self, refused: set[str], error: Exception) -> None:
+        self.refused, self.error, self.values = refused, error, {}
+
+    def set(self, key: str, value: str) -> None:
+        if key in self.refused:
+            raise self.error
+        self.values[key] = value
+
+    def get(self, key: str, default=None):
+        return self.values.get(key, default)
+
+
+def _stub_session(refused: set[str], error: Exception):
+    from types import SimpleNamespace
+
+    # the package counts as shipped already, so prep only sets confs
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(_tabd_pkg_shipped=True),
+        conf=_RefusingConf(refused, error),
+    )
+
+
+def _refused() -> Exception:
+    from pyspark.errors import AnalysisException
+
+    return AnalysisException("[CANNOT_MODIFY_CONFIG] refused")
+
+
+def test_prep_warns_on_a_refused_optional_conf():
+    from trafficanalysisbigdata_spark.session import RUNTIME_CONFS, prep
+
+    spark = _stub_session({"spark.sql.adaptive.skewJoin.enabled"}, _refused())
+    with pytest.warns(UserWarning, match="skewJoin"):
+        prep(spark)
+    assert set(spark.conf.values) == set(RUNTIME_CONFS) - {"spark.sql.adaptive.skewJoin.enabled"}
+
+
+def test_prep_raises_when_nanos_as_long_is_refused():
+    from trafficanalysisbigdata_spark.session import prep
+
+    spark = _stub_session({"spark.sql.legacy.parquet.nanosAsLong"}, _refused())
+    with pytest.raises(RuntimeError, match="nanosAsLong"):
+        prep(spark)
+
+
+def test_prep_propagates_errors_that_are_not_a_refusal():
+    from trafficanalysisbigdata_spark.session import prep
+
+    spark = _stub_session({"spark.sql.session.timeZone"}, RuntimeError("connection lost"))
+    with pytest.raises(RuntimeError, match="connection lost"):
+        prep(spark)

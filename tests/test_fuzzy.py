@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from trafficanalysisbigdata_spark.operators import fuzzy
 from trafficanalysisbigdata_spark.operators.fuzzy import ed1_blocking_keys, ed1_pairs
 
 
@@ -16,11 +17,8 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "id bigint, name string")
 
 
-def _pairs(df, **kw):
-    return {
-        (r.id1, r.id2, r.dist)
-        for r in ed1_pairs(df, "id", "name", **kw).collect()
-    }
+def _pairs(df):
+    return {(r.id1, r.id2, r.dist) for r in ed1_pairs(df, "id", "name").collect()}
 
 
 def test_substitution_insertion_deletion_all_pair(spark):
@@ -69,17 +67,19 @@ def test_matches_exhaustive_levenshtein(spark):
     assert got == expect and expect  # non-trivial and exact
 
 
-def test_max_bucket_drops_degenerate_key_only(spark):
+def test_max_bucket_drops_degenerate_key_only(spark, monkeypatch):
     """A blank-name flood shares one identity key; the cap removes that
     bucket's quadratic blowup while real neighborhoods still pair."""
     flood = [(i, "") for i in range(50)]
     real = [(100, "abc"), (101, "abd")]
     df = _df(spark, flood + real)
-    capped = _pairs(df, max_bucket=10)
+    # uncapped (the shipped default), the flood pairs quadratically — the
+    # hazard is real
+    assert len(_pairs(df)) >= 50 * 49 // 2
+    monkeypatch.setattr(fuzzy, "ED1_MAX_BUCKET", 10)
+    capped = _pairs(df)
     assert (100, 101, 1) in capped
     assert not any(a < 50 and b < 50 for a, b, _ in capped)
-    # uncapped, the flood pairs quadratically — the hazard is real
-    assert len(_pairs(df)) >= 50 * 49 // 2
 
 
 def test_blocking_keys_count_is_length_plus_one(spark):

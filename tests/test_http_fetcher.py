@@ -89,7 +89,9 @@ def test_retrying_fetcher_honors_retry_after():
             raise RateLimitedError(url, 5.0)
         return [{"a": "1"}]
 
-    f = RetryingFetcher(rate_limited_then_ok, retries=3, backoff_s=0.1, sleep=slept.append)
+    f = RetryingFetcher(
+        rate_limited_then_ok, "test-http-429", retries=3, backoff_s=0.1, sleep=slept.append
+    )
     assert f("p") == [{"a": "1"}]
     assert slept == [5.0, 5.0]  # max(backoff, retry_after) both times
 
@@ -101,14 +103,18 @@ def test_retrying_fetcher_honors_retry_after():
             raise RateLimitedError(url, 0.01)
         return []
 
-    f2 = RetryingFetcher(tiny_retry_after, retries=2, backoff_s=1.0, sleep=slept2.append)
+    f2 = RetryingFetcher(
+        tiny_retry_after, "test-http-retry-after", retries=2, backoff_s=1.0, sleep=slept2.append
+    )
     assert f2("p") == []
     assert slept2 == [1.0]  # backoff floor wins over a tiny Retry-After
 
     def always_404(url):
         raise HttpStatusError(url, 404)
 
-    f3 = RetryingFetcher(always_404, retries=1, backoff_s=0.0, sleep=lambda s: None)
+    f3 = RetryingFetcher(
+        always_404, "test-http-404", retries=1, backoff_s=0.0, sleep=lambda s: None
+    )
     with pytest.raises(FetchError):  # budget exhausts, cause chained
         f3("p")
 

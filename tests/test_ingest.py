@@ -304,7 +304,9 @@ def test_retrying_fetcher_backoff_then_success():
             raise ConnectionError("transient")
         return [{"requestid": "1"}]
 
-    f = RetryingFetcher(flaky, retries=3, backoff_s=0.5, sleep=slept.append, clock=lambda: 0.0)
+    f = RetryingFetcher(
+        flaky, "test-flaky", retries=3, backoff_s=0.5, sleep=slept.append, clock=lambda: 0.0
+    )
     assert f("page-0") == [{"requestid": "1"}]
     assert len(calls) == 3
     assert slept == [0.5, 1.0]  # backoff_s * 2**attempt
@@ -321,7 +323,7 @@ def test_retrying_fetcher_exhausts_budget():
         calls.append(addr)
         raise ConnectionError("hard down")
 
-    f = RetryingFetcher(down, retries=2, backoff_s=0.1, sleep=lambda s: None)
+    f = RetryingFetcher(down, "test-down", retries=2, backoff_s=0.1, sleep=lambda s: None)
     with raises(FetchError):
         f("page-0")
     assert len(calls) == 3  # first try + 2 retries
@@ -331,7 +333,7 @@ def test_retrying_fetcher_rate_limit_spacing():
     """min_interval_s spaces fetch starts: a burst of calls sleeps for the
     remaining interval; a slow caller (clock already past the interval)
     doesn't sleep at all."""
-    from trafficanalysisbigdata_spark.sources.paginated import RetryingFetcher
+    from trafficanalysisbigdata_spark.sources.paginated import _RATE_STATE, RetryingFetcher
 
     now = {"t": 100.0}
     slept = []
@@ -340,14 +342,17 @@ def test_retrying_fetcher_rate_limit_spacing():
         slept.append(round(s, 6))
         now["t"] += s
 
+    key = "test-rate-spacing"
+    _RATE_STATE.pop(key, None)
     f = RetryingFetcher(
-        lambda a: [], retries=0, min_interval_s=2.0, sleep=sleep, clock=lambda: now["t"]
+        lambda a: [], key, retries=0, min_interval_s=2.0, sleep=sleep, clock=lambda: now["t"]
     )
     f("p0")          # first call: no wait
     f("p1")          # immediate second call: waits the full interval
     now["t"] += 5.0  # slow page: next call is already past the interval
     f("p2")
     assert slept == [2.0]
+    _RATE_STATE.pop(key, None)
 
 
 def test_paginated_empty_page_and_fetcher_option(spark, tmp_path):
@@ -392,8 +397,8 @@ def test_rate_limit_spans_fetcher_instances():
     key = "test-rate-group-xyz"
     P._RATE_STATE.pop(key, None)
     mk = lambda: P.RetryingFetcher(  # noqa: E731
-        lambda a: [], retries=0, min_interval_s=2.0,
-        sleep=sleep, clock=lambda: now["t"], rate_key=key,
+        lambda a: [], key, retries=0, min_interval_s=2.0,
+        sleep=sleep, clock=lambda: now["t"],
     )
     mk()("p0")  # first instance, first call: no wait
     mk()("p1")  # NEW instance, immediate call: must still wait
@@ -413,6 +418,7 @@ def test_paginated_stream_reader_incremental_exactly_once(spark, tmp_path):
     from trafficanalysisbigdata_spark.sources.paginated import (
         PaginatedJsonDataSource,
     )
+    from trafficanalysisbigdata_spark.streaming.snapshot import drain
 
     prep(spark)
     pages = tmp_path / "pages"
@@ -426,7 +432,7 @@ def test_paginated_stream_reader_incremental_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 
-    def drain():
+    def run():
         # file sink, not memory: the memory sink refuses checkpoint
         # recovery, and recovery is exactly the property under test
         q = (
@@ -439,18 +445,16 @@ def test_paginated_stream_reader_incremental_exactly_once(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("paginated_json stream did not drain within 300 s")
+        drain(q)
 
-    drain()
+    run()
     ids_run1 = sorted(r.requestid for r in spark.read.parquet(out).collect())
     assert ids_run1 == sorted(str(r["requestid"]) for r in ROWS[:6])
 
     # a new page lands (the API produced new data); restart from checkpoint
     with open(pages / "page-00002.json", "w") as f:
         f.write(json.dumps(ROWS[6]) + "\n")
-    drain()
+    run()
     ids_run2 = sorted(r.requestid for r in spark.read.parquet(out).collect())
     # exactly-once: run 1's pages are NOT re-ingested
     assert ids_run2 == sorted(str(r["requestid"]) for r in ROWS[:7])

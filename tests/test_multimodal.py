@@ -136,9 +136,9 @@ def test_sample_frames_ragged_tail(spark):
     assert rows == [(1, 0, 32), (1, 1, 32), (1, 2, 3)]
 
 
-def test_audio_window_energy_math(spark):
+def test_audio_window_energy_math(spark, monkeypatch):
     """Window boundaries, energy sums, ragged tail, silence rule."""
-    from trafficanalysisbigdata_spark.operators.multimodal import audio_window_energy
+    from trafficanalysisbigdata_spark.operators import multimodal
 
     # 30 'z' bytes (ord 122): window 0 = 25 full bytes -> 3050 (not silent at
     # threshold 3000), window 1 = 5-byte tail -> 610 (silent); image filtered
@@ -146,11 +146,11 @@ def test_audio_window_energy_math(spark):
         [(1, "audio", b"z" * 30), (2, "image", b"z" * 30)],
         "media_id long, modality string, content binary",
     )
+    monkeypatch.setattr(multimodal, "AUDIO_WINDOW_BYTES", 25)
+    monkeypatch.setattr(multimodal, "AUDIO_SILENCE_THRESHOLD", 3000)
     rows = sorted(
         (r.media_id, r.win, r.energy, r.is_silent)
-        for r in audio_window_energy(
-            media, window_bytes=25, silence_threshold=3000
-        ).collect()
+        for r in multimodal.audio_window_energy(media).collect()
     )
     assert rows == [(1, 0, 25 * 122, 0), (1, 1, 5 * 122, 1)]
 

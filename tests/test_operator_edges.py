@@ -3,7 +3,9 @@ as-of tie determinism, degenerate histogram ranges, bigram guards."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -89,19 +91,20 @@ def test_approx_count_distinct_accuracy(spark, sf_dir):
     assert abs(r.approx - r.exact) / r.exact < 0.05
 
 
-def test_salted_join_left_outer_and_determinism(spark):
-    """Unmatched left rows carry exactly one salt, so a left join keeps them
-    exactly once; deterministic salts mean two runs agree row-for-row."""
+def test_salted_join_matches_once_and_is_deterministic(spark):
+    """Each skewed row carries exactly one salt and ``other`` is replicated
+    once per salt, so every match appears exactly once and an unmatched row
+    drops out; deterministic salts mean two runs agree row-for-row."""
     from trafficanalysisbigdata_spark.operators.joins import salted_join
 
     left = spark.createDataFrame(
         [(1, "a"), (1, "b"), (2, "c"), (99, "orphan")], "k int, v string"
     )
     right = spark.createDataFrame([(1, "X"), (2, "Y")], "k int, w string")
-    out = salted_join(left, right, key="k", n_salts=4, how="left")
+    out = salted_join(left, right, key="k", n_salts=4)
     rows = sorted((r.k, r.v, r.w) for r in out.collect())
-    assert rows == [(1, "a", "X"), (1, "b", "X"), (2, "c", "Y"), (99, "orphan", None)]
-    again = sorted((r.k, r.v, r.w) for r in salted_join(left, right, "k", 4, "left").collect())
+    assert rows == [(1, "a", "X"), (1, "b", "X"), (2, "c", "Y")]
+    again = sorted((r.k, r.v, r.w) for r in salted_join(left, right, "k", 4).collect())
     assert again == rows
 
 
@@ -188,24 +191,24 @@ def test_connected_components_chain_and_islands(spark):
     }
 
 
-def test_connected_components_long_chain_converges(spark, cc_arm):
+def test_connected_components_long_chain_converges(spark, cc_arm, monkeypatch):
     """A 64-vertex path is the pointer-jumping stress case: plain min
-    propagation needs 63 rounds, jumping needs ~log2(63); max_iter=12 would
-    fail without it. On the loop arm the budget binds: 3 rounds raise. The
-    one-task union-find has no round budget, so it ignores max_iter."""
-    from trafficanalysisbigdata_spark.operators.components import (
-        connected_components,
-    )
+    propagation needs 63 rounds, jumping needs ~log2(63); a 12-round budget
+    would fail without it. On the loop arm the budget binds: 3 rounds raise.
+    The one-task union-find has no round budget, so it ignores
+    ``CC_MAX_ITER``."""
+    from trafficanalysisbigdata_spark.operators import components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc1 long, doc2 long"
     )
-    comp = connected_components(edges, max_iter=12)
-    labels = {r.component for r in comp.collect()}
+    monkeypatch.setattr(components, "CC_MAX_ITER", 12)
+    labels = {r.component for r in components.connected_components(edges).collect()}
     assert labels == {0}
     if cc_arm == "loop":
+        monkeypatch.setattr(components, "CC_MAX_ITER", 3)
         with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
-            connected_components(edges, max_iter=3)
+            components.connected_components(edges)
 
 
 def test_sorted_layout_footers_are_disjoint(spark, sf_dir, tmp_path):
@@ -801,20 +804,19 @@ def test_connected_components_signature_is_pinned():
     rehearsal calls it positionally: the gate adds no parameter."""
     from trafficanalysisbigdata_spark.operators.components import connected_components
 
-    assert _bare_signature(connected_components) == "(pairs, src='doc1', dst='doc2', max_iter=25)"
+    assert _bare_signature(connected_components) == "(pairs)"
 
 
 # operator -> (module under operators/, its pinned signature)
 PINNED_SIGNATURES = {
     "lsh_neardup_pairs": (
         "similarity",
-        "(corpus, threshold, n_tables=16, n_planes=None, dim=64, id_col='vec_id', "
-        "vec_col='embedding', max_bucket=None, n_rows=None, collapse=False)",
+        "(corpus, threshold, n_tables=16, n_planes=None, dim=64, max_bucket=None, "
+        "n_rows=None, collapse=False)",
     ),
     "ngram_jaccard_scores": (
         "dedup",
-        "(docs, max_df_frac=0.05, max_df_abs=256, max_delta_chars=20, "
-        "text_col='text', num_perm=16, max_bucket=256)",
+        "(docs, max_df_frac=0.05, max_df_abs=256)",
     ),
     "two_phase_prefix_sums": (
         "prefixsum",
@@ -835,6 +837,67 @@ def test_gated_operator_signature_is_pinned(name):
     module, expected = PINNED_SIGNATURES[name]
     mod = importlib.import_module(f"trafficanalysisbigdata_spark.operators.{module}")
     assert _bare_signature(getattr(mod, name)) == expected
+
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
+PACKAGE = REPO / "trafficanalysisbigdata_spark"
+
+
+def _shipped_sources() -> dict[str, str]:
+    """Code that ships: the package, ``scripts/``, ``perfbench/`` (less its
+    own tests), ``bench.py`` and ``__spark_entry__.py`` — tests do not count."""
+    paths = [
+        *PACKAGE.rglob("*.py"),
+        *(REPO / "scripts").glob("*.py"),
+        *(p for p in (REPO / "perfbench").rglob("*.py") if not p.name.startswith("test_")),
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+    ]
+    return {str(p.relative_to(REPO)): p.read_text() for p in paths}
+
+
+def _unused_defaults(defining: dict[str, str], shipped: dict[str, str]) -> list[str]:
+    """``path:function(param)`` for each defaulted parameter of a public
+    module-level function in ``defining`` that no call in ``shipped`` passes,
+    by keyword or by position. Calls resolve by name; functions no shipped
+    code calls are out of scope, and so are class methods."""
+    calls: dict[str, list[ast.Call]] = {}
+    for src in shipped.values():
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+                calls.setdefault(name, []).append(node)
+    unused = []
+    for path, src in sorted(defining.items()):
+        for fn in ast.parse(src).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            if fn.name not in calls:
+                continue
+            a = fn.args
+            positional = [x.arg for x in a.posonlyargs + a.args]
+            defaulted = positional[len(positional) - len(a.defaults):] + [
+                x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+            passed = set()
+            for call in calls[fn.name]:
+                passed |= set(positional[: len(call.args)]) | {k.arg for k in call.keywords}
+            unused += [f"{path}:{fn.name}({p})" for p in defaulted if p not in passed]
+    return unused
+
+
+def test_every_default_has_a_shipped_caller():
+    """An engine parameter exists only while shipped code sets it: a value
+    only its default or a test ever takes is a module constant (which a test
+    patches) or inline code, not a switch on the public signature."""
+    defining = {str(p.relative_to(REPO)): p.read_text() for p in PACKAGE.rglob("*.py")}
+    assert _unused_defaults(defining, _shipped_sources()) == []
+
+
+def test_default_guard_flags_its_twin():
+    defining = {"ops.py": "def op(df, k=1, unused=2):\n    return df\n"}
+    shipped = {"caller.py": "op(df, k=3)\n"}
+    assert _unused_defaults(defining, shipped) == ["ops.py:op(unused)"]
 
 
 def test_two_phase_prefix_sums_grouped_matches_naive(spark):

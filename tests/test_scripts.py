@@ -6,7 +6,8 @@ shows when someone runs the script.
 at toy size here (a wrong keyword passed to an engine operator fails now, not
 after an hour at 1M rows), and AST rules keep it collapsed — its only input
 is the command line, its files live under ``BASE``, streams drain through
-``streaming.snapshot.drain`` and all timing goes through ``_time``."""
+``streaming.snapshot.drain`` and all timing goes through ``_time``. The
+drain rule holds for ``tests/*.py`` too."""
 
 from __future__ import annotations
 
@@ -153,6 +154,19 @@ COLLAPSE_TWINS = {
 @pytest.mark.parametrize("rule", sorted(COLLAPSE_TWINS))
 def test_rehearsal_stays_collapsed(rule):
     assert not _collapse_breaks(ast.parse(REHEARSAL_PATH.read_text()))[rule]
+
+
+def test_tests_drain_streams_through_snapshot_drain():
+    """Tests wait on a stream only through ``streaming.snapshot.drain``: a
+    bare ``awaitTermination()`` can hang the suite, and an unchecked
+    ``awaitTermination(n)`` reads a half-drained sink and leaves the stream
+    running."""
+    found = {
+        path.name: lines
+        for path in sorted(pathlib.Path(__file__).parent.glob("*.py"))
+        if (lines := _collapse_breaks(ast.parse(path.read_text()))["await"])
+    }
+    assert not found, found
 
 
 @pytest.mark.parametrize("rule", sorted(COLLAPSE_TWINS))

@@ -528,14 +528,15 @@ def test_centroid_dedup_auto_crossover(spark):
 
 
 def test_lsh_n_rows_skips_count_job(spark, monkeypatch):
-    """When the caller supplies n_rows, the adaptive-P derivation must not
-    trigger a corpus count() — at 100 TB that scalar is a full scan before
-    any real work (round-8 verdict item). count() is poisoned for the
-    duration; plan construction must still succeed and derive the same P
-    the count-based path would. NOTE: the poison must target the CONCRETE
-    class (type(df), pyspark.sql.classic in Spark 4) — patching the
-    abstract pyspark.sql.DataFrame never intercepts instance calls, which
-    left this test vacuous through round 11."""
+    """When the caller supplies n_rows, the near-dup adaptive-P derivation
+    must not trigger a corpus count() — at 100 TB that scalar is a full scan
+    before any real work (round-8 verdict item) — and pinned-layout top-k
+    callers never pay one. count() is poisoned for the duration; plan
+    construction must still succeed and derive the same P the count-based
+    path would. NOTE: the poison must target the CONCRETE class (type(df),
+    pyspark.sql.classic in Spark 4) — patching the abstract
+    pyspark.sql.DataFrame never intercepts instance calls, which left this
+    test vacuous through round 11."""
     from trafficanalysisbigdata_spark.operators.similarity import (
         adaptive_n_planes,
         lsh_neardup_pairs,
@@ -551,16 +552,14 @@ def test_lsh_n_rows_skips_count_job(spark, monkeypatch):
         raise AssertionError("count() job triggered despite n_rows")
 
     monkeypatch.setattr(type(df), "count", _boom)
-    t = lsh_topk(df, df.limit(2), k=3, n_tables=4, dim=4, n_rows=50_000)
     p = lsh_neardup_pairs(df, 0.9, n_tables=4, dim=4, n_rows=50_000)
     # the fully-auto dial pair (P and L both None) must also build
-    # count-free off n_rows, and pinned-layout callers never pay a count
-    t2 = lsh_topk(df, df.limit(2), k=3, n_tables=None, dim=4, n_rows=50_000)
-    t3 = lsh_topk(df, df.limit(2), k=3, n_tables=8, n_planes=4, dim=4)
+    # count-free off n_rows
+    p2 = lsh_neardup_pairs(df, 0.9, n_tables=None, dim=4, n_rows=50_000)
+    t = lsh_topk(df, df.limit(2), k=3, n_tables=8, n_planes=4, dim=4)
     # plans build without an action; the dial matches the explicit rule
     assert t.columns == ["query_id", "neighbor_id", "cos"]
-    assert t2.columns == t.columns and t3.columns == t.columns
-    assert p.columns == ["id1", "id2", "cos"]
+    assert p.columns == ["id1", "id2", "cos"] and p2.columns == p.columns
     assert adaptive_n_planes(50_000) == 8
 
 
@@ -605,14 +604,16 @@ def test_sim4_scoring_joins_broadcast_when_size_known(spark):
     assert nodes(plan_of(lsh_neardup_pairs(emb, 0.8, n_tables=4, dim=16, n_rows=50_000_000)))
 
 
-def test_hash_ivf_two_level_build(spark, tmp_path):
-    """build_hash_ivf_index(assignment='two_level') must produce a complete
-    index (one assignment row per vector — the level-2 join can never drop
-    one) whose probe results stay close to the flat build's: cell
-    membership may differ only near super-cell boundaries, so top-k overlap
-    against the flat index stays high on a clustered corpus."""
+def test_hash_ivf_two_level_build(spark, tmp_path, monkeypatch):
+    """build_hash_ivf_index past its two-level crossover (``TWO_LEVEL_MIN_K``
+    moved under k=16) must produce a complete index (one assignment row per
+    vector — the level-2 join can never drop one) whose probe results stay
+    close to the flat build's: cell membership may differ only near
+    super-cell boundaries, so top-k overlap against the flat index stays
+    high on a clustered corpus."""
     import numpy as np
 
+    from trafficanalysisbigdata_spark.operators import similarity as sim
     from trafficanalysisbigdata_spark.operators.similarity import (
         build_hash_ivf_index,
         hash_ivf_topk_indexed,
@@ -627,8 +628,14 @@ def test_hash_ivf_two_level_build(spark, tmp_path):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     flat_dir, two_dir = str(tmp_path / "flat"), str(tmp_path / "two")
-    build_hash_ivf_index(df, flat_dir, n_clusters=16, assignment="flat")
-    build_hash_ivf_index(df, two_dir, n_clusters=16, assignment="two_level")
+    two_level = []
+    orig = sim.two_level_assign
+    monkeypatch.setattr(sim, "two_level_assign", lambda *a: two_level.append(a) or orig(*a))
+    build_hash_ivf_index(df, flat_dir, n_clusters=16)  # k=16 < 200: flat
+    assert not two_level
+    monkeypatch.setattr(sim, "TWO_LEVEL_MIN_K", 16)
+    build_hash_ivf_index(df, two_dir, n_clusters=16)
+    assert len(two_level) == 1
 
     a2 = spark.read.parquet(f"{two_dir}/assignments")
     assert a2.count() == 300
@@ -644,11 +651,6 @@ def test_hash_ivf_two_level_build(spark, tmp_path):
     ref, two = topk(flat_dir), topk(two_dir)
     overlaps = [len(ref[q] & two.get(q, set())) / len(ref[q]) for q in ref]
     assert sum(overlaps) / len(overlaps) >= 0.8
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="assignment"):
-        build_hash_ivf_index(df, str(tmp_path / "x"), assignment="bogus")
 
 
 @pytest.fixture

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from tests.plan_tree import nodes, plan_of
 from trafficanalysisbigdata_spark.io import load_table
 from trafficanalysisbigdata_spark.session import prep
+from trafficanalysisbigdata_spark.streaming import snapshot
 from trafficanalysisbigdata_spark.streaming.snapshot import (
     DRAIN_TIMEOUT_S,
     SnapshotRefreshJob,
@@ -134,7 +135,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
 
         stream = spark.readStream.schema(EVENTS_DDL).parquet(src)
         q = (
-            watermarked_tumbling_hourly(stream, late="1 hour")
+            watermarked_tumbling_hourly(stream)
             .select(
                 F.col("window.start").cast("string").alias("window_start"),
                 "total",
@@ -148,7 +149,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
             .option("checkpointLocation", ckpt)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
         return sorted(got)
 
     # run 1: hours 2 and 3, plus an outpost at 05:30 that leaves the
@@ -208,9 +209,10 @@ def test_stateful_running_totals_matches_batch(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
 
     got_rows = spark.table("running_totals").collect()
+    spark.catalog.dropTempView("running_totals")
     assert len(got_rows) > len({r.user_id for r in got_rows}), (
         "expected multiple emissions per key across micro-batches"
     )
@@ -270,7 +272,7 @@ def test_streaming_dedup_matches_batch(spark, sf_dir, tmp_path):
             .option("checkpointLocation", ckpt)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
 
     run_once()
     batch_keys = {
@@ -329,7 +331,7 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ssj_ckpt"))
         .start()
     )
-    q.awaitTermination()
+    drain(q)
 
     want = {
         (r.p_id, r.v_id)
@@ -340,8 +342,8 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
     assert want  # the fixture must actually produce attributions
 
 
-def test_dashboard_map_layer_is_bounded(spark):
-    """ST2 scale guard: the map query collects at most max_map_points rows
+def test_dashboard_map_layer_is_bounded(spark, monkeypatch):
+    """ST2 scale guard: the map query collects at most MAX_MAP_POINTS rows
     per tick — deterministically (same hash-ordered sample every run) — via
     TakeOrderedAndProject, not a global sort."""
     big = spark.range(5000).select(
@@ -351,9 +353,10 @@ def test_dashboard_map_layer_is_bounded(spark):
         F.lit(1.0).alias("value"),
         F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
     )
-    q6 = dashboard_queries(big, max_map_points=100)["q6_points"]
+    monkeypatch.setattr(snapshot, "MAX_MAP_POINTS", 100)
+    q6 = dashboard_queries(big)["q6_points"]
     rows1 = q6.collect()
-    rows2 = dashboard_queries(big, max_map_points=100)["q6_points"].collect()
+    rows2 = dashboard_queries(big)["q6_points"].collect()
     assert len(rows1) == 100
     assert [r.event_id for r in rows1] == [r.event_id for r in rows2]
     assert nodes(plan_of(q6), "TakeOrderedAndProject")
@@ -415,7 +418,7 @@ def test_stream_static_enrich_matches_batch(spark, sf_dir, tmp_path):
         .option("checkpointLocation", str(tmp_path / "enrich_ckpt"))
         .start()
     )
-    q.awaitTermination()
+    drain(q)
 
     want = {
         (r.event_id, r.c_mktsegment, r.c_acctbal)
@@ -484,7 +487,7 @@ def test_stream_stream_left_outer_matches_batch(spark, sf_dir, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ssjo_ckpt"))
         .start()
     )
-    q.awaitTermination()
+    drain(q)
 
     want = {
         (r.p_id, r.v_id)

@@ -65,15 +65,15 @@ def md5_fingerprint(text: Column) -> Column:
     return F.md5(text)
 
 
-def rolling_hash(text: Column, mod: int = ROLLING_MOD) -> Column:
+def rolling_hash(text: Column) -> Column:
     """Polynomial rolling hash over token lengths: fold(acc*31 + len(tok)) mod
-    M — an order-sensitive fingerprint (anagram documents differ) computed as
-    a single Catalyst ``aggregate`` lambda, no UDF."""
+    ``ROLLING_MOD`` — an order-sensitive fingerprint (anagram documents
+    differ) computed as a single Catalyst ``aggregate`` lambda, no UDF."""
     lens = F.transform(tokens(text), lambda t: F.length(t).cast("bigint"))
     return F.aggregate(
         lens,
         F.lit(0).cast("bigint"),
-        lambda acc, x: (acc * 31 + x) % F.lit(mod),
+        lambda acc, x: (acc * 31 + x) % F.lit(ROLLING_MOD),
     )
 
 

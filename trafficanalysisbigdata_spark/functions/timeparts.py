@@ -46,10 +46,10 @@ def week_of_year(c: Column) -> Column:
     return F.weekofyear(c)
 
 
-def with_time_parts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Derive the reference's full time-feature block (F1–F6) from an event
-    timestamp (ref TrafficAnalysis.py:80-84, Dash.py:59-60)."""
-    ts = F.col(ts_col)
+def with_time_parts(df: DataFrame) -> DataFrame:
+    """Derive the reference's full time-feature block (F1–F6) from the event
+    timestamp ``ts`` (ref TrafficAnalysis.py:80-84, Dash.py:59-60)."""
+    ts = F.col("ts")
     return df.withColumns(
         {
             "date_str": F.to_date(ts).cast("string"),

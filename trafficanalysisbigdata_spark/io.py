@@ -228,14 +228,18 @@ def write_sorted(df: DataFrame, path: str, sort_col: str, n_files: int) -> None:
     )
 
 
-def zorder_col(u: F.Column, v: F.Column, bits: int = 16) -> F.Column:
-    """Interleave the low ``bits`` bits of two non-negative integer columns
-    into a Morton (z-order) key: z = ... v1 u1 v0 u0.
+# rank width of each dimension in ``write_zorder``'s Morton key
+ZORDER_BITS = 16
+
+
+def zorder_col(u: F.Column, v: F.Column) -> F.Column:
+    """Interleave the low ``ZORDER_BITS`` bits of two non-negative integer
+    columns into a Morton (z-order) key: z = ... v1 u1 v0 u0.
 
     Pure Catalyst bit math (shift/and/or), so the key computation is
     whole-stage-codegen and never leaves the JVM."""
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         z = z.bitwiseOR(
             F.shiftleft(F.shiftright(u, i).bitwiseAND(F.lit(1)), 2 * i)
         ).bitwiseOR(
@@ -244,12 +248,10 @@ def zorder_col(u: F.Column, v: F.Column, bits: int = 16) -> F.Column:
     return z
 
 
-def write_zorder(
-    df: DataFrame, path: str, col_a: str, col_b: str, n_files: int, bits: int = 16
-) -> None:
+def write_zorder(df: DataFrame, path: str, col_a: str, col_b: str, n_files: int) -> None:
     """Two-column z-order clustered parquet layout — the multi-dimensional
     generalization of ``write_sorted``: each column is min-max normalized to
-    a ``bits``-bit rank (bounds from one scalar aggregate, broadcast back),
+    a ``ZORDER_BITS``-bit rank (bounds from one scalar aggregate, broadcast back),
     the ranks interleave into a Morton key, and rows are range-partitioned +
     sorted on that key. Because the z-curve preserves locality in BOTH
     dimensions, every file's parquet footer carries a tight min/max box on
@@ -259,7 +261,7 @@ def write_zorder(
     footers on one dimension and full-range footers on every other; z-order
     is what table formats run for multi-dimension clustering.
     """
-    top = float((1 << bits) - 1)
+    top = float((1 << ZORDER_BITS) - 1)
     bounds = df.agg(
         F.min(col_a).cast("double").alias("_a_lo"),
         F.max(col_a).cast("double").alias("_a_hi"),

@@ -27,10 +27,10 @@ def asof_join(
     right_ts: str,
     by: list[str] | None = None,
     value_cols: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Attach, to each ``left`` row, the ``value_cols`` of the most recent
-    ``right`` row with ``right.right_ts <= left.left_ts``.
+    ``right`` row with ``right.right_ts <= left.left_ts``, each as
+    ``<col>_asof``.
 
     Tie contract: a right row at exactly the left timestamp matches; among
     MULTIPLE right rows sharing the same (by, ts), the one with the greatest
@@ -52,12 +52,12 @@ def asof_join(
         *by,
         F.col(right_ts).alias("__ts"),
         F.lit(0).alias("__side"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
+        *[F.col(c).alias(f"{c}_asof") for c in value_cols],
     ).withColumn(
         "__rn",
         F.row_number().over(
             Window.partitionBy(*by).orderBy(
-                "__ts", *[f"{c}{suffix}" for c in value_cols]
+                "__ts", *[f"{c}_asof" for c in value_cols]
             )
         ).cast("bigint"),
     )
@@ -82,6 +82,6 @@ def asof_join(
     filled = unioned
     for c in value_cols:
         filled = filled.withColumn(
-            f"{c}{suffix}", F.last(f"{c}{suffix}", ignorenulls=True).over(w)
+            f"{c}_asof", F.last(f"{c}_asof", ignorenulls=True).over(w)
         )
     return filled.filter(F.col("__side") == 1).drop("__ts", "__side", "__rn")

@@ -43,6 +43,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+# The loop arm's round budget: past it the loop raises instead of returning
+# unconverged labels. Read at call time.
+CC_MAX_ITER = 25
+
 
 def _free_checkpoint(df: DataFrame) -> None:
     """Free the cached blocks behind ``df``'s local checkpoint. Without this,
@@ -109,10 +113,10 @@ def _union_find_components(edges: DataFrame) -> DataFrame:
     )
 
 
-def _propagate_labels(edges: DataFrame, max_iter: int) -> DataFrame:
+def _propagate_labels(edges: DataFrame) -> DataFrame:
     """The loop arm: min-label propagation with pointer jumping over the
-    checkpointed edge list, ≤ ``max_iter`` rounds (raises if not converged —
-    silent non-convergence would return wrong clusters).
+    checkpointed edge list, ≤ ``CC_MAX_ITER`` rounds (raises if not
+    converged — silent non-convergence would return wrong clusters).
 
     Round cost (r15 optimization pass): TWO joins per round instead of
     three. The neighbor-label rows and each vertex's OWN checkpointed label
@@ -141,7 +145,7 @@ def _propagate_labels(edges: DataFrame, max_iter: int) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     prev_sum = labels.agg(F.sum("l").alias("s")).first()["s"]
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr = (
             edges.join(labels.select(F.col("v").alias("w"), F.col("l").alias("lw")), "w")
             .select("v", "lw")
@@ -168,15 +172,13 @@ def _propagate_labels(edges: DataFrame, max_iter: int) -> DataFrame:
         if new_sum == prev_sum:
             return labels.select("v", F.col("l").alias("component"))
         prev_sum = new_sum
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    raise RuntimeError(f"connected_components did not converge in {CC_MAX_ITER} rounds")
 
 
-def connected_components(
-    pairs: DataFrame, src: str = "doc1", dst: str = "doc2", max_iter: int = 25
-) -> DataFrame:
-    """(v, component) for every vertex in ``pairs``; component = min vertex
-    id reachable from v. The result is a plan over checkpointed labels,
-    never driver-side data.
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(v, component) for every vertex of the (doc1, doc2) edges in
+    ``pairs``; component = min vertex id reachable from v. The result is a
+    plan over checkpointed labels, never driver-side data.
 
     The pairs are symmetrized into an edge list and eagerly checkpointed;
     its stored bytes (``_stored_bytes``, no job) then pick the arm. At or
@@ -185,9 +187,9 @@ def connected_components(
     numpy union-find (``_union_find_components``); on the sf0.01 dd6 edge
     list that is ~2 jobs after the edge checkpoint instead of the loop's
     ~25. Above it, or with the threshold at -1, the distributed loop runs
-    (``_propagate_labels``), converging in ≤ ``max_iter`` rounds or raising;
-    ``max_iter`` bounds only the loop, since union-find has no round budget
-    to exceed.
+    (``_propagate_labels``), converging in ≤ ``CC_MAX_ITER`` rounds or
+    raising; the budget bounds only the loop, since union-find has no round
+    budget to exceed.
 
     The edge list needs no ``distinct()``: the loop's every consumer of
     ``edges`` is a MIN aggregate and union-find hooks are idempotent, so
@@ -197,8 +199,8 @@ def connected_components(
     duplicate-free anyway) — A/B'd ~10% off the CC stage at sf0.1, labels
     identical."""
     edges = (
-        pairs.select(F.col(src).alias("v"), F.col(dst).alias("w"))
-        .unionByName(pairs.select(F.col(dst).alias("v"), F.col(src).alias("w")))
+        pairs.select(F.col("doc1").alias("v"), F.col("doc2").alias("w"))
+        .unionByName(pairs.select(F.col("doc2").alias("v"), F.col("doc1").alias("w")))
         .localCheckpoint(eager=True)
     )
     bound = edges.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
@@ -207,7 +209,7 @@ def connected_components(
         # sends every edge list to the loop, as Spark's canBroadcastBySize
         if _stored_bytes(edges) <= bound:
             return _union_find_components(edges)
-        return _propagate_labels(edges, max_iter)
+        return _propagate_labels(edges)
     finally:
         # the edge list backs neither arm's returned DataFrame: both return
         # labels whose lineage stops at their own materialized checkpoint

@@ -26,9 +26,9 @@ from pyspark.sql import functions as F
 from ..functions.text import token_bigrams, tokens
 
 
-def exact_dedup_summary(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup_summary(docs: DataFrame) -> DataFrame:
     """Exact dedup via groupBy(text): per-group keeper = min(doc_id)."""
-    groups = docs.groupBy(text_col).agg(
+    groups = docs.groupBy("text").agg(
         F.min("doc_id").alias("keeper"), F.count(F.lit(1)).alias("n_copies")
     )
     return groups.agg(
@@ -39,35 +39,32 @@ def exact_dedup_summary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def doc_token_sets(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_token_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, token) distinct pairs — the set representation used by both
     MinHash and Jaccard verification."""
     return docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("token")
+        "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("token")
     )
 
 
-def _set_array(elems: Column, hashed: bool) -> Column:
-    """Distinct element array, optionally as xxhash64 ints: integer-array
-    intersection is ~2× faster than string-array intersection over millions
-    of candidate pairs, and a 64-bit collision inside one pair's ~100-element
-    union (P ≈ 1e-16) is the only way results could differ from the
-    string-set oracle."""
-    arr = F.array_distinct(elems)
-    return F.transform(arr, lambda t: F.xxhash64(t)) if hashed else arr
+def _set_array(elems: Column) -> Column:
+    """Distinct element array as xxhash64 ints: integer-array intersection is
+    ~2× faster than string-array intersection over millions of candidate
+    pairs, and a 64-bit collision inside one pair's ~100-element union
+    (P ≈ 1e-16) is the only way results could differ from the string-set
+    oracle."""
+    return F.transform(F.array_distinct(elems), lambda t: F.xxhash64(t))
 
 
-def doc_token_arrays(docs: DataFrame, text_col: str = "text", hashed: bool = True) -> DataFrame:
-    """(doc_id, toks) with toks = distinct tokens as an array — the row-local
-    set form consumed by ``jaccard_scores``."""
-    return docs.select("doc_id", _set_array(tokens(F.col(text_col)), hashed).alias("toks"))
+def doc_token_arrays(docs: DataFrame) -> DataFrame:
+    """(doc_id, toks) with toks = distinct hashed tokens as an array — the
+    row-local set form consumed by ``jaccard_scores``."""
+    return docs.select("doc_id", _set_array(tokens(F.col("text"))).alias("toks"))
 
 
-def doc_shingle_arrays(docs: DataFrame, text_col: str = "text", hashed: bool = True) -> DataFrame:
-    """(doc_id, toks) with toks = distinct token bigrams as an array."""
-    return docs.select(
-        "doc_id", _set_array(token_bigrams(F.col(text_col)), hashed).alias("toks")
-    )
+def doc_shingle_arrays(docs: DataFrame) -> DataFrame:
+    """(doc_id, toks) with toks = distinct hashed token bigrams as an array."""
+    return docs.select("doc_id", _set_array(token_bigrams(F.col("text"))).alias("toks"))
 
 
 def minhash_signatures(tok: DataFrame, num_perm: int = 8) -> DataFrame:
@@ -237,15 +234,10 @@ def df_capped(
     return postings.join(keep, "token")
 
 
-def minhash_lsh_scores(
-    docs: DataFrame,
-    num_perm: int = 8,
-    rows_per_band: int = 2,
-    max_bucket: int | None = None,
-    text_col: str = "text",
-) -> DataFrame:
+def minhash_lsh_scores(docs: DataFrame, max_bucket: int | None = None) -> DataFrame:
     """The full MinHash-LSH near-dup pipeline as ONE reusable operator:
-    token sets → signatures → (capped) banded candidates → exact Jaccard.
+    token sets → 8-permutation signatures → (capped) 2-row bands → exact
+    Jaccard.
     Returns (doc1, doc2, jaccard) for every candidate pair. The dd2 query,
     the dd6 component edges, and the scale rehearsal all consume THIS
     function, so a pipeline change propagates everywhere the numbers are
@@ -271,12 +263,9 @@ def minhash_lsh_scores(
       row-local band filter. The explode+partial-agg form keeps every md5
       inside whole-stage codegen and its exchange carries only per-doc
       partials."""
-    tok = doc_token_sets(docs, text_col)
-    sig = minhash_signatures(tok, num_perm=num_perm)
-    pairs = lsh_candidate_pairs(
-        sig, num_perm=num_perm, rows_per_band=rows_per_band, max_bucket=max_bucket
-    )
-    return jaccard_scores(pairs, doc_token_arrays(docs, text_col))
+    sig = minhash_signatures(doc_token_sets(docs), num_perm=8)
+    pairs = lsh_candidate_pairs(sig, num_perm=8, rows_per_band=2, max_bucket=max_bucket)
+    return jaccard_scores(pairs, doc_token_arrays(docs))
 
 
 NGRAM_JACCARD_CROSSOVER_DOCS = 100_000
@@ -286,13 +275,7 @@ NGRAM_VERIFY_BUDGET_MB = 1024
 
 
 def ngram_jaccard_scores(
-    docs: DataFrame,
-    max_df_frac: float = 0.05,
-    max_df_abs: int = 256,
-    max_delta_chars: int = 20,
-    text_col: str = "text",
-    num_perm: int = 16,
-    max_bucket: int = 256,
+    docs: DataFrame, max_df_frac: float = 0.05, max_df_abs: int = 256
 ) -> DataFrame:
     """The full n-gram-Jaccard near-dup pipeline as ONE reusable operator.
     Returns (doc1, doc2, jaccard). Shared by the dd4 query and the scale
@@ -310,10 +293,10 @@ def ngram_jaccard_scores(
     the df cap):
 
     * small (≤ ~10⁵ docs): bigram postings → DF cap (min(frac·n, abs)) →
-      shared-shingle self-join blocked by |Δn_chars| — exhaustive candidates
-      at small scale, where the Σdf² term is still cheap.
-    * big: MinHash banding OVER THE SAME BIGRAM SHINGLE SETS (``num_perm``
-      single-row bands, per-bucket cap ``max_bucket``) → |Δn_chars| block.
+      shared-shingle self-join blocked by |Δn_chars| ≤ 20 — exhaustive
+      candidates at small scale, where the Σdf² term is still cheap.
+    * big: MinHash banding OVER THE SAME BIGRAM SHINGLE SETS (16
+      single-row bands, per-bucket cap 256) → the same |Δn_chars| block.
       Candidate volume is corpus-linear per band under the bucket cap; a
       qualifying pair at Jaccard j is banded with prob 1−(1−j)^L — 0.99 at
       the 0.25 bar with L=16 — and the selection is md5-deterministic, so
@@ -368,10 +351,8 @@ def ngram_jaccard_scores(
     # measured win in OPTIMIZATION_r14.md)
     docs = fan_out_small_scan(docs, "doc_id")
     if n_docs > NGRAM_JACCARD_CROSSOVER_DOCS:
-        sig = minhash_signatures(doc_shingle_sets(docs, text_col), num_perm=num_perm)
-        cand = lsh_candidate_pairs(
-            sig, num_perm=num_perm, rows_per_band=1, max_bucket=max_bucket
-        )
+        sig = minhash_signatures(doc_shingle_sets(docs), num_perm=16)
+        cand = lsh_candidate_pairs(sig, num_perm=16, rows_per_band=1, max_bucket=256)
         nc = docs.select("doc_id", "n_chars")
         pairs = (
             cand.join(
@@ -380,35 +361,33 @@ def ngram_jaccard_scores(
             .join(
                 nc.withColumnsRenamed({"doc_id": "doc2", "n_chars": "nc2"}), "doc2"
             )
-            .filter(F.abs(F.col("nc1") - F.col("nc2")) <= max_delta_chars)
+            .filter(F.abs(F.col("nc1") - F.col("nc2")) <= 20)
             .select("doc1", "doc2")
         )
         total_shingles = docs.agg(
-            F.sum(F.size(F.array_distinct(token_bigrams(F.col(text_col)))))
+            F.sum(F.size(F.array_distinct(token_bigrams(F.col("text")))))
         ).collect()[0][0]
         fits = (
             (total_shingles or 0) * 8 + n_docs * 48
             <= NGRAM_VERIFY_BUDGET_MB * 1024 * 1024
         )
-        return jaccard_scores(
-            pairs, doc_shingle_arrays(docs, text_col), broadcast_sets=fits
-        )
+        return jaccard_scores(pairs, doc_shingle_arrays(docs), broadcast_sets=fits)
     docs_total = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    sh = df_capped(
-        doc_shingle_sets(docs, text_col), docs_total, max_df_frac, max_df_abs
-    ).join(docs.select("doc_id", "n_chars"), "doc_id")
+    sh = df_capped(doc_shingle_sets(docs), docs_total, max_df_frac, max_df_abs).join(
+        docs.select("doc_id", "n_chars"), "doc_id"
+    )
     a = sh.select(F.col("doc_id").alias("doc1"), F.col("n_chars").alias("nc1"), "token")
     b = sh.select(F.col("doc_id").alias("doc2"), F.col("n_chars").alias("nc2"), "token")
     pairs = (
         a.join(b, ["token"])
         .filter(
             (F.col("doc1") < F.col("doc2"))
-            & (F.abs(F.col("nc1") - F.col("nc2")) <= max_delta_chars)
+            & (F.abs(F.col("nc1") - F.col("nc2")) <= 20)
         )
         .select("doc1", "doc2")
         .distinct()
     )
-    return jaccard_scores(pairs, doc_shingle_arrays(docs, text_col))
+    return jaccard_scores(pairs, doc_shingle_arrays(docs))
 
 
 def simhash16(tok: DataFrame) -> DataFrame:
@@ -449,17 +428,15 @@ def simhash16(tok: DataFrame) -> DataFrame:
     return sig.select("doc_id", fp.cast("int").alias("simhash"))
 
 
-def doc_shingle_sets(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_shingle_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) distinct token-bigram pairs for n-gram Jaccard."""
     return docs.select(
         "doc_id",
-        F.explode(F.array_distinct(token_bigrams(F.col(text_col)))).alias("token"),
+        F.explode(F.array_distinct(token_bigrams(F.col("text")))).alias("token"),
     )
 
 
-def dup_span_scrub(
-    docs: DataFrame, n: int = 5, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def dup_span_scrub(docs: DataFrame, n: int = 5) -> DataFrame:
     """Exact duplicated-span REMOVAL (dd10) — the transform half of the Lee
     et al. 2021 exact-substring-dedup signal that ``duplicate_span_stats``
     (dd7) measures: every token position covered by an n-token shingle that
@@ -496,14 +473,14 @@ def dup_span_scrub(
 
     # token + 5-gram explodes dominate — fan a one-split scan out to the
     # session's cores (no-op on real multi-split layouts)
-    docs = fan_out_small_scan(docs, id_col)
-    toks = tokens(F.col(text_col))
-    tok = docs.select(id_col, F.posexplode(toks).alias("pos", "tok"))
+    docs = fan_out_small_scan(docs, "doc_id")
+    toks = tokens(F.col("text"))
+    tok = docs.select("doc_id", F.posexplode(toks).alias("pos", "tok"))
     grams = docs.select(
-        id_col, F.posexplode(token_ngrams(F.col(text_col), n)).alias("start", "sh")
-    ).select(id_col, "start", F.xxhash64("sh").alias("k"))
+        "doc_id", F.posexplode(token_ngrams(F.col("text"), n)).alias("start", "sh")
+    ).select("doc_id", "start", F.xxhash64("sh").alias("k"))
     dup = (
-        grams.select("k", id_col)
+        grams.select("k", "doc_id")
         .distinct()
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -513,15 +490,15 @@ def dup_span_scrub(
     covered = (
         grams.join(dup, "k")
         .select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.sequence(F.col("start"), F.col("start") + F.lit(n - 1))
             ).alias("pos"),
         )
         .distinct()
     )
-    kept = tok.join(covered, [id_col, "pos"], "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
+    kept = tok.join(covered, ["doc_id", "pos"], "left_anti")
+    rebuilt = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.array_join(
             F.transform(
@@ -531,18 +508,16 @@ def dup_span_scrub(
             " ",
         ).alias("clean_text"),
     )
-    base = docs.select(id_col, token_count(F.col(text_col)).cast("bigint").alias("n_tokens"))
-    return base.join(rebuilt, id_col, "left").select(
-        id_col,
+    base = docs.select("doc_id", token_count(F.col("text")).cast("bigint").alias("n_tokens"))
+    return base.join(rebuilt, "doc_id", "left").select(
+        "doc_id",
         "n_tokens",
         F.coalesce(F.col("n_kept"), F.lit(0)).cast("bigint").alias("n_kept"),
         F.md5(F.coalesce(F.col("clean_text"), F.lit(""))).alias("clean_md5"),
     )
 
 
-def duplicate_span_stats(
-    docs: DataFrame, n: int = 5, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def duplicate_span_stats(docs: DataFrame, n: int = 5) -> DataFrame:
     """Per-document duplicated-span statistics (dd7): a span = an n-token
     shingle occurring in >= 2 DISTINCT documents; returns (doc_id,
     n_shingles, n_dup, dup_frac) counting OCCURRENCES, i.e. the
@@ -566,16 +541,16 @@ def duplicate_span_stats(
 
     # the n-gram explode dominates — fan a one-split scan out to the
     # session's cores (no-op on real multi-split layouts)
-    docs = fan_out_small_scan(docs, id_col)
+    docs = fan_out_small_scan(docs, "doc_id")
     post = (
-        docs.select(id_col, F.explode(token_ngrams(F.col(text_col), n)).alias("sh"))
-        .select(id_col, F.xxhash64("sh").alias("k"))
+        docs.select("doc_id", F.explode(token_ngrams(F.col("text"), n)).alias("sh"))
+        .select("doc_id", F.xxhash64("sh").alias("k"))
     )
-    occ = post.groupBy("k", id_col).agg(F.count(F.lit(1)).alias("occ"))
+    occ = post.groupBy("k", "doc_id").agg(F.count(F.lit(1)).alias("occ"))
     dfreq = occ.groupBy("k").agg(F.count(F.lit(1)).alias("n_docs"))
     return (
         occ.join(dfreq, "k")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("occ").cast("bigint").alias("n_shingles"),
             F.sum(F.when(F.col("n_docs") >= 2, F.col("occ")).otherwise(0))
@@ -583,7 +558,7 @@ def duplicate_span_stats(
             .alias("n_dup"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
             "n_dup",
             F.round(F.col("n_dup") * 1.0 / F.col("n_shingles"), 6).alias("dup_frac"),
@@ -591,12 +566,7 @@ def duplicate_span_stats(
     )
 
 
-def cdc_chunks(
-    docs: DataFrame,
-    modulus: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_chunks(docs: DataFrame, modulus: int = 16) -> DataFrame:
     """Token-level content-defined chunking (the LBFS/FastCDC cut-point
     idea at token granularity): a token whose content hash satisfies
     ``h % modulus == 0`` ENDS a chunk, so chunk boundaries depend only on
@@ -608,7 +578,7 @@ def cdc_chunks(
     stores add min/max cut guards on top — a business rule on the same
     boundary stream, deliberately not modeled here.
 
-    Returns one row per (doc, chunk): ``(id_col, chunk, n_tokens, fp)``
+    Returns one row per (doc, chunk): ``(doc_id, chunk, n_tokens, fp)``
     where ``fp`` is md5 of the chunk's space-joined tokens — the chunk
     store's content address. Hashes are md5 throughout so the DuckDB
     oracle replays the byte-identical algorithm (this file's rule).
@@ -620,13 +590,13 @@ def cdc_chunks(
     consumers aggregate the 16-byte fps (see ``cdc_chunk_dedup_stats``).
     """
     tok = docs.select(
-        id_col, F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "token")
+        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "token")
     )
     h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
     from pyspark.sql.window import Window
 
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -638,7 +608,7 @@ def cdc_chunks(
         F.array_sort(F.collect_list(F.struct("pos", "token"))),
         lambda s: s["token"],
     )
-    return chunked.groupBy(id_col, "chunk").agg(
+    return chunked.groupBy("doc_id", "chunk").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
         F.md5(F.array_join(ordered, " ")).alias("fp"),
     )
@@ -676,16 +646,11 @@ def chunk_dedup_ledger(chunks: DataFrame) -> DataFrame:
     )
 
 
-def cdc_chunk_dedup_stats(
-    docs: DataFrame,
-    modulus: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_chunk_dedup_stats(docs: DataFrame, modulus: int = 16) -> DataFrame:
     """Corpus-wide CDC chunk-dedup yield, bucketed by chunk length (see
     ``chunk_dedup_ledger``). The length histogram doubles as a receipt of
     the cut-point statistics (geometric decay away from short lengths)."""
-    return chunk_dedup_ledger(cdc_chunks(docs, modulus, id_col, text_col))
+    return chunk_dedup_ledger(cdc_chunks(docs, modulus))
 
 
 def cdc_chunks_guarded(
@@ -693,8 +658,6 @@ def cdc_chunks_guarded(
     modulus: int = 16,
     min_len: int = 8,
     max_len: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """``cdc_chunks`` with the min/max cut guards every production chunk
     store adds (FastCDC's actual shape): a content boundary is honored
@@ -731,13 +694,13 @@ def cdc_chunks_guarded(
     from collections.abc import Iterator
 
     tok = docs.select(
-        id_col, F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "token")
+        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "token")
     )
     h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
     flagged = (
         tok.withColumn("b", (h % modulus == 0).cast("int"))
-        .repartition(F.col(id_col))
-        .sortWithinPartitions(id_col, "pos")
+        .repartition(F.col("doc_id"))
+        .sortWithinPartitions("doc_id", "pos")
     )
 
     def scan_doc(doc: int, toks, flags, out: list) -> None:
@@ -768,12 +731,12 @@ def cdc_chunks_guarded(
             k += 1
             c = nxt
 
-    cols = [id_col, "chunk", "n_tokens", "fp"]
+    cols = ["doc_id", "chunk", "n_tokens", "fp"]
 
     def scan_frame(pdf: pd.DataFrame, out: list) -> None:
         # split into per-doc runs with one vectorized boundary scan instead
         # of a pandas groupby (rows arrive sorted by (doc, pos))
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["doc_id"].to_numpy()
         toks = pdf["token"].to_numpy()
         flags = pdf["b"].to_numpy()
         cuts = np.flatnonzero(ids[1:] != ids[:-1]) + 1
@@ -791,8 +754,8 @@ def cdc_chunks_guarded(
             if len(pdf) == 0:
                 continue
             # the last doc may continue in the next Arrow batch: hold it
-            last = pdf[id_col].iloc[-1]
-            mask = pdf[id_col] == last
+            last = pdf["doc_id"].iloc[-1]
+            mask = pdf["doc_id"] == last
             carry = pdf[mask]
             done = pdf[~mask]
             if len(done):
@@ -805,5 +768,5 @@ def cdc_chunks_guarded(
             yield pd.DataFrame(out, columns=cols)
 
     return flagged.mapInPandas(
-        scan_batches, f"{id_col} long, chunk long, n_tokens long, fp string"
+        scan_batches, "doc_id long, chunk long, n_tokens long, fp string"
     )

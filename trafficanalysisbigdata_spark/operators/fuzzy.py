@@ -19,8 +19,8 @@ Why the guarantee holds for distance ≤ 1:
 Scale accounting: keys per row = L+1 (bounded by the string length, not the
 corpus); the join is an equi-join whose bucket sizes are true neighborhood
 sizes, so worst-case work is Σ bucket² over REAL near-match clusters — the
-same knob family as the LSH paths (`dedup.bucket_capped`): pass
-``max_bucket`` to drop degenerate keys (e.g. a blank-name default value
+same knob family as the LSH paths (`dedup.bucket_capped`): set
+``ED1_MAX_BUCKET`` to drop degenerate keys (e.g. a blank-name default value
 shared by millions of rows) before the self-join. Verification cost is
 |candidates|, not n².
 
@@ -56,20 +56,20 @@ def ed1_blocking_keys(str_col: str) -> F.Column:
     return F.expr(_ED1_KEYS.format(c=quoted))
 
 
-def ed1_pairs(
-    df: DataFrame,
-    id_col: str,
-    str_col: str,
-    max_bucket: int | None = None,
-) -> DataFrame:
+# Bucket cap for ``ed1_pairs``' blocking keys; None keeps every key. Read at
+# call time.
+ED1_MAX_BUCKET: int | None = None
+
+
+def ed1_pairs(df: DataFrame, id_col: str, str_col: str) -> DataFrame:
     """All pairs within edit distance ≤ 1 on ``str_col`` (``id1 < id2``),
     with the verified distance attached.
 
     Plan: explode the L+1 blocking keys → (optional) drop keys whose bucket
-    exceeds ``max_bucket`` → self-equi-join on the xxhash64 of the key →
+    exceeds ``ED1_MAX_BUCKET`` → self-equi-join on the xxhash64 of the key →
     distinct candidate id pairs → verify ``levenshtein ≤ 1`` on the real
     strings. Nothing is quadratic in the corpus; the only superlinear term
-    is Σ bucket² over genuine near-match neighborhoods, which ``max_bucket``
+    is Σ bucket² over genuine near-match neighborhoods, which ``ED1_MAX_BUCKET``
     bounds absolutely.
     """
     keyed = (
@@ -81,9 +81,9 @@ def ed1_pairs(
         .select("id", "s", F.xxhash64("k").alias("kh"))
         .distinct()
     )
-    if max_bucket is not None:
+    if ED1_MAX_BUCKET is not None:
         sizes = keyed.groupBy("kh").agg(F.count(F.lit(1)).alias("kn"))
-        keyed = keyed.join(sizes.filter(F.col("kn") <= max_bucket), "kh").drop("kn")
+        keyed = keyed.join(sizes.filter(F.col("kn") <= ED1_MAX_BUCKET), "kh").drop("kn")
     a = keyed.select(F.col("kh"), F.col("id").alias("id1"), F.col("s").alias("s1"))
     b = keyed.select(F.col("kh"), F.col("id").alias("id2"), F.col("s").alias("s2"))
     cands = (

@@ -17,10 +17,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Broadcast-hash join against a small dimension: no shuffle of the fact
-    side, each task streams its partition against an in-memory hash map."""
-    return fact.join(F.broadcast(dim), on, how)
+def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
+    """Broadcast-hash inner join against a small dimension: no shuffle of the
+    fact side, each task streams its partition against an in-memory hash
+    map."""
+    return fact.join(F.broadcast(dim), on, "inner")
 
 
 def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
@@ -34,14 +35,8 @@ def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     return left.join(right, on, "left_anti")
 
 
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-busting equi-join: hot keys on the ``skewed`` side are spread
+def salted_join(skewed: DataFrame, other: DataFrame, key: str, n_salts: int = 8) -> DataFrame:
+    """Skew-busting inner equi-join: hot keys on the ``skewed`` side are spread
     across ``n_salts`` sub-keys; ``other`` is replicated once per salt so
     every sub-key still finds its matches.
 
@@ -62,18 +57,13 @@ def salted_join(
     right = other.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
-    return left.join(right, [key, "__salt"], how).drop("__salt")
+    return left.join(right, [key, "__salt"], "inner").drop("__salt")
 
 
 def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    equi: Column,
-    lo: Column,
-    hi: Column,
-    how: str = "inner",
+    left: DataFrame, right: DataFrame, equi: Column, lo: Column, hi: Column
 ) -> DataFrame:
-    """Equi + band predicate. The equi key keeps this a hash/sort-merge join
+    """Inner equi + band predicate join. The equi key keeps this a hash/sort-merge join
     (the band is evaluated as a post-join filter); without an equi key Spark
     would produce a broadcast-nested-loop — unusable at scale."""
-    return left.join(right, equi & lo & hi, how)
+    return left.join(right, equi & lo & hi, "inner")

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -341,18 +341,16 @@ def synthesize_png_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def extract_media_features(
-    media: DataFrame,
-    decode: Callable[[bytes], tuple[int, int, float]] = auto_decode,
-) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """The decode/feature stage: Arrow-batched ``mapInPandas`` over
     (media_id, modality, content) emitting small typed feature rows.
 
     Column-pruned input (content is read but never shuffled), per-partition
     parallelism, bounded memory per batch (Arrow slices) — the shape that
     holds when 'content' is megabytes per row and the cluster has 1000
-    executors. ``decode`` is pluggable: fake for tests, pillow/ffmpeg-backed
-    in production."""
+    executors. Decoding is ``auto_decode``'s tiers: the real codec where
+    installed and the bytes parse, else the stdlib PNG decoder, else the
+    deterministic fake."""
     pruned = media.select("media_id", "modality", "content")
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -364,7 +362,7 @@ def extract_media_features(
                 pdf["media_id"], pdf["modality"], pdf["content"]
             ):
                 raw = bytes(content) if content is not None else b""
-                w, h, luma = decode(raw)
+                w, h, luma = auto_decode(raw)
                 feats.append(
                     (
                         int(mid),
@@ -399,16 +397,14 @@ RESIZED_SCHEMA = (
 )
 
 
-def sample_frames(
-    media: DataFrame, frame_bytes: int = 32, modality: str = "video"
-) -> DataFrame:
-    """Frame sampling: one asset row fans out to ceil(len/frame_bytes) frame
-    rows — the video-pipeline shape (ffmpeg keyframe extraction in
+def sample_frames(media: DataFrame, frame_bytes: int = 32) -> DataFrame:
+    """Frame sampling: one video asset row fans out to
+    ceil(len/frame_bytes) frame rows — the video-pipeline shape (ffmpeg keyframe extraction in
     production; deterministic byte-chunking here so the fan-out plumbing is
     oracle-checkable). mapInPandas emits frames per input partition: no
     shuffle to fan out, and downstream ops see small per-frame rows instead
     of whole-asset blobs."""
-    pruned = media.filter(F.col("modality") == modality).select("media_id", "content")
+    pruned = media.filter(F.col("modality") == "video").select("media_id", "content")
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -422,11 +418,7 @@ def sample_frames(
     return pruned.mapInPandas(_batches, FRAME_SCHEMA)
 
 
-def resize_media(
-    media: DataFrame,
-    max_bytes: int = 128,
-    decode: Callable[[bytes], tuple[int, int, float]] = auto_decode,
-) -> DataFrame:
+def resize_media(media: DataFrame, max_bytes: int = 128) -> DataFrame:
     """Resize/downsample stage: binary in → smaller binary out plus re-decoded
     features of the RESIZED content. The fake transform truncates to
     ``max_bytes`` (a real one re-encodes at lower resolution); either way the
@@ -442,7 +434,7 @@ def resize_media(
             ):
                 raw = bytes(content) if content is not None else b""
                 resized = raw[:max_bytes]
-                w, h, luma = decode(resized)
+                w, h, luma = auto_decode(resized)
                 rows.append((int(mid), modality, resized, w, h, round(luma, 6)))
             yield pd.DataFrame(
                 rows,
@@ -452,18 +444,23 @@ def resize_media(
     return pruned.mapInPandas(_batches, RESIZED_SCHEMA)
 
 
-def audio_window_energy(
-    media: DataFrame, window_bytes: int = 25, silence_threshold: int = 2400
-) -> DataFrame:
-    """Audio windowing: fixed-size sample windows per asset with per-window
-    energy and a silence flag — the shape of VAD/silence-trimming in a real
+# ``audio_window_energy``'s window width in bytes and the energy under
+# which a window counts as silent; read at call time.
+AUDIO_WINDOW_BYTES = 25
+AUDIO_SILENCE_THRESHOLD = 2400
+
+
+def audio_window_energy(media: DataFrame) -> DataFrame:
+    """Audio windowing: ``AUDIO_WINDOW_BYTES``-byte sample windows per asset
+    with per-window energy and a silence flag (energy under
+    ``AUDIO_SILENCE_THRESHOLD``) — the shape of VAD/silence-trimming in a real
     audio pipeline (there, windows are PCM frames and energy is RMS; here,
     deterministic byte arithmetic so the windowing is oracle-checkable).
 
     Pure Catalyst, no Python: bytes come from ``array_remove(split(...))``
     (not a higher-order lambda — those are CodegenFallback), the explode is
     shuffle-free, and the per-(asset, window) groupBy partial-aggregates
-    map-side, so only window rows — corpus_bytes / window_bytes, each 3 ints
+    map-side, so only window rows — corpus_bytes / window width, each 3 ints
     wide — ever reach an exchange. Ragged tails score as written (fewer
     bytes → lower energy → usually "silent"); production would rescale by
     window fill.
@@ -478,10 +475,10 @@ def audio_window_energy(
     )
     return (
         chars.groupBy(
-            "media_id", F.floor(F.col("pos") / window_bytes).alias("win")
+            "media_id", F.floor(F.col("pos") / AUDIO_WINDOW_BYTES).alias("win")
         )
         .agg(F.sum(F.ascii("ch")).alias("energy"))
-        .withColumn("is_silent", (F.col("energy") < silence_threshold).cast("int"))
+        .withColumn("is_silent", (F.col("energy") < AUDIO_SILENCE_THRESHOLD).cast("int"))
     )
 
 

@@ -26,8 +26,6 @@ def pack_sequences(
     docs: DataFrame,
     seq_len: int = 2048,
     n_shards: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Assign every document its packed position: (doc_id, shard, n_tokens,
     start_off, seq_id, end_seq, straddles).
@@ -36,13 +34,13 @@ def pack_sequences(
     (``floor(start_off / seq_len)``), ``end_seq`` the one it ends in;
     ``straddles`` marks documents cut by a sequence boundary.
     """
-    shard = F.floor(hash_frac(F.col(id_col)) * n_shards).cast("int")
-    w = Window.partitionBy("shard").orderBy(id_col)
+    shard = F.floor(hash_frac(F.col("doc_id")) * n_shards).cast("int")
+    w = Window.partitionBy("shard").orderBy("doc_id")
     out = docs.select(
-        F.col(id_col), shard.alias("shard"), token_count(F.col(text_col)).alias("n_tokens")
+        F.col("doc_id"), shard.alias("shard"), token_count(F.col("text")).alias("n_tokens")
     ).withColumn("start_off", F.sum("n_tokens").over(w) - F.col("n_tokens"))
     return out.select(
-        id_col,
+        "doc_id",
         "shard",
         "n_tokens",
         "start_off",

@@ -59,13 +59,20 @@ from ..functions.vectors import as_double, cosine, cosine_prenorm, dot, norm
 from ..io import scratch_dir
 from .windows import top_n_per_group
 
+# the corpus columns every operator here reads
+_ID_COL = "vec_id"
+_VEC_COL = "embedding"
 # column names of the two sides every top-k path scores: (id, vec, norm)
 _PROBE = ("query_id", "query_vec", "qn")
 _NEIGHBOR = ("neighbor_id", "vec", "cn")
 
 
 def _normed(
-    df: DataFrame, id_col: str, vec_col: str, names: tuple[str, str, str], *extra: Column
+    df: DataFrame,
+    names: tuple[str, str, str],
+    *extra: Column,
+    id_col: str = _ID_COL,
+    vec_col: str = _VEC_COL,
 ) -> DataFrame:
     """(id, vec, norm) named ``names``, plus ``extra``: the norm of the
     double-cast vector folds once per row, below any pair join, and the raw
@@ -79,16 +86,14 @@ def _normed(
     )
 
 
-def _precast_normed(
-    df: DataFrame, id_col: str, vec_col: str, names: tuple[str, str, str]
-) -> DataFrame:
+def _precast_normed(df: DataFrame, names: tuple[str, str, str]) -> DataFrame:
     """``_normed`` with the vector itself cast to double once per row, for
     scores that fold over pre-cast vectors (``_cos6_precast``)."""
     i, v, n = names
     return df.select(
-        F.col(id_col).alias(i),
-        as_double(F.col(vec_col)).alias(v),
-        norm(as_double(F.col(vec_col))).alias(n),
+        F.col(_ID_COL).alias(i),
+        as_double(F.col(_VEC_COL)).alias(v),
+        norm(as_double(F.col(_VEC_COL))).alias(n),
     )
 
 
@@ -158,11 +163,9 @@ def multi_table_buckets(
     n_tables: int,
     n_planes: int,
     dim: int,
-    vec_col: str = "embedding",
-    out_col: str = "buckets",
     table_offset: int = 0,
 ) -> DataFrame:
-    """Append ``out_col``: array of ``n_tables`` sign-bit bucket ids
+    """Append ``buckets``: array of ``n_tables`` sign-bit bucket ids
     (bit p of table t = (v · plane_{t,p}) >= 0).
 
     One Arrow-batched matmul per partition batch — the per-row cost is
@@ -188,18 +191,11 @@ def multi_table_buckets(
         sigs = bits @ weights  # (batch, L)
         return pd.Series(list(sigs.astype(np.int32)))
 
-    return df.withColumn(out_col, _buckets.asNondeterministic()(F.col(vec_col)))
+    return df.withColumn("buckets", _buckets.asNondeterministic()(F.col(_VEC_COL)))
 
 
 def _exploded_buckets(
-    df: DataFrame,
-    n_tables: int,
-    n_planes: int,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-    id_alias: str,
-    table_offset: int = 0,
+    df: DataFrame, n_tables: int, n_planes: int, dim: int, id_alias: str, table_offset: int = 0
 ) -> DataFrame:
     """(id_alias, t, bucket) — one row per (row, table).
 
@@ -210,22 +206,16 @@ def _exploded_buckets(
     the cosine scoring they drag the whole stage into interpreted eval. The
     distinct's stage boundary keeps scoring in codegen.)"""
     return (
-        multi_table_buckets(df, n_tables, n_planes, dim, vec_col, table_offset=table_offset)
-        .select(F.col(id_col).alias(id_alias), F.posexplode("buckets").alias("t", "bucket"))
+        multi_table_buckets(df, n_tables, n_planes, dim, table_offset=table_offset)
+        .select(F.col(_ID_COL).alias(id_alias), F.posexplode("buckets").alias("t", "bucket"))
     )
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     """Exact top-k cosine neighbors for each probe (self-matches excluded):
     the candidates are every corpus row, against broadcast probes."""
-    p = _normed(probes, id_col, vec_col, _PROBE)
-    c = _normed(corpus, id_col, vec_col, _NEIGHBOR)
+    p = _normed(probes, _PROBE)
+    c = _normed(corpus, _NEIGHBOR)
     return _scored_top_k(
         c.crossJoin(F.broadcast(p)).filter(F.col("neighbor_id") != F.col("query_id")), k
     )
@@ -238,31 +228,25 @@ def lsh_topk(
     n_tables: int | None = 16,
     n_planes: int | None = None,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: score only candidates colliding with the probe in
     at least one of the L hash tables (OR-amplified recall).
 
-    ``n_planes=None`` derives the dial via ``adaptive_n_planes`` from
-    ``n_rows`` when the caller already knows the corpus size (ingest
-    pipelines and table stats do — at 100 TB an extra count() is a full
-    scan before any real work starts), else from one count() job; pass an
-    explicit ``n_planes`` to pin a band layout against a static oracle.
-    ``n_tables=None`` engages ``adaptive_n_tables_topk`` — the L step-up
-    that compensates bucket occupancy once P saturates at its cap (the
-    16 default keeps pinned-layout callers unchanged)."""
+    ``n_planes=None`` derives the dial via ``adaptive_n_planes`` from one
+    count() job; pass an explicit ``n_planes`` to pin a band layout against
+    a static oracle. ``n_tables=None`` engages ``adaptive_n_tables_topk`` —
+    the L step-up that compensates bucket occupancy once P saturates at its
+    cap (the 16 default keeps pinned-layout callers unchanged)."""
     if n_planes is None or n_tables is None:
-        # one count at most, and only when no dial was pinned and the
-        # caller didn't supply n_rows (pinned-layout callers never pay it)
-        n_known = corpus.count() if n_rows is None else n_rows
+        # one count at most, and only when a dial is left to derive
+        # (pinned-layout callers never pay it)
+        n_known = corpus.count()
         if n_planes is None:
             n_planes = adaptive_n_planes(n_known)
         if n_tables is None:
             n_tables = adaptive_n_tables_topk(n_known)
-    cb = _exploded_buckets(corpus, n_tables, n_planes, dim, id_col, vec_col, "neighbor_id")
-    pb = _exploded_buckets(probes, n_tables, n_planes, dim, id_col, vec_col, "query_id")
+    cb = _exploded_buckets(corpus, n_tables, n_planes, dim, "neighbor_id")
+    pb = _exploded_buckets(probes, n_tables, n_planes, dim, "query_id")
     cand = (
         cb.join(pb, ["t", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -270,8 +254,8 @@ def lsh_topk(
         .distinct()
     )
     return _scored_top_k(
-        cand.join(_normed(corpus, id_col, vec_col, _NEIGHBOR), "neighbor_id").join(
-            F.broadcast(_normed(probes, id_col, vec_col, _PROBE)), "query_id"
+        cand.join(_normed(corpus, _NEIGHBOR), "neighbor_id").join(
+            F.broadcast(_normed(probes, _PROBE)), "query_id"
         ),
         k,
     )
@@ -302,13 +286,11 @@ def table_bucket_capped(buckets: DataFrame, max_bucket: int) -> DataFrame:
 NEARDUP_P_CAP = 14
 
 
-def adaptive_n_planes(
-    n: int, floor: int = 4, cap: int = 16, target_bucket: int = 128
-) -> int:
+def adaptive_n_planes(n: int, cap: int = 16) -> int:
     """The n_planes dial as CODE (dd5's k∝√n discipline applied to LSH
     banding): per-table candidate-pair volume is ~n²/2^P at uniform
-    occupancy, so holding expected bucket size at ``target_bucket`` means
-    2^P ∝ n, i.e. P = log2(n / target_bucket). Clamped to [floor, cap]:
+    occupancy, so holding expected bucket size at 128 means 2^P ∝ n, i.e.
+    P = log2(n / 128). Clamped to [4, cap]:
     the floor keeps toy corpora at the oracle-mirrored P=4 (any corpus
     < 4096 vectors derives 4, which covers every driver SF); the cap at 16
     carries the rule to ~16M vectors before bucket growth resumes (raised
@@ -336,11 +318,9 @@ def adaptive_n_planes(
     P 8→12 at the 0.8 bar. Measured on the 10× rehearsal: the fixed-P=6
     run grew 10.5× in wall for 10× data; this rule (P=8 at 50k vectors)
     divides candidate volume 4× right where the growth was."""
-    import math
-
-    if n <= target_bucket:
-        return floor
-    return max(floor, min(cap, int(math.log2(n / target_bucket))))
+    if n <= 128:
+        return 4
+    return max(4, min(cap, int(math.log2(n / 128))))
 
 
 def adaptive_n_tables_topk(n: int) -> int:
@@ -353,15 +333,14 @@ def adaptive_n_tables_topk(n: int) -> int:
     SAME wall (candidate fetch is probes × bucket, and buckets shrink as L
     spreads them), L=32 → 0.988 at 1.4× wall. Steps are decade-based
     because occupancy is linear in n past the P cap; recall is a
-    query-time knob — no index rebuild, no count() when the caller passes
-    ``n_rows``.
+    query-time knob — no index rebuild.
 
     The 48 step (round 14): the P-cap raise to 16 lets 8M-vector corpora
     band at P=15, where each extra plane multiplies the per-table hit
     rate for a fixed-angle neighbor by p < 1 — the 8M rehearsal measured
     recall@5 0.88 at L=32, the first sub-bar point in the dial's history
     (BENCH_LOCAL.md). Per-probe candidate volume is L × occupancy and
-    occupancy is pinned at ~target_bucket while P tracks the corpus, so
+    occupancy is pinned at ~128 while P tracks the corpus, so
     L is the only recall lever past each P step: 48 tables restore the
     miss-rate exponent — measured 0.972 at 8M (BENCH_LOCAL.md round 14),
     wall 61.4 s vs 108.8 at L=32 (more tables spread the same pinned
@@ -376,34 +355,26 @@ def adaptive_n_tables_topk(n: int) -> int:
     return 48
 
 
-def adaptive_n_tables(
-    n_planes: int,
-    threshold: float,
-    target_recall: float = 0.9,
-    floor: int = 8,
-    cap: int = 64,
-) -> int:
+def adaptive_n_tables(n_planes: int, threshold: float) -> int:
     """The L dial that keeps OR-amplified recall AT THE SIMILARITY BAR
     constant while ``adaptive_n_planes`` deepens banding with the corpus:
     a pair at cosine ``threshold`` agrees with one random hyperplane with
     probability p = 1 − θ/π (θ = arccos(threshold)), collides per table
-    with p^P, so L ≥ ln(1 − target_recall) / ln(1 − p^P) tables give
-    recall ≥ target_recall for every pair AT OR ABOVE the bar (recall is
-    monotone in cosine). Clamped: the floor keeps toy corpora at a stable
-    layout, the cap bounds the explode volume (n·L bucket rows) — hitting
+    with p^P, so L ≥ ln(1 − 0.9) / ln(1 − p^P) tables give recall ≥ 0.9
+    for every pair AT OR ABOVE the bar (recall is monotone in cosine).
+    Clamped to [8, 64]: the floor keeps toy corpora at a stable layout,
+    the cap bounds the explode volume (n·L bucket rows) — hitting
     it means the (P, threshold) combination demands more amplification
     than one LSH stage should carry, and the right move is a coarser P or
     a re-rank stage (sim9's two-stage shape). At (P=12, bar 0.8):
     p ≈ 0.795, p^12 ≈ 0.064, L = 35 — candidate volume per table shrinks
     16× vs P=8 while L grows 2.2×, a ~7× net reduction at equal recall."""
-    import math
-
     p = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
     hit = p**n_planes
     if hit >= 1.0 or hit <= 0.0:
-        return floor
-    need = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - hit))
-    return max(floor, min(cap, need))
+        return 8
+    need = math.ceil(math.log(1.0 - 0.9) / math.log(1.0 - hit))
+    return max(8, min(64, need))
 
 
 # The single-pass frontier: past this many MB of prenormed vectors
@@ -421,8 +392,6 @@ def lsh_neardup_pairs(
     n_tables: int | None = 16,
     n_planes: int | None = None,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: int | None = None,
     n_rows: int | None = None,
     collapse: bool = False,
@@ -499,7 +468,7 @@ def lsh_neardup_pairs(
         n_planes = adaptive_n_planes(n_known, cap=NEARDUP_P_CAP)
     if n_tables is None:
         n_tables = adaptive_n_tables(n_planes, threshold)
-    args = (corpus, threshold, n_tables, n_planes, dim, id_col, vec_col, max_bucket, n_known)
+    args = (corpus, threshold, n_tables, n_planes, dim, max_bucket, n_known)
     if (
         not collapse
         and n_known * (dim * 8 + 48) > NEARDUP_BUDGET_MB * 1024 * 1024
@@ -515,8 +484,6 @@ def _lsh_pairs_single_pass(
     n_tables: int,
     n_planes: int,
     dim: int,
-    id_col: str,
-    vec_col: str,
     max_bucket: int | None,
     n_known: int | None,
     table_offset: int,
@@ -537,10 +504,7 @@ def _lsh_pairs_single_pass(
     UnsafeExternalSorter spill, which is a single-node disk wall and a
     pointless triple shuffle on a cluster. Past the broadcast budget the
     router above stages instead."""
-    ba = _exploded_buckets(
-        corpus, n_tables, n_planes, dim, id_col, vec_col, "id1",
-        table_offset=table_offset,
-    )
+    ba = _exploded_buckets(corpus, n_tables, n_planes, dim, "id1", table_offset)
     if max_bucket is not None:
         ba = table_bucket_capped(ba, max_bucket)
     bb = ba.select(F.col("id1").alias("id2"), "t", "bucket")
@@ -552,7 +516,7 @@ def _lsh_pairs_single_pass(
     )
     # norms ride the vector attach (one fold per ROW); pair scoring is then
     # a single dot fold per candidate — see functions.vectors.cosine_prenorm
-    v = _normed(corpus, id_col, vec_col, ("vid", "v", "n"))
+    v = _normed(corpus, ("vid", "v", "n"))
     # ~(8·dim + 48) bytes per prenormed row
     if n_known is not None and n_known * (dim * 8 + 48) <= budget_mb * 1024 * 1024:
         v = F.broadcast(v)
@@ -570,8 +534,6 @@ def _lsh_pairs_staged(
     n_tables: int,
     n_planes: int,
     dim: int,
-    id_col: str,
-    vec_col: str,
     max_bucket: int | None,
     n_known: int,
 ) -> DataFrame:
@@ -625,8 +587,6 @@ def _lsh_pairs_staged(
             g,
             n_planes,
             dim,
-            id_col,
-            vec_col,
             max_bucket,
             n_known,
             off,
@@ -644,9 +604,6 @@ def ivf_topk(
     k: int,
     n_clusters: int = 16,
     n_probe: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a k-means coarse quantizer
     partitions the corpus into cluster lists; each probe scores only the
@@ -661,13 +618,11 @@ def ivf_topk(
     cluster id — never a corpus cross join. Fit cost is MLlib's distributed
     k-means, amortized over the query batch; ``build_ivf_index`` +
     ``ivf_topk_indexed`` persist the fit so query time pays none of it."""
-    assigned, centers = _ivf_fit(corpus, n_clusters, id_col, vec_col, seed)
-    return _ivf_query(assigned, centers, probes, k, n_probe, id_col, vec_col)
+    assigned, centers = _ivf_fit(corpus, n_clusters)
+    return _ivf_query(assigned, centers, probes, k, n_probe)
 
 
-def _ivf_fit(
-    corpus: DataFrame, n_clusters: int, id_col: str, vec_col: str, seed: int
-) -> tuple[DataFrame, DataFrame]:
+def _ivf_fit(corpus: DataFrame, n_clusters: int) -> tuple[DataFrame, DataFrame]:
     """Fit the k-means coarse quantizer; return (assignments, centroids).
     Assignments carry the vector and its precomputed norm so query-time
     scoring is one fold per pair."""
@@ -675,14 +630,12 @@ def _ivf_fit(
     from pyspark.ml.functions import array_to_vector
 
     spark = corpus.sparkSession
-    as_dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    as_dbl = F.transform(F.col(_VEC_COL), lambda x: x.cast("double"))
     corpus_v = corpus.withColumn("__v", array_to_vector(as_dbl))
     model = KMeans(
-        k=n_clusters, seed=seed, featuresCol="__v", predictionCol="__cluster"
+        k=n_clusters, seed=42, featuresCol="__v", predictionCol="__cluster"
     ).fit(corpus_v)
-    assigned = _normed(
-        model.transform(corpus_v), id_col, vec_col, _NEIGHBOR, F.col("__cluster").alias("cl")
-    )
+    assigned = _normed(model.transform(corpus_v), _NEIGHBOR, F.col("__cluster").alias("cl"))
     centers = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cl int, center array<double>",
@@ -690,14 +643,7 @@ def _ivf_fit(
     return assigned, centers
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    index_dir: str,
-    n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> None:
+def build_ivf_index(corpus: DataFrame, index_dir: str, n_clusters: int = 16) -> None:
     """Persist the IVF index: assignments parquet PARTITIONED BY cluster id
     (``{index_dir}/assignments/cl=N/``) + a centroids table.
 
@@ -707,36 +653,24 @@ def build_ivf_index(
     partition pruning turns it into a partition filter on the scan. The fit
     (the expensive stage) runs once here; ``ivf_topk_indexed`` pays none of
     it."""
-    assigned, centers = _ivf_fit(corpus, n_clusters, id_col, vec_col, seed)
+    assigned, centers = _ivf_fit(corpus, n_clusters)
     assigned.write.mode("overwrite").partitionBy("cl").parquet(f"{index_dir}/assignments")
     centers.write.mode("overwrite").parquet(f"{index_dir}/centroids")
 
 
 def ivf_topk_indexed(
-    spark,
-    index_dir: str,
-    probes: DataFrame,
-    k: int,
-    n_probe: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    spark, index_dir: str, probes: DataFrame, k: int, n_probe: int = 6
 ) -> DataFrame:
     """IVF top-k against a persisted index (``build_ivf_index``): no fit
     stage — centroids load as a broadcast dimension, assignments scan only
     the probed ``cl=`` partitions (dynamic partition pruning)."""
     assigned = spark.read.parquet(f"{index_dir}/assignments")
     centers = spark.read.parquet(f"{index_dir}/centroids")
-    return _ivf_query(assigned, centers, probes, k, n_probe, id_col, vec_col)
+    return _ivf_query(assigned, centers, probes, k, n_probe)
 
 
 def _ivf_query(
-    assigned: DataFrame,
-    centers: DataFrame,
-    probes: DataFrame,
-    k: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
+    assigned: DataFrame, centers: DataFrame, probes: DataFrame, k: int, n_probe: int
 ) -> DataFrame:
     """Shared IVF query path: broadcast centroid shortlist → cluster-id
     equi-join → prenorm cosine → per-probe top-k.
@@ -747,7 +681,7 @@ def _ivf_query(
     between Spark codegen variants) can otherwise flip near-tied cell
     picks, and the rounding is what makes the query stage over a persisted
     index value-oracle-checkable (sim6x) rather than rows-only."""
-    p = _normed(probes, id_col, vec_col, _PROBE)
+    p = _normed(probes, _PROBE)
     sq_dist = F.aggregate(
         F.zip_with(
             F.transform("query_vec", lambda x: x.cast("double")),
@@ -768,15 +702,13 @@ def _ivf_query(
     return _probe_cells(shortlist, assigned, k)
 
 
-def threshold_pairs(
-    corpus: DataFrame, threshold: float, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def threshold_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
     """All-pairs cosine ≥ threshold. O(n²) — the small-n correctness baseline
     only; ``lsh_neardup_pairs`` is the registered scale path."""
     # prenorm/precast (r14): casts and norm folds once per row, one dot fold
     # per pair — bit-identical to cosine() (functions/vectors.py contract)
-    a = _precast_normed(corpus, id_col, vec_col, ("id1", "v1", "n1"))
-    b = _precast_normed(corpus, id_col, vec_col, ("id2", "v2", "n2"))
+    a = _precast_normed(corpus, ("id1", "v1", "n1"))
+    b = _precast_normed(corpus, ("id2", "v2", "n2"))
     return (
         a.join(b, F.col("id1") < F.col("id2"))
         .select("id1", "id2", _cos6_precast("v1", "v2", "n1", "n2").alias("cos"))
@@ -841,13 +773,7 @@ def _argmax_cosine(
     )
 
 
-def two_level_assign(
-    corpus: DataFrame,
-    cent: DataFrame,
-    n_super: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def two_level_assign(corpus: DataFrame, cent: DataFrame, n_super: int) -> DataFrame:
     """Two-level nearest-centroid assignment — the production path past the
     measured n·k wall (round-8 rehearsal: 500k vectors × 1000 centroids is
     5×10⁸ broadcast cosines; a single pass did not complete in 16.5 min).
@@ -888,54 +814,47 @@ def two_level_assign(
     c2s = _argmax_cosine(
         cent.select("cid", F.col("center").alias("vec")), sup, "cid", "sid"
     ).select("sid", "cid", F.col("vec").alias("center"))
-    v2s = _argmax_cosine(
-        corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
-        sup,
-        "vid",
-        "sid",
-    )
+    v2s = _argmax_cosine(_vid_vec(corpus), sup, "vid", "sid")
     # level 2: each vector against only the centroids of its super-cell
     return _argmax_cosine(v2s, c2s, "vid", "cid", on="sid")
 
 
+def _vid_vec(corpus: DataFrame) -> DataFrame:
+    """The corpus as (vid, vec), the row side of ``_argmax_cosine``."""
+    return corpus.select(F.col(_ID_COL).alias("vid"), F.col(_VEC_COL).alias("vec"))
+
+
+# ``_nearest_centroid``'s "auto" crossover: two-level assignment from this
+# many centroids on — under the k ≈ n/500 sizing rule that is n ≈ 10⁵, the
+# crossover the round-8 rehearsal measured (flat at 500k×1000 did not
+# complete in 16.5 min; see BENCH_LOCAL.md round-8/round-9 tables). The
+# threshold is on k, not n, so no count() job is spent deciding.
+TWO_LEVEL_MIN_K = 200
+
+
 def _nearest_centroid(
-    corpus: DataFrame,
-    cent: DataFrame,
-    k: int,
-    assignment: str,
-    id_col: str,
-    vec_col: str,
+    corpus: DataFrame, cent: DataFrame, k: int, assignment: str
 ) -> DataFrame:
     """(vid, cid, vec): each corpus vector's nearest centroid among the ``k``
     rows of ``cent`` (cid, center). ``assignment``: ``"flat"`` is the exact
     n·k broadcast argmax; ``"two_level"`` routes through
     ``two_level_assign`` (~2·n·√k work, approximate near super-cell
-    boundaries); ``"auto"`` switches to two-level at k >= 200 — under the
-    k ≈ n/500 sizing rule that is n ≈ 10⁵, the crossover the round-8
-    rehearsal measured (flat at 500k×1000 did not complete in 16.5 min; see
-    BENCH_LOCAL.md round-8/round-9 tables). The threshold is on k, not n, so
-    no count() job is spent deciding."""
+    boundaries); ``"auto"`` switches to two-level at k >=
+    ``TWO_LEVEL_MIN_K``, read at call time."""
     if assignment not in ("auto", "flat", "two_level"):
         raise ValueError(f"assignment must be auto|flat|two_level, got {assignment!r}")
     if assignment == "auto":
-        assignment = "two_level" if k >= 200 else "flat"
+        assignment = "two_level" if k >= TWO_LEVEL_MIN_K else "flat"
     if assignment == "two_level":
         n_super = max(2, math.isqrt(max(k - 1, 0)) + 1)  # ceil(sqrt k)
-        return two_level_assign(corpus, cent, n_super, id_col, vec_col)
-    return _argmax_cosine(
-        corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
-        cent,
-        "vid",
-        "cid",
-    )
+        return two_level_assign(corpus, cent, n_super)
+    return _argmax_cosine(_vid_vec(corpus), cent, "vid", "cid")
 
 
 def centroid_semantic_dedup(
     corpus: DataFrame,
     n_centroids: int = 8,
     threshold: float = 0.30,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assignment: str = "auto",
 ) -> DataFrame:
     """IVF-style semantic dedup: a deterministic coarse quantizer partitions
@@ -978,15 +897,15 @@ def centroid_semantic_dedup(
     """
     cent = (
         corpus.select(
-            F.col(id_col).alias("cid"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(vec_col).alias("center"),
+            F.col(_ID_COL).alias("cid"),
+            F.md5(F.col(_ID_COL).cast("string")).alias("__h"),
+            F.col(_VEC_COL).alias("center"),
         )
         .orderBy("__h", "cid")
         .limit(n_centroids)
         .drop("__h")
     )
-    assigned = _nearest_centroid(corpus, cent, n_centroids, assignment, id_col, vec_col)
+    assigned = _nearest_centroid(corpus, cent, n_centroids, assignment)
     cells = assigned.select(
         "vid", "cid", "vec", norm(as_double(F.col("vec"))).alias("nrm")
     ).repartition("cid")
@@ -1019,7 +938,7 @@ def centroid_semantic_dedup(
     )
 
 
-def int8_quantized(vec_col: str = "embedding", out_col: str = "qv"):
+def int8_quantized(out_col: str = "qv"):
     """Symmetric per-vector int8 quantization as a pure Catalyst column:
     scale = 127 / max|x_i|, q_i = floor(x_i * scale + 0.5) (half-up — both
     engines' IEEE doubles agree on floor, unlike round()'s mode-dependent
@@ -1038,20 +957,15 @@ def int8_quantized(vec_col: str = "embedding", out_col: str = "qv"):
     argument is an ordinary child expression evaluated once per row.
     Measured on sim7 at sf0.1: ~1.4 s -> ~0.8 s, byte-identical output.
     """
-    scale = f"127.0D / nullif(array_max(transform({vec_col}, y -> abs(cast(y as double)))), 0.0D)"
+    v = _VEC_COL
+    scale = f"127.0D / nullif(array_max(transform({v}, y -> abs(cast(y as double)))), 0.0D)"
     return F.expr(
-        f"zip_with({vec_col}, array_repeat({scale}, size({vec_col})),"
+        f"zip_with({v}, array_repeat({scale}, size({v})),"
         f" (x, s) -> coalesce(cast(floor(cast(x as double) * s + 0.5D) as int), 0))"
     ).alias(out_col)
 
 
-def quantized_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantized_topk(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     """Top-k neighbors per probe ranked by the COSINE OF THE QUANTIZED
     vectors: qcos = qdot / sqrt(q_aa * q_bb), where qdot and the self-dots
     are exact BIGINTs (64 products of |q| <= 127; q_aa*q_bb <= ~1.1e12,
@@ -1085,16 +999,16 @@ def quantized_topk(
     column the plan already carries (round-9 advice).
     """
     self_dot = "aggregate(transform({c}, x -> cast(x as bigint) * x), 0L, (acc, v) -> acc + v)"
-    nonzero = f"exists({vec_col}, y -> cast(y as double) != 0.0D)"
+    nonzero = f"exists({_VEC_COL}, y -> cast(y as double) != 0.0D)"
     p = (
         probes.filter(F.expr(nonzero))
-        .select(F.col(id_col).alias("query_id"), int8_quantized(vec_col, "q_qv"))
+        .select(F.col(_ID_COL).alias("query_id"), int8_quantized("q_qv"))
         .withColumn("q_nn", F.expr(self_dot.format(c="q_qv")))
         .filter(F.col("q_nn") > 0)
     )
     c = (
         corpus.filter(F.expr(nonzero))
-        .select(F.col(id_col).alias("neighbor_id"), int8_quantized(vec_col, "c_qv"))
+        .select(F.col(_ID_COL).alias("neighbor_id"), int8_quantized("c_qv"))
         .withColumn("c_nn", F.expr(self_dot.format(c="c_qv")))
         .filter(F.col("c_nn") > 0)
     )
@@ -1136,8 +1050,6 @@ def two_stage_rerank_topk(
     probes: DataFrame,
     k: int,
     shortlist_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The production ANN serving pattern: a CHEAP first stage (int8
     quantized cosine over 4x-smaller vectors) builds a k*shortlist_factor
@@ -1155,11 +1067,11 @@ def two_stage_rerank_topk(
     int8 representation (4x fewer scan bytes) serves the broad scan.
     Zero-norm rows are excluded by stage 1's guard on both sides.
     """
-    short = quantized_topk(
-        corpus, probes, k * shortlist_factor, id_col, vec_col
-    ).select("query_id", "neighbor_id", "qcos")
-    p = _normed(probes, id_col, vec_col, ("query_id", "qv", "qn2"))
-    c = _normed(corpus, id_col, vec_col, ("neighbor_id", "nv", "nn2"))
+    short = quantized_topk(corpus, probes, k * shortlist_factor).select(
+        "query_id", "neighbor_id", "qcos"
+    )
+    p = _normed(probes, ("query_id", "qv", "qn2"))
+    c = _normed(corpus, ("neighbor_id", "nv", "nn2"))
     scored = (
         c.join(F.broadcast(short), "neighbor_id")
         .join(F.broadcast(p), "query_id")
@@ -1175,9 +1087,6 @@ def mmr_topk(
     probes: DataFrame,
     k: int,
     shortlist: int = 20,
-    lam_tenths: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k (Carbonell & Goldstein
     1998) — the serving-side diversity re-ranker: from each probe's exact
@@ -1212,14 +1121,14 @@ def mmr_topk(
     work is O(k · shortlist²) on ~400 int64s — constant in corpus size,
     parallel across probes. The self-pair diagonal is kept (sim value
     unused) so every candidate reaches its group even at shortlist = 1."""
-    pen_tenths = 10 - lam_tenths
-    cand = brute_force_topk(corpus, probes, shortlist, id_col, vec_col).select(
+    lam_tenths, pen_tenths = 7, 3  # λ = 0.7
+    cand = brute_force_topk(corpus, probes, shortlist).select(
         "query_id",
         F.col("neighbor_id").alias("cand_id"),
         F.round(F.col("cos") * F.lit(1e6)).cast("bigint").alias("rel_i"),
     )
     cv = (
-        _precast_normed(corpus, id_col, vec_col, ("cand_id", "dvec", "cn2"))
+        _precast_normed(corpus, ("cand_id", "dvec", "cn2"))
         .join(F.broadcast(cand), "cand_id")
         .groupBy("query_id")
         .agg(
@@ -1295,9 +1204,7 @@ def mmr_topk(
     )
 
 
-def hash_sampled_centroids(
-    corpus: DataFrame, n_clusters: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def hash_sampled_centroids(corpus: DataFrame, n_clusters: int) -> DataFrame:
     """Deterministic coarse quantizer: the ``n_clusters`` corpus vectors with
     the smallest md5(id) (a uniform hash-sample — dd5's trick, promoted to a
     shared operator). (cl, center) with cl = dense 0-based rank in hash
@@ -1306,9 +1213,9 @@ def hash_sampled_centroids(
     w = Window.orderBy("__h", "src_id")
     return (
         corpus.select(
-            F.col(id_col).alias("src_id"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            as_double(F.col(vec_col)).alias("center"),
+            F.col(_ID_COL).alias("src_id"),
+            F.md5(F.col(_ID_COL).cast("string")).alias("__h"),
+            as_double(F.col(_VEC_COL)).alias("center"),
         )
         .orderBy("__h", "src_id")
         .limit(n_clusters)
@@ -1317,14 +1224,7 @@ def hash_sampled_centroids(
     )
 
 
-def build_hash_ivf_index(
-    corpus: DataFrame,
-    index_dir: str,
-    n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assignment: str = "auto",
-) -> None:
+def build_hash_ivf_index(corpus: DataFrame, index_dir: str, n_clusters: int = 16) -> None:
     """Persist a DETERMINISTIC IVF index: same layout and query path as
     ``build_ivf_index`` (assignments partitioned by ``cl`` + centroids
     table) but with the hash-sampled quantizer, so the whole lifecycle —
@@ -1334,32 +1234,26 @@ def build_hash_ivf_index(
     production systems run exactly this trade as 'random-projection vs
     learned coarse quantizer'.
 
-    ``assignment``: ``"flat"`` is ``_argmax_cosine``'s broadcast cross join
-    (corpus × k tiny centroids), rounded-6 cosine so the cell decision is
-    engine-exact; ``"two_level"`` routes through ``two_level_assign``
-    (~2·n·√k work) — the build-time twin of dd5's round-9 fix, because at
-    production k ≈ n/500 the flat build hits the SAME measured n·k wall
-    the round-8 rehearsal recorded (500k×1000 DNF at 16.5 min);
-    ``"auto"`` (default) switches to two-level at k ≥ 200, matching
-    ``centroid_semantic_dedup`` (both route through ``_nearest_centroid``).
-    The oracle-registered sim8 query builds at k = 16 and therefore always
-    takes the flat, bit-exactly-mirrored path; two-level cells differ only
-    near super-cell boundaries (the standard coarse-quantizer trade) and the
-    probe path is identical either way."""
-    centers = hash_sampled_centroids(corpus, n_clusters, id_col, vec_col)
+    Cell assignment is ``_nearest_centroid``'s "auto" gate, the only thing
+    that picks its arm: under ``TWO_LEVEL_MIN_K`` centroids it is
+    ``_argmax_cosine``'s broadcast cross join (corpus × k tiny centroids),
+    rounded-6 cosine so the cell decision is engine-exact; from it on,
+    ``two_level_assign`` (~2·n·√k work) — the build-time twin of dd5's
+    round-9 fix, because at production k ≈ n/500 the flat build hits the
+    SAME measured n·k wall the round-8 rehearsal recorded (500k×1000 DNF
+    at 16.5 min). The oracle-registered sim8 query builds at k = 16 and
+    therefore always takes the flat, bit-exactly-mirrored path; two-level
+    cells differ only near super-cell boundaries (the standard
+    coarse-quantizer trade) and the probe path is identical either way."""
+    centers = hash_sampled_centroids(corpus, n_clusters)
     assigned = _normed(
         _nearest_centroid(
-            corpus,
-            centers.select(F.col("cl").alias("cid"), "center"),
-            n_clusters,
-            assignment,
-            id_col,
-            vec_col,
+            corpus, centers.select(F.col("cl").alias("cid"), "center"), n_clusters, "auto"
         ),
-        "vid",
-        "vec",
         _NEIGHBOR,
         F.col("cid").cast("int").alias("cl"),
+        id_col="vid",
+        vec_col="vec",
     )
     assigned.write.mode("overwrite").partitionBy("cl").parquet(f"{index_dir}/assignments")
     centers.write.mode("overwrite").parquet(f"{index_dir}/centroids")
@@ -1371,8 +1265,6 @@ def hash_ivf_topk_indexed(
     probes: DataFrame,
     k: int,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Query the deterministic IVF index: probes shortlist their ``n_probe``
     nearest centroids by ROUNDED COSINE (desc, cl tie-break — unlike
@@ -1383,7 +1275,7 @@ def hash_ivf_topk_indexed(
     assigned = spark.read.parquet(f"{index_dir}/assignments")
     centers = spark.read.parquet(f"{index_dir}/centroids")
     near = (
-        _normed(probes, id_col, vec_col, _PROBE)
+        _normed(probes, _PROBE)
         .crossJoin(F.broadcast(centers))
         .withColumn("c", F.round(cosine(F.col("query_vec"), F.col("center")), 6))
     )

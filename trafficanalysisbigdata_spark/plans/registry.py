@@ -135,15 +135,13 @@ def register(
 def register_sql(
     name: str,
     sql: str,
-    oracle: str | None = None,
     tags: tuple[str, ...] = (),
     tables: tuple[str, ...] = (),
     doc: str = "",
 ) -> None:
-    """Register a query whose Spark side is ``spark.sql(sql)``.
-
-    When ``oracle`` is omitted the same ANSI string is used for DuckDB — the
-    strongest possible guarantee the two sides agree on semantics.
+    """Register a query whose Spark side is ``spark.sql(sql)`` and whose
+    DuckDB oracle is the same ANSI string — the strongest possible guarantee
+    the two sides agree on semantics.
     """
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,7 +152,7 @@ def register_sql(
     REGISTRY[name] = QuerySpec(
         name=name,
         fn=fn,
-        oracle=sql if oracle is None else oracle,
+        oracle=sql,
         tags=tags,
         doc=doc,
         tables=tables,

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 import warnings
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Runtime (dynamic) confs every query should be able to rely on even when the
@@ -103,12 +104,8 @@ def prep(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception as e:
-            try:
-                effective = spark.conf.get(k, None)
-            except Exception:
-                effective = None
-            if effective == v:
+        except AnalysisException as e:  # how Spark refuses a conf; the rest propagates
+            if spark.conf.get(k, None) == v:
                 continue  # already in the required state, set() just refused
             if k == "spark.sql.legacy.parquet.nanosAsLong":
                 # io.load_table hard-depends on this key for events.parquet's

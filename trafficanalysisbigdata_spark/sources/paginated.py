@@ -82,52 +82,39 @@ class RetryingFetcher:
 
     * ``retries``: attempts after the first failure; exponential backoff
       ``backoff_s * 2**attempt`` between tries.
-    * ``min_interval_s``: minimum spacing between fetch *starts*. With
-      ``rate_key`` set the spacing state is PER WORKER PROCESS (module
-      level), so it holds across the one-page-per-task DataSource pattern;
-      with N parallel workers the aggregate rate is N/min_interval — size
-      accordingly for a rate-limited API. Without ``rate_key`` the state is
-      per instance (driver-side multi-page loops, unit tests).
+    * ``min_interval_s``: minimum spacing between fetch *starts*, kept PER
+      WORKER PROCESS under ``rate_key`` (module level), so it holds across
+      the one-page-per-task DataSource pattern; with N parallel workers the
+      aggregate rate is N/min_interval — size accordingly for a
+      rate-limited API.
     * ``sleep``/``clock`` are injectable for deterministic tests.
     """
 
     def __init__(
         self,
         fetch: PageFetcher,
+        rate_key: str,
         retries: int = 3,
         backoff_s: float = 0.5,
         min_interval_s: float = 0.0,
         sleep: Callable[[float], None] = time.sleep,
         clock: Callable[[], float] = time.monotonic,
-        rate_key: str | None = None,
     ) -> None:
         self.fetch = fetch
+        self.rate_key = rate_key
         self.retries = retries
         self.backoff_s = backoff_s
         self.min_interval_s = min_interval_s
         self.sleep = sleep
         self.clock = clock
-        self.rate_key = rate_key
-        self._last_start: float | None = None
-
-    def _get_last(self) -> float | None:
-        if self.rate_key is not None:
-            return _RATE_STATE.get(self.rate_key)
-        return self._last_start
-
-    def _set_last(self, t: float) -> None:
-        if self.rate_key is not None:
-            _RATE_STATE[self.rate_key] = t
-        else:
-            self._last_start = t
 
     def __call__(self, address: str) -> list[dict]:
-        last = self._get_last()
+        last = _RATE_STATE.get(self.rate_key)
         if self.min_interval_s and last is not None:
             wait = last + self.min_interval_s - self.clock()
             if wait > 0:
                 self.sleep(wait)
-        self._set_last(self.clock())
+        _RATE_STATE[self.rate_key] = self.clock()
         err: Exception | None = None
         for attempt in range(self.retries + 1):
             try:

@@ -23,33 +23,27 @@ from pyspark.sql import functions as F
 from ..functions.numeric import sum_exact
 
 
-def streaming_dedup(
-    stream: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "ts",
-    delay: str = "2 hours",
-) -> DataFrame:
-    """Drop duplicate keys arriving within ``delay`` of each other.
+def streaming_dedup(stream: DataFrame, keys: Sequence[str], delay: str = "2 hours") -> DataFrame:
+    """Drop duplicate keys arriving within ``delay`` of each other (event
+    time ``ts``).
 
     State for a key expires once the watermark passes its event time +
     ``delay`` — bounded memory; duplicates farther apart than ``delay`` are
     the deliberate trade (widen the delay to widen the dedup horizon).
     """
-    return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(list(keys))
+    return stream.withWatermark("ts", delay).dropDuplicatesWithinWatermark(list(keys))
 
 
-def first_event_per_key(
-    events: DataFrame, keys: Sequence[str] = ("user_id", "event_type")
-) -> DataFrame:
-    """Deterministic batch dedup: per key keep the earliest (ts, event_id)
-    row, then summarize per event_type. min(struct(ts, event_id, value)) is
+def first_event_per_key(events: DataFrame) -> DataFrame:
+    """Deterministic batch dedup: per (user_id, event_type) key keep the
+    earliest (ts, event_id) row, then summarize per event_type. min(struct(ts, event_id, value)) is
     map-side combinable — one shuffle on the dedup key, a second tiny one on
     event_type; (ts, event_id) is unique so `value` rides without being
     compared."""
     kept = (
-        events.groupBy(*keys)
+        events.groupBy("user_id", "event_type")
         .agg(F.min(F.struct("ts", "event_id", "value")).alias("__first"))
-        .select(*keys, F.col("__first.value").alias("kept_value"))
+        .select("user_id", "event_type", F.col("__first.value").alias("kept_value"))
     )
     return (
         kept.groupBy("event_type")

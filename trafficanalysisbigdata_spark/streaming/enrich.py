@@ -18,14 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich_with_dim(
-    events: DataFrame,
-    dim: DataFrame,
-    key: str = "user_id",
-    dim_key: str = "c_custkey",
-    dim_cols: tuple[str, ...] = ("c_mktsegment", "c_acctbal"),
-) -> DataFrame:
-    """Left-join ``dim`` onto ``events`` by key, broadcast. Works unchanged
-    on a streaming ``events`` frame (stream-static join, stateless)."""
-    d = dim.select(F.col(dim_key).alias(key), *dim_cols)
-    return events.join(F.broadcast(d), key, "left")
+def enrich_with_dim(events: DataFrame, dim: DataFrame) -> DataFrame:
+    """Left-join the customer dimension's (c_mktsegment, c_acctbal) onto
+    ``events`` by user_id = c_custkey, broadcast. Works unchanged on a
+    streaming ``events`` frame (stream-static join, stateless)."""
+    d = dim.select(F.col("c_custkey").alias("user_id"), "c_mktsegment", "c_acctbal")
+    return events.join(F.broadcast(d), "user_id", "left")

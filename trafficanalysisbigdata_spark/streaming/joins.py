@@ -21,15 +21,13 @@ from pyspark.sql import functions as F
 def purchase_view_attribution(
     purchases: DataFrame,
     views: DataFrame,
-    horizon: str = "30 minutes",
-    delay: str = "1 hour",
     streaming: bool = True,
     how: str = "inner",
 ) -> DataFrame:
     """Attribution join: each purchase matches the same user's views within
-    ``horizon`` AFTER the purchase. The interval bound plus both watermarks
-    bound the state Spark must hold (rows are evicted once the watermark
-    passes their match window).
+    30 minutes AFTER the purchase. The interval bound plus both 1-hour
+    watermarks bound the state Spark must hold (rows are evicted once the
+    watermark passes their match window).
 
     ``how="leftOuter"`` keeps unmatched purchases (the orphan-attribution
     case — st8). In streaming mode an outer null-match row is emitted only
@@ -54,11 +52,11 @@ def purchase_view_attribution(
         F.col("ts").alias("v_ts"),
     )
     if streaming:
-        p = p.withWatermark("p_ts", delay)
-        v = v.withWatermark("v_ts", delay)
+        p = p.withWatermark("p_ts", "1 hour")
+        v = v.withWatermark("v_ts", "1 hour")
     cond = (
         (F.col("p_user") == F.col("v_user"))
         & (F.col("v_ts") >= F.col("p_ts"))
-        & (F.col("v_ts") <= F.col("p_ts") + F.expr(f"INTERVAL {horizon}"))
+        & (F.col("v_ts") <= F.col("p_ts") + F.expr("INTERVAL 30 minutes"))
     )
     return p.join(v, cond, how)

@@ -48,9 +48,7 @@ MAX_RESULT_ROWS = 10_000
 DRAIN_TIMEOUT_S = 300
 
 
-def dashboard_queries(
-    snapshot: DataFrame, max_map_points: int = MAX_MAP_POINTS
-) -> dict[str, DataFrame]:
+def dashboard_queries(snapshot: DataFrame) -> dict[str, DataFrame]:
     """The six per-tick dashboard queries (ref Dash.py:177-250) over one
     snapshot, mapped onto the events schema per FIXTURES.md §2."""
     latest_day = snapshot.agg(F.max(F.to_date("ts")).alias("d"))
@@ -78,11 +76,11 @@ def dashboard_queries(
         "q4_type_totals": snapshot.groupBy("event_type").agg(sum_exact("value", "total")),
         # Q6 (Dash.py:239-250): point projection for the map — bounded to a
         # deterministic hash-ordered sample so the per-tick collect stays
-        # O(max_map_points) however large the snapshot grows
+        # O(MAX_MAP_POINTS) however large the snapshot grows
         "q6_points": (
             snapshot.select("event_id", "user_id", "value")
             .orderBy(F.md5(F.col("event_id").cast("string")), "event_id")
-            .limit(max_map_points)
+            .limit(MAX_MAP_POINTS)
         ),
     }
 

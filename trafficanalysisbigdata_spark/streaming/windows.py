@@ -52,11 +52,11 @@ def session_10m(events: DataFrame) -> DataFrame:
     )
 
 
-def watermarked_tumbling_hourly(stream: DataFrame, late: str = "1 hour") -> DataFrame:
+def watermarked_tumbling_hourly(stream: DataFrame) -> DataFrame:
     """The streaming form: state for a window is dropped once the watermark
-    passes window_end + ``late`` — bounded state at any throughput."""
+    passes window_end + 1 hour — bounded state at any throughput."""
     return (
-        stream.withWatermark("ts", late)
+        stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(sum_exact("value", "total"), F.count(F.lit(1)).alias("n"))
     )
