@@ -14,8 +14,11 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    from trafficanalysisbigdata_spark.plans.registry import release_caches
+
     spark = get_session("tests")
     yield spark
+    release_caches()  # the scratch leaves and tracked frames of every test
 
 
 @pytest.fixture(scope="session")

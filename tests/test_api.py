@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -170,3 +171,24 @@ def test_prep_propagates_errors_that_are_not_a_refusal():
     spark = _stub_session({"spark.sql.session.timeZone"}, RuntimeError("connection lost"))
     with pytest.raises(RuntimeError, match="connection lost"):
         prep(spark)
+
+
+def test_ship_package_shares_one_zip_per_source_version(tmp_path, monkeypatch):
+    """Two processes shipping the same package source leave one zip in the
+    temp dir, named by the source digest, and both ship that file."""
+    import tempfile
+    import zipfile
+    from types import SimpleNamespace
+
+    from trafficanalysisbigdata_spark import session
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    shipped = []
+    for pid in (1111, 2222):
+        monkeypatch.setattr(session.os, "getpid", lambda pid=pid: pid)
+        spark = SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append))
+        session._ship_package(spark)
+    assert [p.name for p in tmp_path.iterdir()] == [os.path.basename(shipped[0])]
+    assert shipped[0] == shipped[1]
+    with zipfile.ZipFile(shipped[0]) as z:
+        assert "trafficanalysisbigdata_spark/session.py" in z.namelist()

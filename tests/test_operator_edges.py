@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import ast
 import datetime as dt
+import os
 import pathlib
 
 import pytest
@@ -525,13 +526,19 @@ def test_sink_query_results_survive_a_rerun(spark, sf_dir, name):
 
 @pytest.mark.parametrize(
     "name",
-    ["st7_stateful_running_totals", "st9_watermark_dedup_stream", "st10_session_window_stream"],
+    [
+        "s12_bucketed_join",
+        "st7_stateful_running_totals",
+        "st9_watermark_dedup_stream",
+        "st10_session_window_stream",
+    ],
 )
 def test_stream_query_leaves_no_sink_view(spark, sf_dir, name):
     """st7/st9/st10 drain a real stream into a memory sink whose rows are a
-    uuid-named temp view. The query drops the view once its result frame is
-    bound — otherwise a long-lived session keeps every run's sink rows in
-    memory — and the result still collects afterwards."""
+    uuid-named temp view, and s12 joins two uuid-named bucketed tables. The
+    query drops those catalog entries once its result frame is bound —
+    otherwise a long-lived session's catalog keeps every run's — and the
+    result still collects afterwards."""
     from trafficanalysisbigdata_spark.plans.registry import load_all
 
     spec = load_all()[name]
@@ -562,23 +569,77 @@ class _TrackedStub:
 def test_release_caches_skips_only_stopped_contexts(monkeypatch):
     """A frame whose SparkContext is stopped holds nothing to release: it is
     skipped (its unpersist is never called) and the live one is released."""
+    from trafficanalysisbigdata_spark import io
     from trafficanalysisbigdata_spark.plans import registry
 
-    monkeypatch.setattr(registry, "_TRACKED_CACHES", [])
+    monkeypatch.setattr(io, "_LEFT_BEHIND", io._LeftBehind())
     live = registry.track_cache(_TrackedStub(stopped=False))
     registry.track_cache(_TrackedStub(stopped=True, error=RuntimeError("context stopped")))
     assert registry.release_caches() == 2
-    assert live.released and not registry._TRACKED_CACHES
+    assert live.released and not io._LEFT_BEHIND.frames
 
 
 def test_release_caches_propagates_unpersist_errors(monkeypatch):
     """Any other unpersist failure is a fault, not a silent fallback."""
+    from trafficanalysisbigdata_spark import io
     from trafficanalysisbigdata_spark.plans import registry
 
-    monkeypatch.setattr(registry, "_TRACKED_CACHES", [])
+    monkeypatch.setattr(io, "_LEFT_BEHIND", io._LeftBehind())
     registry.track_cache(_TrackedStub(stopped=False, error=RuntimeError("unpersist failed")))
     with pytest.raises(RuntimeError, match="unpersist failed"):
         registry.release_caches()
+
+
+def test_release_caches_refuses_a_leaf_of_a_stopped_context(monkeypatch):
+    """A scratch leaf outlives its SparkContext on disk, so a stopped context
+    is a delete failure, not a leaf to skip."""
+    from trafficanalysisbigdata_spark import io
+    from trafficanalysisbigdata_spark.plans import registry
+
+    monkeypatch.setattr(io, "_LEFT_BEHIND", io._LeftBehind())
+    stopped = _TrackedStub(stopped=True).sparkSession
+    io._LEFT_BEHIND.leaves.append((stopped, "file:/nowhere/s7-0"))
+    with pytest.raises(RuntimeError, match="SparkContext is stopped"):
+        registry.release_caches()
+
+
+def _scratch_queries() -> list[str]:
+    """Registry queries whose function asks ``io.scratch_dir`` for a leaf."""
+    import inspect
+
+    from trafficanalysisbigdata_spark.plans.registry import load_all
+
+    return sorted(n for n, s in load_all().items() if "scratch_dir(" in inspect.getsource(s.fn))
+
+
+def test_release_caches_frees_every_scratch_leaf_and_tracked_frame(spark, sf_dir, monkeypatch):
+    """Each query that writes scratch files, plus the two that persist a
+    frame, run and collected; then release_caches(): the scratch root lists
+    what it listed before (a leaf handed out but never written included) and
+    every tracked frame is unpersisted. A harness that releases after each
+    consumed result keeps the scratch root from growing."""
+    from trafficanalysisbigdata_spark.io import scratch_dir
+    from trafficanalysisbigdata_spark.plans import registry
+
+    names = _scratch_queries()
+    assert len(names) == 15, names  # s7–s16, ops2, st7, st9, st10, st11
+    tracked, track = [], registry.track_cache
+
+    def spy(df):
+        tracked.append(df)
+        return track(df)
+
+    monkeypatch.setattr(registry, "track_cache", spy)
+    registry.release_caches()  # start from an empty record
+    root = os.path.dirname(scratch_dir(spark, "unwritten"))
+    before = sorted(os.listdir(root)) if os.path.isdir(root) else []
+    specs = registry.load_all()
+    for name in [*names, "olap9_pareto_abc", "pipe11_token_budget_select"]:
+        assert specs[name].run(spark, sf_dir).collect(), f"{name} returned no rows"
+    assert len(tracked) == 2 and tracked[-1].storageLevel.useMemory
+    registry.release_caches()
+    assert sorted(os.listdir(root)) == before
+    assert not any(df.storageLevel.useMemory or df.storageLevel.useDisk for df in tracked)
 
 
 def test_rolling_median_short_frames(spark):

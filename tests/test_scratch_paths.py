@@ -3,6 +3,11 @@
 operators/ or streaming/ may pick a path itself: no ``tempfile`` import and no
 read of ``spark.sql.warehouse.dir``.
 
+What a query leaves behind has one owner too: every frame a module under
+plans/, operators/ or streaming/ persists is handed straight to
+``track_cache``, so ``release_caches()`` frees it with the run's scratch
+leaves.
+
 Likewise a query's inputs are bound in one place: ``QuerySpec.run`` registers
 each declared table as a view, so a query under plans/ reads it with
 ``spark.table(name)`` and never re-reads it with ``io.load_table`` — unless
@@ -87,3 +92,42 @@ def test_check_flags_load_table_outside_a_new_session():
         "    return io.load_table(s2, sf_dir, 'orders')\n"
     )
     assert _table_rereads(ast.parse(src)) == ["reread"]
+
+
+def _untracked_persists(tree: ast.AST) -> list[int]:
+    """Lines of ``.persist(`` / ``.cache(`` calls that are not the direct
+    argument of a ``track_cache(...)`` call."""
+    tracked = {
+        id(arg)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and _callee(n) == "track_cache"
+        for arg in n.args
+    }
+    return [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in ("persist", "cache")
+        and id(n) not in tracked
+    ]
+
+
+def test_persisted_frames_are_tracked():
+    offenders = {
+        str(p.relative_to(PKG)): found
+        for p in MODULES
+        if (found := _untracked_persists(ast.parse(p.read_text(), str(p))))
+    }
+    assert not offenders, f"hand persisted frames to track_cache: {offenders}"
+
+
+def test_check_flags_persists_outside_track_cache():
+    src = (
+        "a = track_cache(df.persist(StorageLevel.MEMORY_AND_DISK))\n"
+        "b = df.persist()\n"
+        "c = df.cache()\n"
+        "d = track_cache(f(df.cache()))\n"
+        "e = registry.track_cache(df.cache())\n"
+    )
+    assert _untracked_persists(ast.parse(src)) == [2, 3, 4]

@@ -19,12 +19,20 @@ per run.
 * A uuid leaf per run: two runs of one query, in one driver or many, never
   share a path, so a rerun cannot overwrite files an earlier result still
   reads.
-* Callers own cleanup: the files back the returned DataFrame, so nothing
-  here deletes them.
+* Freed when the run is consumed: ``scratch_dir`` records each leaf it hands
+  out, ``track_cache`` records each frame a query persisted, and
+  ``release_caches()`` unpersists those frames and deletes those leaves. A
+  harness calls it once it has consumed a result (``bench.py``,
+  ``perfbench``, ``scripts/opt_plans.py``, the test session's teardown);
+  until then the files back the returned DataFrame, so a result collected
+  late still reads them. ``QuerySpec.run`` frees only the frames at the
+  start of the next run: a frame recomputes, a deleted file does not.
 
 A warehouse on ``file:`` resolves to a plain local path, so the callers that
 use the Python filesystem on their leaf (st10's ordered source install,
-st11's versioned state) work unchanged in local mode.
+st11's versioned state) work unchanged in local mode. Leaves are deleted
+through the session's Hadoop ``FileSystem`` (the record keeps such a leaf
+qualified as ``file:``), so a non-local warehouse is freed the same way.
 
 Fit-once artifacts (``ensure_artifact``) are different: fitted models and
 indexes that a DuckDB oracle reads by literal path. They live at static
@@ -38,6 +46,7 @@ import os
 import tempfile
 import uuid
 from collections.abc import Callable, Iterable
+from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -77,15 +86,83 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+@dataclass
+class _LeftBehind:
+    """What the query runs of this process leave behind until
+    ``release_caches()``: the frames they persisted and the scratch leaves
+    they were handed, each leaf with the session whose FileSystem holds it."""
+
+    frames: list[DataFrame] = field(default_factory=list)
+    leaves: list[tuple[SparkSession, str]] = field(default_factory=list)
+
+
+_LEFT_BEHIND = _LeftBehind()
+
+
 def scratch_dir(spark: SparkSession, tag: str) -> str:
     """A fresh ``<root>/<tag>-<uuid>`` path for one run's own files (see the
-    module docstring for the rule). Not created: Spark writers create it."""
+    module docstring for the rule). Not created: Spark writers create it.
+    Recorded, so ``release_caches()`` deletes it."""
     root = spark.conf.get(SCRATCH_DIR_CONF, None) or (
         spark.conf.get("spark.sql.warehouse.dir").rstrip("/") + "/_scratch"
     )
-    if root.startswith("file:"):
+    local = root.startswith("file:")
+    if local:
         root = unquote(urlparse(root).path)
-    return f"{root.rstrip('/')}/{tag}-{uuid.uuid4().hex}"
+    leaf = f"{root.rstrip('/')}/{tag}-{uuid.uuid4().hex}"
+    _LEFT_BEHIND.leaves.append((spark, f"file:{leaf}" if local else leaf))
+    return leaf
+
+
+def track_cache(df: DataFrame) -> DataFrame:
+    """Record a persisted DataFrame for release by ``release_caches()``.
+
+    Contract: only track frames whose RECOMPUTE is deterministic (pure
+    transformations of the source tables). QuerySpec.run() unpersists
+    tracked frames before the NEXT query runs, so a consumer that collects a
+    prior result late re-triggers computation — a frame persisted to freeze
+    nondeterminism (a sample, un-seeded model scores) would silently return
+    different rows after release. Freeze-persist use cases need a written
+    artifact (see ensure_artifact), not a tracked cache."""
+    _LEFT_BEHIND.frames.append(df)
+    return df
+
+
+def _unpersist_frames() -> int:
+    """Unpersist every tracked frame; returns how many. A frame whose
+    SparkContext is stopped holds nothing left to release and is skipped;
+    any other unpersist error propagates."""
+    frames = _LEFT_BEHIND.frames
+    n = len(frames)
+    while frames:
+        df = frames.pop()
+        if df.sparkSession.sparkContext._jsc is not None:
+            df.unpersist()
+    return n
+
+
+def _delete_leaves() -> int:
+    """Delete every recorded scratch leaf; returns how many. A leaf that was
+    never written is not an error; any other delete failure propagates."""
+    leaves = _LEFT_BEHIND.leaves
+    n = len(leaves)
+    while leaves:
+        spark, leaf = leaves.pop()
+        jsc = spark.sparkContext._jsc
+        if jsc is None:
+            raise RuntimeError(f"cannot delete scratch leaf {leaf}: its SparkContext is stopped")
+        path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(leaf)
+        fs = path.getFileSystem(jsc.hadoopConfiguration())
+        if not fs.delete(path, True) and fs.exists(path):
+            raise OSError(f"could not delete scratch leaf {leaf}")
+    return n
+
+
+def release_caches() -> int:
+    """Free what query runs left behind: unpersist the tracked frames and
+    delete the scratch leaves. Call it once the results are consumed; returns
+    how many frames and leaves were freed."""
+    return _unpersist_frames() + _delete_leaves()
 
 
 def source_stamp(sf_dir: str, table: str) -> str:

@@ -710,8 +710,8 @@ def olap9_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CacheManager dedups by canonical plan, so repeated calls don't stack
     # copies; MEMORY_AND_DISK because a billion-part catalog may spill.
     # Lifetime: the returned plan still reads g, so we can't unpersist here
-    # — track_cache hands ownership to the harness, which releases it after
-    # consuming the result (registry.release_caches).
+    # — track_cache records it with what the run leaves behind (io), and the
+    # next QuerySpec.run or the harness's release_caches() unpersists it.
     from pyspark import StorageLevel
 
     from .registry import track_cache

@@ -853,7 +853,7 @@ def pipe11_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # persisted across the operator's bounds action and the main DAG;
-    # ownership handed to the harness (olap9's lifetime contract)
+    # recorded by track_cache and freed like olap9's (io's run record)
     d = track_cache(d.persist(StorageLevel.MEMORY_AND_DISK))
     cum = two_phase_prefix_sums(
         d,

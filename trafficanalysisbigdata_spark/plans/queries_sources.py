@@ -258,7 +258,7 @@ def s12_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust, os.path.join(base, "cust"), bucket_by=(8, ["o_custkey"]),
         table_name=ct,
     )
-    return (
+    out = (
         spark.table(ot)
         .join(spark.table(ct), "o_custkey")
         .groupBy("c_mktsegment")
@@ -270,6 +270,12 @@ def s12_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("c_mktsegment")
     )
+    # the bound frame keeps both relations and their bucket specs; dropping
+    # the uuid-named catalog entries keeps a long-lived session's catalog
+    # from growing by two tables a run (external tables: the files stay)
+    for t in (ot, ct):
+        spark.sql(f"DROP TABLE {t}")
+    return out
 
 
 @register(

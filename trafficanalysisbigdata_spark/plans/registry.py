@@ -23,45 +23,26 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import register_views
+from ..io import (  # noqa: F401  (release_caches, track_cache: re-exported)
+    _unpersist_frames,
+    register_views,
+    release_caches,
+    track_cache,
+)
 from ..session import prep
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 REGISTRY: dict[str, "QuerySpec"] = {}
 
-# DataFrames a query persisted to share work between its bounds action and
-# its returned plan (e.g. olap9's reduced catalog). They must outlive the
-# query function — the returned plan still reads them — so the query can't
-# unpersist; instead it registers them here and the harness (bench.py, the
-# verify sweep, test fixtures) releases them after consuming each result.
-_TRACKED_CACHES: list[DataFrame] = []
-
-
-def track_cache(df: DataFrame) -> DataFrame:
-    """Record a persisted DataFrame for later release via release_caches().
-
-    Contract: only track frames whose RECOMPUTE is deterministic (pure
-    transformations of the source tables). QuerySpec.run() auto-releases
-    tracked caches before the NEXT query runs, so a consumer that collects a
-    prior result late re-triggers computation — a frame persisted to freeze
-    nondeterminism (a sample, un-seeded model scores) would silently return
-    different rows after release. Freeze-persist use cases need a written
-    artifact (see io.ensure_artifact), not a tracked cache."""
-    _TRACKED_CACHES.append(df)
-    return df
-
-
-def release_caches() -> int:
-    """Unpersist every tracked cache; returns how many were released. A
-    frame whose SparkContext is stopped holds nothing left to release and
-    is skipped; any other unpersist error propagates."""
-    n = len(_TRACKED_CACHES)
-    while _TRACKED_CACHES:
-        df = _TRACKED_CACHES.pop()
-        if df.sparkSession.sparkContext._jsc is not None:
-            df.unpersist()
-    return n
+# What a query leaves behind is recorded in ``io``: the frames it persisted
+# to share work between its bounds action and its returned plan (olap9's
+# reduced catalog, pipe11's scored docs) and the scratch leaves its files live
+# in. Both must outlive the query function, since the returned plan still
+# reads them, so the query hands them to ``io.track_cache`` /
+# ``io.scratch_dir`` and the harness (bench.py, perfbench, the test session)
+# frees them with ``release_caches()`` after consuming each result. Both names
+# stay importable from here.
 
 # Modules that register queries on import (kept lazy so importing the package
 # root stays cheap).
@@ -100,13 +81,15 @@ class QuerySpec:
     tables: tuple[str, ...] = field(default_factory=tuple)
 
     def run(self, spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Release the PREVIOUS query's tracked caches: by the time the next
+        # Unpersist the PREVIOUS query's tracked frames: by the time the next
         # query starts, the prior result has been consumed by every harness
         # (driver sweep included — it collects before moving on), and
         # unpersist is correctness-neutral (the plan recomputes if re-read).
         # This closes the cache-lifetime gap for harnesses that never call
-        # release_caches() themselves, e.g. the external driver.
-        release_caches()
+        # release_caches() themselves, e.g. the external driver. Scratch
+        # leaves stay: a deleted file does not recompute, and a result
+        # collected after the next run still reads them.
+        _unpersist_frames()
         prep(spark)
         if self.tables:
             register_views(spark, sf_dir, *self.tables)

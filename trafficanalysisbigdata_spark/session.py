@@ -75,20 +75,33 @@ def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_tabd_pkg_shipped", False):
         return
+    import hashlib
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"trafficanalysisbigdata_spark_{os.getpid()}.zip"
+    sources = sorted(
+        os.path.join(dirpath, fn)
+        for dirpath, _dirs, files in os.walk(pkg_dir)
+        for fn in files
+        if fn.endswith(".py")
     )
-    with zipfile.ZipFile(zpath, "w") as z:
-        for dirpath, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    z.write(full, os.path.relpath(full, root))
+    digest = hashlib.sha256()
+    for full in sources:
+        digest.update(os.path.relpath(full, root).encode() + b"\0")
+        with open(full, "rb") as f:
+            digest.update(f.read())
+    # one zip per source version, shared by every process that ships it
+    zpath = os.path.join(
+        tempfile.gettempdir(), f"trafficanalysisbigdata_spark_{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(zpath):
+        tmp = f"{zpath}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as z:
+            for full in sources:
+                z.write(full, os.path.relpath(full, root))
+        os.replace(tmp, zpath)  # atomic: a concurrent reader never sees half a zip
     sc.addPyFile(zpath)
     sc._tabd_pkg_shipped = True
 
