@@ -23,7 +23,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import (  # noqa: F401  (release_caches, track_cache: re-exported)
+from ..io import (  # noqa: F401  (re-exported)
     _unpersist_frames,
     register_views,
     release_caches,
@@ -41,8 +41,8 @@ REGISTRY: dict[str, "QuerySpec"] = {}
 # in. Both must outlive the query function, since the returned plan still
 # reads them, so the query hands them to ``io.track_cache`` /
 # ``io.scratch_dir`` and the harness (bench.py, perfbench, the test session)
-# frees them with ``release_caches()`` after consuming each result. Both names
-# stay importable from here.
+# frees them with ``release_caches()`` after consuming each result.
+# ``track_cache`` and ``release_caches`` stay importable from here.
 
 # Modules that register queries on import (kept lazy so importing the package
 # root stays cheap).
