@@ -12,13 +12,26 @@ from trafficanalysisbigdata_spark.api import TrafficAnalytics
 from tests.test_ingest import ROWS
 
 
+def _write_pages(pages, rows, first: int = 0) -> None:
+    """``rows`` as two-row JSONL page files ``page-NNNNN.json``, numbered
+    from ``first``."""
+    pages.mkdir(exist_ok=True)
+    for i in range(0, len(rows), 2):
+        with open(pages / f"page-{first + i // 2:05d}.json", "w") as f:
+            for r in rows[i : i + 2]:
+                f.write(json.dumps(r) + "\n")
+
+
+def _write_jsonl(path, rows) -> str:
+    with open(path, "w") as f:
+        for r in rows:
+            f.write(json.dumps(r) + "\n")
+    return str(path)
+
+
 @pytest.fixture()
 def ta(spark, tmp_path):
-    p = tmp_path / "traffic.jsonl"
-    with open(p, "w") as f:
-        for r in ROWS:
-            f.write(json.dumps(r) + "\n")
-    return TrafficAnalytics.from_json(spark, str(p))
+    return TrafficAnalytics.from_json(spark, _write_jsonl(tmp_path / "traffic.jsonl", ROWS))
 
 
 def test_borough_totals_order_and_values(ta):
@@ -54,24 +67,106 @@ def test_dashboard_query_set_matches_contract(ta):
     assert totals["Queens"] == 208.0
 
 
+ANALYSES = ("borough_totals", "hourly_totals", "abnormal_days")
+
+
+def _results(ta) -> dict[str, list[tuple]]:
+    """The three pass analyses of ``ta``, each as sorted row tuples."""
+    return {a: sorted(map(tuple, getattr(ta, a)().collect()), key=repr) for a in ANALYSES}
+
+
 def test_from_paginated_equals_from_json(spark, tmp_path):
     """Both ingest constructors normalize to identical analysis results."""
-    pages = tmp_path / "api_pages"
-    pages.mkdir()
-    for i in range(0, len(ROWS), 2):
-        with open(pages / f"page-{i // 2:05d}.json", "w") as f:
-            for r in ROWS[i : i + 2]:
-                f.write(json.dumps(r) + "\n")
-    jsonl = tmp_path / "api_all.jsonl"
-    with open(jsonl, "w") as f:
-        for r in ROWS:
-            f.write(json.dumps(r) + "\n")
+    _write_pages(tmp_path / "api_pages", ROWS)
+    jsonl = _write_jsonl(tmp_path / "api_all.jsonl", ROWS)
 
-    via_pages = TrafficAnalytics.from_paginated(spark, str(pages))
-    via_json = TrafficAnalytics.from_json(spark, str(jsonl))
+    via_pages = TrafficAnalytics.from_paginated(spark, str(tmp_path / "api_pages"))
+    via_json = TrafficAnalytics.from_json(spark, jsonl)
     a = [(r.borough, float(r.total)) for r in via_pages.borough_totals().collect()]
     b = [(r.borough, float(r.total)) for r in via_json.borough_totals().collect()]
     assert a == b and a
+
+
+def test_from_paginated_fetches_once_per_instance(spark, tmp_path):
+    """One instance = one fetch: after a first action that reads one row,
+    the API's pages are deleted and replaced. The instance's analyses still
+    answer over the rows it fetched, and a fresh ``from_paginated`` answers
+    over the new pages."""
+    pages = tmp_path / "api_pages"
+    _write_pages(pages, ROWS)
+    ta = TrafficAnalytics.from_paginated(spark, str(pages))
+    assert len(ta.df.limit(1).collect()) == 1  # skips most pages; all are kept
+    for f in pages.iterdir():
+        f.unlink()
+    _write_pages(pages, ROWS[:2], first=100)
+
+    want_old = _results(TrafficAnalytics.from_json(spark, _write_jsonl(tmp_path / "old.jsonl", ROWS)))
+    want_new = _results(TrafficAnalytics.from_json(spark, _write_jsonl(tmp_path / "new.jsonl", ROWS[:2])))
+    assert want_old != want_new
+    assert _results(ta) == want_old
+    assert _results(TrafficAnalytics.from_paginated(spark, str(pages))) == want_new
+
+
+def test_from_paginated_analyses_read_the_fetched_copy(spark, tmp_path):
+    """Every analysis of a ``from_paginated`` instance scans the stored copy
+    (``Scan ExistingRDD``), never the paginated source. The twin runs the
+    same analyses over the source read directly and does plan its
+    ``BatchScan``, so the check can fail."""
+    from tests.plan_tree import nodes, plan_of
+    from trafficanalysisbigdata_spark.sources.traffic import normalize_traffic
+
+    _write_pages(tmp_path / "api_pages", ROWS)
+    ta = TrafficAnalytics.from_paginated(spark, str(tmp_path / "api_pages"))
+    raw = spark.read.format("paginated_json").load(str(tmp_path / "api_pages"))
+    twin = TrafficAnalytics.from_normalized(normalize_traffic(raw))
+
+    def scans(df) -> tuple[int, int]:
+        """(stored-copy scans, paginated-source scans) in ``df``'s plan."""
+        found = nodes(plan_of(df), "RDDScan", "BatchScan")
+        return (sum(n.text.startswith("Scan ExistingRDD") for n in found),
+                sum(n.text.startswith("BatchScan paginated_json") for n in found))
+
+    frames = [getattr(ta, a)() for a in ANALYSES] + list(ta.dashboard().values())
+    twins = [getattr(twin, a)() for a in ANALYSES] + list(twin.dashboard().values())
+    for df, tw in zip(frames, twins):
+        got, got_twin = scans(df), scans(tw)
+        assert got[0] >= 1 and got[1] == 0, got
+        assert got_twin[0] == 0 and got_twin[1] >= 1, got_twin
+
+
+def test_from_paginated_launches_no_job(spark, tmp_path):
+    """Building the instance is lazy: no job runs under its job group. The
+    first action does run jobs in that group, so the tracker sees them."""
+    _write_pages(tmp_path / "api_pages", ROWS)
+    sc = spark.sparkContext
+    group = "from-paginated-construction"
+    sc.setJobGroup(group, "from_paginated builds lazily")
+    try:
+        ta = TrafficAnalytics.from_paginated(spark, str(tmp_path / "api_pages"))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        ta.df.count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_fetched_copy_survives_release_caches(spark, tmp_path):
+    """The harness order: ingest's first action, ``release_caches()``, then
+    the analyses. The copy keeps its blocks, and the analyses answer over
+    the fetched rows even with the pages gone."""
+    from trafficanalysisbigdata_spark.operators.components import _stored_bytes
+    from trafficanalysisbigdata_spark.plans.registry import release_caches
+
+    pages = tmp_path / "api_pages"
+    _write_pages(pages, ROWS)
+    ta = TrafficAnalytics.from_paginated(spark, str(pages))
+    ta.df.count()
+    before = _results(ta)
+    release_caches()
+    for f in pages.iterdir():
+        f.unlink()
+    assert _stored_bytes(ta.df) > 0
+    assert _results(ta) == before
 
 
 def test_corpus_pipeline_facade_matches_registry(spark, sf_dir):

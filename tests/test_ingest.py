@@ -267,12 +267,15 @@ def test_paginated_datasource_filtered_scan_matches_rows(spark, tmp_path):
 
 
 def test_paginated_filter_does_not_leak_into_later_scans(spark, tmp_path):
-    """A filtered count on a from_paginated frame must not narrow later
+    """A filtered count on a paginated frame must not narrow later
     filter-free scans of the same frame (Spark 4.1 reuses the last reader
-    it pushed filters into, so a reader-side filter leaked into them)."""
+    it pushed filters into, so a reader-side filter leaked into them). The
+    frame reads the source directly: ``from_paginated`` scans its checkpoint
+    after the first action, which would hide the reader."""
     from pyspark.sql import functions as F
 
     from trafficanalysisbigdata_spark.api import TrafficAnalytics
+    from trafficanalysisbigdata_spark.sources.paginated import PaginatedJsonDataSource
 
     pages = tmp_path / "pages"
     pages.mkdir()
@@ -281,7 +284,10 @@ def test_paginated_filter_does_not_leak_into_later_scans(spark, tmp_path):
             for r in ROWS[i : i + 3]:
                 f.write(json.dumps(r) + "\n")
 
-    ta = TrafficAnalytics.from_paginated(spark, str(pages))
+    prep(spark)
+    spark.dataSource.register(PaginatedJsonDataSource)
+    raw = spark.read.format("paginated_json").load(str(pages))
+    ta = TrafficAnalytics.from_normalized(normalize_traffic(raw))
     assert ta.df.filter(F.col("borough") == "Queens").count() == 3
     assert ta.df.count() == 5
     dash = ta.dashboard()

@@ -313,7 +313,8 @@ def s13_sorted_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-run path: the scratch rule in the io module docstring
     path = scratch_dir(spark, "s13")
     write_sorted(ev, path, "ts", n_files=8)
-    back = spark.read.parquet(path)
+    # the layout holds ev's columns: a known schema skips the footer-read job
+    back = spark.read.schema(ev.schema).parquet(path)
     lo = ev.agg(F.min("ts").alias("t0"))
     windowed = (
         back.crossJoin(F.broadcast(lo))

@@ -24,6 +24,15 @@ polling refetch loop into a checkpointed Structured Streaming source:
 offsets count consumed pages, new pages are picked up per micro-batch, and
 committed ranges replay deterministically after restart — exactly-once,
 proven in tests/test_ingest.py.
+
+Every scan of a batch read fetches the pages again. The facade
+(``api.TrafficAnalytics.from_paginated``) makes one fetch per instance: it
+local-checkpoints the normalized frame lazily, so the first action fetches
+each page once and later analyses read the stored blocks. The copy is freed
+by Spark's ContextCleaner once no frame of the instance is reachable; a lost
+executor fails the query rather than re-fetching pages that may have
+changed. It is not ``cache()``: the CacheManager matches plans, so a later
+read of the same directory could be served the earlier pages.
 """
 
 from __future__ import annotations
