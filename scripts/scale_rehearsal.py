@@ -37,10 +37,13 @@ Usage: ``python scripts/scale_rehearsal.py <mode> [op-prefix ...]`` — one
 mode of ``MODES`` per invocation (each fits a CI timeout); op prefixes keep
 only the operators whose names start with one of them (a fault-isolated
 rerun of one member). Every op is timed by ``_time`` and measures the
-shipped code path, never a hand-copied variant. Corpora are cached under
-``BASE`` (``_corpus``); a run's checkpoints, state roots and staged pair
-lists go under one ``BASE`` leaf deleted at exit. Each mode prints one JSON
-line; the numbers land in BENCH_LOCAL.md.
+shipped code path, never a hand-copied variant. Corpora and sim8m's index
+are cached under ``BASE`` through ``io.ensure_artifact`` (``_corpus``), so a
+killed generation is never read back; the earlier mutable cache root,
+``/tmp/spark_graft_rehearsal``, is inert and safe to delete. A run's
+checkpoints, state roots and staged pair lists go under one ``BASE`` leaf
+deleted at exit. Each mode prints one JSON line; the numbers land in
+BENCH_LOCAL.md.
 """
 
 from __future__ import annotations
@@ -63,7 +66,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from trafficanalysisbigdata_spark.io import DEFAULT_SF_DIR, SCRATCH_DIR_CONF
+from trafficanalysisbigdata_spark.io import DEFAULT_SF_DIR, SCRATCH_DIR_CONF, ensure_artifact
 from trafficanalysisbigdata_spark.operators import components
 from trafficanalysisbigdata_spark.operators import dedup as dd
 from trafficanalysisbigdata_spark.operators import multimodal as mm
@@ -82,7 +85,7 @@ from trafficanalysisbigdata_spark.streaming.upsert import (
 )
 from trafficanalysisbigdata_spark.streaming.windows import watermarked_tumbling_hourly
 
-BASE = "/tmp/spark_graft_rehearsal"
+BASE = "/tmp/spark_graft_keyed_rehearsal"
 SF01_DIR = DEFAULT_SF_DIR  # the sf0.1 fixtures joins/sqlsf1 amplify
 N_SMALL = 5_000
 SCALE = 10
@@ -305,7 +308,6 @@ def _amplify(spark, path: str, copies: int, keyed: dict, verbatim: tuple = ()) -
         ).parquet(f"{path}/{name}.parquet")
     for name in verbatim:
         shutil.copyfile(f"{SF01_DIR}/{name}.parquet", f"{path}/{name}.parquet")
-    open(f"{path}/_SUCCESS", "w").close()
 
 
 def gen_join_facts(spark, copies: int, path: str) -> None:
@@ -346,14 +348,16 @@ _GENERATORS = {
 
 
 def _corpus(spark, kind: str, n: int) -> str:
-    """Path of the cached ``kind`` corpus of size ``n`` (rows, or sf0.1
-    copies for facts/tpch) at ``BASE/<kind>_<n>``, generated on first use."""
-    path = f"{BASE}/{kind}_{n}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
+    """Directory of the cached ``kind`` corpus of size ``n`` (rows, or sf0.1
+    copies for facts/tpch), published for ``BASE/<kind>_<n>`` by
+    ``io.ensure_artifact`` on first use."""
+
+    def gen(path: str) -> None:
         t0 = time.perf_counter()
         _GENERATORS[kind](spark, n, path)
         _say(f"  gen {kind}_{n}: {time.perf_counter() - t0:.1f}s")
-    return path
+
+    return ensure_artifact(f"{BASE}/{kind}_{n}", f"{kind}|{n}", gen)
 
 
 def _read(spark, kind: str, n: int) -> DataFrame:
@@ -462,11 +466,13 @@ def _twin_recall(spark, n: int, pairs: DataFrame) -> tuple[float, int]:
 def _sim8_indexed(spark, emb, n_vecs: int, n_clusters: int):
     """Thunk: query the persisted hash-IVF index (built once per corpus,
     outside the timed region — the amortized production lifecycle)."""
-    index_dir = f"{BASE}/hivf_{n_vecs}_k{n_clusters}"
 
     def run():
-        if not os.path.exists(f"{index_dir}/centroids/_SUCCESS"):
-            sim.build_hash_ivf_index(emb, index_dir, n_clusters=n_clusters)
+        index_dir = ensure_artifact(
+            f"{BASE}/hivf_{n_vecs}_k{n_clusters}",
+            f"hivf|{n_vecs}|{n_clusters}",
+            lambda d: sim.build_hash_ivf_index(emb, d, n_clusters=n_clusters),
+        )
         probes = emb.filter(F.col("vec_id") < 50)
         return sim.hash_ivf_topk_indexed(spark, index_dir, probes, k=5, n_probe=4)
 

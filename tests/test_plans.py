@@ -472,6 +472,19 @@ def test_tx9_strategies_identical_and_big_path_joins(plan):
     assert not nodes(plan, "Window")
 
 
+def test_tx9_count_gate_picks_the_df_join_arm(spark, sf_dir, monkeypatch):
+    """tx9's corpus count alone picks its arm: the fixture corpus plans the
+    postings window, and with ``BOILERPLATE_DF_JOIN_DOCS`` at 0 the same
+    registered query plans the DF join on the shingle instead."""
+    from trafficanalysisbigdata_spark.plans import queries_text
+
+    window = _plan("tx9_boilerplate_share", spark, sf_dir)
+    assert nodes(window, "Window") and not joins(window, keyed_on="shingle")
+    monkeypatch.setattr(queries_text, "BOILERPLATE_DF_JOIN_DOCS", 0)
+    joined = _plan("tx9_boilerplate_share", spark, sf_dir)
+    assert joins(joined, keyed_on="shingle") and not nodes(joined, "Window")
+
+
 @guard("tx16_winnowing_fingerprints", twin="dd11_cdc_chunk_dedup")
 def test_tx16_winnow_is_codegen_window_not_lambda(plan):
     """tx16: winnowing is ONE posexplode (r14: it was replicated into three

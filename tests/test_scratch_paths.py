@@ -3,6 +3,12 @@
 operators/ or streaming/ may pick a path itself: no ``tempfile`` import and no
 read of ``spark.sql.warehouse.dir``.
 
+One rule decides when a fit-once directory is complete: it exists, because
+``io.ensure_artifact`` renames a finished build into place. No engine module
+or script writes or checks a ``_STAMP`` or ``_SUCCESS`` marker of its own;
+``streaming/upsert.py`` is the exception, as its versioned state directories
+are published by Spark's committer, a different contract.
+
 What a query leaves behind has one owner too: every frame a module under
 plans/, operators/ or streaming/ persists is handed straight to
 ``track_cache``, so ``release_caches()`` frees it with the run's scratch
@@ -16,7 +22,10 @@ it runs on its own ``newSession()``, where those views do not exist."""
 from __future__ import annotations
 
 import ast
+import inspect
 import pathlib
+
+from trafficanalysisbigdata_spark.io import ensure_artifact
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "trafficanalysisbigdata_spark"
 MODULES = sorted(
@@ -131,3 +140,52 @@ def test_check_flags_persists_outside_track_cache():
         "e = registry.track_cache(df.cache())\n"
     )
     assert _untracked_persists(ast.parse(src)) == [2, 3, 4]
+
+
+MARKER_SOURCES = sorted(
+    p
+    for p in [*PKG.rglob("*.py"), *(PKG.parent / "scripts").glob("*.py")]
+    if p != PKG / "streaming" / "upsert.py"
+)
+
+
+def _completion_markers(tree: ast.AST) -> list[int]:
+    """Lines of string constants naming ``_STAMP`` or ``_SUCCESS``,
+    docstrings excluded."""
+    docs = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+    }
+    return sorted(
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and id(n) not in docs
+        and ("_STAMP" in n.value or "_SUCCESS" in n.value)
+    )
+
+
+def test_fit_once_completeness_has_one_rule():
+    assert len(MARKER_SOURCES) > len(MODULES)
+    offenders = {
+        str(p): found
+        for p in MARKER_SOURCES
+        if (found := _completion_markers(ast.parse(p.read_text(), str(p))))
+    }
+    assert not offenders, f"publish fit-once output with io.ensure_artifact: {offenders}"
+    assert list(inspect.signature(ensure_artifact).parameters) == ["path", "stamp", "build"]
+
+
+def test_check_flags_hand_written_markers():
+    src = (
+        'def gen(path):\n'
+        '    """Writes ``_SUCCESS`` when done."""\n'
+        '    open(f"{path}/_SUCCESS", "w").close()\n'
+        'def fresh(path):\n'
+        '    return os.path.exists(os.path.join(path, "_STAMP"))\n'
+    )
+    assert _completion_markers(ast.parse(src)) == [3, 5]

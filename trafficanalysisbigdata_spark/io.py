@@ -35,22 +35,39 @@ through the session's Hadoop ``FileSystem`` (the record keeps such a leaf
 qualified as ``file:``), so a non-local warehouse is freed the same way.
 
 Fit-once artifacts (``ensure_artifact``) are different: fitted models and
-indexes that a DuckDB oracle reads by literal path. They live at static
-driver-local paths under ``ARTIFACT_ROOT`` and are rebuilt only when their
-source stamp changes or a write was torn.
+indexes that a DuckDB oracle reads by literal path. One rule publishes them:
+a build writes into a fresh ``.tmp-<uuid>`` directory beside its target and
+is renamed into ``<path>.d/<key>``, the key a digest of the stamp, so a key
+directory that exists is complete and never changes. Builds of one key race
+safely: the loser of the rename deletes its copy and uses the winner's. The
+Spark side reads the returned key directory; ``<path>`` itself is a symlink,
+swapped atomically to the key of the latest call, for the oracle SQL that
+names it. Each ``<path>.d/`` keeps the ``ARTIFACT_KEEP`` most recently used
+keys, so alternating scale factors reuse theirs. The limit: there is one
+link per artifact kind under ``ARTIFACT_ROOT``, so one per host with the
+default temp dir, and two drivers on two scale factors at once still contend
+for it: each Spark side reads its own key, but an oracle reads whichever key
+was linked last. The artifacts live under ``ARTIFACT_ROOT`` on the driver's
+local filesystem; the root of the earlier layout, one mutable directory per
+kind under ``<tempdir>/spark_graft_artifacts``, is inert and safe to delete.
 """
 
 from __future__ import annotations
 
+import errno
+import hashlib
 import os
+import shutil
 import tempfile
 import uuid
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import session
 
 TABLES = (
     "region",
@@ -79,7 +96,9 @@ SCRATCH_DIR_CONF = "spark.trafficanalysisbigdata.scratchDir"
 # Root of the fit-once artifacts: oracle SQL interpolates paths under it as
 # literals, so it is fixed at import time and stays on the driver's local
 # filesystem, where DuckDB reads it.
-ARTIFACT_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_artifacts")
+ARTIFACT_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_keyed_artifacts")
+# Keys kept per artifact path, the most recently used first.
+ARTIFACT_KEEP = 4
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -166,40 +185,51 @@ def release_caches() -> int:
 
 
 def source_stamp(sf_dir: str, table: str) -> str:
-    """Cheap content fingerprint of a fixture table: path, mtime and size, so
-    a regenerated table at the same path does not serve a stale artifact."""
+    """The stamp of an engine artifact fitted on a fixture table:
+    ``session.package_digest()`` plus the table's path, mtime and size, so an
+    edited fit or a regenerated table at the same path never serves a stale
+    artifact."""
     try:
         st = os.stat(table_path(sf_dir, table))
     except OSError:
-        return f"{sf_dir}|nostat"
-    return f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
+        return f"{session.package_digest()}|{sf_dir}|nostat"
+    return f"{session.package_digest()}|{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
 
 
-def ensure_artifact(
-    path: str,
-    stamp: str,
-    build: Callable[[str], None],
-    parts: Iterable[str] = ("",),
-) -> str:
-    """Fit-once cache: ``build(path)`` runs only when the artifact at ``path``
-    is not complete for ``stamp``. Complete means ``_STAMP`` holds ``stamp``
-    and every part (a subdirectory of ``path``; ``""`` is ``path`` itself) has
-    a ``_SUCCESS`` marker. The old stamp is removed before a build and the new
-    one written after it, so a torn build is never served under any stamp."""
-    stamp_path = os.path.join(path, "_STAMP")
+def ensure_artifact(path: str, stamp: str, build: Callable[[str], None]) -> str:
+    """Fit-once cache (see the module docstring): the complete, immutable
+    directory for ``stamp``, ``<path>.d/<sha256(stamp)[:16]>``, running
+    ``build(tmp)`` only when it does not exist yet. A build that raises
+    leaves nothing behind. ``path`` is repointed to the returned directory,
+    and the ``ARTIFACT_KEEP`` most recently used keys are kept."""
+    keys = f"{path}.d"
+    key = os.path.join(keys, hashlib.sha256(stamp.encode()).hexdigest()[:16])
     try:
-        with open(stamp_path) as f:
-            fresh = f.read() == stamp
-    except OSError:
-        fresh = False
-    if fresh and all(os.path.exists(os.path.join(path, p, "_SUCCESS")) for p in parts):
-        return path
-    if os.path.exists(stamp_path):
-        os.remove(stamp_path)
-    build(path)
-    with open(stamp_path, "w") as f:
-        f.write(stamp)
-    return path
+        os.utime(key)  # exists, so complete; the touch orders retention
+    except FileNotFoundError:
+        tmp = os.path.join(keys, f".tmp-{uuid.uuid4().hex}")
+        os.makedirs(tmp)
+        try:
+            build(tmp)
+            os.rename(tmp, key)
+        except OSError as e:  # a concurrent build of this key renamed first
+            if e.errno not in (errno.ENOTEMPTY, errno.EEXIST) or not os.path.isdir(key):
+                raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    link = f"{path}.lnk-{uuid.uuid4().hex}"
+    os.symlink(os.path.relpath(key, os.path.dirname(path)), link)
+    os.replace(link, path)
+
+    def recency(name: str) -> tuple[bool, int]:
+        try:
+            return name != os.path.basename(key), -os.stat(os.path.join(keys, name)).st_mtime_ns
+        except FileNotFoundError:  # pruned by a concurrent call
+            return True, 0
+
+    for name in sorted(os.listdir(keys), key=recency)[ARTIFACT_KEEP:]:
+        shutil.rmtree(os.path.join(keys, name), ignore_errors=True)
+    return key
 
 
 def fan_out_small_scan(df: DataFrame, key_col: str) -> DataFrame:

@@ -55,9 +55,9 @@ from .registry import register
 
 _EN = ", ".join(f"'{w}'" for w in EN_STOP)
 
-# Static artifact paths: the oracle SQL names them as literals. The stamp
-# keeps each correct across SFs sharing the path — the Spark side always
-# (re)builds for ITS sf_dir before the oracle runs.
+# Static artifact paths: the oracle SQL names them as literals. Each is a
+# link that ensure_artifact points at the key for the latest sf_dir, so the
+# oracle run after a query reads what that query's Spark side read.
 _CONF_DIR = os.path.join(ARTIFACT_ROOT, "mlx", "volume_confusion")
 _RESID_DIR = os.path.join(ARTIFACT_ROOT, "mlx", "rf_residuals")
 _IMP_DIR = os.path.join(ARTIFACT_ROOT, "mlx", "rf_importances")
@@ -67,14 +67,13 @@ _GBT_DIR = os.path.join(ARTIFACT_ROOT, "mlx", "gbt_residuals")
 def _fit_once(
     spark: SparkSession, sf_dir: str, path: str, rows: Callable[[], DataFrame]
 ) -> DataFrame:
-    """Read the single-file artifact ``rows()`` persists at ``path``, fitting
-    it only when the events stamp changed or the last write was torn."""
+    """Read the single-file artifact ``rows()`` persists for ``path``,
+    fitting it only when no artifact exists for the events stamp."""
 
     def build(out: str) -> None:
         rows().coalesce(1).write.mode("overwrite").parquet(out)
 
-    ensure_artifact(path, source_stamp(sf_dir, "events"), build)
-    return spark.read.parquet(path)
+    return spark.read.parquet(ensure_artifact(path, source_stamp(sf_dir, "events"), build))
 
 
 # --- mlx1: M3 volume-class label derivation ---------------------------------

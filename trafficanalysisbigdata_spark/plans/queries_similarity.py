@@ -9,7 +9,6 @@ give an approximate index.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -203,21 +202,25 @@ def sim5_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, probes, k=5, n_clusters=16, n_probe=6)
 
 
-# A persisted IVF index is complete once both of its parquet parts commit.
-_INDEX_PARTS = ("assignments", "centroids")
+# Static index paths, one per kind: the k-means index of sim6 and
+# sim5x/sim6x, and sim8's hash index. Each is the link ensure_artifact
+# repoints; the Spark side reads the key directory it returns.
+_KIVF_DIR = os.path.join(ARTIFACT_ROOT, "kivf")
+_HIVF_DIR = os.path.join(ARTIFACT_ROOT, "hivf")
 
 
 def _ensure_index(path: str, sf_dir: str, build) -> str:
-    """``path``, holding the persisted IVF index over ``sf_dir``'s embeddings
-    that ``build(path)`` writes, built once per source stamp."""
-    return ensure_artifact(path, source_stamp(sf_dir, "embeddings"), build, _INDEX_PARTS)
+    """The directory holding the persisted IVF index over ``sf_dir``'s
+    embeddings that ``build(dir)`` writes, built once per source stamp."""
+    return ensure_artifact(path, source_stamp(sf_dir, "embeddings"), build)
 
 
-def _keyed_index_dir(kind: str, sf_dir: str) -> str:
-    """An index path keyed on the source stamp, so the indexes of different
-    fixtures coexist (sim6/sim8: no oracle reads these paths)."""
-    key = hashlib.md5(source_stamp(sf_dir, "embeddings").encode()).hexdigest()[:12]
-    return os.path.join(ARTIFACT_ROOT, f"{kind}_{key}")
+def _ensure_kivf_index(spark: SparkSession, sf_dir: str) -> str:
+    """The directory of the PRODUCTION k-means index (``build_ivf_index``:
+    seed-pinned fit + partitioned-by-cl assignments + centroids), with
+    ``_KIVF_DIR`` linked to it."""
+    emb = spark.table("embeddings")
+    return _ensure_index(_KIVF_DIR, sf_dir, lambda d: build_ivf_index(emb, d, n_clusters=16))
 
 
 @register(
@@ -231,18 +234,13 @@ def sim6_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sim5 against a PERSISTED index: the k-means fit runs once into
     ``build_ivf_index`` (assignments parquet partitioned by cluster id +
     centroids), and the query reads the index — no fit stage, and the scan
-    touches only probed ``cl=`` partitions. Index builds lazily per sf_dir
-    (keyed by source stamp) the first time the query runs; reruns are pure
+    touches only probed ``cl=`` partitions. Index builds lazily per source
+    stamp (``ensure_artifact``) the first time the query runs; reruns are pure
     queries, which is the production IVF lifecycle."""
     from ..operators.similarity import ivf_topk_indexed
 
-    emb = spark.table("embeddings")
-    index_dir = _ensure_index(
-        _keyed_index_dir("ivf", sf_dir),
-        sf_dir,
-        lambda d: build_ivf_index(emb, d, n_clusters=16),
-    )
-    probes = emb.filter(F.col("vec_id") < 10)
+    index_dir = _ensure_kivf_index(spark, sf_dir)
+    probes = spark.table("embeddings").filter(F.col("vec_id") < 10)
     return ivf_topk_indexed(spark, index_dir, probes, k=5, n_probe=6)
 
 
@@ -488,9 +486,7 @@ def sim8_hash_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = spark.table("embeddings")
     index_dir = _ensure_index(
-        _keyed_index_dir("hivf", sf_dir),
-        sf_dir,
-        lambda d: build_hash_ivf_index(emb, d, n_clusters=16),
+        _HIVF_DIR, sf_dir, lambda d: build_hash_ivf_index(emb, d, n_clusters=16)
     )
     probes = emb.filter(F.col("vec_id") < 10)
     return hash_ivf_topk_indexed(spark, index_dir, probes, k=5, n_probe=4)
@@ -656,18 +652,11 @@ def sim10_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # FIT itself has no ANSI twin (the reason sim5/sim6 are rows-only), but the
 # fitted index IS a parquet artifact, and everything downstream of it —
 # cell membership, the distance shortlist, the in-cell cosine re-rank —
-# is deterministic and SQL-expressible. Persist the index ONCE under a
-# STATIC path (stamp-cached on the source parquet), then register the
-# consuming stages whose oracles read the SAME artifact. Only the raw fit
-# remains range-gated (tests/test_similarity.py recall bars).
-_KIVF_DIR = os.path.join(ARTIFACT_ROOT, "kivf")
-
-
-def _ensure_kivf_index(spark: SparkSession, sf_dir: str) -> None:
-    """The PRODUCTION k-means index (``build_ivf_index``: seed-pinned fit +
-    partitioned-by-cl assignments + centroids) at the static path."""
-    emb = spark.table("embeddings")
-    _ensure_index(_KIVF_DIR, sf_dir, lambda d: build_ivf_index(emb, d, n_clusters=16))
+# is deterministic and SQL-expressible. The index persists ONCE per source
+# stamp (ensure_artifact); the Spark side reads the returned key directory,
+# the oracles read the STATIC ``_KIVF_DIR`` link, repointed to that key by
+# the same call. Only the raw fit remains range-gated
+# (tests/test_similarity.py recall bars).
 
 
 @register(
@@ -693,8 +682,7 @@ def sim5x_kmeans_cell_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputation bug desyncs the hash; only the fit's internal math stays
     range-gated. Scale posture: one partial/final agg over the partitioned
     index — the same layout a 100 TB corpus queries through DPP (sim6)."""
-    _ensure_kivf_index(spark, sf_dir)
-    a = spark.read.parquet(f"{_KIVF_DIR}/assignments")
+    a = spark.read.parquet(f"{_ensure_kivf_index(spark, sf_dir)}/assignments")
     return (
         a.groupBy(F.col("cl").cast("int").alias("cl"))
         .agg(
@@ -760,6 +748,6 @@ def sim6x_kmeans_query_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (``ivf_topk_indexed``), dynamic-partition-pruned on cl."""
     from ..operators.similarity import ivf_topk_indexed
 
-    _ensure_kivf_index(spark, sf_dir)
+    index_dir = _ensure_kivf_index(spark, sf_dir)
     probes = spark.table("embeddings").filter(F.col("vec_id") < 10)
-    return ivf_topk_indexed(spark, _KIVF_DIR, probes, k=5, n_probe=6)
+    return ivf_topk_indexed(spark, index_dir, probes, k=5, n_probe=6)

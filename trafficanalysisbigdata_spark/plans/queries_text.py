@@ -362,12 +362,17 @@ def tx9_boilerplate_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs1m rehearsal caught the hot-shingle task materializing), where the
     DF-table formulation (groupBy shingle = map-side partial agg, then an
     equi join AQE can skew-split and broadcast-when-small) stays linear.
-    The strategy auto-switches on corpus count at 200k docs — the count()
+    The strategy auto-switches on corpus count above
+    ``BOILERPLATE_DF_JOIN_DOCS`` (200k docs) — the count()
     is a parquet-metadata-cheap action, the same adaptivity discipline as
     dd5's two-level crossover (k >= 200). Both paths share every expression
     and are pinned identical in tests/test_plans.py."""
     docs = spark.table("documents")
-    return boilerplate_share_report(docs, docs.count() > 200_000)
+    return boilerplate_share_report(docs, docs.count() > BOILERPLATE_DF_JOIN_DOCS)
+
+
+# tx9's strategy switch: corpora above this many docs take the DF-join arm
+BOILERPLATE_DF_JOIN_DOCS = 200_000
 
 
 def boilerplate_share_report(docs: DataFrame, big_corpus: bool) -> DataFrame:

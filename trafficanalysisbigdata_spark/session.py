@@ -10,8 +10,13 @@ drivers.
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
+import tempfile
 import warnings
+import zipfile
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
@@ -64,6 +69,27 @@ def get_session(app_name: str = "trafficanalysisbigdata_spark") -> SparkSession:
     return spark
 
 
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def _package_sources() -> list[str]:
+    return sorted(glob.glob(os.path.join(_PKG_DIR, "**", "*.py"), recursive=True))
+
+
+@functools.cache
+def package_digest() -> str:
+    """sha256 over this package's ``.py`` sources (relative path and bytes),
+    hashed once per process: it names the shipped worker zip and is part of
+    every engine artifact's stamp (``io.source_stamp``), so an edited fit
+    rebuilds its artifact."""
+    digest = hashlib.sha256()
+    for full in _package_sources():
+        digest.update(os.path.relpath(full, os.path.dirname(_PKG_DIR)).encode() + b"\0")
+        with open(full, "rb") as f:
+            digest.update(f.read())
+    return digest.hexdigest()
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on Python workers.
 
@@ -75,32 +101,15 @@ def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_tabd_pkg_shipped", False):
         return
-    import hashlib
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    sources = sorted(
-        os.path.join(dirpath, fn)
-        for dirpath, _dirs, files in os.walk(pkg_dir)
-        for fn in files
-        if fn.endswith(".py")
-    )
-    digest = hashlib.sha256()
-    for full in sources:
-        digest.update(os.path.relpath(full, root).encode() + b"\0")
-        with open(full, "rb") as f:
-            digest.update(f.read())
     # one zip per source version, shared by every process that ships it
     zpath = os.path.join(
-        tempfile.gettempdir(), f"trafficanalysisbigdata_spark_{digest.hexdigest()[:16]}.zip"
+        tempfile.gettempdir(), f"trafficanalysisbigdata_spark_{package_digest()[:16]}.zip"
     )
     if not os.path.exists(zpath):
         tmp = f"{zpath}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as z:
-            for full in sources:
-                z.write(full, os.path.relpath(full, root))
+            for full in _package_sources():
+                z.write(full, os.path.relpath(full, os.path.dirname(_PKG_DIR)))
         os.replace(tmp, zpath)  # atomic: a concurrent reader never sees half a zip
     sc.addPyFile(zpath)
     sc._tabd_pkg_shipped = True
