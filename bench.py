@@ -105,7 +105,7 @@ BENCH_QUERIES = [
     "pipe6_sequence_pack",
     "a15_quantiles",
     "tx11_repetition_filter",
-    "sim6_ivf_indexed_topk",
+    "sim6x_kmeans_query_stage",
     "st6_stream_static_enrich",
     "mm8_perceptual_neardup",
     "s13_sorted_layout_scan",

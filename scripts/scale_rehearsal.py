@@ -66,7 +66,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from trafficanalysisbigdata_spark.io import DEFAULT_SF_DIR, SCRATCH_DIR_CONF, ensure_artifact
+from bench import SF_DIR as SF01_DIR  # the sf0.1 fixtures joins/sqlsf1 amplify
+from trafficanalysisbigdata_spark.io import SCRATCH_DIR_CONF, ensure_artifact
 from trafficanalysisbigdata_spark.operators import components
 from trafficanalysisbigdata_spark.operators import dedup as dd
 from trafficanalysisbigdata_spark.operators import multimodal as mm
@@ -86,7 +87,6 @@ from trafficanalysisbigdata_spark.streaming.upsert import (
 from trafficanalysisbigdata_spark.streaming.windows import watermarked_tumbling_hourly
 
 BASE = "/tmp/spark_graft_keyed_rehearsal"
-SF01_DIR = DEFAULT_SF_DIR  # the sf0.1 fixtures joins/sqlsf1 amplify
 N_SMALL = 5_000
 SCALE = 10
 DIM = 64
@@ -420,7 +420,7 @@ def _dd6(docs):
 
 
 def _dd7(docs):
-    return dd.duplicate_span_stats(docs, n=5).agg(
+    return dd.duplicate_span_stats(docs).agg(
         F.count(F.lit(1)).alias("n"), F.round(F.avg("dup_frac"), 4).alias("avg_frac")
     )
 
@@ -496,7 +496,7 @@ def _drain(df: DataFrame, mode: str = "append", batch=None) -> None:
 def _upsert(spark, src: str, state_root: str) -> None:
     """st11's sink: the shipped keyed-upsert foreachBatch writer (decimal
     sums, ``_SUCCESS``-gated versions, retention at 3)."""
-    _drain(_stream(spark, src), batch=keyed_upsert_batch(state_root, keep_versions=3))
+    _drain(_stream(spark, src), batch=keyed_upsert_batch(state_root))
 
 
 # --- modes -------------------------------------------------------------------
@@ -520,9 +520,7 @@ def run_family(spark, sizes: dict, ops: tuple) -> dict:
             .groupBy("simhash")
             .agg(F.count(F.lit(1)).alias("n"))
             .agg(F.count(F.lit(1)).alias("groups")),
-            "dd4_ngram_jaccard": lambda: dd.ngram_jaccard_scores(
-                docs, max_df_frac=0.05, max_df_abs=256
-            )
+            "dd4_ngram_jaccard": lambda: dd.ngram_jaccard_scores(docs)
             .filter(F.col("jaccard") >= 0.25)
             .agg(F.count(F.lit(1)).alias("n")),
             "dd5_centroid_dedup": lambda: _dd5(emb, n),
@@ -846,7 +844,7 @@ def run_st11_deep(spark, sizes: dict, ops: tuple) -> dict:
     ``_SUCCESS`` listing costs could start to show if the state were secretly
     proportional to stream history instead of the key set. Receipts: wall +
     rows/s per decade, final complete-version count (retention must hold it
-    at keep_versions), and the final state's key count."""
+    at ``KEEP_VERSIONS``), and the final state's key count."""
     results = {}
     for tag, n in sizes.items():
         src = _corpus(spark, "stream", n)

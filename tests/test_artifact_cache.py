@@ -165,6 +165,19 @@ def test_retention_keeps_the_newest_keys_and_the_current_one(tmp_path):
     assert os.path.basename(key) in _entries(path) and _linked(path) == key
 
 
+def test_retention_spares_builds_in_flight(tmp_path):
+    """A ``.tmp-`` directory may be a concurrent build that has not renamed
+    yet: pruning it would make that build fail, as it can in the 5-worker
+    race above."""
+    path, build = str(tmp_path / "model"), CountingBuild()
+    in_flight = os.path.join(f"{path}.d", ".tmp-in-flight")
+    os.makedirs(in_flight)
+    for i in range(ARTIFACT_KEEP + 2):
+        ensure_artifact(path, f"v{i}", build)
+    assert os.path.isdir(in_flight)
+    assert len(_entries(path)) == ARTIFACT_KEEP + 1
+
+
 def test_source_stamp_tracks_the_table_file(tmp_path):
     table = tmp_path / "events.parquet"
     table.write_bytes(b"one")

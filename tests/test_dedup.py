@@ -177,7 +177,7 @@ def test_dup_span_scrub_planted_edges(spark):
     )
     got = {
         r.doc_id: (r.n_tokens, r.n_kept, r.clean_md5)
-        for r in dup_span_scrub(docs, n=5).collect()
+        for r in dup_span_scrub(docs).collect()
     }
     exp = reference(texts)
     assert got == exp

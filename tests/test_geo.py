@@ -1,11 +1,9 @@
-"""EPSG:2263 ↔ WGS84 reprojection (F18/U4).
+"""EPSG:2263 ↔ WGS84 reprojection (F18).
 
-No pyproj in this container, so correctness rests on three independent
-legs: forward∘inverse roundtrip closes to sub-millifoot, results land in
-the real NYC lat/lon envelope for the state-plane input envelope, and the
-pandas UDF path (pyproj when present, numpy closed form otherwise) agrees
-with the Catalyst column math. The f18 oracle-parity test adds the
-cross-engine check on the same math.
+The Catalyst inverse rests on independent legs: forward∘inverse roundtrip
+closes to sub-millifoot, results land in the real NYC lat/lon envelope for
+the state-plane input envelope, and the projection origin maps exactly.
+The f18 oracle-parity test adds the cross-engine check on the same math.
 """
 
 from __future__ import annotations
@@ -53,21 +51,3 @@ def test_known_anchor_point(spark):
     r = df.collect()[0]
     assert abs(r.lon - (-74.0)) < 1e-9
     assert abs(r.lat - (40.0 + 10.0 / 60.0)) < 1e-9
-
-
-def test_udf_matches_column_math(spark):
-    prep(spark)
-    pts = [(i, 930000.0 + 997.0 * i, 130000.0 + 991.0 * i) for i in range(100)]
-    df = spark.createDataFrame(pts, "id long, x_ft double, y_ft double")
-    udf = geo.reproject_udf()
-    both = df.select(
-        "id",
-        geo.epsg2263_lon(F.col("x_ft"), F.col("y_ft")).alias("lon_col"),
-        geo.epsg2263_lat(F.col("x_ft"), F.col("y_ft")).alias("lat_col"),
-        udf(F.col("x_ft"), F.col("y_ft")).alias("p"),
-    ).collect()
-    for r in both:
-        # pyproj (datum-aware) vs closed form agree to ~1e-9°; the numpy
-        # fallback is the identical formula so it agrees to float noise
-        assert abs(r.p.lon - r.lon_col) < 1e-6, r
-        assert abs(r.p.lat - r.lat_col) < 1e-6, r

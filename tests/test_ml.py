@@ -143,41 +143,6 @@ def test_m8_quality_filter(spark, sf_dir):
     assert 0.0 < r["keep_rate"] <= 1.0
 
 
-def test_m6_boosted_regressor_probe(spark, monkeypatch):
-    """_boosted_regressor picks SparkXGBRegressor when xgboost.spark is
-    importable and GBTRegressor otherwise — the parity-upgrade seam for
-    environments that ship xgboost (the sandbox doesn't)."""
-    import sys
-    import types
-
-    from pyspark.ml.regression import GBTRegressor
-
-    # sandbox path: no xgboost installed → GBT fallback
-    est = models._boosted_regressor(featuresCol="features", labelCol="total", seed=7)
-    assert isinstance(est, GBTRegressor)
-    assert est.getFeaturesCol() == "features" and est.getLabelCol() == "total"
-
-    # fake the xgboost.spark module: probe must select it
-    class FakeXGB:
-        def __init__(self, **kw):
-            self.kw = kw
-
-    fake_pkg = types.ModuleType("xgboost")
-    fake_spark = types.ModuleType("xgboost.spark")
-    fake_spark.SparkXGBRegressor = FakeXGB
-    fake_pkg.spark = fake_spark
-    monkeypatch.setitem(sys.modules, "xgboost", fake_pkg)
-    monkeypatch.setitem(sys.modules, "xgboost.spark", fake_spark)
-    est = models._boosted_regressor(featuresCol="features", labelCol="total", seed=7)
-    assert isinstance(est, FakeXGB)
-    assert est.kw == {
-        "features_col": "features",
-        "label_col": "total",
-        "n_estimators": 20,
-        "random_state": 7,
-    }
-
-
 def test_tuned_rf_cv_ranges(spark, sf_dir):
     """ml9: the CV sweep must pick params FROM the grid, its fold metrics
     must cover the full grid (4 candidates), and test RMSE must land in the

@@ -92,20 +92,22 @@ def test_approx_count_distinct_accuracy(spark, sf_dir):
     assert abs(r.approx - r.exact) / r.exact < 0.05
 
 
-def test_salted_join_matches_once_and_is_deterministic(spark):
+def test_salted_join_matches_once_and_is_deterministic(spark, monkeypatch):
     """Each skewed row carries exactly one salt and ``other`` is replicated
     once per salt, so every match appears exactly once and an unmatched row
     drops out; deterministic salts mean two runs agree row-for-row."""
+    from trafficanalysisbigdata_spark.operators import joins
     from trafficanalysisbigdata_spark.operators.joins import salted_join
 
+    monkeypatch.setattr(joins, "SALTS", 4)
     left = spark.createDataFrame(
         [(1, "a"), (1, "b"), (2, "c"), (99, "orphan")], "k int, v string"
     )
     right = spark.createDataFrame([(1, "X"), (2, "Y")], "k int, w string")
-    out = salted_join(left, right, key="k", n_salts=4)
+    out = salted_join(left, right, key="k")
     rows = sorted((r.k, r.v, r.w) for r in out.collect())
     assert rows == [(1, "a", "X"), (1, "b", "X"), (2, "c", "Y")]
-    again = sorted((r.k, r.v, r.w) for r in salted_join(left, right, "k", 4).collect())
+    again = sorted((r.k, r.v, r.w) for r in salted_join(left, right, "k").collect())
     assert again == rows
 
 
@@ -875,10 +877,7 @@ PINNED_SIGNATURES = {
         "(corpus, threshold, n_tables=16, n_planes=None, dim=64, max_bucket=None, "
         "n_rows=None, collapse=False)",
     ),
-    "ngram_jaccard_scores": (
-        "dedup",
-        "(docs, max_df_frac=0.05, max_df_abs=256)",
-    ),
+    "ngram_jaccard_scores": ("dedup", "(docs)"),
     "two_phase_prefix_sums": (
         "prefixsum",
         "(df, key, values, descending=False, group=(), tiebreak=(), n_buckets=8, "
@@ -917,11 +916,30 @@ def _shipped_sources() -> dict[str, str]:
     return {str(p.relative_to(REPO)): p.read_text() for p in paths}
 
 
+_NOT_LITERAL = object()
+
+
+def _literal(node: ast.expr):
+    """``node``'s value when it is a literal, else ``_NOT_LITERAL``."""
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError):
+        return _NOT_LITERAL
+
+
+def _restates(value: ast.expr, default: ast.expr) -> bool:
+    """``value`` is a literal equal to the literal ``default``."""
+    lit = _literal(value)
+    return lit is not _NOT_LITERAL and lit == _literal(default)
+
+
 def _unused_defaults(defining: dict[str, str], shipped: dict[str, str]) -> list[str]:
     """``path:function(param)`` for each defaulted parameter of a public
-    module-level function in ``defining`` that no call in ``shipped`` passes,
-    by keyword or by position. Calls resolve by name; functions no shipped
-    code calls are out of scope, and so are class methods."""
+    module-level function in ``defining`` that no call in ``shipped`` sets,
+    by keyword or by position, to anything but its default: a literal equal
+    to the default restates it and does not count. Calls resolve by name;
+    functions no shipped code calls are out of scope, and so are class
+    methods."""
     calls: dict[str, list[ast.Call]] = {}
     for src in shipped.values():
         for node in ast.walk(ast.parse(src)):
@@ -937,13 +955,15 @@ def _unused_defaults(defining: dict[str, str], shipped: dict[str, str]) -> list[
                 continue
             a = fn.args
             positional = [x.arg for x in a.posonlyargs + a.args]
-            defaulted = positional[len(positional) - len(a.defaults):] + [
-                x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
-            ]
+            defaults = dict(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+            defaults.update(
+                (x.arg, d) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            )
             passed = set()
             for call in calls[fn.name]:
-                passed |= set(positional[: len(call.args)]) | {k.arg for k in call.keywords}
-            unused += [f"{path}:{fn.name}({p})" for p in defaulted if p not in passed]
+                given = [*zip(positional, call.args), *((k.arg, k.value) for k in call.keywords)]
+                passed |= {p for p, v in given if p in defaults and not _restates(v, defaults[p])}
+            unused += [f"{path}:{fn.name}({p})" for p in defaults if p not in passed]
     return unused
 
 
@@ -959,6 +979,48 @@ def test_default_guard_flags_its_twin():
     defining = {"ops.py": "def op(df, k=1, unused=2):\n    return df\n"}
     shipped = {"caller.py": "op(df, k=3)\n"}
     assert _unused_defaults(defining, shipped) == ["ops.py:op(unused)"]
+
+
+def test_default_guard_flags_a_restated_default():
+    """A call that passes the default back, by keyword or by position, does
+    not set the parameter; a variable might, so it counts."""
+    defining = {"ops.py": "def op(df, k=1):\n    return df\n"}
+    assert _unused_defaults(defining, {"c.py": "op(df, k=1)\n"}) == ["ops.py:op(k)"]
+    assert _unused_defaults(defining, {"c.py": "op(df, 1.0)\n"}) == ["ops.py:op(k)"]
+    assert _unused_defaults(defining, {"c.py": "op(df, k=n)\n"}) == []
+
+
+_PROBE_ERRORS = {"ImportError", "ModuleNotFoundError"}
+
+
+def _import_probes(sources: dict[str, str]) -> list[str]:
+    """``path:line`` of each mention of ``ImportError`` or
+    ``ModuleNotFoundError`` — an ``except`` clause (or ``suppress``) that
+    picks an arm by which packages happen to be installed."""
+    return [
+        f"{path}:{node.lineno}"
+        for path, src in sorted(sources.items())
+        for node in ast.walk(ast.parse(src))
+        if (getattr(node, "id", None) or getattr(node, "attr", None)) in _PROBE_ERRORS
+    ]
+
+
+def test_engine_has_no_import_probe():
+    """No engine code picks an arm by whether a package imports: a host
+    without the package only ever runs the fallback, and an artifact
+    stamped by source digest would not notice the package arriving."""
+    sources = {str(p.relative_to(REPO)): p.read_text() for p in PACKAGE.rglob("*.py")}
+    assert _import_probes(sources) == []
+
+
+def test_import_probe_guard_flags_its_twin():
+    probe = "try:\n    import x\nexcept ImportError:\n    x = None\n"
+    tupled = "try:\n    import x\nexcept (OSError, ModuleNotFoundError):\n    x = None\n"
+    plain = "try:\n    import x\nexcept OSError:\n    x = None\n"
+    assert _import_probes({"a.py": probe, "b.py": tupled, "c.py": plain}) == [
+        "a.py:3",
+        "b.py:3",
+    ]
 
 
 def test_two_phase_prefix_sums_grouped_matches_naive(spark):

@@ -97,17 +97,20 @@ def test_connected_components_frees_only_its_own_checkpoints(spark, cc_arm, monk
     seq_len=st.integers(4, 64),
 )
 @settings(**_SETTINGS)
-def test_pack_sequences_invariants(spark, token_counts, seq_len):
+def test_pack_sequences_invariants(spark, token_counts, seq_len, monkeypatch):
     """For ANY corpus: token mass is conserved, per-shard offsets are a
     gapless cumulative sum in doc_id order, sequence ids are consistent with
     offsets, and straddle flags match the boundary arithmetic."""
+    from trafficanalysisbigdata_spark.operators import packing
     from trafficanalysisbigdata_spark.operators.packing import pack_sequences
 
+    monkeypatch.setattr(packing, "PACK_SEQ_LEN", seq_len)
+    monkeypatch.setattr(packing, "PACK_SHARDS", 4)
     docs = spark.createDataFrame(
         [(i, " ".join(["w"] * k) if k else "") for i, k in enumerate(token_counts)],
         "doc_id long, text string",
     )
-    rows = pack_sequences(docs, seq_len=seq_len, n_shards=4).collect()
+    rows = pack_sequences(docs).collect()
     # whitespace split of "" yields [''] → 1 token; mirror that here
     expect_tokens = sum(max(k, 1) for k in token_counts)
     assert sum(r.n_tokens for r in rows) == expect_tokens
@@ -175,17 +178,19 @@ def test_int8_quantization_invariants(spark, vecs):
     )
 )
 @settings(**_SETTINGS)
-def test_duplicate_span_stats_invariants(spark, texts):
+def test_duplicate_span_stats_invariants(spark, texts, monkeypatch):
     """For ANY corpus: 0 <= n_dup <= n_shingles, dup_frac in [0,1], docs
     under n tokens are absent, and two docs with identical >=n-token text
     must both report dup_frac == 1.0 (every span is cross-doc)."""
+    from trafficanalysisbigdata_spark.operators import dedup
     from trafficanalysisbigdata_spark.operators.dedup import duplicate_span_stats
 
     n = 3
+    monkeypatch.setattr(dedup, "SPAN_NGRAM", n)
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    rows = {r.doc_id: r for r in duplicate_span_stats(docs, n=n).collect()}
+    rows = {r.doc_id: r for r in duplicate_span_stats(docs).collect()}
     tok = {i: t.split(" ") if t else [] for i, t in enumerate(texts)}
     for i, toks in tok.items():
         n_tok = len([t for t in toks if t])
@@ -333,7 +338,7 @@ def test_two_phase_prefix_sum_equals_python_cumsum(
     )
 )
 @settings(**_SETTINGS)
-def test_dup_span_scrub_equals_reference(spark, texts):
+def test_dup_span_scrub_equals_reference(spark, texts, monkeypatch):
     """dd10 against an independent Python implementation for ANY corpus
     (3-symbol alphabet forces heavy shingle collisions the fixtures never
     produce): token counts, survivor counts, and the md5 of every rebuilt
@@ -341,15 +346,17 @@ def test_dup_span_scrub_equals_reference(spark, texts):
     full scrubs, under-n docs, and intra-doc-only repeats surviving."""
     import hashlib
 
+    from trafficanalysisbigdata_spark.operators import dedup
     from trafficanalysisbigdata_spark.operators.dedup import dup_span_scrub
 
     n = 3
+    monkeypatch.setattr(dedup, "SPAN_NGRAM", n)
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got = {
         r.doc_id: (r.n_tokens, r.n_kept, r.clean_md5)
-        for r in dup_span_scrub(docs, n=n).collect()
+        for r in dup_span_scrub(docs).collect()
     }
     grams: dict[str, set] = {}
     toks = {i: t.split(" ") for i, t in enumerate(texts)}

@@ -71,7 +71,7 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in ivf_topk(emb, probes, k=5, n_clusters=16, n_probe=6).collect()
+        for r in ivf_topk(emb, probes, k=5).collect()
     }
     # the near-uniform fixture is IVF's worst case (no cluster structure);
     # measured 0.76 — the bar leaves margin for k-means assignment jitter
@@ -105,7 +105,7 @@ def test_centroid_semantic_dedup_invariants(spark, sf_dir):
     assert sum(r.n_dupes for r in rows) > 0
 
 
-def test_ivf_index_persist_and_query(spark, tmp_path):
+def test_ivf_index_persist_and_query(spark, tmp_path, monkeypatch):
     """The persisted-index lifecycle: build once (fit + write), query many —
     on a CLUSTERED fixture (IVF's intended regime) recall vs brute force
     must clear a higher bar than the uniform-fixture path, the indexed query
@@ -113,12 +113,15 @@ def test_ivf_index_persist_and_query(spark, tmp_path):
     and the assignments scan must be partition-pruned to the probed cells."""
     import numpy as np
 
+    from trafficanalysisbigdata_spark.operators import similarity as sim
     from trafficanalysisbigdata_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk,
         ivf_topk_indexed,
     )
 
+    monkeypatch.setattr(sim, "IVF_CLUSTERS", 8)
+    monkeypatch.setattr(sim, "IVF_PROBES", 2)
     rng = np.random.RandomState(42)
     centers = rng.randn(8, 16) * 5.0
     rows = []
@@ -129,8 +132,8 @@ def test_ivf_index_persist_and_query(spark, tmp_path):
     probes = emb.filter(F.col("vec_id") < 10)
 
     index_dir = str(tmp_path / "ivf_index")
-    build_ivf_index(emb, index_dir, n_clusters=8)
-    indexed = ivf_topk_indexed(spark, index_dir, probes, k=5, n_probe=2)
+    build_ivf_index(emb, index_dir)
+    indexed = ivf_topk_indexed(spark, index_dir, probes, k=5)
     got = {(r.query_id, r.neighbor_id) for r in indexed.collect()}
 
     exact = {
@@ -143,12 +146,12 @@ def test_ivf_index_persist_and_query(spark, tmp_path):
     # same quantizer seed => the unindexed path agrees exactly
     inmem = {
         (r.query_id, r.neighbor_id)
-        for r in ivf_topk(emb, probes, k=5, n_clusters=8, n_probe=2).collect()
+        for r in ivf_topk(emb, probes, k=5).collect()
     }
     assert got == inmem
 
     # the index read must only scan probed cl= partitions: with 10 probes x
-    # n_probe=2 over 8 clusters, pruning keeps <= 8; the plan shows a
+    # IVF_PROBES=2 over 8 clusters, pruning keeps <= 8; the plan shows a
     # dynamic partition filter rather than a full scan
     assert _dynamically_pruned(plan_of(indexed))
 

@@ -538,23 +538,25 @@ def test_keyed_upsert_replay_is_idempotent(spark, tmp_path):
     assert by_user[1][3] == 2 and by_user[1][4] == 7.0  # last event wins
 
 
-def test_keyed_upsert_compaction_keeps_replay_idempotent(spark, tmp_path):
+def test_keyed_upsert_compaction_keeps_replay_idempotent(spark, tmp_path, monkeypatch):
     """Version retention (keep last K) bounds state storage over a long
     stream; K >= 2 must preserve the replay contract because the replayed
     batch reads the SECOND-newest version, which retention always keeps.
-    This drives 5 batches through keep_versions=2, asserts only 2 version
+    This drives 5 batches through KEEP_VERSIONS=2, asserts only 2 version
     dirs survive, then crash-replays the final batch across the compaction
     boundary and asserts the state is unchanged."""
     import os
 
+    from trafficanalysisbigdata_spark.streaming import upsert as upsert_mod
     from trafficanalysisbigdata_spark.streaming.upsert import (
         keyed_upsert_batch,
         latest_state,
     )
 
+    monkeypatch.setattr(upsert_mod, "KEEP_VERSIONS", 2)
     state_root = str(tmp_path / "state")
     os.makedirs(state_root)
-    upsert = keyed_upsert_batch(state_root, keep_versions=2)
+    upsert = keyed_upsert_batch(state_root)
 
     batches = [
         spark.createDataFrame(
@@ -577,12 +579,6 @@ def test_keyed_upsert_compaction_keeps_replay_idempotent(spark, tmp_path):
     # totals really span all 5 batches, not just the retained versions
     n_total = sum(r[1] for r in got)
     assert n_total == 20  # 5 batches x 4 events
-
-    # K < 2 cannot survive replay and must be rejected up front
-    import pytest
-
-    with pytest.raises(ValueError):
-        keyed_upsert_batch(state_root, keep_versions=1)
 
 
 def test_latest_state_empty_and_partial_versions(spark, tmp_path):

@@ -2,17 +2,12 @@
 
 The reference reprojects NY state-plane (ftUS) points to lat/lon with a
 pyproj ``Transformer`` (ref Dash.py:133-139, ``always_xy=True``) — the one
-true UDF its engine needs. Here there are two implementations:
-
-* ``epsg2263_lon`` / ``epsg2263_lat`` — the closed-form Lambert Conformal
-  Conic (2SP) inverse as pure Catalyst column math (Snyder, *Map
-  Projections: A Working Manual*, USGS PP 1395, eqs. 14-15/15-1..15-5 run
-  backward). JVM-side, codegen-friendly, zero Python in the hot path — the
-  100 TB path, and expressible in ANSI SQL for the DuckDB oracle.
-* ``reproject_udf`` — an Arrow-batched pandas UDF that wraps pyproj when the
-  library is importable (exactly the reference's semantics, datum shifts and
-  all) and otherwise falls back to the same closed-form math in numpy. UDF
-  and column math agree to ~1e-9° (verified in tests/test_geo.py).
+true UDF its engine needs. Here it is ``epsg2263_lon`` / ``epsg2263_lat``:
+the closed-form Lambert Conformal Conic (2SP) inverse as pure Catalyst
+column math (Snyder, *Map Projections: A Working Manual*, USGS PP 1395,
+eqs. 14-15/15-1..15-5 run backward). JVM-side, codegen-friendly, zero
+Python in the hot path, and expressible in ANSI SQL for the DuckDB oracle;
+``wgs84_to_epsg2263`` is the forward projection tests roundtrip through.
 
 EPSG:2263 (NAD83 / New York Long Island, US survey feet), all public
 constants: GRS80 a=6378137 m, 1/f=298.257222101; standard parallels
@@ -24,10 +19,8 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 # --- projection constants (derived once, in Python) ---------------------
 A = 6378137.0
@@ -105,45 +98,3 @@ def wgs84_to_epsg2263(lon_deg: float, lat_deg: float) -> tuple[float, float]:
     xm = rho * math.sin(theta)
     ym = RHO0 - rho * math.cos(theta)
     return (xm + FALSE_EASTING_M) / FT_US, ym / FT_US
-
-
-# --- pandas UDF (U4) ----------------------------------------------------
-def _numpy_inverse(x_ft, y_ft):
-    import numpy as np
-
-    xm = x_ft * FT_US - FALSE_EASTING_M
-    dy = RHO0 - y_ft * FT_US
-    rho = np.sqrt(xm * xm + dy * dy)
-    t = (rho / AF) ** (1.0 / N_CONE)
-    theta = np.arctan2(xm, dy)
-    lon = np.degrees(theta / N_CONE) + LON0_DEG
-    phi = np.pi / 2 - 2 * np.arctan(t)
-    for _ in range(PHI_ITERS):
-        es = E * np.sin(phi)
-        phi = np.pi / 2 - 2 * np.arctan(t * ((1 - es) / (1 + es)) ** (E / 2))
-    return lon, np.degrees(phi)
-
-
-def reproject_udf() -> "callable":
-    """U4: Series→Series pandas UDF (Arrow-batched) returning a
-    (lon, lat) struct. Uses pyproj when present (ref parity incl. datum
-    handling); otherwise the closed-form numpy inverse."""
-    try:
-        from pyproj import Transformer
-
-        transformer = Transformer.from_crs("EPSG:2263", "EPSG:4326", always_xy=True)
-
-        def _convert(x, y):
-            return transformer.transform(x.to_numpy(), y.to_numpy())
-
-    except ImportError:
-
-        def _convert(x, y):
-            return _numpy_inverse(x.to_numpy(), y.to_numpy())
-
-    @pandas_udf("lon double, lat double")
-    def _reproject(x_ft: pd.Series, y_ft: pd.Series) -> pd.DataFrame:
-        lon, lat = _convert(x_ft, y_ft)
-        return pd.DataFrame({"lon": lon, "lat": lat})
-
-    return _reproject

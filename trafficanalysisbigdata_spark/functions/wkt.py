@@ -29,12 +29,12 @@ def wkt_y(geom: Column) -> Column:
     return _coord(geom, 2)
 
 
-def with_point_coords(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
-    """F7: explode WKT into x/y double columns and drop the raw string (P3,
-    ref TrafficAnalysis.py:95)."""
-    g = F.col(geom_col)
+def with_point_coords(df: DataFrame) -> DataFrame:
+    """F7: explode the WKT ``geometry`` column into x/y double columns and
+    drop the raw string (P3, ref TrafficAnalysis.py:95)."""
+    g = F.col("geometry")
     return (
         df.withColumn("x_coord", wkt_x(g))
         .withColumn("y_coord", wkt_y(g))
-        .drop(geom_col)
+        .drop("geometry")
     )

@@ -43,7 +43,10 @@ safely: the loser of the rename deletes its copy and uses the winner's. The
 Spark side reads the returned key directory; ``<path>`` itself is a symlink,
 swapped atomically to the key of the latest call, for the oracle SQL that
 names it. Each ``<path>.d/`` keeps the ``ARTIFACT_KEEP`` most recently used
-keys, so alternating scale factors reuse theirs. The limit: there is one
+keys, so alternating scale factors reuse theirs. Retention never deletes a
+``.tmp-`` directory: it may be a concurrent build, which removes its own
+when it finishes or fails; one left by a killed process is never served and
+stays until the root is deleted. The limit: there is one
 link per artifact kind under ``ARTIFACT_ROOT``, so one per host with the
 default temp dir, and two drivers on two scale factors at once still contend
 for it: each Spark side reads its own key, but an oracle reads whichever key
@@ -87,8 +90,6 @@ TABLES = (
 # *driver fixtures* keep them tiny — joins against them take a broadcast hint
 # only where the table is bounded in principle).
 BROADCAST_SAFE = {"region", "nation"}
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 SCRATCH_DIR_CONF = "spark.trafficanalysisbigdata.scratchDir"
@@ -227,7 +228,8 @@ def ensure_artifact(path: str, stamp: str, build: Callable[[str], None]) -> str:
         except FileNotFoundError:  # pruned by a concurrent call
             return True, 0
 
-    for name in sorted(os.listdir(keys), key=recency)[ARTIFACT_KEEP:]:
+    published = [name for name in os.listdir(keys) if not name.startswith(".tmp-")]
+    for name in sorted(published, key=recency)[ARTIFACT_KEEP:]:
         shutil.rmtree(os.path.join(keys, name), ignore_errors=True)
     return key
 

@@ -196,31 +196,11 @@ def abnormal_traffic_model(events: DataFrame) -> dict:
     return _fit_eval_classifier(abnormal_label_frame(events), "label")
 
 
-def _boosted_regressor(**kw):
-    """True-XGBoost parity where the package exists (the reference trains
-    XGBoost, proto/TrafficAnalysis_Hist.py:234-288): probe for the official
-    distributed Spark estimator ``xgboost.spark.SparkXGBRegressor`` and use
-    it when importable; otherwise fall back to Spark ML's ``GBTRegressor``
-    (same gradient-boosted-trees family, same cleaned feature semantics).
-    Both paths keep featuresCol/labelCol/seed contracts, so ml6's range
-    gate exercises whichever is present."""
-    try:
-        from xgboost.spark import SparkXGBRegressor  # noqa: PLC0415
-    except ImportError:
-        return GBTRegressor(maxIter=20, **kw)
-    return SparkXGBRegressor(
-        features_col=kw["featuresCol"],
-        label_col=kw["labelCol"],
-        n_estimators=20,
-        random_state=kw.get("seed", 0),
-    )
-
-
 def gbt_regression(events: DataFrame) -> dict:
     """M6 (ref proto:234-288, cleaned semantics — no target leakage):
-    boosted-tree regression of daily totals from calendar features
-    (SparkXGBRegressor when xgboost ships in the env, GBTRegressor
-    otherwise — see _boosted_regressor)."""
+    boosted-tree regression of daily totals from calendar features. The
+    reference trains XGBoost; Spark ML's ``GBTRegressor`` is the same
+    gradient-boosted-trees family over the same cleaned features."""
     daily = (
         with_time_parts(events)
         .groupBy("date_str", "day_of_week", "month", "is_weekend")
@@ -229,7 +209,7 @@ def gbt_regression(events: DataFrame) -> dict:
     assembler = VectorAssembler(
         inputCols=["day_of_week", "month", "is_weekend"], outputCol="features"
     )
-    gbt = _boosted_regressor(featuresCol="features", labelCol="total", seed=SEED)
+    gbt = GBTRegressor(maxIter=20, featuresCol="features", labelCol="total", seed=SEED)
     train, test = daily.randomSplit([0.8, 0.2], seed=SEED)
     model = Pipeline(stages=[assembler, gbt]).fit(train)
     pred = model.transform(test)

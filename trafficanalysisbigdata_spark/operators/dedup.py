@@ -272,11 +272,12 @@ NGRAM_JACCARD_CROSSOVER_DOCS = 100_000
 # the big arm's verify-broadcast budget for the hashed shingle arrays
 # (8·Σ|S_d| + 48·n bytes; see ngram_jaccard_scores)
 NGRAM_VERIFY_BUDGET_MB = 1024
+# the small arm's document-frequency cap, min(frac·n_docs, abs) (df_capped)
+NGRAM_MAX_DF_FRAC = 0.05
+NGRAM_MAX_DF_ABS = 256
 
 
-def ngram_jaccard_scores(
-    docs: DataFrame, max_df_frac: float = 0.05, max_df_abs: int = 256
-) -> DataFrame:
+def ngram_jaccard_scores(docs: DataFrame) -> DataFrame:
     """The full n-gram-Jaccard near-dup pipeline as ONE reusable operator.
     Returns (doc1, doc2, jaccard). Shared by the dd4 query and the scale
     rehearsal (the source of the 45×-at-10× fraction-only-cap measurement).
@@ -292,7 +293,8 @@ def ngram_jaccard_scores(
     for 10× docs — Σ min(df, cap)² widens with the zipf mid-band even under
     the df cap):
 
-    * small (≤ ~10⁵ docs): bigram postings → DF cap (min(frac·n, abs)) →
+    * small (≤ ~10⁵ docs): bigram postings → DF cap (``NGRAM_MAX_DF_FRAC``
+      · n, ``NGRAM_MAX_DF_ABS``) →
       shared-shingle self-join blocked by |Δn_chars| ≤ 20 — exhaustive
       candidates at small scale, where the Σdf² term is still cheap.
     * big: MinHash banding OVER THE SAME BIGRAM SHINGLE SETS (16
@@ -373,9 +375,9 @@ def ngram_jaccard_scores(
         )
         return jaccard_scores(pairs, doc_shingle_arrays(docs), broadcast_sets=fits)
     docs_total = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    sh = df_capped(doc_shingle_sets(docs), docs_total, max_df_frac, max_df_abs).join(
-        docs.select("doc_id", "n_chars"), "doc_id"
-    )
+    sh = df_capped(
+        doc_shingle_sets(docs), docs_total, NGRAM_MAX_DF_FRAC, NGRAM_MAX_DF_ABS
+    ).join(docs.select("doc_id", "n_chars"), "doc_id")
     a = sh.select(F.col("doc_id").alias("doc1"), F.col("n_chars").alias("nc1"), "token")
     b = sh.select(F.col("doc_id").alias("doc2"), F.col("n_chars").alias("nc2"), "token")
     pairs = (
@@ -436,13 +438,17 @@ def doc_shingle_sets(docs: DataFrame) -> DataFrame:
     )
 
 
-def dup_span_scrub(docs: DataFrame, n: int = 5) -> DataFrame:
+# the token n-gram size of a duplicated span (dd7, dd10)
+SPAN_NGRAM = 5
+
+
+def dup_span_scrub(docs: DataFrame) -> DataFrame:
     """Exact duplicated-span REMOVAL (dd10) — the transform half of the Lee
     et al. 2021 exact-substring-dedup signal that ``duplicate_span_stats``
-    (dd7) measures: every token position covered by an n-token shingle that
-    occurs in >= 2 DISTINCT documents is dropped, and the document is
-    rebuilt from the surviving tokens (original order, single-space
-    joined). Returns (doc_id, n_tokens, n_kept, clean_md5) — the md5 pins
+    (dd7) measures: every token position covered by a ``SPAN_NGRAM``-token
+    shingle that occurs in >= 2 DISTINCT documents is dropped, and the
+    document is rebuilt from the surviving tokens (original order,
+    single-space joined). Returns (doc_id, n_tokens, n_kept, clean_md5) — the md5 pins
     the full rebuilt text value-checkably without shipping megabytes of
     cleaned text through the compare harness; a doc with no duplicated
     spans keeps clean_md5 == md5(text) (single-space corpus contract), and
@@ -461,7 +467,7 @@ def dup_span_scrub(docs: DataFrame, n: int = 5) -> DataFrame:
     Plan shape (the dd7 scale posture, plus one anti join and one bounded
     rebuild): shingle postings travel as (xxhash64, doc_id, start) — long
     keys, partial-aggregated document frequency; covered positions are a
-    narrow explode of <= n rows per duplicated occurrence, distinct on
+    narrow explode of <= ``SPAN_NGRAM`` rows per duplicated occurrence, distinct on
     (doc_id, pos); the scrub is a LEFT ANTI equi join of token postings
     against covered positions (AQE-skew-splittable, never pair-shaped);
     the rebuild is one collect_list per document — per-GROUP state is one
@@ -477,7 +483,7 @@ def dup_span_scrub(docs: DataFrame, n: int = 5) -> DataFrame:
     toks = tokens(F.col("text"))
     tok = docs.select("doc_id", F.posexplode(toks).alias("pos", "tok"))
     grams = docs.select(
-        "doc_id", F.posexplode(token_ngrams(F.col("text"), n)).alias("start", "sh")
+        "doc_id", F.posexplode(token_ngrams(F.col("text"), SPAN_NGRAM)).alias("start", "sh")
     ).select("doc_id", "start", F.xxhash64("sh").alias("k"))
     dup = (
         grams.select("k", "doc_id")
@@ -492,7 +498,7 @@ def dup_span_scrub(docs: DataFrame, n: int = 5) -> DataFrame:
         .select(
             "doc_id",
             F.explode(
-                F.sequence(F.col("start"), F.col("start") + F.lit(n - 1))
+                F.sequence(F.col("start"), F.col("start") + F.lit(SPAN_NGRAM - 1))
             ).alias("pos"),
         )
         .distinct()
@@ -517,8 +523,8 @@ def dup_span_scrub(docs: DataFrame, n: int = 5) -> DataFrame:
     )
 
 
-def duplicate_span_stats(docs: DataFrame, n: int = 5) -> DataFrame:
-    """Per-document duplicated-span statistics (dd7): a span = an n-token
+def duplicate_span_stats(docs: DataFrame) -> DataFrame:
+    """Per-document duplicated-span statistics (dd7): a span = a ``SPAN_NGRAM``-token
     shingle occurring in >= 2 DISTINCT documents; returns (doc_id,
     n_shingles, n_dup, dup_frac) counting OCCURRENCES, i.e. the
     exact-substring-dedup removal signal of Lee et al. 2021 at shingle
@@ -543,7 +549,7 @@ def duplicate_span_stats(docs: DataFrame, n: int = 5) -> DataFrame:
     # session's cores (no-op on real multi-split layouts)
     docs = fan_out_small_scan(docs, "doc_id")
     post = (
-        docs.select("doc_id", F.explode(token_ngrams(F.col("text"), n)).alias("sh"))
+        docs.select("doc_id", F.explode(token_ngrams(F.col("text"), SPAN_NGRAM)).alias("sh"))
         .select("doc_id", F.xxhash64("sh").alias("k"))
     )
     occ = post.groupBy("k", "doc_id").agg(F.count(F.lit(1)).alias("occ"))

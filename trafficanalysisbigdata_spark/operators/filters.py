@@ -39,8 +39,12 @@ def latest_partition(df: DataFrame, part_col: Column, alias: str = "part") -> Da
     )
 
 
-def sigma_outlier_flag(df: DataFrame, measure: str, k: float = 3.0) -> DataFrame:
-    """P8 (ref TrafficAnalysis.py:410-413): flag rows outside mean ± k·stddev.
+SIGMA_K = 3.0
+
+
+def sigma_outlier_flag(df: DataFrame, measure: str) -> DataFrame:
+    """P8 (ref TrafficAnalysis.py:410-413): flag rows outside mean ±
+    ``SIGMA_K``·stddev.
 
     Uses stddev_samp to match pandas ``std()`` (sample, ddof=1).
     """
@@ -51,8 +55,8 @@ def sigma_outlier_flag(df: DataFrame, measure: str, k: float = 3.0) -> DataFrame
     flagged = df.crossJoin(F.broadcast(stats)).withColumn(
         "is_abnormal",
         (
-            (c > F.col("__mu") + k * F.col("__sigma"))
-            | (c < F.col("__mu") - k * F.col("__sigma"))
+            (c > F.col("__mu") + SIGMA_K * F.col("__sigma"))
+            | (c < F.col("__mu") - SIGMA_K * F.col("__sigma"))
         ).cast("int"),
     )
     return flagged.drop("__mu", "__sigma")

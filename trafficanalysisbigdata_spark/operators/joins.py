@@ -35,9 +35,12 @@ def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     return left.join(right, on, "left_anti")
 
 
-def salted_join(skewed: DataFrame, other: DataFrame, key: str, n_salts: int = 8) -> DataFrame:
+SALTS = 8
+
+
+def salted_join(skewed: DataFrame, other: DataFrame, key: str) -> DataFrame:
     """Skew-busting inner equi-join: hot keys on the ``skewed`` side are spread
-    across ``n_salts`` sub-keys; ``other`` is replicated once per salt so
+    across ``SALTS`` sub-keys; ``other`` is replicated once per salt so
     every sub-key still finds its matches.
 
     AQE's skew-join split handles sort-merge skew automatically, but only at
@@ -49,13 +52,13 @@ def salted_join(skewed: DataFrame, other: DataFrame, key: str, n_salts: int = 8)
     The salt is derived from the row (xxhash64 of all columns), not random —
     plans stay deterministic and re-executable (a task retry reproduces the
     same salt, which rand() would not). Replication multiplies ``other``'s
-    shuffle volume by n_salts: use against dimension-ish or pre-aggregated
-    right sides, and keep n_salts near the executor-count/hot-key ratio.
+    shuffle volume by SALTS: use against dimension-ish or pre-aggregated
+    right sides, and keep SALTS near the executor-count/hot-key ratio.
     """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(n_salts))
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(SALTS))
     left = skewed.withColumn("__salt", salt.cast("int"))
     right = other.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(SALTS - 1)))
     )
     return left.join(right, [key, "__salt"], "inner").drop("__salt")
 

@@ -10,13 +10,10 @@ tested even where the codec itself is stubbed.
 
 Decoder tiers (``auto_decode`` dispatches in this order):
 
-* ``pillow_decode`` — the production tier: decodes real images via PIL
-  when the package is installed; raises NotImplementedError at call time
-  otherwise (import of this module never fails).
 * ``png_decode`` — a REAL, pure-stdlib PNG decoder (zlib inflate +
   per-scanline unfilter, public file-format knowledge): engages whenever
   the bytes carry the PNG signature, so actual image decoding is
-  executable and oracle-checkable even in codec-less environments
+  executable and oracle-checkable with no codec package installed
   (mm11 runs real PNG streams through it end to end).
 * ``fake_decode`` — deterministic byte arithmetic (dims from the first two
   content bytes, a luma proxy from a byte sum). Pure function of the bytes,
@@ -38,13 +35,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # PIL's "bytes are not a known image format" signal; subclass of
-    # OSError in PIL, so the alias below keeps the except-clause exact
-    # when pillow is absent (the pillow tier never engages then anyway).
-    from PIL import UnidentifiedImageError
-except ImportError:
-    UnidentifiedImageError = OSError
 
 MEDIA_FEATURE_SCHEMA = (
     "media_id bigint, modality string, width int, height int, "
@@ -120,34 +110,13 @@ def fake_decode(content: bytes) -> tuple[int, int, float]:
     return width, height, luma
 
 
-def pillow_decode(content: bytes) -> tuple[int, int, float]:
-    """Production decoder — requires pillow. The mapInPandas plumbing around
-    it is identical to ``fake_decode``'s; ``auto_decode`` (the default)
-    probes for it and engages it wherever the package exists."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "image decoding requires pillow (pip install pillow); "
-            "use fake_decode for plumbing tests in codec-less environments"
-        ) from e
-    import io as _io
-
-    from PIL import Image
-
-    img = Image.open(_io.BytesIO(content)).convert("L")
-    px = list(img.getdata())
-    return img.width, img.height, (sum(px) / len(px) / 255.0) if px else 0.0
-
-
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
-# PIL's ITU-R 601-2 integer grayscale conversion (convert("L")): used by the
-# stdlib tier so a pillow-equipped environment and a codec-less one produce
-# IDENTICAL luma for the same RGB pixels.
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
+# PIL's ITU-R 601-2 integer grayscale conversion (convert("L")), so the
+# decoded luma equals what PIL reports for the same RGB pixels.
 def _l601(r: int, g: int, b: int) -> int:
     return (r * 19595 + g * 38470 + b * 7471 + 0x8000) >> 16
 
@@ -188,8 +157,7 @@ def png_decode(content: bytes) -> tuple[int, int, float]:
     non-interlaced streams (raises ValueError on Adam7 / exotic depths —
     callers fall back). CRCs are not validated (zlib's own checksum guards
     the pixel data; a torn chunk fails the inflate). Luma uses PIL's
-    integer ITU-R 601-2 formula so results match ``pillow_decode`` exactly
-    on the same pixels."""
+    integer ITU-R 601-2 formula (``_l601``)."""
     import struct
     import zlib
 
@@ -260,48 +228,12 @@ def png_decode(content: bytes) -> tuple[int, int, float]:
     return width, height, (total / n / 255.0) if n else 0.0
 
 
-_CODEC_PROBE: list[str] = []  # memo: failed imports are NOT cached by Python,
-# so probing per row in a codec-less environment would rescan sys.path for
-# every decoded asset; one probe per interpreter (driver + each worker)
-
-
-def probe_codec() -> str:
-    """Probe-and-fallback, the ml/models.py xgboost pattern: 'pillow' when
-    PIL imports, 'fake' in codec-less environments. Memoized per
-    interpreter (tests monkeypatching sys.modules['PIL'] can clear
-    ``_CODEC_PROBE`` to re-probe)."""
-    if not _CODEC_PROBE:
-        try:
-            import PIL  # noqa: F401
-
-            _CODEC_PROBE.append("pillow")
-        except ImportError:
-            _CODEC_PROBE.append("fake")
-    return _CODEC_PROBE[0]
-
-
 def auto_decode(content: bytes) -> tuple[int, int, float]:
-    """Default decoder, tiered: the real pillow codec when installed and the
-    bytes parse; else the pure-stdlib PNG decoder whenever the bytes carry
-    the PNG signature (REAL decoding, executable in codec-less
-    environments — mm11 oracle-checks it end to end); else the
-    deterministic fake codec. The text-bytes fixtures are not valid image
-    streams, so they take the fake path on EVERY environment — oracle
-    results are codec-independent — while real PNG bytes decode for real
-    everywhere, and other real formats (JPEG, …) wherever pillow exists.
-    Both real tiers share PIL's integer ITU-R 601-2 luma, so the tier
-    taken never changes the answer for the same pixels."""
-    if probe_codec() == "pillow":
-        try:
-            return pillow_decode(content)
-        except (UnidentifiedImageError, OSError, ValueError, ZeroDivisionError):
-            # not a decodable image stream -> next tier. PIL signals this
-            # as UnidentifiedImageError (unknown signature), OSError
-            # (truncated/corrupt stream mid-decode), or ValueError (bad
-            # mode/size); ZeroDivisionError guards the luma mean on a
-            # pathological 0-pixel image. Anything else (MemoryError,
-            # KeyboardInterrupt, a bug in our code) must propagate.
-            pass
+    """Default decoder, tiered: the pure-stdlib PNG decoder whenever the
+    bytes carry the PNG signature (REAL decoding — mm11 oracle-checks it
+    end to end); else the deterministic fake codec. The text-bytes
+    fixtures are not valid image streams, so they take the fake path and
+    oracle results need no codec package."""
     if content[: len(PNG_SIG)] == PNG_SIG:
         try:
             return png_decode(content)
@@ -348,9 +280,8 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     Column-pruned input (content is read but never shuffled), per-partition
     parallelism, bounded memory per batch (Arrow slices) — the shape that
     holds when 'content' is megabytes per row and the cluster has 1000
-    executors. Decoding is ``auto_decode``'s tiers: the real codec where
-    installed and the bytes parse, else the stdlib PNG decoder, else the
-    deterministic fake."""
+    executors. Decoding is ``auto_decode``'s tiers: the stdlib PNG decoder
+    for PNG streams, else the deterministic fake."""
     pruned = media.select("media_id", "modality", "content")
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -397,14 +328,21 @@ RESIZED_SCHEMA = (
 )
 
 
-def sample_frames(media: DataFrame, frame_bytes: int = 32) -> DataFrame:
+# ``sample_frames``' frame width and ``resize_media``'s truncation length in
+# bytes; read on the driver at call time, so the workers see a patched value.
+FRAME_BYTES = 32
+RESIZE_MAX_BYTES = 128
+
+
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling: one video asset row fans out to
-    ceil(len/frame_bytes) frame rows — the video-pipeline shape (ffmpeg keyframe extraction in
+    ceil(len/``FRAME_BYTES``) frame rows — the video-pipeline shape (ffmpeg keyframe extraction in
     production; deterministic byte-chunking here so the fan-out plumbing is
     oracle-checkable). mapInPandas emits frames per input partition: no
     shuffle to fan out, and downstream ops see small per-frame rows instead
     of whole-asset blobs."""
     pruned = media.filter(F.col("modality") == "video").select("media_id", "content")
+    frame_bytes = FRAME_BYTES
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -418,13 +356,14 @@ def sample_frames(media: DataFrame, frame_bytes: int = 32) -> DataFrame:
     return pruned.mapInPandas(_batches, FRAME_SCHEMA)
 
 
-def resize_media(media: DataFrame, max_bytes: int = 128) -> DataFrame:
+def resize_media(media: DataFrame) -> DataFrame:
     """Resize/downsample stage: binary in → smaller binary out plus re-decoded
     features of the RESIZED content. The fake transform truncates to
-    ``max_bytes`` (a real one re-encodes at lower resolution); either way the
-    contract is identical — content column replaced, features recomputed, row
-    count preserved — which is what the oracle verifies."""
+    ``RESIZE_MAX_BYTES`` (a real one re-encodes at lower resolution); either way
+    the contract is identical — content column replaced, features recomputed,
+    row count preserved — which is what the oracle verifies."""
     pruned = media.select("media_id", "modality", "content")
+    max_bytes = RESIZE_MAX_BYTES
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

@@ -1,8 +1,9 @@
 """Sequence packing — the pretraining step that turns a document corpus into
 fixed-length training sequences (concat-then-chunk, GPT-style): documents are
-hash-sharded, concatenated in deterministic order within each shard, and the
-token stream is cut every ``seq_len`` tokens. Documents may straddle a cut —
-that is the standard trade (no padding except each shard's final chunk).
+hash-sharded (``PACK_SHARDS``), concatenated in deterministic order within
+each shard, and the token stream is cut every ``PACK_SEQ_LEN`` tokens.
+Documents may straddle a cut — that is the standard trade (no padding except
+each shard's final chunk).
 
 Scale shape: the only non-trivial machinery is one window cumsum PER SHARD
 (``sum(n_tokens) over (partition by shard order by doc_id)``). The shard
@@ -22,19 +23,19 @@ from ..functions.hashing import hash_frac
 from ..functions.text import token_count
 
 
-def pack_sequences(
-    docs: DataFrame,
-    seq_len: int = 2048,
-    n_shards: int = 16,
-) -> DataFrame:
+PACK_SEQ_LEN = 2048
+PACK_SHARDS = 16
+
+
+def pack_sequences(docs: DataFrame) -> DataFrame:
     """Assign every document its packed position: (doc_id, shard, n_tokens,
     start_off, seq_id, end_seq, straddles).
 
     ``seq_id`` is the training sequence the document STARTS in
-    (``floor(start_off / seq_len)``), ``end_seq`` the one it ends in;
+    (``floor(start_off / PACK_SEQ_LEN)``), ``end_seq`` the one it ends in;
     ``straddles`` marks documents cut by a sequence boundary.
     """
-    shard = F.floor(hash_frac(F.col("doc_id")) * n_shards).cast("int")
+    shard = F.floor(hash_frac(F.col("doc_id")) * PACK_SHARDS).cast("int")
     w = Window.partitionBy("shard").orderBy("doc_id")
     out = docs.select(
         F.col("doc_id"), shard.alias("shard"), token_count(F.col("text")).alias("n_tokens")
@@ -44,8 +45,8 @@ def pack_sequences(
         "shard",
         "n_tokens",
         "start_off",
-        F.floor(F.col("start_off") / seq_len).cast("bigint").alias("seq_id"),
-        F.floor((F.col("start_off") + F.col("n_tokens") - 1) / seq_len)
+        F.floor(F.col("start_off") / PACK_SEQ_LEN).cast("bigint").alias("seq_id"),
+        F.floor((F.col("start_off") + F.col("n_tokens") - 1) / PACK_SEQ_LEN)
         .cast("bigint")
         .alias("end_seq"),
     ).withColumn("straddles", (F.col("end_seq") > F.col("seq_id")).cast("int"))

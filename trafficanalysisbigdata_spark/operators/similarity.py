@@ -598,31 +598,31 @@ def _lsh_pairs_staged(
     return spark.read.parquet(*paths).distinct()
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    n_clusters: int = 16,
-    n_probe: int = 6,
-) -> DataFrame:
+# the k-means IVF's cluster count and the clusters each probe scores
+# (ivf_topk, build_ivf_index, ivf_topk_indexed)
+IVF_CLUSTERS = 16
+IVF_PROBES = 6
+
+
+def ivf_topk(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a k-means coarse quantizer
-    partitions the corpus into cluster lists; each probe scores only the
-    ``n_probe`` nearest clusters' vectors.
+    partitions the corpus into ``IVF_CLUSTERS`` cluster lists; each probe
+    scores only the ``IVF_PROBES`` nearest clusters' vectors.
 
     The alternative scale path to LSH (``lsh_topk``): better when the corpus
     HAS cluster structure (real embedding corpora do; the synthetic
     near-uniform fixtures are its worst case — measured candidate recall
     0.76 at 47% candidate fraction with 16/6, asserted ≥ 0.6 in tests).
-    Centroids are tiny (n_clusters × dim) so the probe→centroid shortlist
+    Centroids are tiny (clusters × dim) so the probe→centroid shortlist
     is a broadcast cross join; the candidate fetch is an equi-join on the
     cluster id — never a corpus cross join. Fit cost is MLlib's distributed
     k-means, amortized over the query batch; ``build_ivf_index`` +
     ``ivf_topk_indexed`` persist the fit so query time pays none of it."""
-    assigned, centers = _ivf_fit(corpus, n_clusters)
-    return _ivf_query(assigned, centers, probes, k, n_probe)
+    assigned, centers = _ivf_fit(corpus)
+    return _ivf_query(assigned, centers, probes, k)
 
 
-def _ivf_fit(corpus: DataFrame, n_clusters: int) -> tuple[DataFrame, DataFrame]:
+def _ivf_fit(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Fit the k-means coarse quantizer; return (assignments, centroids).
     Assignments carry the vector and its precomputed norm so query-time
     scoring is one fold per pair."""
@@ -633,7 +633,7 @@ def _ivf_fit(corpus: DataFrame, n_clusters: int) -> tuple[DataFrame, DataFrame]:
     as_dbl = F.transform(F.col(_VEC_COL), lambda x: x.cast("double"))
     corpus_v = corpus.withColumn("__v", array_to_vector(as_dbl))
     model = KMeans(
-        k=n_clusters, seed=42, featuresCol="__v", predictionCol="__cluster"
+        k=IVF_CLUSTERS, seed=42, featuresCol="__v", predictionCol="__cluster"
     ).fit(corpus_v)
     assigned = _normed(model.transform(corpus_v), _NEIGHBOR, F.col("__cluster").alias("cl"))
     centers = spark.createDataFrame(
@@ -643,35 +643,31 @@ def _ivf_fit(corpus: DataFrame, n_clusters: int) -> tuple[DataFrame, DataFrame]:
     return assigned, centers
 
 
-def build_ivf_index(corpus: DataFrame, index_dir: str, n_clusters: int = 16) -> None:
+def build_ivf_index(corpus: DataFrame, index_dir: str) -> None:
     """Persist the IVF index: assignments parquet PARTITIONED BY cluster id
     (``{index_dir}/assignments/cl=N/``) + a centroids table.
 
     Partitioning by ``cl`` is the scale payoff: a query batch probing
-    ``n_probe`` of ``n_clusters`` cells reads only that fraction of the
+    ``IVF_PROBES`` of ``IVF_CLUSTERS`` cells reads only that fraction of the
     corpus from disk — the centroid shortlist join broadcasts, and dynamic
     partition pruning turns it into a partition filter on the scan. The fit
     (the expensive stage) runs once here; ``ivf_topk_indexed`` pays none of
     it."""
-    assigned, centers = _ivf_fit(corpus, n_clusters)
+    assigned, centers = _ivf_fit(corpus)
     assigned.write.mode("overwrite").partitionBy("cl").parquet(f"{index_dir}/assignments")
     centers.write.mode("overwrite").parquet(f"{index_dir}/centroids")
 
 
-def ivf_topk_indexed(
-    spark, index_dir: str, probes: DataFrame, k: int, n_probe: int = 6
-) -> DataFrame:
+def ivf_topk_indexed(spark, index_dir: str, probes: DataFrame, k: int) -> DataFrame:
     """IVF top-k against a persisted index (``build_ivf_index``): no fit
     stage — centroids load as a broadcast dimension, assignments scan only
     the probed ``cl=`` partitions (dynamic partition pruning)."""
     assigned = spark.read.parquet(f"{index_dir}/assignments")
     centers = spark.read.parquet(f"{index_dir}/centroids")
-    return _ivf_query(assigned, centers, probes, k, n_probe)
+    return _ivf_query(assigned, centers, probes, k)
 
 
-def _ivf_query(
-    assigned: DataFrame, centers: DataFrame, probes: DataFrame, k: int, n_probe: int
-) -> DataFrame:
+def _ivf_query(assigned: DataFrame, centers: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     """Shared IVF query path: broadcast centroid shortlist → cluster-id
     equi-join → prenorm cosine → per-probe top-k.
 
@@ -696,7 +692,7 @@ def _ivf_query(
         p.crossJoin(F.broadcast(centers))
         .withColumn("d", F.round(sq_dist, 6))
         .withColumn("rn", F.row_number().over(wshort))
-        .filter(F.col("rn") <= n_probe)
+        .filter(F.col("rn") <= IVF_PROBES)
         .select("query_id", "query_vec", "qn", "cl")
     )
     return _probe_cells(shortlist, assigned, k)

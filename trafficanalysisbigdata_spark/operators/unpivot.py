@@ -23,12 +23,11 @@ def unpivot(
     ids: list[str],
     values: list[str],
     var_name: str = "measure",
-    value_name: str = "val",
 ) -> DataFrame:
     """F20 melt (ref proto:144-145): wide columns → (id, measure, val) long
     rows. Spark's native unpivot = an Expand node emitting len(values) rows
     per input row inside the scan stage — no shuffle."""
-    return df.unpivot(ids, values, var_name, value_name)
+    return df.unpivot(ids, values, var_name, "val")
 
 
 def row_sum(cols: list[str], alias: str) -> Column:

@@ -296,10 +296,10 @@ def p7_latest_day_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "p8_sigma_outliers",
-    oracle="""
+    oracle=f"""
     WITH s AS (SELECT AVG(value) AS mu, stddev_samp(value) AS sigma FROM events)
     SELECT event_type,
-           CAST(SUM(CASE WHEN value > mu + 3*sigma OR value < mu - 3*sigma
+           CAST(SUM(CASE WHEN value > mu + {flt.SIGMA_K:g}*sigma OR value < mu - {flt.SIGMA_K:g}*sigma
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_abnormal,
            COUNT(*) AS n
     FROM events, s GROUP BY event_type ORDER BY event_type
@@ -311,7 +311,7 @@ def p8_sigma_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8 abnormal-traffic flag (ref TrafficAnalysis.py:410-413), aggregated
     per key. Stats row is broadcast back over the scan — two scans, no
     driver round-trip."""
-    flagged = flt.sigma_outlier_flag(spark.table("events"), "value", k=3.0)
+    flagged = flt.sigma_outlier_flag(spark.table("events"), "value")
     return (
         flagged.groupBy("event_type")
         .agg(

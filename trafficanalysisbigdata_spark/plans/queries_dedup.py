@@ -9,6 +9,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
+    NGRAM_MAX_DF_ABS,
+    NGRAM_MAX_DF_FRAC,
+    SPAN_NGRAM,
     doc_token_sets,
     exact_dedup_summary,
     minhash_lsh_scores,
@@ -188,7 +191,7 @@ def dd3_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dd4_ngram_jaccard",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
       SELECT DISTINCT doc_id, n_chars,
              unnest(list_transform(range(1, len(string_split(text, ' '))),
@@ -199,7 +202,7 @@ def dd3_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT COUNT(*) AS n_docs FROM documents
     ), keep AS (
       SELECT token FROM (SELECT token, COUNT(*) AS df FROM sh GROUP BY token), tot
-      WHERE df <= LEAST(0.05 * n_docs, 256)
+      WHERE df <= LEAST({NGRAM_MAX_DF_FRAC} * n_docs, {NGRAM_MAX_DF_ABS})
     ), shc AS (
       SELECT sh.* FROM sh JOIN keep USING (token)
     ), sizes AS (
@@ -248,9 +251,7 @@ def dd4_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fixture corpora stay far under the gate, so oracle parity always
     exercises the exhaustive small-corpus plan the SQL above mirrors."""
     docs = spark.table("documents").select("doc_id", "n_chars", "text")
-    verified = ngram_jaccard_scores(docs, max_df_frac=0.05, max_df_abs=256).filter(
-        F.col("jaccard") >= 0.25
-    )
+    verified = ngram_jaccard_scores(docs).filter(F.col("jaccard") >= 0.25)
     return verified.agg(
         F.count(F.lit(1)).alias("n_neardup"),
         F.round(F.sum("jaccard"), 4).alias("sum_jaccard"),
@@ -319,13 +320,13 @@ def dd6_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dd7_duplicate_spans",
-    oracle="""
+    oracle=f"""
     WITH post AS (
       SELECT doc_id, md5(sh) AS k FROM (
         SELECT doc_id,
                UNNEST(list_transform(
-                 range(1, greatest(len(string_split(text, ' ')) - 4, 0) + 1),
-                 i -> array_to_string(string_split(text, ' ')[i:i+4], ' '))) AS sh
+                 range(1, greatest(len(string_split(text, ' ')) - {SPAN_NGRAM - 1}, 0) + 1),
+                 i -> array_to_string(string_split(text, ' ')[i:i+{SPAN_NGRAM - 1}], ' '))) AS sh
         FROM documents)
     ), occ AS (
       SELECT k, doc_id, COUNT(*) AS occ FROM post GROUP BY 1, 2
@@ -369,7 +370,7 @@ def dd7_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup by definition; only its exact df is lost)."""
     from ..operators.dedup import duplicate_span_stats
 
-    return duplicate_span_stats(spark.table("documents"), n=5).orderBy("doc_id")
+    return duplicate_span_stats(spark.table("documents")).orderBy("doc_id")
 
 
 @register(
@@ -621,7 +622,7 @@ def dd9_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dd10_dup_span_scrub",
-    oracle="""
+    oracle=f"""
     WITH arr AS (
       SELECT doc_id, text, string_split(text, ' ') AS a FROM documents
     ), tok AS (
@@ -629,14 +630,14 @@ def dd9_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM arr, UNNEST(range(1, len(a) + 1)) AS u(pos)
     ), grams AS (
       SELECT doc_id, CAST(u.start AS BIGINT) AS start,
-             array_to_string(a[u.start:u.start+4], ' ') AS sh
-      FROM arr, UNNEST(range(1, greatest(len(a) - 4, 0) + 1)) AS u(start)
+             array_to_string(a[u.start:u.start+{SPAN_NGRAM - 1}], ' ') AS sh
+      FROM arr, UNNEST(range(1, greatest(len(a) - {SPAN_NGRAM - 1}, 0) + 1)) AS u(start)
     ), dup AS (
       SELECT sh FROM grams GROUP BY sh HAVING COUNT(DISTINCT doc_id) >= 2
     ), cov AS (
       SELECT DISTINCT g.doc_id, CAST(u.pos AS BIGINT) AS pos
       FROM grams g JOIN dup USING (sh),
-           UNNEST(range(g.start, g.start + 5)) AS u(pos)
+           UNNEST(range(g.start, g.start + {SPAN_NGRAM})) AS u(pos)
     ), kept AS (
       SELECT t.doc_id, t.pos, t.tok FROM tok t
       WHERE NOT EXISTS (
@@ -676,7 +677,7 @@ def dd10_dup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     join and the absence of any cartesian state."""
     from ..operators.dedup import dup_span_scrub
 
-    return dup_span_scrub(spark.table("documents"), n=5).orderBy("doc_id")
+    return dup_span_scrub(spark.table("documents")).orderBy("doc_id")
 
 
 _CDC_MOD = 16  # expected chunk length in tokens (geometric tail)

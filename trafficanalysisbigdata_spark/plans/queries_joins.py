@@ -237,7 +237,7 @@ def j7_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = spark.table("customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
-    joined = salted_join(orders, cust, key="o_custkey", n_salts=8)
+    joined = salted_join(orders, cust, key="o_custkey")
     return (
         joined.groupBy("c_mktsegment")
         .agg(

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import (
+    FRAME_BYTES,
+    RESIZE_MAX_BYTES,
     audio_window_energy,
     extract_media_features,
     media_dedup_summary,
@@ -121,9 +123,9 @@ def mm3_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH vids AS (
       SELECT doc_id AS media_id, text FROM documents WHERE doc_id % 3 = 2
     ), frames AS (
-      SELECT media_id, i.i AS frame_idx, substr(text, i.i * 32 + 1, 32) AS frame
+      SELECT media_id, i.i AS frame_idx, substr(text, i.i * {FRAME_BYTES} + 1, {FRAME_BYTES}) AS frame
       FROM vids, (SELECT UNNEST(range(0, 64)) AS i) i
-      WHERE i.i * 32 < strlen(text)
+      WHERE i.i * {FRAME_BYTES} < strlen(text)
     )
     SELECT COUNT(DISTINCT media_id) AS n_videos,
            COUNT(*) AS n_frames,
@@ -141,7 +143,7 @@ def mm4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplication and ragged-tail handling are hash-verified."""
     from ..operators.multimodal import sample_frames
 
-    frames = sample_frames(synthesize_media(spark.table("documents")), frame_bytes=32)
+    frames = sample_frames(synthesize_media(spark.table("documents")))
     return frames.agg(
         F.countDistinct("media_id").alias("n_videos"),
         F.count(F.lit(1)).alias("n_frames"),
@@ -154,12 +156,12 @@ def mm4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mm5_resize_summary",
     oracle=f"""
     WITH clipped AS (
-      SELECT doc_id, substr(text, 1, 128) AS ctext,
+      SELECT doc_id, substr(text, 1, {RESIZE_MAX_BYTES}) AS ctext,
              {_MODALITY_SQL} AS modality
       FROM documents
     ), bytes AS (
       SELECT doc_id, SUM(unicode(substr(ctext, i.i, 1))) AS byte_sum
-      FROM clipped, (SELECT UNNEST(range(1, 129)) AS i) i
+      FROM clipped, (SELECT UNNEST(range(1, {RESIZE_MAX_BYTES + 1})) AS i) i
       WHERE i.i <= strlen(ctext)
       GROUP BY doc_id
     )
@@ -181,7 +183,7 @@ def mm5_resize_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     row preservation, and feature recomputation end to end."""
     from ..operators.multimodal import resize_media
 
-    resized = resize_media(synthesize_media(spark.table("documents")), max_bytes=128)
+    resized = resize_media(synthesize_media(spark.table("documents")))
     return (
         resized.groupBy("modality")
         .agg(
@@ -346,13 +348,13 @@ def mm8_perceptual_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm9_frame_dedup",
-    oracle="""
+    oracle=f"""
     WITH vids AS (
       SELECT doc_id AS media_id, text FROM documents WHERE doc_id % 3 = 2
     ), frames AS (
-      SELECT media_id, substr(text, i.i * 32 + 1, 32) AS frame
+      SELECT media_id, substr(text, i.i * {FRAME_BYTES} + 1, {FRAME_BYTES}) AS frame
       FROM vids, (SELECT UNNEST(range(0, 64)) AS i) i
-      WHERE i.i * 32 < strlen(text)
+      WHERE i.i * {FRAME_BYTES} < strlen(text)
     ), occ AS (
       SELECT md5(frame) AS fp, media_id, COUNT(*) AS occ
       FROM frames GROUP BY 1, 2
@@ -387,7 +389,7 @@ def mm9_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency is a second skinny partial agg. Whole frames never shuffle."""
     from ..operators.multimodal import sample_frames
 
-    frames = sample_frames(synthesize_media(spark.table("documents")), frame_bytes=32)
+    frames = sample_frames(synthesize_media(spark.table("documents")))
     occ = frames.groupBy(
         F.xxhash64("frame").alias("fp"), "media_id"
     ).agg(F.count(F.lit(1)).alias("occ"))
@@ -415,7 +417,7 @@ def mm9_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm10_scene_changes",
-    oracle="""
+    oracle=f"""
     WITH vids AS (
       SELECT doc_id AS media_id, text FROM documents WHERE doc_id % 3 = 2
     ), frames AS (
@@ -423,9 +425,9 @@ def mm9_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- encoding, sliced as 2-hex-char chunks so the oracle agrees with
       -- Spark's binary chunking even for multi-byte characters
       SELECT media_id, i.i AS frame_idx,
-             substr(hex(encode(text)), i.i * 64 + 1, 64) AS hx
+             substr(hex(encode(text)), i.i * {2 * FRAME_BYTES} + 1, {2 * FRAME_BYTES}) AS hx
       FROM vids, (SELECT UNNEST(range(0, 64)) AS i) i
-      WHERE i.i * 32 < octet_length(encode(text))
+      WHERE i.i * {FRAME_BYTES} < octet_length(encode(text))
     ), energy AS (
       SELECT media_id, frame_idx,
              CAST(list_sum(list_transform(range(0, strlen(hx) // 2),
@@ -465,7 +467,7 @@ def mm10_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import sample_frames
 
-    frames = sample_frames(synthesize_media(spark.table("documents")), frame_bytes=32)
+    frames = sample_frames(synthesize_media(spark.table("documents")))
     # Byte sum of the binary frame, no decode: one hex() per frame, then a
     # JVM-side fold over 2-hex-char chunks. Octet-based on BOTH engines —
     # a char-based sum would desync from the byte-sliced frames the moment
@@ -530,12 +532,11 @@ def mm11_png_codec_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL codec path, value-oracle-checked end to end: documents become
     actual 8-bit grayscale PNG streams (pixels = utf-8 bytes cycled over a
     doc-keyed W×H canvas, encoded with zlib), then the standard
-    decode/feature stage runs them through ``auto_decode`` — the pillow
-    tier where installed, the pure-stdlib PNG decoder (zlib inflate +
-    per-scanline unfilter) otherwise, both sharing PIL's integer ITU-R
-    601-2 luma so the tier never changes the answer. The oracle re-derives
-    every decoded (width, height, luma) from the document bytes directly,
-    so a decode defect on EITHER tier desyncs the hash.
+    decode/feature stage runs them through ``auto_decode``'s pure-stdlib
+    PNG decoder (zlib inflate + per-scanline unfilter, PIL's integer
+    ITU-R 601-2 luma). The oracle re-derives every decoded (width, height,
+    luma) from the document bytes directly, so a decode defect desyncs
+    the hash.
 
     Scale posture: encode and decode both ride mapInPandas per input
     partition (no shuffle carries content bytes); the rollup is one skinny

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import HEX_MOD, hash_frac
 from ..functions.text import lang_guess, lexical_diversity, token_count
 from ..operators.dedup import doc_token_sets, simhash16
+from ..operators.packing import PACK_SEQ_LEN, PACK_SHARDS
 from .registry import register
 
 # SQL twins shared with the text/dedup oracles (same algorithms, same hashes)
@@ -430,7 +431,7 @@ def pipe5_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SHARD_SQL = (
     f"CAST(FLOOR(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-    f" / {HEX_MOD} * 16) AS INT)"
+    f" / {HEX_MOD} * {PACK_SHARDS}) AS INT)"
 )
 
 @register(
@@ -447,8 +448,8 @@ _SHARD_SQL = (
       FROM t
     ), marked AS (
       SELECT shard, n_tokens, start_off,
-             CAST(FLOOR(start_off / 2048.0) AS BIGINT) AS seq_id,
-             CAST(FLOOR((start_off + n_tokens - 1) / 2048.0) AS BIGINT) AS end_seq
+             CAST(FLOOR(start_off / {float(PACK_SEQ_LEN)}) AS BIGINT) AS seq_id,
+             CAST(FLOOR((start_off + n_tokens - 1) / {float(PACK_SEQ_LEN)}) AS BIGINT) AS end_seq
       FROM packed
     )
     SELECT shard,
@@ -476,7 +477,7 @@ def pipe6_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard's final chunk."""
     from ..operators.packing import pack_sequences
 
-    packed = pack_sequences(spark.table("documents"), seq_len=2048, n_shards=16)
+    packed = pack_sequences(spark.table("documents"))
     return (
         packed.groupBy("shard")
         .agg(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..io import ARTIFACT_ROOT, ensure_artifact, source_stamp
 from ..operators.similarity import (
+    IVF_PROBES,
     brute_force_topk,
     build_ivf_index,
     centroid_semantic_dedup,
@@ -199,11 +200,11 @@ def sim5_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim3's LSH — candidate fetch is an equi-join on cluster id."""
     emb = spark.table("embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk(emb, probes, k=5, n_clusters=16, n_probe=6)
+    return ivf_topk(emb, probes, k=5)
 
 
-# Static index paths, one per kind: the k-means index of sim6 and
-# sim5x/sim6x, and sim8's hash index. Each is the link ensure_artifact
+# Static index paths, one per kind: the k-means index of sim5x/sim6x and
+# sim8's hash index. Each is the link ensure_artifact
 # repoints; the Spark side reads the key directory it returns.
 _KIVF_DIR = os.path.join(ARTIFACT_ROOT, "kivf")
 _HIVF_DIR = os.path.join(ARTIFACT_ROOT, "hivf")
@@ -220,28 +221,7 @@ def _ensure_kivf_index(spark: SparkSession, sf_dir: str) -> str:
     seed-pinned fit + partitioned-by-cl assignments + centroids), with
     ``_KIVF_DIR`` linked to it."""
     emb = spark.table("embeddings")
-    return _ensure_index(_KIVF_DIR, sf_dir, lambda d: build_ivf_index(emb, d, n_clusters=16))
-
-
-@register(
-    "sim6_ivf_indexed_topk",
-    oracle=None,  # shares sim5's non-SQL k-means fit; parity with the
-    # unindexed path and partition pruning are asserted in tests
-    tags=("similarity", "ann", "ivf", "index"),
-    tables=("embeddings",),
-)
-def sim6_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim5 against a PERSISTED index: the k-means fit runs once into
-    ``build_ivf_index`` (assignments parquet partitioned by cluster id +
-    centroids), and the query reads the index — no fit stage, and the scan
-    touches only probed ``cl=`` partitions. Index builds lazily per source
-    stamp (``ensure_artifact``) the first time the query runs; reruns are pure
-    queries, which is the production IVF lifecycle."""
-    from ..operators.similarity import ivf_topk_indexed
-
-    index_dir = _ensure_kivf_index(spark, sf_dir)
-    probes = spark.table("embeddings").filter(F.col("vec_id") < 10)
-    return ivf_topk_indexed(spark, index_dir, probes, k=5, n_probe=6)
+    return _ensure_index(_KIVF_DIR, sf_dir, lambda d: build_ivf_index(emb, d))
 
 
 @register(
@@ -476,12 +456,12 @@ def sim7_int8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim8_hash_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED-IVF lifecycle, fully value-oracle-checked: build once
     (hash-sampled deterministic quantizer — dd5's trick — into the same
-    partitioned-by-cl layout as sim6), then query with a rounded-cosine
-    centroid shortlist + exact re-rank inside probed cells only. sim6 keeps
-    the k-means quantizer (tighter cells, no SQL twin — rows-only check);
+    partitioned-by-cl layout as sim5x/sim6x), then query with a rounded-cosine
+    centroid shortlist + exact re-rank inside probed cells only. sim6x keeps
+    the k-means quantizer (tighter cells, but the fit has no SQL twin);
     sim8 trades cell tightness for end-to-end auditability, so the
     index-build, the cell membership, the shortlist AND the final ranking
-    are all pinned bit-for-bit by the DuckDB oracle. Cached like sim6."""
+    are all pinned bit-for-bit by the DuckDB oracle. Cached like sim6x."""
     from ..operators.similarity import build_hash_ivf_index, hash_ivf_topk_indexed
 
     emb = spark.table("embeddings")
@@ -649,7 +629,7 @@ def sim10_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- sim5x/sim6x: the k-means IVF stages, driver-VALUE-checked ---------------
 # The mlx5/mlx6 persist pattern applied to the similarity index: the KMeans
-# FIT itself has no ANSI twin (the reason sim5/sim6 are rows-only), but the
+# FIT itself has no ANSI twin (the reason sim5 is rows-only), but the
 # fitted index IS a parquet artifact, and everything downstream of it —
 # cell membership, the distance shortlist, the in-cell cosine re-rank —
 # is deterministic and SQL-expressible. The index persists ONCE per source
@@ -681,7 +661,7 @@ def sim5x_kmeans_cell_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift in cell membership, a torn partition write, or a norm
     recomputation bug desyncs the hash; only the fit's internal math stays
     range-gated. Scale posture: one partial/final agg over the partitioned
-    index — the same layout a 100 TB corpus queries through DPP (sim6)."""
+    index — the same layout a 100 TB corpus queries through DPP (sim6x)."""
     a = spark.read.parquet(f"{_ensure_kivf_index(spark, sf_dir)}/assignments")
     return (
         a.groupBy(F.col("cl").cast("int").alias("cl"))
@@ -717,7 +697,7 @@ def sim5x_kmeans_cell_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                           6) ASC, c.cl) AS srn
         FROM embeddings p CROSS JOIN cent c
         WHERE p.vec_id < 10) t
-      WHERE srn <= 6
+      WHERE srn <= {IVF_PROBES}
     ), scored AS (
       SELECT s.query_id, m.neighbor_id,
              ROUND(list_cosine_similarity(CAST(p.embedding AS DOUBLE[]), m.vec), 6)
@@ -736,18 +716,21 @@ def sim5x_kmeans_cell_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables=("embeddings",),
 )
 def sim6x_kmeans_query_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim6's QUERY stage over the persisted k-means index,
-    driver-value-checked end to end: given the fitted centroids + cell
-    assignments (the artifact sim5x pins), the distance shortlist
-    (round-6 squared L2, cl tie-break — `_ivf_query`'s production
-    ordering), the probed-cells-only candidate join, and the cosine top-5
-    are all re-derived relationally by the oracle from the SAME artifact.
-    Together with sim5x this closes the last two rows-only non-ML registry
-    entries down to the KMeans fit itself (range-gated recall in
-    tests/test_similarity.py). The Spark side is the exact production read
-    path (``ivf_topk_indexed``), dynamic-partition-pruned on cl."""
+    """sim5's IVF top-5 against the PERSISTED k-means index, driver-value-
+    checked end to end. The fit runs once per source stamp into
+    ``build_ivf_index`` (assignments parquet partitioned by cluster id +
+    centroids); the query reads the index — no fit stage, and the scan
+    touches only probed ``cl=`` partitions (the production IVF lifecycle).
+    Given the fitted centroids + cell assignments (the artifact sim5x
+    pins), the distance shortlist (round-6 squared L2, cl tie-break —
+    `_ivf_query`'s production ordering), the probed-cells-only candidate
+    join, and the cosine top-5 are all re-derived relationally by the
+    oracle from the SAME artifact, so only the KMeans fit itself stays
+    range-gated (recall in tests/test_similarity.py). The Spark side is
+    the exact production read path (``ivf_topk_indexed``),
+    dynamic-partition-pruned on cl."""
     from ..operators.similarity import ivf_topk_indexed
 
     index_dir = _ensure_kivf_index(spark, sf_dir)
     probes = spark.table("embeddings").filter(F.col("vec_id") < 10)
-    return ivf_topk_indexed(spark, index_dir, probes, k=5, n_probe=6)
+    return ivf_topk_indexed(spark, index_dir, probes, k=5)

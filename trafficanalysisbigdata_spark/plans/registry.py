@@ -161,7 +161,7 @@ def load_all() -> dict[str, QuerySpec]:
 #   tier 1 — previously-green queries, least-recently-green first (so old
 #            results keep getting refreshed once tier 0 drains).
 #
-# No-oracle queries (ml1-ml9, sim5, sim6) sort after every oracle-bearing
+# No-oracle queries (ml1-ml9, sim5) sort after every oracle-bearing
 # query so the window stays 100% value-checkable. All queries are
 # continuously exact-checked by the local mirror (tests/test_oracle_parity)
 # regardless of window membership.

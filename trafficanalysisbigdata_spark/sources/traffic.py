@@ -101,7 +101,7 @@ def normalize_traffic(raw: DataFrame) -> DataFrame:
         }
     )
     # F7 + P3: WKT POINT → x/y doubles, geometry dropped
-    df = with_point_coords(df, "geometry")
+    df = with_point_coords(df)
     # direction codes: pandas .cat.codes parity — alphabetical, NaN/unseen → −1
     code = F.lit(-1)
     for name, c in DIRECTION_CODES.items():

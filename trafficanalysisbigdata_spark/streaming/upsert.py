@@ -16,6 +16,7 @@ its own partial output (covered by tests/test_streaming.py's replay test).
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -38,16 +39,18 @@ def _complete_versions(state_root: str, below: int | None = None) -> list[str]:
     ]
 
 
-def keyed_upsert_batch(
-    state_root: str, keep_versions: int | None = 3
-) -> Callable[[DataFrame, int], None]:
+#: Complete state versions retained after each publish (see keyed_upsert_batch).
+KEEP_VERSIONS = 3
+
+
+def keyed_upsert_batch(state_root: str) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch writer: counter columns accumulate, the
     latest-attribute columns resolve by event recency (max event_id) — the
     CDC materialization contract. The merge is a full-outer join on the key
     of two one-row-per-key frames, so each batch's cost is bounded by its
     own key set plus the state width, never the stream's history.
 
-    ``keep_versions`` bounds storage: after each publish, all but the newest
+    ``KEEP_VERSIONS`` bounds storage: after each publish, all but the newest
     K complete versions are retired. One full state copy per batch is the
     price of immutable-version snapshot isolation (what Delta/Iceberg pay
     too), but UNBOUNDED retention is not — over a long-running stream the
@@ -55,10 +58,7 @@ def keyed_upsert_batch(
     idempotence: Structured Streaming only ever replays the newest
     batch (the one whose checkpoint commit was lost), and that replay reads
     the newest complete version STRICTLY OLDER than itself — i.e. the
-    second-newest overall, which retention always keeps. ``None`` disables
-    compaction (keep everything, e.g. for time travel)."""
-    if keep_versions is not None and keep_versions < 2:
-        raise ValueError("keep_versions must be >= 2 to survive batch replay")
+    second-newest overall, which retention always keeps."""
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.groupBy("user_id").agg(
@@ -100,11 +100,8 @@ def keyed_upsert_batch(
         merged.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(state_root, f"v{batch_id:05d}")
         )
-        if keep_versions is not None:
-            import shutil
-
-            for stale in _complete_versions(state_root)[:-keep_versions]:
-                shutil.rmtree(os.path.join(state_root, stale), ignore_errors=True)
+        for stale in _complete_versions(state_root)[:-KEEP_VERSIONS]:
+            shutil.rmtree(os.path.join(state_root, stale), ignore_errors=True)
 
     return upsert
 
