@@ -188,7 +188,7 @@ def test_dup_span_scrub_planted_edges(spark):
     assert exp[0][1] == exp[0][0] - 5                 # exactly the shared 5-gram
 
 
-def test_cdc_chunks_resync_property(spark):
+def test_cdc_chunks_resync_property(spark, monkeypatch):
     """The defining CDC property: prepend one token to a document and every
     chunk after the first boundary keeps its content address verbatim (a
     fixed-size chunker would shift and desync them all). Also pins the
@@ -196,8 +196,10 @@ def test_cdc_chunks_resync_property(spark):
     import hashlib
     import random
 
+    from trafficanalysisbigdata_spark.operators import dedup
     from trafficanalysisbigdata_spark.operators.dedup import cdc_chunks
 
+    monkeypatch.setattr(dedup, "CDC_MODULUS", 16)
     rng = random.Random(7)
     words = [f"w{rng.randrange(200)}" for _ in range(120)]
     docs = spark.createDataFrame(
@@ -205,7 +207,7 @@ def test_cdc_chunks_resync_property(spark):
         "doc_id long, text string",
     )
     out = {}
-    for r in cdc_chunks(docs, modulus=16).collect():
+    for r in cdc_chunks(docs).collect():
         out.setdefault(r.doc_id, []).append((r.chunk, r.n_tokens, r.fp))
     for v in out.values():
         v.sort()
@@ -237,17 +239,19 @@ def test_cdc_chunks_resync_property(spark):
     assert len(fps1 - {fp for _, _, fp in out[0]}) <= 2
 
 
-def test_cdc_stats_match_independent_reference(spark):
+def test_cdc_stats_match_independent_reference(spark, monkeypatch):
     """cdc_chunk_dedup_stats vs a from-scratch Python pipeline on a corpus
     with planted chunk-level duplication (shared suffixes across docs)."""
     import hashlib
     import random
     from collections import Counter
 
+    from trafficanalysisbigdata_spark.operators import dedup
     from trafficanalysisbigdata_spark.operators.dedup import (
         cdc_chunk_dedup_stats,
     )
 
+    monkeypatch.setattr(dedup, "CDC_MODULUS", 16)
     rng = random.Random(99)
     shared = [f"s{rng.randrange(50)}" for _ in range(60)]
     rows = []
@@ -281,13 +285,13 @@ def test_cdc_stats_match_independent_reference(spark):
     )
     got = [
         (r.chunk_len, r.n_chunks, r.n_distinct, r.n_dup_instances, r.saved_tokens)
-        for r in cdc_chunk_dedup_stats(docs, modulus=16).collect()
+        for r in cdc_chunk_dedup_stats(docs).collect()
     ]
     assert got == expect
     assert any(d > 0 for _, _, _, d, _ in expect), "planted dup must register"
 
 
-def test_cdc_guarded_matches_reference_and_respects_guards(spark):
+def test_cdc_guarded_matches_reference_and_respects_guards(spark, monkeypatch):
     """cdc_chunks_guarded vs a from-scratch Python implementation of the
     min/max rule on a corpus engineered to hit every branch: honored
     in-window boundaries, boundaries SKIPPED for falling before min_len,
@@ -296,9 +300,13 @@ def test_cdc_guarded_matches_reference_and_respects_guards(spark):
     import hashlib
     import random
 
+    from trafficanalysisbigdata_spark.operators import dedup
     from trafficanalysisbigdata_spark.operators.dedup import cdc_chunks_guarded
 
     MOD, MN, MX = 16, 8, 32
+    monkeypatch.setattr(dedup, "CDC_MODULUS", MOD)
+    monkeypatch.setattr(dedup, "CDC_MIN_LEN", MN)
+    monkeypatch.setattr(dedup, "CDC_MAX_LEN", MX)
 
     def boundary(t):
         return int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % MOD == 0
@@ -318,7 +326,7 @@ def test_cdc_guarded_matches_reference_and_respects_guards(spark):
 
     got = sorted(
         (r.doc_id, r.chunk, r.n_tokens, r.fp)
-        for r in cdc_chunks_guarded(docs, MOD, MN, MX).collect()
+        for r in cdc_chunks_guarded(docs).collect()
     )
 
     expect = []
@@ -350,3 +358,22 @@ def test_cdc_guarded_matches_reference_and_respects_guards(spark):
     # the fixture exercised a forced cut and a short tail
     assert any(ln == MX for _, _, ln, _ in expect)
     assert any(ln < MN for d, k, ln, _ in expect if k == last[d])
+
+
+def test_cdc_guarded_workers_read_patched_guards(spark, monkeypatch):
+    """The guard lengths reach the Python workers as the driver read them at
+    call time: a boundary-free 10-token document under a patched max of 3
+    is cut every 3 tokens (under the shipped 8/32 it is one chunk)."""
+    import hashlib
+
+    from trafficanalysisbigdata_spark.operators import dedup
+
+    def boundary(t):
+        return int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % dedup.CDC_MODULUS == 0
+
+    toks = [f"n{i}" for i in range(1000) if not boundary(f"n{i}")][:10]
+    docs = spark.createDataFrame([(0, " ".join(toks))], "doc_id long, text string")
+    monkeypatch.setattr(dedup, "CDC_MIN_LEN", 2)
+    monkeypatch.setattr(dedup, "CDC_MAX_LEN", 3)
+    got = sorted((r.chunk, r.n_tokens) for r in dedup.cdc_chunks_guarded(docs).collect())
+    assert got == [(0, 3), (1, 3), (2, 3), (3, 1)]

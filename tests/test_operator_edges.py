@@ -927,31 +927,137 @@ def _literal(node: ast.expr):
         return _NOT_LITERAL
 
 
-def _restates(value: ast.expr, default: ast.expr) -> bool:
-    """``value`` is a literal equal to the literal ``default``."""
-    lit = _literal(value)
-    return lit is not _NOT_LITERAL and lit == _literal(default)
+def _module_of(path: str) -> str:
+    """The dotted module name of a repo-relative ``.py`` path."""
+    parts = path.removesuffix(".py").split("/")
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+class _Bindings:
+    """What each name of one module is bound to: its top-level functions,
+    its constants (a name bound once in the whole module, by a top-level
+    assignment of a literal) and its imports at any depth, as
+    ``(module, name)`` pairs where ``name`` is None for a module import."""
+
+    def __init__(self, path: str, src: str):
+        self.module = _module_of(path)
+        package = self.module
+        if not path.endswith("__init__.py"):
+            package = package.rpartition(".")[0]
+        self.tree = ast.parse(src)
+        self.functions = {n.name for n in self.tree.body if isinstance(n, ast.FunctionDef)}
+        self.imports: dict[str, list[tuple[str, str | None]]] = {}
+        self.bound: dict[str, int] = {}
+        for node in ast.walk(self.tree):
+            names = []
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    alias = a.asname or a.name.partition(".")[0]
+                    target = a.name if a.asname else alias
+                    self.imports.setdefault(alias, []).append((target, None))
+                    names.append(alias)
+            elif isinstance(node, ast.ImportFrom):
+                base = package.split(".")[: len(package.split(".")) - node.level + 1]
+                source = ".".join(filter(None, [*(base if node.level else []), node.module]))
+                for a in node.names:
+                    self.imports.setdefault(a.asname or a.name, []).append((source, a.name))
+                    names.append(a.asname or a.name)
+            elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+                names.append(node.id)
+            elif isinstance(node, ast.arg):
+                names.append(node.arg)
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names.append(node.name)
+            for n in names:
+                self.bound[n] = self.bound.get(n, 0) + 1
+        self.constants = {
+            s.targets[0].id: _literal(s.value)
+            for s in self.tree.body
+            if isinstance(s, ast.Assign)
+            and len(s.targets) == 1
+            and isinstance(s.targets[0], ast.Name)
+            and self.bound[s.targets[0].id] == 1
+            and _literal(s.value) is not _NOT_LITERAL
+        }
+
+
+def _resolve(modules: dict[str, _Bindings], module: str, node: ast.expr, depth=0) -> list:
+    """What ``node`` (a name or ``alias.name``) in ``module`` denotes, as
+    ``("function", module, name)``, ``("constant", value)`` or
+    ``("module", name)`` entries; empty for anything else (a local, a
+    method of an object that is not a module, a name from outside)."""
+    if isinstance(node, ast.Attribute):
+        owners = [o[1] for o in _resolve(modules, module, node.value, depth) if o[0] == "module"]
+        return [t for owner in owners for t in _member(modules, owner, node.attr, depth)]
+    if not isinstance(node, ast.Name) or module not in modules or depth > 8:
+        return []
+    b = modules[module]
+    if node.id in b.functions:
+        return [("function", module, node.id)]
+    if node.id in b.constants:
+        return [("constant", b.constants[node.id])]
+    found = []
+    for source, name in b.imports.get(node.id, []):
+        if name is None:
+            found.append(("module", source))
+        else:
+            found += _member(modules, source, name, depth + 1)
+    return found
+
+
+def _member(modules: dict[str, _Bindings], module: str, name: str, depth: int) -> list:
+    """What ``module.name`` denotes: a submodule, or the name in ``module``."""
+    if f"{module}.{name}" in modules:
+        return [("module", f"{module}.{name}")]
+    return _resolve(modules, module, ast.Name(name, ast.Load()), depth)
+
+
+def _value(modules: dict[str, _Bindings], module: str, node: ast.expr):
+    """``node``'s value when it is a literal or names a constant, else
+    ``_NOT_LITERAL``."""
+    lit = _literal(node)
+    if lit is not _NOT_LITERAL:
+        return lit
+    if isinstance(node, ast.Name) and modules[module].bound.get(node.id, 0) > 1:
+        return _NOT_LITERAL  # bound again somewhere in the module: a variable
+    values = [t[1] for t in _resolve(modules, module, node) if t[0] == "constant"]
+    return values[0] if len(values) == 1 else _NOT_LITERAL
+
+
+def _shipped_calls(defining: dict[str, str], shipped: dict[str, str]):
+    """The bindings of every module, and each shipped call under the
+    ``(module, function)`` it calls, with the calling module."""
+    bindings = [_Bindings(p, s) for p, s in {**shipped, **defining}.items()]
+    modules = {b.module: b for b in bindings}
+    calls: dict[tuple[str, str], list[tuple[str, ast.Call]]] = {}
+    for path in shipped:
+        caller = _module_of(path)
+        for node in ast.walk(modules[caller].tree):
+            if isinstance(node, ast.Call):
+                for t in _resolve(modules, caller, node.func):
+                    if t[0] == "function":
+                        calls.setdefault(t[1:], []).append((caller, node))
+    return modules, calls
 
 
 def _unused_defaults(defining: dict[str, str], shipped: dict[str, str]) -> list[str]:
     """``path:function(param)`` for each defaulted parameter of a public
     module-level function in ``defining`` that no call in ``shipped`` sets,
-    by keyword or by position, to anything but its default: a literal equal
-    to the default restates it and does not count. Calls resolve by name;
-    functions no shipped code calls are out of scope, and so are class
+    by keyword or by position, to anything but its default: a literal, or a
+    name bound to a literal constant, equal to the default restates it and
+    does not count. A call counts for the function it calls: a name defined
+    in or imported from the defining module, or ``alias.name`` with
+    ``alias`` an imported module; a method call on any other object does
+    not. Functions no shipped code calls are out of scope, and so are class
     methods."""
-    calls: dict[str, list[ast.Call]] = {}
-    for src in shipped.values():
-        for node in ast.walk(ast.parse(src)):
-            if isinstance(node, ast.Call):
-                name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
-                calls.setdefault(name, []).append(node)
+    modules, calls = _shipped_calls(defining, shipped)
     unused = []
-    for path, src in sorted(defining.items()):
-        for fn in ast.parse(src).body:
+    for path in sorted(defining):
+        module = _module_of(path)
+        for fn in modules[module].tree.body:
             if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
                 continue
-            if fn.name not in calls:
+            if (module, fn.name) not in calls:
                 continue
             a = fn.args
             positional = [x.arg for x in a.posonlyargs + a.args]
@@ -959,10 +1065,15 @@ def _unused_defaults(defining: dict[str, str], shipped: dict[str, str]) -> list[
             defaults.update(
                 (x.arg, d) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
             )
+            defaults = {p: _value(modules, module, d) for p, d in defaults.items()}
             passed = set()
-            for call in calls[fn.name]:
+            for caller, call in calls[module, fn.name]:
                 given = [*zip(positional, call.args), *((k.arg, k.value) for k in call.keywords)]
-                passed |= {p for p, v in given if p in defaults and not _restates(v, defaults[p])}
+                for p, v in given:
+                    if p in defaults:
+                        value = _value(modules, caller, v)
+                        if value is _NOT_LITERAL or value != defaults[p]:
+                            passed.add(p)
             unused += [f"{path}:{fn.name}({p})" for p in defaults if p not in passed]
     return unused
 
@@ -977,7 +1088,7 @@ def test_every_default_has_a_shipped_caller():
 
 def test_default_guard_flags_its_twin():
     defining = {"ops.py": "def op(df, k=1, unused=2):\n    return df\n"}
-    shipped = {"caller.py": "op(df, k=3)\n"}
+    shipped = {"caller.py": "from ops import op\nop(df, k=3)\n"}
     assert _unused_defaults(defining, shipped) == ["ops.py:op(unused)"]
 
 
@@ -985,9 +1096,38 @@ def test_default_guard_flags_a_restated_default():
     """A call that passes the default back, by keyword or by position, does
     not set the parameter; a variable might, so it counts."""
     defining = {"ops.py": "def op(df, k=1):\n    return df\n"}
-    assert _unused_defaults(defining, {"c.py": "op(df, k=1)\n"}) == ["ops.py:op(k)"]
-    assert _unused_defaults(defining, {"c.py": "op(df, 1.0)\n"}) == ["ops.py:op(k)"]
-    assert _unused_defaults(defining, {"c.py": "op(df, k=n)\n"}) == []
+    call = "from ops import op\n"
+    assert _unused_defaults(defining, {"c.py": call + "op(df, k=1)\n"}) == ["ops.py:op(k)"]
+    assert _unused_defaults(defining, {"c.py": call + "op(df, 1.0)\n"}) == ["ops.py:op(k)"]
+    assert _unused_defaults(defining, {"c.py": call + "op(df, k=n)\n"}) == []
+
+
+def test_default_guard_resolves_constants():
+    """A module constant equal to the default restates it, whether the
+    calling module defines it or imports it; a local of the same name is a
+    variable, so it counts."""
+    defining = {"ops.py": "K = 1\ndef op(df, k=1):\n    return df\n"}
+    own = "from ops import op\nK = 1\nop(df, k=K)\n"
+    imported = "from ops import K, op\nop(df, k=K)\n"
+    local = "def f(df):\n    K = 2\n    return op(df, k=K)\n"
+    assert _unused_defaults(defining, {"c.py": own}) == ["ops.py:op(k)"]
+    assert _unused_defaults(defining, {"c.py": imported}) == ["ops.py:op(k)"]
+    assert _unused_defaults(defining, {"c.py": own + local}) == []
+    assert _unused_defaults(defining, {"c.py": imported + local}) == []
+
+
+def test_default_guard_resolves_callees():
+    """A call counts for the function it calls: a method of an object that
+    is not a module does not, and ``alias.op`` through an imported module
+    does, as does a name imported inside a function."""
+    defining = {"ops.py": "def op(df, k=1):\n    return df\n"}
+    method = "from ops import op\nop(df)\nx.op(df, k=3)\n"
+    alias = "import ops as o\no.op(df, k=3)\n"
+    nested = "def f(df):\n    from ops import op\n    return op(df, k=3)\n"
+    assert _unused_defaults(defining, {"c.py": method}) == ["ops.py:op(k)"]
+    assert _unused_defaults(defining, {"c.py": alias}) == []
+    assert _unused_defaults(defining, {"c.py": nested}) == []
+    assert _unused_defaults(defining, {"c.py": "x.op(df, k=3)\n"}) == []
 
 
 _PROBE_ERRORS = {"ImportError", "ModuleNotFoundError"}

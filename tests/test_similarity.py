@@ -14,8 +14,9 @@ from tests.plan_tree import Node, nodes, plan_of
 from trafficanalysisbigdata_spark.io import register_views
 from trafficanalysisbigdata_spark.operators.similarity import (
     brute_force_topk,
+    build_ivf_index,
     centroid_semantic_dedup,
-    ivf_topk,
+    ivf_topk_indexed,
     lsh_neardup_pairs,
     lsh_topk,
     multi_table_buckets,
@@ -60,7 +61,7 @@ def test_lsh_neardup_recall_vs_allpairs(spark, sf_dir):
     assert len(approx) / len(exact) >= 0.7, f"pair recall: {len(approx)}/{len(exact)}"
 
 
-def test_ivf_recall_vs_bruteforce(spark, sf_dir):
+def test_ivf_recall_vs_bruteforce(spark, sf_dir, tmp_path):
     prep(spark)
     register_views(spark, sf_dir, "embeddings")
     emb = spark.table("embeddings")
@@ -69,9 +70,11 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
         (r.query_id, r.neighbor_id)
         for r in brute_force_topk(emb, probes, k=5).collect()
     }
+    index_dir = str(tmp_path / "ivf_index")
+    build_ivf_index(emb, index_dir)
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in ivf_topk(emb, probes, k=5).collect()
+        for r in ivf_topk_indexed(spark, index_dir, probes, k=5).collect()
     }
     # the near-uniform fixture is IVF's worst case (no cluster structure);
     # measured 0.76 — the bar leaves margin for k-means assignment jitter
@@ -108,17 +111,11 @@ def test_centroid_semantic_dedup_invariants(spark, sf_dir):
 def test_ivf_index_persist_and_query(spark, tmp_path, monkeypatch):
     """The persisted-index lifecycle: build once (fit + write), query many —
     on a CLUSTERED fixture (IVF's intended regime) recall vs brute force
-    must clear a higher bar than the uniform-fixture path, the indexed query
-    must match the in-memory path bit-for-bit (same seed => same quantizer),
-    and the assignments scan must be partition-pruned to the probed cells."""
+    must clear a higher bar than the uniform-fixture path, and the
+    assignments scan must be partition-pruned to the probed cells."""
     import numpy as np
 
     from trafficanalysisbigdata_spark.operators import similarity as sim
-    from trafficanalysisbigdata_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk,
-        ivf_topk_indexed,
-    )
 
     monkeypatch.setattr(sim, "IVF_CLUSTERS", 8)
     monkeypatch.setattr(sim, "IVF_PROBES", 2)
@@ -142,13 +139,6 @@ def test_ivf_index_persist_and_query(spark, tmp_path, monkeypatch):
     }
     recall = len(exact & got) / len(exact)
     assert recall >= 0.9, f"clustered-fixture IVF recall too low: {recall}"
-
-    # same quantizer seed => the unindexed path agrees exactly
-    inmem = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk(emb, probes, k=5).collect()
-    }
-    assert got == inmem
 
     # the index read must only scan probed cl= partitions: with 10 probes x
     # IVF_PROBES=2 over 8 clusters, pruning keeps <= 8; the plan shows a
@@ -856,7 +846,7 @@ def test_pipe16_top1_agrees_with_bruteforce(spark, sf_dir):
     assert agree >= 0.9, f"top-1 agreement too low: {agree}"
 
 
-def test_mmr_topk_matches_independent_greedy(spark):
+def test_mmr_topk_matches_independent_greedy(spark, monkeypatch):
     """sim10's operator vs a from-scratch Python MMR on random vectors:
     in-order Python float arithmetic reproduces the Catalyst fold bit for
     bit, so shortlist membership, every integer micro-unit score, the
@@ -865,10 +855,12 @@ def test_mmr_topk_matches_independent_greedy(spark):
     than the corpus."""
     import random
 
+    from trafficanalysisbigdata_spark.operators import similarity
     from trafficanalysisbigdata_spark.operators.similarity import mmr_topk
 
     rng = random.Random(1442)
     n, dim, nprobe, shortlist, k = 60, 8, 2, 10, 5
+    monkeypatch.setattr(similarity, "MMR_SHORTLIST", shortlist)
     vecs = {
         i: [round(rng.uniform(-1, 1), 3) for _ in range(dim)] for i in range(n)
     }
@@ -930,7 +922,7 @@ def test_mmr_topk_matches_independent_greedy(spark):
 
     got = [
         (r.query_id, r.mmr_rank, r.doc_id, r.rel, r.mmr)
-        for r in mmr_topk(df, probes, k=k, shortlist=shortlist)
+        for r in mmr_topk(df, probes, k=k)
         .orderBy("query_id", "mmr_rank")
         .collect()
     ]

@@ -201,23 +201,18 @@ def jaccard_scores(
     )
 
 
-def df_capped(
-    postings: DataFrame,
-    docs_total: DataFrame,
-    max_df_frac: float,
-    max_df_abs: int = 256,
-) -> DataFrame:
+def df_capped(postings: DataFrame, docs_total: DataFrame) -> DataFrame:
     """Drop postings whose token's document frequency exceeds
-    ``min(max_df_frac * n_docs, max_df_abs)`` — the hot-shingle skew guard:
-    one boilerplate shingle shared by 1% of a 100 TB corpus makes the
-    candidate self-join quadratic in its posting-list length.
+    ``min(NGRAM_MAX_DF_FRAC * n_docs, NGRAM_MAX_DF_ABS)`` — the hot-shingle
+    skew guard: one boilerplate shingle shared by 1% of a 100 TB corpus
+    makes the candidate self-join quadratic in its posting-list length.
 
     BOTH bounds matter. The fractional cap alone is NOT scale-safe: it allows
     posting lists of ``f·n``, so worst-case per-shingle pair volume is
     ``(f·n)² — still quadratic in the corpus``. Measured: the 10× scale
     rehearsal (scripts/scale_rehearsal.py) ran dd4 45× slower at 10× data
     under the fraction-only cap. The absolute cap bounds per-shingle work at
-    ``max_df_abs²/2`` pairs at any corpus size; the fractional cap keeps
+    ``NGRAM_MAX_DF_ABS²/2`` pairs at any corpus size; the fractional cap keeps
     small corpora from pairing on their commonest shingles. ``docs_total`` is
     a one-row (n_docs) aggregate, joined in as a broadcast literal — no
     driver action.
@@ -227,7 +222,9 @@ def df_capped(
         tok_df.crossJoin(F.broadcast(docs_total))
         .filter(
             F.col("df")
-            <= F.least(F.lit(max_df_frac) * F.col("n_docs"), F.lit(float(max_df_abs)))
+            <= F.least(
+                F.lit(NGRAM_MAX_DF_FRAC) * F.col("n_docs"), F.lit(float(NGRAM_MAX_DF_ABS))
+            )
         )
         .select("token")
     )
@@ -272,7 +269,8 @@ NGRAM_JACCARD_CROSSOVER_DOCS = 100_000
 # the big arm's verify-broadcast budget for the hashed shingle arrays
 # (8·Σ|S_d| + 48·n bytes; see ngram_jaccard_scores)
 NGRAM_VERIFY_BUDGET_MB = 1024
-# the small arm's document-frequency cap, min(frac·n_docs, abs) (df_capped)
+# the document-frequency cap min(frac·n_docs, abs) df_capped applies (the
+# small arm below, pipe14)
 NGRAM_MAX_DF_FRAC = 0.05
 NGRAM_MAX_DF_ABS = 256
 
@@ -375,9 +373,9 @@ def ngram_jaccard_scores(docs: DataFrame) -> DataFrame:
         )
         return jaccard_scores(pairs, doc_shingle_arrays(docs), broadcast_sets=fits)
     docs_total = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    sh = df_capped(
-        doc_shingle_sets(docs), docs_total, NGRAM_MAX_DF_FRAC, NGRAM_MAX_DF_ABS
-    ).join(docs.select("doc_id", "n_chars"), "doc_id")
+    sh = df_capped(doc_shingle_sets(docs), docs_total).join(
+        docs.select("doc_id", "n_chars"), "doc_id"
+    )
     a = sh.select(F.col("doc_id").alias("doc1"), F.col("n_chars").alias("nc1"), "token")
     b = sh.select(F.col("doc_id").alias("doc2"), F.col("n_chars").alias("nc2"), "token")
     pairs = (
@@ -572,15 +570,24 @@ def duplicate_span_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def cdc_chunks(docs: DataFrame, modulus: int = 16) -> DataFrame:
+# content-defined chunking: a token whose hash is ≡ 0 (mod CDC_MODULUS) ends
+# a chunk, so CDC_MODULUS is the expected chunk length in tokens; the guarded
+# rule honors a boundary only past CDC_MIN_LEN tokens and forces a cut at
+# CDC_MAX_LEN
+CDC_MODULUS = 16
+CDC_MIN_LEN = 8
+CDC_MAX_LEN = 32
+
+
+def cdc_chunks(docs: DataFrame) -> DataFrame:
     """Token-level content-defined chunking (the LBFS/FastCDC cut-point
     idea at token granularity): a token whose content hash satisfies
-    ``h % modulus == 0`` ENDS a chunk, so chunk boundaries depend only on
+    ``h % CDC_MODULUS == 0`` ENDS a chunk, so chunk boundaries depend only on
     local content — insert or delete a token and every boundary outside
     its chunk stays put, which is why CDC chunk stores resynchronize
     across document versions where fixed-size chunking desyncs everything
-    downstream of the edit. Expected chunk length is ``modulus`` tokens
-    with a geometric tail (P(len > L) = (1 - 1/modulus)^L); production
+    downstream of the edit. Expected chunk length is ``CDC_MODULUS`` tokens
+    with a geometric tail (P(len > L) = (1 - 1/CDC_MODULUS)^L); production
     stores add min/max cut guards on top — a business rule on the same
     boundary stream, deliberately not modeled here.
 
@@ -592,7 +599,7 @@ def cdc_chunks(docs: DataFrame, modulus: int = 16) -> DataFrame:
     Shuffle shape: ONE exchange of token rows keyed by document — the
     boundary cumsum's per-doc window and the (doc, chunk) rebuild share
     that partitioning, and each group's state is one chunk's tokens
-    (geometric, mean ``modulus``). Nothing corpus-wide shuffles here;
+    (geometric, mean ``CDC_MODULUS``). Nothing corpus-wide shuffles here;
     consumers aggregate the 16-byte fps (see ``cdc_chunk_dedup_stats``).
     """
     tok = docs.select(
@@ -608,7 +615,7 @@ def cdc_chunks(docs: DataFrame, modulus: int = 16) -> DataFrame:
     )
     chunked = tok.withColumn(
         "chunk",
-        F.coalesce(F.sum((h % modulus == 0).cast("bigint")).over(w), F.lit(0)),
+        F.coalesce(F.sum((h % CDC_MODULUS == 0).cast("bigint")).over(w), F.lit(0)),
     )
     ordered = F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "token"))),
@@ -652,24 +659,19 @@ def chunk_dedup_ledger(chunks: DataFrame) -> DataFrame:
     )
 
 
-def cdc_chunk_dedup_stats(docs: DataFrame, modulus: int = 16) -> DataFrame:
+def cdc_chunk_dedup_stats(docs: DataFrame) -> DataFrame:
     """Corpus-wide CDC chunk-dedup yield, bucketed by chunk length (see
     ``chunk_dedup_ledger``). The length histogram doubles as a receipt of
     the cut-point statistics (geometric decay away from short lengths)."""
-    return chunk_dedup_ledger(cdc_chunks(docs, modulus))
+    return chunk_dedup_ledger(cdc_chunks(docs))
 
 
-def cdc_chunks_guarded(
-    docs: DataFrame,
-    modulus: int = 16,
-    min_len: int = 8,
-    max_len: int = 32,
-) -> DataFrame:
+def cdc_chunks_guarded(docs: DataFrame) -> DataFrame:
     """``cdc_chunks`` with the min/max cut guards every production chunk
     store adds (FastCDC's actual shape): a content boundary is honored
-    only if the chunk it would close has >= ``min_len`` tokens, and a cut
-    is FORCED at ``max_len`` when no acceptable boundary arrives — so
-    chunk sizes live in [min_len, max_len] (the final tail may be
+    only if the chunk it would close has >= ``CDC_MIN_LEN`` tokens, and a
+    cut is FORCED at ``CDC_MAX_LEN`` when no acceptable boundary arrives —
+    so chunk sizes live in [CDC_MIN_LEN, CDC_MAX_LEN] (the final tail may be
     shorter), killing both the geometric tail's tiny chunks (metadata
     overhead) and its unbounded heads (transfer granularity).
 
@@ -703,8 +705,10 @@ def cdc_chunks_guarded(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "token")
     )
     h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
+    # read on the driver: the workers' scan sees the values a caller patched
+    min_len, max_len = CDC_MIN_LEN, CDC_MAX_LEN
     flagged = (
-        tok.withColumn("b", (h % modulus == 0).cast("int"))
+        tok.withColumn("b", (h % CDC_MODULUS == 0).cast("int"))
         .repartition(F.col("doc_id"))
         .sortWithinPartitions("doc_id", "pos")
     )

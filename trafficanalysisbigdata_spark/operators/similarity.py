@@ -599,33 +599,29 @@ def _lsh_pairs_staged(
 
 
 # the k-means IVF's cluster count and the clusters each probe scores
-# (ivf_topk, build_ivf_index, ivf_topk_indexed)
+# (build_ivf_index, ivf_topk_indexed)
 IVF_CLUSTERS = 16
 IVF_PROBES = 6
 
 
-def ivf_topk(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: a k-means coarse quantizer
-    partitions the corpus into ``IVF_CLUSTERS`` cluster lists; each probe
-    scores only the ``IVF_PROBES`` nearest clusters' vectors.
+def build_ivf_index(corpus: DataFrame, index_dir: str) -> None:
+    """Persist the IVF (inverted-file) index: a seed-pinned k-means coarse
+    quantizer partitions the corpus into ``IVF_CLUSTERS`` cluster lists,
+    written as assignments parquet PARTITIONED BY cluster id
+    (``{index_dir}/assignments/cl=N/``, each row carrying its vector and
+    precomputed norm so query-time scoring is one fold per pair) + a
+    centroids table.
 
     The alternative scale path to LSH (``lsh_topk``): better when the corpus
     HAS cluster structure (real embedding corpora do; the synthetic
     near-uniform fixtures are its worst case — measured candidate recall
     0.76 at 47% candidate fraction with 16/6, asserted ≥ 0.6 in tests).
-    Centroids are tiny (clusters × dim) so the probe→centroid shortlist
-    is a broadcast cross join; the candidate fetch is an equi-join on the
-    cluster id — never a corpus cross join. Fit cost is MLlib's distributed
-    k-means, amortized over the query batch; ``build_ivf_index`` +
-    ``ivf_topk_indexed`` persist the fit so query time pays none of it."""
-    assigned, centers = _ivf_fit(corpus)
-    return _ivf_query(assigned, centers, probes, k)
-
-
-def _ivf_fit(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Fit the k-means coarse quantizer; return (assignments, centroids).
-    Assignments carry the vector and its precomputed norm so query-time
-    scoring is one fold per pair."""
+    Partitioning by ``cl`` is the scale payoff: a query batch probing
+    ``IVF_PROBES`` of ``IVF_CLUSTERS`` cells reads only that fraction of the
+    corpus from disk — the centroid shortlist join broadcasts, and dynamic
+    partition pruning turns it into a partition filter on the scan. The fit
+    (MLlib's distributed k-means, the expensive stage) runs once here;
+    ``ivf_topk_indexed`` pays none of it."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -640,36 +636,17 @@ def _ivf_fit(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cl int, center array<double>",
     )
-    return assigned, centers
-
-
-def build_ivf_index(corpus: DataFrame, index_dir: str) -> None:
-    """Persist the IVF index: assignments parquet PARTITIONED BY cluster id
-    (``{index_dir}/assignments/cl=N/``) + a centroids table.
-
-    Partitioning by ``cl`` is the scale payoff: a query batch probing
-    ``IVF_PROBES`` of ``IVF_CLUSTERS`` cells reads only that fraction of the
-    corpus from disk — the centroid shortlist join broadcasts, and dynamic
-    partition pruning turns it into a partition filter on the scan. The fit
-    (the expensive stage) runs once here; ``ivf_topk_indexed`` pays none of
-    it."""
-    assigned, centers = _ivf_fit(corpus)
     assigned.write.mode("overwrite").partitionBy("cl").parquet(f"{index_dir}/assignments")
     centers.write.mode("overwrite").parquet(f"{index_dir}/centroids")
 
 
 def ivf_topk_indexed(spark, index_dir: str, probes: DataFrame, k: int) -> DataFrame:
     """IVF top-k against a persisted index (``build_ivf_index``): no fit
-    stage — centroids load as a broadcast dimension, assignments scan only
-    the probed ``cl=`` partitions (dynamic partition pruning)."""
-    assigned = spark.read.parquet(f"{index_dir}/assignments")
-    centers = spark.read.parquet(f"{index_dir}/centroids")
-    return _ivf_query(assigned, centers, probes, k)
-
-
-def _ivf_query(assigned: DataFrame, centers: DataFrame, probes: DataFrame, k: int) -> DataFrame:
-    """Shared IVF query path: broadcast centroid shortlist → cluster-id
-    equi-join → prenorm cosine → per-probe top-k.
+    stage — centroids load as a broadcast dimension, each probe scores only
+    its ``IVF_PROBES`` nearest cells, and the assignments scan reads only
+    those ``cl=`` partitions (dynamic partition pruning): broadcast centroid
+    shortlist → cluster-id equi-join → prenorm cosine → per-probe top-k,
+    never a corpus cross join.
 
     The shortlist ranks on the squared distance ROUNDED TO 6 (cl as the
     tie-break), matching the repo's round-6 idiom everywhere a float feeds
@@ -677,6 +654,8 @@ def _ivf_query(assigned: DataFrame, centers: DataFrame, probes: DataFrame, k: in
     between Spark codegen variants) can otherwise flip near-tied cell
     picks, and the rounding is what makes the query stage over a persisted
     index value-oracle-checkable (sim6x) rather than rows-only."""
+    assigned = spark.read.parquet(f"{index_dir}/assignments")
+    centers = spark.read.parquet(f"{index_dir}/centroids")
     p = _normed(probes, _PROBE)
     sq_dist = F.aggregate(
         F.zip_with(
@@ -865,7 +844,7 @@ def centroid_semantic_dedup(
     and join-expressible (greedy is inherently sequential per cell); the
     oracle states and matches the same rule.
 
-    Unlike ``ivf_topk``'s k-means quantizer, centroids here are chosen
+    Unlike ``build_ivf_index``'s k-means quantizer, centroids here are chosen
     deterministically — the ``n_centroids`` corpus vectors with the smallest
     ``md5(id)`` (a uniform hash-sample, no stored model) — which makes the
     whole pipeline, quantizer included, expressible in ANSI SQL for the
@@ -1078,15 +1057,14 @@ def two_stage_rerank_topk(
     return top_n_per_group(scored, ["query_id"], "cos", ["neighbor_id"], k)
 
 
-def mmr_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    shortlist: int = 20,
-) -> DataFrame:
+# the exact cosine candidates per probe that mmr_topk's greedy selects from
+MMR_SHORTLIST = 20
+
+
+def mmr_topk(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k (Carbonell & Goldstein
     1998) — the serving-side diversity re-ranker: from each probe's exact
-    top-``shortlist`` cosine candidates, greedily select ``k`` maximizing
+    top-``MMR_SHORTLIST`` cosine candidates, greedily select ``k`` maximizing
     ``λ·rel(d) − (1−λ)·max_{s∈selected} sim(d, s)`` so near-duplicate
     results don't crowd the slate. tx19's RRF fuses rankings ACROSS legs;
     MMR diversifies WITHIN one — the other half of how retrieval slates
@@ -1111,14 +1089,14 @@ def mmr_topk(
     ``transform`` lambdas, the pair cosine an in-order ``zip_with`` /
     ``aggregate`` fold identical to ``cosine_prenorm``. Only the greedy
     selection itself crosses into Python: one Arrow-batched
-    ``applyInPandas`` group per probe whose state is the ≤ shortlist²
+    ``applyInPandas`` group per probe whose state is the ≤ MMR_SHORTLIST²
     integer matrix (the one op in this file where a Catalyst expression
     genuinely can't express the sequential argmax chain), so per-group
     work is O(k · shortlist²) on ~400 int64s — constant in corpus size,
     parallel across probes. The self-pair diagonal is kept (sim value
-    unused) so every candidate reaches its group even at shortlist = 1."""
+    unused) so every candidate reaches its group even at a shortlist of 1."""
     lam_tenths, pen_tenths = 7, 3  # λ = 0.7
-    cand = brute_force_topk(corpus, probes, shortlist).select(
+    cand = brute_force_topk(corpus, probes, MMR_SHORTLIST).select(
         "query_id",
         F.col("neighbor_id").alias("cand_id"),
         F.round(F.col("cos") * F.lit(1e6)).cast("bigint").alias("rel_i"),
@@ -1225,7 +1203,7 @@ def build_hash_ivf_index(corpus: DataFrame, index_dir: str, n_clusters: int = 16
     ``build_ivf_index`` (assignments partitioned by ``cl`` + centroids
     table) but with the hash-sampled quantizer, so the whole lifecycle —
     build, persist, probe, re-rank — is expressible in ANSI SQL and
-    value-oracle-checked (sim8). k-means (sim5/sim6) gives tighter cells on
+    value-oracle-checked (sim8). k-means (sim5x/sim6x) gives tighter cells on
     clustered corpora; the hash-sampled quantizer gives auditability —
     production systems run exactly this trade as 'random-projection vs
     learned coarse quantizer'.
@@ -1264,7 +1242,7 @@ def hash_ivf_topk_indexed(
 ) -> DataFrame:
     """Query the deterministic IVF index: probes shortlist their ``n_probe``
     nearest centroids by ROUNDED COSINE (desc, cl tie-break — unlike
-    ``_ivf_query``'s squared-distance shortlist, the rounded cosine is
+    ``ivf_topk_indexed``'s squared-distance shortlist, the rounded cosine is
     engine-exact, which is what lets the oracle reproduce the shortlist),
     then exact re-rank within probed cells only (dynamic partition pruning
     on the ``cl=`` layout)."""

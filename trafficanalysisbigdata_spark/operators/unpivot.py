@@ -18,16 +18,11 @@ from pyspark.sql import functions as F
 from ..functions.numeric import dec
 
 
-def unpivot(
-    df: DataFrame,
-    ids: list[str],
-    values: list[str],
-    var_name: str = "measure",
-) -> DataFrame:
+def unpivot(df: DataFrame, ids: list[str], values: list[str]) -> DataFrame:
     """F20 melt (ref proto:144-145): wide columns → (id, measure, val) long
     rows. Spark's native unpivot = an Expand node emitting len(values) rows
     per input row inside the scan stage — no shuffle."""
-    return df.unpivot(ids, values, var_name, "val")
+    return df.unpivot(ids, values, "measure", "val")
 
 
 def row_sum(cols: list[str], alias: str) -> Column:

@@ -9,6 +9,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
+    CDC_MAX_LEN,
+    CDC_MIN_LEN,
+    CDC_MODULUS,
     NGRAM_MAX_DF_ABS,
     NGRAM_MAX_DF_FRAC,
     SPAN_NGRAM,
@@ -680,9 +683,6 @@ def dd10_dup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dup_span_scrub(spark.table("documents")).orderBy("doc_id")
 
 
-_CDC_MOD = 16  # expected chunk length in tokens (geometric tail)
-
-
 @register(
     "dd11_cdc_chunk_dedup",
     oracle=f"""
@@ -693,7 +693,7 @@ _CDC_MOD = 16  # expected chunk length in tokens (geometric tail)
     ), bnd AS (
       SELECT doc_id, pos, ts[pos] AS token,
              CASE WHEN ('0x' || substr(md5(ts[pos]), 1, 8))::BIGINT
-                       % {_CDC_MOD} = 0 THEN 1 ELSE 0 END AS b
+                       % {CDC_MODULUS} = 0 THEN 1 ELSE 0 END AS b
       FROM tok
     ), chk AS (
       SELECT doc_id, pos, token,
@@ -745,11 +745,7 @@ def dd11_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     join fan-out; the histogram aggregates one row per distinct chunk."""
     from ..operators.dedup import cdc_chunk_dedup_stats
 
-    return cdc_chunk_dedup_stats(spark.table("documents"), modulus=_CDC_MOD)
-
-
-_CDC_MIN = 8  # guarded cut rule: boundary honored only past this length
-_CDC_MAX = 32  # ... and a cut is forced here if no boundary arrived
+    return cdc_chunk_dedup_stats(spark.table("documents"))
 
 
 @register(
@@ -761,7 +757,7 @@ _CDC_MAX = 32  # ... and a cut is forced here if no boundary arrived
       SELECT doc_id, UNNEST(range(1, len(ts) + 1)) AS pos, ts FROM toks
     ), bnd AS (
       SELECT doc_id, pos FROM tok
-      WHERE ('0x' || substr(md5(ts[pos]), 1, 8))::BIGINT % {_CDC_MOD} = 0
+      WHERE ('0x' || substr(md5(ts[pos]), 1, 8))::BIGINT % {CDC_MODULUS} = 0
     ), lens AS (
       SELECT doc_id, len(ts) AS n FROM toks
     ), cuts AS (
@@ -771,9 +767,9 @@ _CDC_MAX = 32  # ... and a cut is forced here if no boundary arrived
       FROM cuts c, LATERAL (
         SELECT LEAST(COALESCE((SELECT MIN(b.pos) FROM bnd b
                                WHERE b.doc_id = c.doc_id
-                                 AND b.pos >= c.cut + {_CDC_MIN}
-                                 AND b.pos <= c.cut + {_CDC_MAX}),
-                              c.cut + {_CDC_MAX}), c.cut + {_CDC_MAX}, c.n)
+                                 AND b.pos >= c.cut + {CDC_MIN_LEN}
+                                 AND b.pos <= c.cut + {CDC_MAX_LEN}),
+                              c.cut + {CDC_MAX_LEN}), c.cut + {CDC_MAX_LEN}, c.n)
           AS cut
       ) nxt
       WHERE c.cut < c.n
@@ -828,11 +824,4 @@ def dd11b_cdc_guarded_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (receipts in BENCH_LOCAL.md)."""
     from ..operators.dedup import cdc_chunks_guarded, chunk_dedup_ledger
 
-    return chunk_dedup_ledger(
-        cdc_chunks_guarded(
-            spark.table("documents"),
-            modulus=_CDC_MOD,
-            min_len=_CDC_MIN,
-            max_len=_CDC_MAX,
-        )
-    )
+    return chunk_dedup_ledger(cdc_chunks_guarded(spark.table("documents")))

@@ -287,20 +287,60 @@ def mlx5_confusion_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- mlx6: persisted-predictions residual metrics (M1) -----------------------
+# --- mlx6/mlx8: persisted-predictions residual metrics -----------------------
+
+
+def _residual_oracle(label: str, path: str) -> str:
+    """n_test/MSE/MAE over the ``(label, pred_dec)`` artifact at ``path``,
+    squaring at (19,6) — the DuckDB side of ``_residual_metrics``."""
+    return f"""
+    SELECT COUNT(*) AS n_test,
+           ROUND(CAST(SUM(CAST({label} - pred_dec AS DECIMAL(19,6))
+                          * CAST({label} - pred_dec AS DECIMAL(19,6)))
+                      AS DOUBLE) / COUNT(*), 6) AS mse,
+           ROUND(CAST(SUM(ABS({label} - pred_dec)) AS DOUBLE) / COUNT(*), 6)
+             AS mae
+    FROM read_parquet('{path}/*.parquet')
+    """
+
+
+def _residual_metrics(pred: DataFrame, label: str, query: str) -> DataFrame:
+    """Exact n_test/MSE/MAE over a ``(label, pred_dec)`` DECIMAL(18,6)
+    prediction artifact.
+
+    The residual is squared at DECIMAL(16,6)×DECIMAL(16,6) → (33,12), EXACT
+    on both engines: the naive (18,6) square overflows DuckDB's int64
+    decimal kernel at sf0.01's daily-total residual magnitudes (caught by
+    the r12 verify sweep), and Spark's own (19,6)² would precision-loss-
+    truncate to scale 11 — both hazards die with the explicit narrower-width
+    cast (err ≪ 10^10, so (16,6) loses nothing).
+
+    r12-advice overflow guard: under non-ANSI Spark the (16,6) cast NULLs at
+    |err| >= 1e10 and SUM would silently drop those rows while the DuckDB
+    oracle (squaring at (19,6)) keeps them — a silent cross-engine
+    divergence. assert_true turns that into a loud executor-side failure
+    naming ``query``; it rides the same row-local projection as the cast (no
+    extra action), and coalesce(null-on-pass, cast) yields the cast value on
+    every passing row."""
+    raw = F.col(label) - F.col("pred_dec")  # decimal(19,6): exact
+    err = F.coalesce(
+        F.assert_true(
+            F.abs(raw) < F.lit(1e10),
+            F.lit(f"{query}: |residual| >= 1e10 overflows decimal(16,6)"),
+        ).cast("decimal(16,6)"),
+        raw.cast("decimal(16,6)"),
+    )
+    n = F.count(F.lit(1))
+    return pred.agg(
+        n.alias("n_test"),
+        F.round(F.sum(err * err).cast("double") / n, 6).alias("mse"),
+        F.round(F.sum(F.abs(err)).cast("double") / n, 6).alias("mae"),
+    )
 
 
 @register(
     "mlx6_regression_residuals",
-    oracle=f"""
-    SELECT COUNT(*) AS n_test,
-           ROUND(CAST(SUM(CAST(value_dec - pred_dec AS DECIMAL(19,6))
-                          * CAST(value_dec - pred_dec AS DECIMAL(19,6)))
-                      AS DOUBLE) / COUNT(*), 6) AS mse,
-           ROUND(CAST(SUM(ABS(value_dec - pred_dec)) AS DOUBLE) / COUNT(*), 6)
-             AS mae
-    FROM read_parquet('{_RESID_DIR}/*.parquet')
-    """,
+    oracle=_residual_oracle("value_dec", _RESID_DIR),
     tags=("mlx", "ml", "M1", "metrics", "persisted"),
     tables=("events",),
 )
@@ -321,16 +361,7 @@ def mlx6_regression_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("prediction").cast("decimal(18,6)").alias("pred_dec"),
         ),
     )
-    # same exactness hardening as mlx8: square at (16,6)² → (33,12) exact on
-    # both engines (the (18,6)² form risks DuckDB int64 overflow at larger
-    # SFs and Spark precision-loss truncation at scale 11)
-    err = (F.col("value_dec") - F.col("pred_dec")).cast("decimal(16,6)")
-    n = F.count(F.lit(1))
-    return pred.agg(
-        n.alias("n_test"),
-        F.round(F.sum(err * err).cast("double") / n, 6).alias("mse"),
-        F.round(F.sum(F.abs(err)).cast("double") / n, 6).alias("mae"),
-    )
+    return _residual_metrics(pred, "value_dec", "mlx6")
 
 
 # --- mlx7: persisted feature-importance ranking/normalization (M2) -----------
@@ -397,15 +428,7 @@ def mlx7_importance_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mlx8_gbt_residuals",
-    oracle=f"""
-    SELECT COUNT(*) AS n_test,
-           ROUND(CAST(SUM(CAST(total_dec - pred_dec AS DECIMAL(19,6))
-                          * CAST(total_dec - pred_dec AS DECIMAL(19,6)))
-                      AS DOUBLE) / COUNT(*), 6) AS mse,
-           ROUND(CAST(SUM(ABS(total_dec - pred_dec)) AS DOUBLE) / COUNT(*), 6)
-             AS mae
-    FROM read_parquet('{_GBT_DIR}/*.parquet')
-    """,
+    oracle=_residual_oracle("total_dec", _GBT_DIR),
     tags=("mlx", "ml", "M6", "metrics", "persisted"),
     tables=("events",),
 )
@@ -427,33 +450,7 @@ def mlx8_gbt_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("prediction").cast("decimal(18,6)").alias("pred_dec"),
         ),
     )
-    # square at DECIMAL(16,6)×DECIMAL(16,6) → (33,12), EXACT on both engines:
-    # the naive (18,6) square overflows DuckDB's int64 decimal kernel at
-    # sf0.01's daily-total residual magnitudes (caught by the r12 verify
-    # sweep), and Spark's own (19,6)² would precision-loss-truncate to scale
-    # 11 — both hazards die with the explicit narrower-width cast (err ≪
-    # 10^10, so (16,6) loses nothing).
-    raw = F.col("total_dec") - F.col("pred_dec")  # decimal(19,6): exact
-    # r12-advice overflow guard: under non-ANSI Spark the (16,6) cast NULLs
-    # at |err| >= 1e10 and SUM would silently drop those rows while the
-    # DuckDB oracle (squaring at (19,6)) keeps them — a silent cross-engine
-    # divergence. assert_true turns that into a loud executor-side failure;
-    # it rides the same row-local projection as the cast (no extra action),
-    # and coalesce(null-on-pass, cast) yields the cast value on every
-    # passing row.
-    err = F.coalesce(
-        F.assert_true(
-            F.abs(raw) < F.lit(1e10),
-            F.lit("mlx8: |residual| >= 1e10 overflows decimal(16,6)"),
-        ).cast("decimal(16,6)"),
-        raw.cast("decimal(16,6)"),
-    )
-    n = F.count(F.lit(1))
-    return pred.agg(
-        n.alias("n_test"),
-        F.round(F.sum(err * err).cast("double") / n, 6).alias("mse"),
-        F.round(F.sum(F.abs(err)).cast("double") / n, 6).alias("mae"),
-    )
+    return _residual_metrics(pred, "total_dec", "mlx8")
 
 
 # --- mlx9: deterministic CV fold x grid contract (ml9) -----------------------

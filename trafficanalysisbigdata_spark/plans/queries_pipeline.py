@@ -17,7 +17,12 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import HEX_MOD, hash_frac
 from ..functions.text import lang_guess, lexical_diversity, token_count
-from ..operators.dedup import doc_token_sets, simhash16
+from ..operators.dedup import (
+    NGRAM_MAX_DF_ABS,
+    NGRAM_MAX_DF_FRAC,
+    doc_token_sets,
+    simhash16,
+)
 from ..operators.packing import PACK_SEQ_LEN, PACK_SHARDS
 from .registry import register
 
@@ -1099,7 +1104,7 @@ def pipe13_neardup_decontaminated_split(
     keep AS (
       SELECT token
       FROM (SELECT token, COUNT(*) AS df FROM ev GROUP BY token), n_ev
-      WHERE df <= LEAST(0.05 * n_eval, 256)
+      WHERE df <= LEAST({NGRAM_MAX_DF_FRAC} * n_eval, {NGRAM_MAX_DF_ABS})
     ), evc AS (SELECT ev.* FROM ev JOIN keep USING (token)),
     sizes AS (SELECT e, COUNT(*) AS n_e FROM evc GROUP BY e),
     tr AS (
@@ -1180,7 +1185,7 @@ def pipe14_containment_leak_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev = sh.filter(~F.col("is_train")).select("doc_id", "token")
     n_ev = ev.select("doc_id").distinct().agg(F.count(F.lit(1)).alias("n_docs"))
-    evc = df_capped(ev, n_ev, 0.05, 256).withColumnRenamed("doc_id", "e")
+    evc = df_capped(ev, n_ev).withColumnRenamed("doc_id", "e")
     sizes = evc.groupBy("e").agg(F.count(F.lit(1)).alias("n_e"))
     tr = sh.filter(F.col("is_train")).select(F.col("doc_id").alias("t"), "token")
     common = (

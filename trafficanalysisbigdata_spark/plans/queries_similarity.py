@@ -17,10 +17,10 @@ from pyspark.sql import functions as F
 from ..io import ARTIFACT_ROOT, ensure_artifact, source_stamp
 from ..operators.similarity import (
     IVF_PROBES,
+    MMR_SHORTLIST,
     brute_force_topk,
     build_ivf_index,
     centroid_semantic_dedup,
-    ivf_topk,
     lsh_neardup_pairs,
     lsh_topk,
     threshold_pairs,
@@ -185,22 +185,6 @@ def sim4_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_neardup_pairs(
         spark.table("embeddings"), threshold=0.3, n_tables=_L, n_planes=_P, dim=_DIM
     )
-
-
-@register(
-    "sim5_ann_topk_ivf",
-    oracle=None,  # k-means quantizer isn't SQL-expressible; recall vs sim1
-    # is asserted in tests/test_similarity.py
-    tags=("similarity", "ann", "ivf"),
-    tables=("embeddings",),
-)
-def sim5_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-5: k-means coarse quantizer (16 lists), probes
-    score only their 6 nearest lists. The cluster-structured alternative to
-    sim3's LSH — candidate fetch is an equi-join on cluster id."""
-    emb = spark.table("embeddings")
-    probes = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk(emb, probes, k=5)
 
 
 # Static index paths, one per kind: the k-means index of sim5x/sim6x and
@@ -541,7 +525,6 @@ def sim9_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MMR_N = 20  # shortlist depth feeding the greedy selection
 _MMR_K = 8  # diversified results returned per probe
 _MMR_NPROBE = 3  # probe vectors (vec_id < 3)
 
@@ -563,7 +546,7 @@ _MMR_NPROBE = 3  # probe vectors (vec_id < 3)
         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                      ORDER BY cos DESC, id) AS rn
         FROM scored0) t
-      WHERE rn <= {_MMR_N}
+      WHERE rn <= {MMR_SHORTLIST}
     ), cv AS (
       SELECT c.query_id, c.id, e.embedding FROM cand c
       JOIN embeddings e ON e.vec_id = c.id
@@ -622,15 +605,13 @@ def sim10_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = spark.table("embeddings")
     probes = emb.filter(F.col("vec_id") < _MMR_NPROBE)
-    return mmr_topk(emb, probes, k=_MMR_K, shortlist=_MMR_N).orderBy(
-        "query_id", "mmr_rank"
-    )
+    return mmr_topk(emb, probes, k=_MMR_K).orderBy("query_id", "mmr_rank")
 
 
 # --- sim5x/sim6x: the k-means IVF stages, driver-VALUE-checked ---------------
 # The mlx5/mlx6 persist pattern applied to the similarity index: the KMeans
-# FIT itself has no ANSI twin (the reason sim5 is rows-only), but the
-# fitted index IS a parquet artifact, and everything downstream of it —
+# FIT itself has no ANSI twin (a fit per run could only be rows-checked), but
+# the fitted index IS a parquet artifact, and everything downstream of it —
 # cell membership, the distance shortlist, the in-cell cosine re-rank —
 # is deterministic and SQL-expressible. The index persists ONCE per source
 # stamp (ensure_artifact); the Spark side reads the returned key directory,
@@ -716,15 +697,16 @@ def sim5x_kmeans_cell_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables=("embeddings",),
 )
 def sim6x_kmeans_query_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim5's IVF top-5 against the PERSISTED k-means index, driver-value-
+    """IVF top-5 (k-means coarse quantizer, 16 lists, each probe scoring
+    its 6 nearest) against the PERSISTED k-means index, driver-value-
     checked end to end. The fit runs once per source stamp into
     ``build_ivf_index`` (assignments parquet partitioned by cluster id +
     centroids); the query reads the index — no fit stage, and the scan
     touches only probed ``cl=`` partitions (the production IVF lifecycle).
     Given the fitted centroids + cell assignments (the artifact sim5x
-    pins), the distance shortlist (round-6 squared L2, cl tie-break —
-    `_ivf_query`'s production ordering), the probed-cells-only candidate
-    join, and the cosine top-5 are all re-derived relationally by the
+    pins), the distance shortlist (round-6 squared L2, cl tie-break — the
+    production ordering), the probed-cells-only candidate join, and the
+    cosine top-5 are all re-derived relationally by the
     oracle from the SAME artifact, so only the KMeans fit itself stays
     range-gated (recall in tests/test_similarity.py). The Spark side is
     the exact production read path (``ivf_topk_indexed``),

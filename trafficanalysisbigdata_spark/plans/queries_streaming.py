@@ -9,6 +9,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
 from ..io import scratch_dir
 from ..streaming.snapshot import drain, stage_snapshots
@@ -205,6 +206,21 @@ def _odd_even(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
 
 
+def _stream_schema(staged: DataFrame) -> StructType:
+    """The schema a stream reads ``staged``'s files with: its columns, with
+    TIMESTAMP_NTZ read as TIMESTAMP, the type event-time operators need (the
+    fixtures store ts without the UTC flag, which Spark reads as NTZ)."""
+    return StructType(
+        [
+            StructField(
+                f.name,
+                TimestampType() if isinstance(f.dataType, TimestampNTZType) else f.dataType,
+            )
+            for f in staged.schema
+        ]
+    )
+
+
 def _sink_rows(spark: SparkSession, sink: str) -> DataFrame:
     """The rows of the drained memory sink ``sink``, with its temp view
     dropped: the returned frame holds the sink itself, so a long-lived
@@ -262,7 +278,7 @@ def st7_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = stage_snapshots(_odd_even(events), work)
 
     stream = (
-        spark.readStream.schema("event_id bigint, user_id bigint, value double")
+        spark.readStream.schema(_stream_schema(events))
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -396,9 +412,7 @@ def st9_watermark_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = stage_snapshots(_odd_even(events), work)
 
     stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string"
-        )
+        spark.readStream.schema(_stream_schema(events))
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -489,7 +503,7 @@ def st10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = (
-        spark.readStream.schema("ts timestamp, user_id bigint, value double")
+        spark.readStream.schema(_stream_schema(events))
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -582,7 +596,7 @@ def st11_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert = keyed_upsert_batch(state_root)
 
     stream = (
-        spark.readStream.schema("event_id bigint, user_id bigint, value double")
+        spark.readStream.schema(_stream_schema(events))
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )

@@ -43,7 +43,7 @@ def f20_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-form aggregation. Unpivot is an Expand node — rows multiply inside
     the scan stage, no shuffle until the groupBy."""
     li = spark.table("lineitem")
-    long = unpivot(li, ["l_returnflag"], MEASURES, "measure")
+    long = unpivot(li, ["l_returnflag"], MEASURES)
     return (
         long.groupBy("l_returnflag", "measure")
         .agg(sum_exact("val", "total"), F.count(F.lit(1)).alias("n"))

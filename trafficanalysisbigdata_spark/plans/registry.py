@@ -130,16 +130,8 @@ def register_sql(
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.sql(sql)
 
-    if name in REGISTRY:
-        raise ValueError(f"duplicate query name {name!r}")
-    REGISTRY[name] = QuerySpec(
-        name=name,
-        fn=fn,
-        oracle=sql,
-        tags=tags,
-        doc=doc,
-        tables=tables,
-    )
+    fn.__doc__ = doc
+    register(name, oracle=sql, tags=tags, tables=tables)(fn)
 
 
 def load_all() -> dict[str, QuerySpec]:
@@ -161,7 +153,7 @@ def load_all() -> dict[str, QuerySpec]:
 #   tier 1 — previously-green queries, least-recently-green first (so old
 #            results keep getting refreshed once tier 0 drains).
 #
-# No-oracle queries (ml1-ml9, sim5) sort after every oracle-bearing
+# No-oracle queries (ml1–ml9) sort after every oracle-bearing
 # query so the window stays 100% value-checkable. All queries are
 # continuously exact-checked by the local mirror (tests/test_oracle_parity)
 # regardless of window membership.
