@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """Benchmark harness: times the engine's headline queries at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) in the engine's own
+session, ``session.get_session`` (``local[$SPARK_GRAFT_CPUS]``, driver heap
+``$SPARK_GRAFT_DRIVER_MEM``), and prints ONE JSON line:
 
     {"metric": "total_query_wall_seconds", "value": N, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1, "iters": 3}
+     "queries": {"q1": sec, ...}, "sf": 0.1, "iters": 2}
 
 Each per-query number is the MIN of ``$SPARK_GRAFT_BENCH_ITERS`` (default 2)
 full passes — single-shot wall times on a shared host swing with load, and
@@ -12,9 +13,6 @@ the documented failure mode is one-sided (roaming multi-second stalls INFLATE
 whichever query they land on; see BENCH_LOCAL.md and the r14 verdict's
 stall-tail analysis), so the min across passes is the robust estimator where
 a median of 2 would average the stall in. ``value`` is the sum of the mins.
-(Measurement-hygiene change, round 15, per the r14 verdict's item #1: the
-prior default was median of 3 passes; queries, scale factor, noop-sink
-timing, and the JSON contract are unchanged.)
 
 Each query is forced end-to-end with the noop sink (full physical execution,
 zero serialization-to-driver cost), after a warmup action that absorbs JVM /
@@ -41,7 +39,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 ITERS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "2")))
 # Time-box: stop starting new QUERIES once total measured time exceeds this —
 # under heavy host load the passes could outlive an external runner's
@@ -217,16 +214,9 @@ BENCH_QUERIES = [
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from trafficanalysisbigdata_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("trafficanalysisbigdata-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("trafficanalysisbigdata-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     from trafficanalysisbigdata_spark.plans.registry import load_all

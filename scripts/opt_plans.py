@@ -8,8 +8,9 @@ smells" summary read from each plan's operator tree (tests/plan_tree.py).
 Usage:
     python scripts/opt_plans.py --out "$(mktemp -d)" [--time N] [names...]
 
-Plans are captured at $SPARK_GRAFT_SF_DIR (default sf0.1 — the perf surface)
-on local[$SPARK_GRAFT_CPUS], the bench's exact session shape.
+Plans are captured at bench.py's ``SF_DIR`` ($SPARK_GRAFT_SF_DIR, default
+sf0.1 — the perf surface) in ``session.get_session``, the session bench.py
+runs in.
 """
 
 from __future__ import annotations
@@ -21,8 +22,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+from bench import SF_DIR
+
 SMELLS = ("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin", "BatchEvalPython")
 
 
@@ -46,16 +47,9 @@ def main() -> None:
     ap.add_argument("--time", type=int, default=0, help="noop-sink timing passes per query")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from trafficanalysisbigdata_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("opt-plans")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("opt-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     from trafficanalysisbigdata_spark.plans.registry import load_all, release_caches

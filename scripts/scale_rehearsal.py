@@ -33,10 +33,14 @@ Dial settings at 10× (each documented at its definition):
          while OR-amplified recall stays high (L=16 tables). The rehearsal
          passes no dial — it measures the shipped rule.
 
-Usage: ``python scripts/scale_rehearsal.py <mode> [op-prefix ...]`` — one
-mode of ``MODES`` per invocation (each fits a CI timeout); op prefixes keep
-only the operators whose names start with one of them (a fault-isolated
-rerun of one member). Every op is timed by ``_time`` and measures the
+Usage: ``SPARK_GRAFT_CPUS=32 SPARK_GRAFT_DRIVER_MEM=48g python
+scripts/scale_rehearsal.py <mode> [op-prefix ...]`` — one mode of ``MODES``
+per invocation (each fits a CI timeout); op prefixes keep only the operators
+whose names start with one of them (a fault-isolated rerun of one member).
+The session is ``session.get_session`` (cores and driver heap from those two
+variables; the receipts in BENCH_LOCAL.md ran at 32 cores and 48g) with the
+mode's shuffle width set on top; a smaller host runs the same modes with
+smaller values. Every op is timed by ``_time`` and measures the
 shipped code path, never a hand-copied variant. Corpora and sim8m's index
 are cached under ``BASE`` through ``io.ensure_artifact`` (``_corpus``), so a
 killed generation is never read back; the earlier mutable cache root,
@@ -75,7 +79,7 @@ from trafficanalysisbigdata_spark.operators import similarity as sim
 from trafficanalysisbigdata_spark.operators.fuzzy import ed1_pairs
 from trafficanalysisbigdata_spark.plans.queries_text import boilerplate_share_report
 from trafficanalysisbigdata_spark.plans.registry import load_all
-from trafficanalysisbigdata_spark.session import prep
+from trafficanalysisbigdata_spark.session import get_session, prep
 from trafficanalysisbigdata_spark.streaming.dedup import streaming_dedup
 from trafficanalysisbigdata_spark.streaming.snapshot import drain
 from trafficanalysisbigdata_spark.streaming.stateful import stateful_running_totals
@@ -1037,17 +1041,8 @@ def main() -> None:
     if len(sys.argv) < 2 or sys.argv[1] not in MODES:
         sys.exit(f"usage: scale_rehearsal.py <mode> [op-prefix ...]\nmodes: {' '.join(MODES)}")
     name = sys.argv[1]
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("scale-rehearsal")
-        .config("spark.sql.shuffle.partitions", str(MODES[name].shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("scale-rehearsal")
+    spark.conf.set("spark.sql.shuffle.partitions", str(MODES[name].shuffle))
     spark.sparkContext.setLogLevel("ERROR")
     prep(spark)
     try:

@@ -252,14 +252,6 @@ def test_prep_warns_on_a_refused_optional_conf():
     assert set(spark.conf.values) == set(RUNTIME_CONFS) - {"spark.sql.adaptive.skewJoin.enabled"}
 
 
-def test_prep_raises_when_nanos_as_long_is_refused():
-    from trafficanalysisbigdata_spark.session import prep
-
-    spark = _stub_session({"spark.sql.legacy.parquet.nanosAsLong"}, _refused())
-    with pytest.raises(RuntimeError, match="nanosAsLong"):
-        prep(spark)
-
-
 def test_prep_propagates_errors_that_are_not_a_refusal():
     from trafficanalysisbigdata_spark.session import prep
 

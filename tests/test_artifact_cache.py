@@ -184,7 +184,13 @@ def test_source_stamp_tracks_the_table_file(tmp_path):
     a = source_stamp(str(tmp_path), "events")
     table.write_bytes(b"three")
     assert source_stamp(str(tmp_path), "events") != a
-    assert source_stamp(str(tmp_path), "missing").endswith("|nostat")
+
+
+def test_source_stamp_raises_on_a_missing_table(tmp_path):
+    """Every caller has bound the table already, so a missing one is a
+    fault to surface, never a stamp to fit under."""
+    with pytest.raises(FileNotFoundError):
+        source_stamp(str(tmp_path), "events")
 
 
 def test_mlx5_alternating_scale_factors_fits_each_once(spark, sf_dir, monkeypatch):

@@ -187,6 +187,7 @@ def test_wide_cast_and_melt(spark):
     assert vals["_5_00_6_00am"] == 50
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_hour_label_of_day_covers_24(spark):
     from pyspark.sql import functions as F
 

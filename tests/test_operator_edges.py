@@ -606,12 +606,25 @@ def test_release_caches_refuses_a_leaf_of_a_stopped_context(monkeypatch):
 
 
 def _scratch_queries() -> list[str]:
-    """Registry queries whose function asks ``io.scratch_dir`` for a leaf."""
+    """Registry queries whose function asks ``io.scratch_dir`` for a leaf,
+    itself or through a function of its module that it calls."""
     import inspect
 
     from trafficanalysisbigdata_spark.plans.registry import load_all
 
-    return sorted(n for n, s in load_all().items() if "scratch_dir(" in inspect.getsource(s.fn))
+    def asks(fn) -> bool:
+        src = inspect.getsource(fn)
+        calls = [n for n in ast.walk(ast.parse(src.lstrip())) if isinstance(n, ast.Call)]
+        called = {n.func.id for n in calls if isinstance(n.func, ast.Name)}
+        helpers = [fn.__globals__.get(name) for name in called]
+        return "scratch_dir(" in src or any(
+            inspect.isfunction(h)
+            and h.__module__ == fn.__module__
+            and "scratch_dir(" in inspect.getsource(h)
+            for h in helpers
+        )
+
+    return sorted(n for n, s in load_all().items() if asks(s.fn))
 
 
 def test_release_caches_frees_every_scratch_leaf_and_tracked_frame(spark, sf_dir, monkeypatch):

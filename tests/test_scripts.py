@@ -7,7 +7,11 @@ at toy size here (a wrong keyword passed to an engine operator fails now, not
 after an hour at 1M rows), and AST rules keep it collapsed — its only input
 is the command line, its files live under ``BASE``, streams drain through
 ``streaming.snapshot.drain`` and all timing goes through ``_time``. The
-drain rule holds for ``tests/*.py`` too."""
+drain rule holds for ``tests/*.py`` too.
+
+Every harness runs in one session shape: ``session.get_session`` is the only
+SparkSession builder in the package, ``bench.py`` and ``scripts/``, the core
+count is read only there, and the fixture directory only in ``bench.py``."""
 
 from __future__ import annotations
 
@@ -21,7 +25,8 @@ import sys
 
 import pytest
 
-SCRIPTS_DIR = pathlib.Path(__file__).resolve().parents[1] / "scripts"
+REPO = pathlib.Path(__file__).resolve().parents[1]
+SCRIPTS_DIR = REPO / "scripts"
 SCRIPTS = sorted(SCRIPTS_DIR.glob("*.py"))
 REHEARSAL_PATH = SCRIPTS_DIR / "scale_rehearsal.py"
 
@@ -173,3 +178,55 @@ def test_tests_drain_streams_through_snapshot_drain():
 def test_collapse_rule_flags_its_twin(rule):
     found = _collapse_breaks(ast.parse(COLLAPSE_TWINS[rule]))
     assert found[rule] and not any(v for k, v in found.items() if k != rule), found
+
+
+# what may appear only in its owner: the builder chain, and each variable name
+# as a string (how os.environ.get / os.getenv / os.environ[...] read it)
+SESSION_OWNERS = {
+    "SparkSession.builder": "trafficanalysisbigdata_spark/session.py",
+    "SPARK_GRAFT_CPUS": "trafficanalysisbigdata_spark/session.py",
+    "SPARK_GRAFT_SF_DIR": "bench.py",
+}
+
+
+def _session_strays(sources: dict[str, str]) -> list[str]:
+    """``path:line name`` of each session builder or variable read outside
+    its owner in ``SESSION_OWNERS``."""
+    found = []
+    for path, src in sources.items():
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Attribute) and node.attr == "builder":
+                owner = getattr(node.value, "id", None) or getattr(node.value, "attr", None)
+                name = f"{owner}.builder"
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                name = node.value
+            else:
+                continue
+            if SESSION_OWNERS.get(name, path) != path:
+                found.append((path, node.lineno, name))
+    return [f"{path}:{line} {name}" for path, line, name in sorted(found)]
+
+
+def test_harnesses_build_through_get_session():
+    """bench.py, the scripts and the engine share ``get_session``'s session
+    shape (validated core count, driver heap, runtime confs) instead of
+    each building its own."""
+    paths = [*(REPO / "trafficanalysisbigdata_spark").rglob("*.py"), REPO / "bench.py", *SCRIPTS]
+    sources = {str(p.relative_to(REPO)): p.read_text() for p in paths}
+    assert _session_strays(sources) == []
+
+
+def test_session_guard_flags_its_twin():
+    twin = (
+        "import os\n"
+        "from pyspark.sql import SparkSession\n"
+        "CPUS = os.environ.get('SPARK_GRAFT_CPUS', '32')\n"
+        "spark = SparkSession.builder.master(f'local[{CPUS}]').getOrCreate()\n"
+        "SF = os.getenv('SPARK_GRAFT_SF_DIR')\n"
+    )
+    assert _session_strays({"scripts/x.py": twin}) == [
+        "scripts/x.py:3 SPARK_GRAFT_CPUS",
+        "scripts/x.py:4 SparkSession.builder",
+        "scripts/x.py:5 SPARK_GRAFT_SF_DIR",
+    ]
+    assert _session_strays({"bench.py": "import os\nos.environ['SPARK_GRAFT_SF_DIR']\n"}) == []

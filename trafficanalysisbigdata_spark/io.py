@@ -189,11 +189,9 @@ def source_stamp(sf_dir: str, table: str) -> str:
     """The stamp of an engine artifact fitted on a fixture table:
     ``session.package_digest()`` plus the table's path, mtime and size, so an
     edited fit or a regenerated table at the same path never serves a stale
-    artifact."""
-    try:
-        st = os.stat(table_path(sf_dir, table))
-    except OSError:
-        return f"{session.package_digest()}|{sf_dir}|nostat"
+    artifact. A missing table raises ``OSError``: every caller has bound
+    it already, so a stamp without its stat would only hide the fault."""
+    st = os.stat(table_path(sf_dir, table))
     return f"{session.package_digest()}|{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
 
 
@@ -280,13 +278,7 @@ def fan_out_small_scan(df: DataFrame, key_col: str) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) read as long (see session.RUNTIME_CONFS); convert
-        # to microsecond timestamp with integer division — ts/1000 in floating
-        # point would lose precision above 2^53 ns (~1970+104 days).
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return df
+    return spark.read.parquet(table_path(sf_dir, name))
 
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:

@@ -221,12 +221,41 @@ def _stream_schema(staged: DataFrame) -> StructType:
     )
 
 
-def _sink_rows(spark: SparkSession, sink: str) -> DataFrame:
-    """The rows of the drained memory sink ``sink``, with its temp view
-    dropped: the returned frame holds the sink itself, so a long-lived
-    session keeps a run's rows only as long as something holds its result."""
-    rows = spark.table(sink)
-    spark.catalog.dropTempView(sink)
+def _replay(
+    spark: SparkSession, tag: str, frames: tuple[DataFrame, ...]
+) -> tuple[DataFrame, str]:
+    """Stage ``frames`` as one file each under a fresh scratch leaf tagged
+    ``tag`` and return ``(stream, work)``: a file-source stream replaying one
+    frame per micro-batch (``maxFilesPerTrigger=1``), read with
+    ``_stream_schema``, and the leaf for the run's checkpoint and sink."""
+    work = scratch_dir(spark, tag)
+    src = stage_snapshots(frames, work)
+    stream = (
+        spark.readStream.schema(_stream_schema(frames[0]))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    return stream, work
+
+
+def _drained(df: DataFrame, work: str, mode: str) -> DataFrame:
+    """Drain the streaming ``df`` under Trigger.AvailableNow into a memory
+    sink named after ``work`` (output mode ``mode``, checkpoint under
+    ``work``) and return the sink's rows with its temp view dropped: the
+    returned frame holds the sink itself, so a long-lived session keeps a
+    run's rows only as long as something holds its result."""
+    sink = os.path.basename(work).replace("-", "_")  # memory-sink view name
+    q = (
+        df.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    drain(q)
+    rows = df.sparkSession.table(sink)
+    df.sparkSession.catalog.dropTempView(sink)
     return rows
 
 
@@ -267,35 +296,16 @@ def st7_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-memory frame in one process instead)."""
     from ..streaming.stateful import stateful_running_totals
 
-    work = scratch_dir(spark, "st7")
-
     events = (
         spark.table("events")
         .select("event_id", "user_id", "value")
         .filter(F.col("user_id") < 20)
     )
     # two files => two AvailableNow micro-batches with maxFilesPerTrigger=1
-    src = stage_snapshots(_odd_even(events), work)
-
-    stream = (
-        spark.readStream.schema(_stream_schema(events))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    sink = os.path.basename(work).replace("-", "_")  # memory-sink view name
-    q = (
-        stateful_running_totals(stream)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q)
+    stream, work = _replay(spark, "st7", _odd_even(events))
 
     return (
-        _sink_rows(spark, sink)
+        _drained(stateful_running_totals(stream), work, "update")
         .groupBy("user_id")
         .agg(F.max_by(F.struct("n", "total"), "n").alias("fin"))
         .select(
@@ -402,34 +412,19 @@ def st9_watermark_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB ingest dedups as data lands."""
     from ..streaming.dedup import streaming_dedup
 
-    work = scratch_dir(spark, "st9")
-
     events = (
         spark.table("events")
         .select("event_id", "ts", "user_id", "event_type")
         .filter(F.col("user_id") < 50)
     )
-    src = stage_snapshots(_odd_even(events), work)
-
-    stream = (
-        spark.readStream.schema(_stream_schema(events))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    sink = os.path.basename(work).replace("-", "_")  # memory-sink view name
-    q = (
-        streaming_dedup(stream, ["user_id", "event_type"], delay="365 days")
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q)
+    stream, work = _replay(spark, "st9", _odd_even(events))
 
     return (
-        _sink_rows(spark, sink)
+        _drained(
+            streaming_dedup(stream, ["user_id", "event_type"], delay="365 days"),
+            work,
+            "append",
+        )
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_keys"))
         .orderBy("event_type")
@@ -488,8 +483,6 @@ def st10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store and evicts at the watermark — bounded by concurrently-open
     sessions, not stream length; this is ST3's batch contract (st3)
     upgraded to runtime streaming evidence."""
-    work = scratch_dir(spark, "st10")
-
     events = (
         spark.table("events")
         .select("ts", "user_id", "value")
@@ -498,14 +491,8 @@ def st10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = F.lit("2024-01-16").cast("timestamp")
     # Deterministic replay order matters here: a flipped order would advance
     # the 0-second watermark past every batch-1 event and drop them as late.
-    src = stage_snapshots(
-        (events.filter(F.col("ts") < split), events.filter(F.col("ts") >= split)), work
-    )
-
-    stream = (
-        spark.readStream.schema(_stream_schema(events))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream, work = _replay(
+        spark, "st10", (events.filter(F.col("ts") < split), events.filter(F.col("ts") >= split))
     )
     agg = (
         stream.withWatermark("ts", "0 seconds")
@@ -515,19 +502,9 @@ def st10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
         )
     )
-    sink = os.path.basename(work).replace("-", "_")  # memory-sink view name
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q)
 
     return (
-        _sink_rows(spark, sink)
+        _drained(agg, work, "append")
         .select(
             "user_id",
             F.col("w.start").cast("string").alias("session_start"),
@@ -582,26 +559,17 @@ def st11_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressed here in plain parquet."""
     from ..streaming.upsert import keyed_upsert_batch, latest_state
 
-    work = scratch_dir(spark, "st11")
-    state_root = os.path.join(work, "state")
-    os.makedirs(state_root)
-
     events = (
         spark.table("events")
         .select("event_id", "user_id", "value")
         .filter(F.col("user_id") < 25)
     )
-    src = stage_snapshots(_odd_even(events), work)
+    stream, work = _replay(spark, "st11", _odd_even(events))
+    state_root = os.path.join(work, "state")
+    os.makedirs(state_root)
 
-    upsert = keyed_upsert_batch(state_root)
-
-    stream = (
-        spark.readStream.schema(_stream_schema(events))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     q = (
-        stream.writeStream.foreachBatch(upsert)
+        stream.writeStream.foreachBatch(keyed_upsert_batch(state_root))
         .option("checkpointLocation", os.path.join(work, "ckpt"))
         .trigger(availableNow=True)
         .start()

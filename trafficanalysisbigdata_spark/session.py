@@ -29,9 +29,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # events.parquet carries TIMESTAMP(NANOS) which Spark's parquet reader
-    # rejects; read as raw long nanos and convert in io.load_table.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 
@@ -129,12 +126,5 @@ def prep(spark: SparkSession) -> SparkSession:
         except AnalysisException as e:  # how Spark refuses a conf; the rest propagates
             if spark.conf.get(k, None) == v:
                 continue  # already in the required state, set() just refused
-            if k == "spark.sql.legacy.parquet.nanosAsLong":
-                # io.load_table hard-depends on this key for events.parquet's
-                # TIMESTAMP(NANOS); failing later would be an opaque
-                # PARQUET_TYPE_ILLEGAL read error — fail loudly here instead.
-                raise RuntimeError(
-                    f"cannot apply required conf {k}={v}; events-table reads will fail"
-                ) from e
             warnings.warn(f"prep(): could not set {k}={v}: {e}", stacklevel=2)
     return spark

@@ -136,7 +136,7 @@ def hour_label_of_day(label_col: Column) -> Column:
     mapping = F.create_map(
         *[x for i, c in enumerate(WIDE_HOUR_COLS) for x in (F.lit(c), F.lit(i))]
     )
-    return mapping.getItem(label_col).cast("int")
+    return mapping[label_col].cast("int")
 
 
 def cast_wide(df: DataFrame) -> DataFrame:
